@@ -19,10 +19,13 @@ the huge silver one).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_LIMIT_CONF_LOCK = threading.RLock()  # bounded_collect's conf set/restore
 
 
 def grouped_count(
@@ -170,23 +173,24 @@ def bounded_collect(df, bound: int, what: str) -> list:
     # row, which measurably taxed the markov lattice (+0.17 s/query).
     # Scoping spark.sql.limit.initialNumPartitions to the collect makes
     # the first job scan every partition at once: ONE job, bound intact.
+    # Session-global conf: the lock stops a concurrent caller from restoring
+    # our override as its "previous" value. An unreadable value is left alone.
     spark = df.sparkSession
     key = "spark.sql.limit.initialNumPartitions"
-    try:
-        prev = spark.conf.get(key, None)
-    except Exception:
-        prev = None
-    try:
-        spark.conf.set(key, "1000000")
-        rows = df.limit(bound + 1).collect()
-    finally:
+    with _LIMIT_CONF_LOCK:
         try:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+            prev = spark.conf.get(key, None)
         except Exception:
-            pass
+            rows = df.limit(bound + 1).collect()
+        else:
+            spark.conf.set(key, "1000000")
+            try:
+                rows = df.limit(bound + 1).collect()
+            finally:
+                if prev is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, prev)
     if len(rows) > bound:
         raise RuntimeError(
             f"bounded_collect: {what} produced more than {bound} rows — "

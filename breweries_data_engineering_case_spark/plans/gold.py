@@ -6,27 +6,33 @@
     → base counts (COUNT(*), COALESCE dims)   ≈ gold.py:74-86
     → idempotent append to history by date    ≈ gold.py:89-113 (DELETE+INSERT)
     → 4 granularity exports, partitioned      ≈ gold.py:115-178
-    → temp-view mirrors of the _run views     ≈ gold.py:130,146,162,178
 
 Spark-first choices:
 - DELETE+INSERT → dynamic partition overwrite on ``ingestion_date``
   (sources.writers.idempotent_date_overwrite).
-- The three coarser granularities re-aggregate the (tiny) base counts with
-  SUM — like the reference — rather than rescanning silver; the counts
-  DataFrame is computed once and reused, so Spark runs one silver scan total.
-- The alternative single-pass GROUPING SETS plan is exposed as
-  ``counts_grouping_sets`` for users who want all levels in one shuffle.
+- The base counts (at most a few hundred rows) are computed from silver
+  once, into one local-checkpointed, single-partition frame. The history
+  write and all four exports read that frame: the three coarser
+  granularities re-aggregate it with SUM, like the reference, and a
+  single-partition input needs no shuffle. The reference's exports read
+  the history table back (gold.py:120-121); the frame holds the same rows,
+  so nothing is re-read. A local checkpoint lives on the executors: losing
+  one fails the stage, and the stage retry recomputes it from silver.
+- Rows are not sorted: the reference's ORDER BY (gold.py:84 etc.) is
+  presentation only, and every sort would cost a range-sampling job.
+- The gold quality aggregates are observed on the history write
+  (``metrics``), so the check reads exactly the rows written for the date.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from ..operators.agg import grouped_count, grouping_sets_counts, regroup_sum
+from ..operators.agg import grouped_count, regroup_sum
 from ..schemas import GOLD_GRANULARITIES
 from ..sources.readers import parquet_scan
 from ..sources.writers import idempotent_date_overwrite, write_partitioned_parquet
+from .quality import GOLD_CHECKS, check_aggs
 
 
 def base_counts(silver: DataFrame) -> DataFrame:
@@ -34,19 +40,7 @@ def base_counts(silver: DataFrame) -> DataFrame:
 
     ≈ v_gold_counts (app/tasks/gold.py:74-86).
     """
-    return grouped_count(silver, ["country", "state", "brewery_type"]).orderBy(
-        "country", "state", "brewery_type"
-    )
-
-
-def counts_grouping_sets(silver: DataFrame) -> DataFrame:
-    """All four granularities in one shuffle (GROUPING SETS plan)."""
-    return grouping_sets_counts(
-        silver,
-        list(GOLD_GRANULARITIES.values()),
-        count_name="brewery_count",
-        blank_fill="",
-    )
+    return grouped_count(silver, ["country", "state", "brewery_type"])
 
 
 def aggregate_gold(
@@ -55,26 +49,26 @@ def aggregate_gold(
     gold_dir: str,
     warehouse_path: str,
     ingestion_date: str,
+    metrics: dict[str, object] | None = None,
 ) -> dict[str, str]:
-    """Full gold stage. Returns {granularity: export_path}."""
+    """Full gold stage. Returns {granularity: export_path}; ``metrics``, when
+    given, receives the gold quality aggregates observed on the history write."""
     silver = parquet_scan(spark, silver_run_dir)
-    counts = base_counts(silver)
+    counts = base_counts(silver).localCheckpoint().coalesce(1)
 
     # history table, idempotent per run date (≈ gold.py:89-113)
-    idempotent_date_overwrite(counts, warehouse_path, ingestion_date)
-
-    # per-run slice re-read from the history table, as the reference's four
-    # exports read gold_breweries_counts, not the transient view (gold.py:120-121)
-    history = spark.read.parquet(warehouse_path)
-    run_slice = history.filter(F.col("ingestion_date") == F.to_date(F.lit(ingestion_date)))
+    obs = Observation()  # one per call: an Observation serves one action
+    idempotent_date_overwrite(
+        counts.observe(obs, *check_aggs(**GOLD_CHECKS)), warehouse_path, ingestion_date
+    )
+    if metrics is not None:
+        metrics.update(obs.get)
 
     out: dict[str, str] = {}
     base = f"{gold_dir.rstrip('/')}/ingestion_date={ingestion_date}"
+    finest = GOLD_GRANULARITIES["by_country_state_type"]
     for gran, dims in GOLD_GRANULARITIES.items():
-        sel = regroup_sum(run_slice, dims) if dims != ("country", "state", "brewery_type") else (
-            run_slice.select("country", "state", "brewery_type", "brewery_count")
-        )
-        sel = sel.orderBy(*dims)  # presentation order, gold.py:84 etc.
+        sel = counts if dims == finest else regroup_sum(counts, dims)
         path = f"{base}/{gran}"
         # partition by all dims but the last (a 1-dim export partitions flat),
         # mirroring _copy_to_gold_layer's PARTITION_BY (gold.py:19-21)
@@ -83,6 +77,5 @@ def aggregate_gold(
             write_partitioned_parquet(sel, path, part_cols)
         else:
             sel.write.mode("overwrite").option("compression", "snappy").parquet(path)
-        sel.createOrReplaceTempView(f"v_gold_{gran}_run")  # ≈ gold.py:130 etc.
         out[gran] = path
     return out

@@ -20,7 +20,7 @@ from pyspark.sql import SparkSession
 from ..config import Settings, settings as default_settings
 from ..sources.rest import Fetcher, ingest_to_bronze, requests_fetcher
 from .gold import aggregate_gold
-from .quality import run_checks
+from .quality import GOLD_CHECKS, run_checks
 from .silver import transform_silver
 
 log = logging.getLogger("breweries_spark.pipeline")
@@ -74,15 +74,17 @@ def run(
     pages, records = extract(fetch, cfg.bronze_breweries, d, cfg.per_page, cfg.max_pages)
     log.info("bronze: %d pages, %d records", pages, records)
 
-    rows, silver_path = silver(spark, cfg.bronze_breweries, cfg.silver_breweries, d)
+    # each stage fills its dict with the check aggregates observed on its write
+    silver_metrics: dict[str, object] = {}
+    rows, silver_path = silver(spark, cfg.bronze_breweries, cfg.silver_breweries, d, silver_metrics)
     log.info("silver: %d rows → %s", rows, silver_path)
-    run_checks(spark.read.parquet(silver_path))  # ≈ soda/checks/silver_breweries.yml
+    run_checks(silver_metrics)  # ≈ soda/checks/silver_breweries.yml
 
-    exports = gold(spark, silver_path, cfg.gold_counts, cfg.warehouse_dir, d)
+    # gold checks the date it replaced; no run rewrites another date (SURVEY.md D1)
+    gold_metrics: dict[str, object] = {}
+    exports = gold(spark, silver_path, cfg.gold_counts, cfg.warehouse_dir, d, gold_metrics)
     log.info("gold: %s", exports)
-    run_checks(  # ≈ soda/checks/gold_breweries.yml:1-3
-        spark.read.parquet(cfg.warehouse_dir), positive_cols=("brewery_count",)
-    )
+    run_checks(gold_metrics, **GOLD_CHECKS)  # ≈ soda/checks/gold_breweries.yml:1-3
 
     return {
         "ingestion_date": d,

@@ -12,17 +12,19 @@ DataFrame chain:
 
 Fidelity notes:
 - the reference's final COUNT(*) re-executes the whole CTE (views aren't
-  materialized); here the count is taken from the same cleaned DataFrame —
-  one source of truth, and with the write it is two actions over one lineage.
-  At scale, prefer counting the written output or caching if the input is
-  remote and expensive (SURVEY.md §3.2).
+  materialized); here the count — and the silver quality aggregates — are
+  a ``DataFrame.observe`` on the written frame, so the write is the only
+  action and bronze is read once (SURVEY.md §3.2).
+- bronze is read as the date DIRECTORY with a ``*.json`` file filter, not as
+  the ``…/*.json`` glob: a glob expanding to more than 32 paths makes Spark
+  list them in a parallel listing job, a directory is listed on the driver.
 - dedup uses ``dedup_any`` (aggregate-planned, map-side combine) because the
   reference's tie-break is arbitrary anyway (SURVEY.md W1).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import clean_str, try_double
@@ -31,6 +33,7 @@ from ..operators.enforce import null_pass_range_pred, require_not_null
 from ..schemas import BREWERY_RAW_SCHEMA, SILVER_PARTITION_COLS
 from ..sources.readers import json_array_scan
 from ..sources.writers import write_partitioned_parquet
+from .quality import check_aggs
 
 
 def _clean_sql(col: str) -> str:
@@ -116,54 +119,27 @@ def clean_breweries_columns(raw: DataFrame) -> DataFrame:
     return enforced
 
 
-def transform_silver_incremental(
-    spark: SparkSession,
-    bronze_dir: str,
-    silver_dir: str,
-    checkpoint_dir: str,
-    watermark_event_ids: str = "id",
-) -> None:
-    """Streaming silver: incremental bronze→clean→dedup with bounded state.
-
-    The Spark-native upgrade path the reference cannot express
-    (SURVEY.md §2.9): a file-source stream over the whole bronze directory
-    processes only files not yet seen (checkpointed), cleans with the SAME
-    ``clean_breweries`` logic minus the global dedup, and deduplicates by id
-    with ``dropDuplicates`` over the stream (state = seen ids; swap for
-    ``dropDuplicatesWithinWatermark`` when an event-time column exists to
-    bound it). ``Trigger.AvailableNow`` gives catch-up-then-stop batch runs.
-    """
-    raw = (
-        spark.readStream.schema(BREWERY_RAW_SCHEMA)
-        .option("multiLine", True)
-        .json(f"{bronze_dir.rstrip('/')}/ingestion_date=*/")
-    )
-    cleaned = clean_breweries(raw)
-    q = (
-        cleaned.writeStream.format("parquet")
-        .option("path", silver_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def transform_silver(
     spark: SparkSession,
     bronze_dir: str,
     silver_dir: str,
     ingestion_date: str,
+    metrics: dict[str, object] | None = None,
 ) -> tuple[int, str]:
-    """Full silver stage: bronze JSON glob → clean → partitioned write.
+    """Full silver stage: bronze JSON pages → clean → partitioned write.
 
-    Returns (row_count, output_path), like app/tasks/silver.py:73-74.
+    Returns (row_count, output_path), like app/tasks/silver.py:73-74. The
+    count and the silver quality aggregates are observed on the written
+    frame; ``metrics``, when given, receives that observed row for
+    ``quality.run_checks``.
     """
-    glob = f"{bronze_dir.rstrip('/')}/ingestion_date={ingestion_date}/*.json"
-    raw = json_array_scan(spark, glob, schema=BREWERY_RAW_SCHEMA)
-    clean = clean_breweries(raw)
+    date_dir = f"{bronze_dir.rstrip('/')}/ingestion_date={ingestion_date}"
+    raw = json_array_scan(spark, date_dir, schema=BREWERY_RAW_SCHEMA, glob_filter="*.json")
+    obs = Observation()  # one per call: an Observation serves one action
+    clean = clean_breweries(raw).observe(obs, *check_aggs())
     out = f"{silver_dir.rstrip('/')}/ingestion_date={ingestion_date}"
     write_partitioned_parquet(clean, out, SILVER_PARTITION_COLS)
-    clean.createOrReplaceTempView("v_silver_clean")  # ≈ silver.py:54
-    return clean.count(), out
+    observed = obs.get
+    if metrics is not None:
+        metrics.update(observed)
+    return observed["__rows"], out

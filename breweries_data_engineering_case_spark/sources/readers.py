@@ -27,25 +27,22 @@ from pyspark.sql.types import StructType
 
 
 def json_array_scan(
-    spark: SparkSession, path_or_glob: str, schema: StructType | None = None
+    spark: SparkSession,
+    path_or_glob: str,
+    schema: StructType | None = None,
+    glob_filter: str | None = None,
 ) -> DataFrame:
     """Read JSON-array files (one top-level array per file) → rows.
 
     ≈ ``read_json_auto('…/ingestion_date={d}/*.json')`` app/tasks/silver.py:19.
+    ``glob_filter`` (``pathGlobFilter``) keeps the file names it matches: a
+    directory plus ``"*.json"`` reads ``dir/*.json`` without a listing job.
     """
     reader = spark.read.option("multiLine", True)
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.json(path_or_glob)
-
-
-def ndjson_scan(
-    spark: SparkSession, path_or_glob: str, schema: StructType | None = None
-) -> DataFrame:
-    """Read newline-delimited JSON — the splittable fast path for large files."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
+    if glob_filter is not None:
+        reader = reader.option("pathGlobFilter", glob_filter)
     return reader.json(path_or_glob)
 
 

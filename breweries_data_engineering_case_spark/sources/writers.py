@@ -84,11 +84,6 @@ def idempotent_date_overwrite(
     write_partitioned_parquet(stamped, path, cols, mode="overwrite")
 
 
-def read_back(spark: SparkSession, path: str) -> DataFrame:
-    """Re-open a written dataset (partition columns recovered from dirs)."""
-    return spark.read.parquet(path)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

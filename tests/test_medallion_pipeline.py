@@ -5,17 +5,22 @@ reference's schema-only unit test (SURVEY.md §5).
 
 from __future__ import annotations
 
+import collections
 import json
+import threading
+import uuid
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.config import Settings
 from breweries_data_engineering_case_spark.plans.gold import aggregate_gold, base_counts
-from breweries_data_engineering_case_spark.plans.pipeline import run
+from breweries_data_engineering_case_spark.plans import silver as silver_stage
+from breweries_data_engineering_case_spark.plans.pipeline import run, with_retries
 from breweries_data_engineering_case_spark.plans.quality import QualityError, run_checks
 from breweries_data_engineering_case_spark.plans.silver import clean_breweries
-from breweries_data_engineering_case_spark.schemas import SILVER_SCHEMA
+from breweries_data_engineering_case_spark.schemas import GOLD_GRANULARITIES, SILVER_SCHEMA
 from breweries_data_engineering_case_spark.sources.writers import idempotent_date_overwrite
 
 # Dirty fixture: exercises trim, blank→NULL, state fallback, try_cast NULL,
@@ -75,6 +80,7 @@ def test_pipeline_end_to_end(spark, lake):
     assert result["silver_rows"] == 3
 
     silver = spark.read.parquet(result["silver_path"])
+    assert silver.count() == result["silver_rows"]  # the observed count is the written one
     assert set(silver.columns) == set(SILVER_SCHEMA.fieldNames())
     # partition columns recovered from hive dirs
     assert {r["state"] for r in silver.select("state").distinct().collect()} == {"CA", "WA"}
@@ -178,3 +184,136 @@ def test_silver_sql_twin_is_expression_identical(spark):
     assert _plan_fingerprint(clean_breweries(raw)) == _plan_fingerprint(
         clean_breweries_columns(raw)
     )
+
+
+def _leaf_dirs(root: str) -> set[str]:
+    return {str(p.parent.relative_to(root)) for p in Path(root).rglob("*.parquet")}
+
+
+def test_gold_exports_regroup_the_warehouse_date(spark, lake):
+    """Each export of a date, read back, is the plain-Python regroup of that
+    date's warehouse rows, partitioned by all its dims but the last."""
+    d = "2024-06-03"
+    result = run(spark, d, cfg=lake, fetcher=_page_fetcher([PAGE_1, PAGE_2, []]))
+    warehouse = [r.asDict() for r in
+                 spark.read.parquet(f"{lake.warehouse_dir}/ingestion_date={d}").collect()]
+    assert sum(r["brewery_count"] for r in warehouse) == 3
+
+    assert set(result["gold_exports"]) == set(GOLD_GRANULARITIES)
+    for gran, dims in GOLD_GRANULARITIES.items():
+        path = result["gold_exports"][gran]
+        assert path == f"{lake.gold_counts}/ingestion_date={d}/{gran}"
+        want: collections.Counter = collections.Counter()
+        for r in warehouse:
+            want[tuple(r[c] for c in dims)] += r["brewery_count"]
+        export = spark.read.parquet(path)
+        assert sorted(export.columns) == sorted([*dims, "brewery_count"])
+        got = [(tuple(r[c] for c in dims), r["brewery_count"]) for r in export.collect()]
+        assert sorted(got) == sorted(want.items())
+        part_cols = dims[:-1]
+        want_dirs = {"/".join(f"{c}={v}" for c, v in zip(part_cols, key)) or "."
+                     for key in want}
+        assert _leaf_dirs(path) == want_dirs
+
+
+def test_all_rejected_date_fails_the_silver_check(spark, lake):
+    """A date whose every record breaks the contract writes an empty silver
+    slice; its observed row count fails the check at once (no hang on the
+    observation, no gold for the date)."""
+    rejected = [
+        {"id": "7", "name": "", "country": "US", "state": "CA"},
+        {"id": None, "name": "Golf", "country": "US", "state": "CA"},
+        {"id": "8", "name": "Hotel", "country": "US", "state": "CA", "latitude": "91"},
+    ]
+    d = "2024-06-04"
+    outcome: dict = {}
+
+    def go() -> None:
+        try:
+            outcome["result"] = run(spark, d, cfg=lake, fetcher=_page_fetcher([rejected, []]))
+        except BaseException as e:  # noqa: BLE001 — inspected below
+            outcome["error"] = e
+
+    t = threading.Thread(target=go, daemon=True)
+    t.start()
+    t.join(180)
+    assert not t.is_alive(), "the run did not finish"
+    assert isinstance(outcome.get("error"), QualityError), outcome
+    assert "row_count > 0" in str(outcome["error"])
+    assert not (Path(lake.warehouse_dir) / f"ingestion_date={d}").exists()
+
+
+def _land(bronze: Path, d: str, pages: list[list[dict]]) -> None:
+    day = bronze / f"ingestion_date={d}"
+    day.mkdir(parents=True)
+    for i, page in enumerate(pages, 1):
+        (day / f"page_{i}.json").write_text(json.dumps(page))
+
+
+def test_silver_retry_uses_a_fresh_observation(spark, tmp_path, monkeypatch):
+    """An attempt that fails after its write still consumed its Observation;
+    the retry observes through a new one and reports the written count."""
+    d = "2024-06-06"
+    bronze = tmp_path / "bronze"
+    _land(bronze, d, [PAGE_1, PAGE_2])
+    real_write = silver_stage.write_partitioned_parquet
+    writes: list[str] = []
+
+    def write_then_fail_once(df, path, cols):
+        real_write(df, path, cols)
+        writes.append(path)
+        if len(writes) == 1:
+            raise OSError("lost the commit acknowledgement")
+
+    made = []
+    real_observation = silver_stage.Observation
+
+    def observation():
+        made.append(real_observation())
+        return made[-1]
+
+    monkeypatch.setattr(silver_stage, "write_partitioned_parquet", write_then_fail_once)
+    monkeypatch.setattr(silver_stage, "Observation", observation)
+    metrics: dict = {}
+    rows, out = with_retries(retries=1, delay_s=0)(silver_stage.transform_silver)(
+        spark, str(bronze), str(tmp_path / "silver"), d, metrics
+    )
+    assert len(writes) == 2
+    assert len(made) == 2 and made[0] is not made[1]
+    assert rows == metrics["__rows"] == spark.read.parquet(out).count() == 3
+
+
+def test_silver_reads_only_json_pages(spark, tmp_path):
+    """Only ``*.json`` files of the date directory are bronze pages, as with
+    the reference's ``ingestion_date=d/*.json`` glob."""
+    d = "2024-06-07"
+    bronze = tmp_path / "bronze"
+    _land(bronze, d, [PAGE_1])
+    stray = [{"id": "99", "name": "Stray", "country": "US", "state": "CA"}]
+    (bronze / f"ingestion_date={d}" / "notes.txt").write_text(json.dumps(stray))
+    (bronze / f"ingestion_date={d}" / "page_2.json.partial").write_text(json.dumps(stray))
+    rows, out = silver_stage.transform_silver(spark, str(bronze), str(tmp_path / "silver"), d)
+    assert rows == 2
+    assert {r.id for r in spark.read.parquet(out).collect()} == {"1", "2"}
+
+
+def test_daily_run_job_budget(spark, tmp_path):
+    """One date's run stays within 12 Spark jobs: no silver recount, no
+    warehouse re-read or whole-history check, no sort-sampling jobs, and no
+    parallel listing of its 40 bronze pages."""
+    pages = [[{"id": f"{p}-{i}", "name": f"N{p}", "brewery_type": "micro", "country": "US",
+               "state": f"S{p % 37}"} for i in range(2)] for p in range(40)]
+    cfg = Settings(lake_root=str(tmp_path / "lake"),
+                   warehouse_dir=str(tmp_path / "lake" / "warehouse"), per_page=2)
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one daily run")
+    try:
+        result = run(spark, "2024-06-08", cfg=cfg, fetcher=_page_fetcher([*pages, []]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert result["bronze_pages"] == 40 and result["silver_rows"] == 80
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # let job events reach the tracker
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 12, f"{len(jobs)} jobs"

@@ -358,6 +358,74 @@ def test_bounded_collect_guard(spark):
         bounded_collect(df, 5, "planted lattice overflow")
 
 
+def test_bounded_collect_conf_override_is_serialized(spark):
+    """bounded_collect scopes spark.sql.limit.initialNumPartitions to its
+    collect. The conf is session-global, so two concurrent callers must not
+    interleave set and restore: a value the user set survives both."""
+    import threading
+
+    from breweries_data_engineering_case_spark.operators.agg import (
+        bounded_collect,
+    )
+
+    key = "spark.sql.limit.initialNumPartitions"
+    spark.conf.set(key, "7")
+    try:
+        df = spark.range(0, 40, numPartitions=8)
+        got: list[list[int]] = []
+        errors: list[BaseException] = []
+
+        def worker() -> None:
+            try:
+                for _ in range(3):
+                    got.append(sorted(r["id"] for r in bounded_collect(df, 40, "ids")))
+            except BaseException as e:  # noqa: BLE001 — surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=worker) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not errors
+        assert got == [list(range(40))] * 6
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_bounded_collect_leaves_unreadable_conf_alone():
+    """A conf that cannot be read is neither overridden nor unset: only
+    what was read is restored."""
+    from breweries_data_engineering_case_spark.operators.agg import (
+        bounded_collect,
+    )
+
+    calls: list[str] = []
+
+    class Conf:
+        def get(self, key, default=None):
+            raise RuntimeError("conf not readable")
+
+        def set(self, key, value):
+            calls.append("set")
+
+        def unset(self, key):
+            calls.append("unset")
+
+    class Frame:
+        sparkSession = type("Session", (), {"conf": Conf()})()
+
+        def limit(self, n):
+            return self
+
+        def collect(self):
+            return [1, 2]
+
+    assert bounded_collect(Frame(), 2, "two rows") == [1, 2]
+    assert calls == []
+
+
 def test_markov_lattice_oversized_vocab_raises(spark, tmp_path):
     """Planted oversized event-type vocabulary (101 distinct single-event
     types > the documented _LATTICE_STATES_MAX = 100): the driver-side

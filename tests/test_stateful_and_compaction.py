@@ -1,14 +1,9 @@
-"""applyInPandasWithState tracker, parquet compaction, incremental silver."""
+"""applyInPandasWithState tracker, parquet compaction."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
-from breweries_data_engineering_case_spark.plans.silver import (
-    transform_silver_incremental,
-)
 from breweries_data_engineering_case_spark.sources.readers import table_scan
 from breweries_data_engineering_case_spark.sources.writers import compact_parquet
 from breweries_data_engineering_case_spark.streaming.events import stream_events
@@ -62,27 +57,3 @@ def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
     assert len(files) == 1
     assert spark.read.parquet(out).count() == li.count()
 
-
-def test_incremental_silver_processes_only_new_files(spark, tmp_path):
-    bronze = tmp_path / "bronze"
-    silver = str(tmp_path / "silver")
-    ck = str(tmp_path / "ck")
-
-    def land(date: str, records: list[dict]):
-        d = bronze / f"ingestion_date={date}"
-        d.mkdir(parents=True, exist_ok=True)
-        (d / "page_1.json").write_text(json.dumps(records))
-
-    land("2024-01-01", [
-        {"id": "a", "name": " A ", "country": "US", "state": "CA"},
-        {"id": "b", "name": "B", "country": "US", "state": ""},  # dropped (state blank, no fallback)
-    ])
-    transform_silver_incremental(spark, str(bronze), silver, ck)
-    assert {r.id for r in spark.read.parquet(silver).collect()} == {"a"}
-
-    land("2024-01-02", [
-        {"id": "c", "name": "C", "country": "US", "state": "TX"},
-    ])
-    transform_silver_incremental(spark, str(bronze), silver, ck)  # catch-up run
-    got = {r.id for r in spark.read.parquet(silver).collect()}
-    assert got == {"a", "c"}  # only the new file processed; no re-emission of a

@@ -2375,10 +2375,11 @@ def q_events_shapley_attribution(
     parity is exact — no factorial-ratio floats. Efficiency axiom holds
     by construction: Σφ·C! = C!·(v(full) − v(∅)).
 
-    Execution shape (optimization round r14, guide §5): the only
-    data-sized work is ONE action computing per-(touch-set) converted
-    counts — ≤2^C rows, C the bounded non-purchase event-type dimension
-    — which is COLLECTED; the subset lattice, coalition worths, and
+    Execution shape (optimization round r14, guide §5): the data-sized
+    work is two collects — the distinct non-purchase event types, capped
+    at one past the channel bound so an oversized C fails before anything
+    lattice-sized runs, then per-(touch-set) converted counts, ≤2^C rows;
+    the subset lattice, coalition worths, and
     factorial-weighted marginals run driver-side in exact Python
     integers (the removal-attribution bounded-collect pattern). All
     marginals are non-negative (coverage is monotone in S), so Python
@@ -2399,11 +2400,37 @@ def q_events_shapley_attribution(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("conv")
     )
-    # ≤2^C rows: converted-user count per distinct touch SET (the empty
-    # set for purchase-only users via the left join + empty-array
-    # coalesce) — the one corpus-sized action, collected
     from ..operators.agg import bounded_collect
 
+    # channel universe = the distinct non-purchase event types (the
+    # oracle's ch0), collected capped at one past the bound so the 2^C
+    # guard fires before any lattice-sized collect; idx = rank in the
+    # sorted channel list — identical to the rank-free self-join count
+    channels = sorted(
+        r["event_type"]
+        for r in e.filter(F.col("event_type") != "purchase")
+        .select("event_type")
+        .distinct()
+        .limit(_SHAPLEY_CHANNELS_MAX + 1)
+        .collect()
+    )
+    cdim = len(channels)
+    if cdim > _SHAPLEY_CHANNELS_MAX:
+        # the 2^C coalition lattice below is only "not data work" while C
+        # is a dim-sized channel vocabulary — identical assumption to the
+        # old in-plan sequence(0, 2^c−1) explode, now enforced loudly
+        raise RuntimeError(
+            f"events_shapley_attribution: at least {cdim} distinct channels "
+            f"exceed the documented bound {_SHAPLEY_CHANNELS_MAX} — refusing "
+            "to enumerate a 2^C coalition lattice on the driver"
+        )
+    if cdim == 0:
+        return spark.createDataFrame(
+            [], "channel string, shapley_x_cfact bigint, share_ppm bigint"
+        )
+    # ≤2^C rows: converted-user count per distinct touch SET (the empty
+    # set for purchase-only users via the left join + empty-array
+    # coalesce), collected
     set_rows = bounded_collect(
         uc.join(touches, "user_id", "left")
         .select(
@@ -2412,28 +2439,9 @@ def q_events_shapley_attribution(
         )
         .groupBy("ts")
         .agg(F.sum("conv").cast("long").alias("conv")),
-        1 << _SHAPLEY_CHANNELS_MAX,
-        "events_shapley_attribution distinct touch sets (≤2^C for C ≤ "
-        f"{_SHAPLEY_CHANNELS_MAX} channels)",
+        1 << cdim,
+        f"events_shapley_attribution distinct touch sets (≤2^C for C = {cdim} channels)",
     )
-    # channel universe = union of all observed touch sets (every
-    # non-purchase event belongs to some user's set); idx = rank in the
-    # sorted channel list — identical to the rank-free self-join count
-    channels = sorted({t for r in set_rows for t in r["ts"]})
-    cdim = len(channels)
-    if cdim > _SHAPLEY_CHANNELS_MAX:
-        # the 2^C coalition lattice below is only "not data work" while C
-        # is a dim-sized channel vocabulary — identical assumption to the
-        # old in-plan sequence(0, 2^c−1) explode, now enforced loudly
-        raise RuntimeError(
-            f"events_shapley_attribution: {cdim} distinct channels exceed "
-            f"the documented bound {_SHAPLEY_CHANNELS_MAX} — refusing to "
-            f"enumerate a 2^{cdim} coalition lattice on the driver"
-        )
-    if cdim == 0:
-        return spark.createDataFrame(
-            [], "channel string, shapley_x_cfact bigint, share_ppm bigint"
-        )
     idx = {t: i for i, t in enumerate(channels)}
     ms: dict[int, int] = {}
     for r in set_rows:

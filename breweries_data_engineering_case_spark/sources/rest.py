@@ -25,6 +25,7 @@ from pathlib import Path
 from typing import Any
 
 from ..config import Settings, settings as default_settings
+from .writers import local_path
 
 #: fetcher(page_number) -> (records, link_header or None)
 Fetcher = Callable[[int], tuple[list[dict[str, Any]], str | None]]
@@ -115,16 +116,18 @@ def ingest_to_bronze(
     per_page: int,
     max_pages: int = 10_000,
 ) -> tuple[int, int]:
-    """Fetch all pages and land each as one JSON-array file (local/posix path).
+    """Fetch all pages and land each as one JSON-array file.
 
     ≈ the extract task loop + ``put_json`` (app/tasks/extract.py:29-77,
-    app/io/storage.py:22-30). Returns (pages, records). For s3a targets,
-    swap the file write for an object put; the key layout is identical.
+    app/io/storage.py:22-30). Returns (pages, records). ``bronze_dir`` is a
+    local path or ``file:`` URI; any other scheme raises ``ValueError``
+    before a page is fetched (object stores land through
+    ``object_store.ingest_to_bronze_s3``; the key layout is identical).
     """
+    root = local_path(bronze_dir)
     pages = records = 0
     for page, page_records in iter_pages(fetch, per_page, max_pages):
-        key = bronze_key(bronze_dir, ingestion_date, page)
-        p = Path(key)
+        p = Path(bronze_key(root, ingestion_date, page))
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_text(json.dumps(page_records, ensure_ascii=False))
         pages += 1

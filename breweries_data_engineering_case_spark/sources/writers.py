@@ -28,44 +28,128 @@ import os
 import shutil
 import threading
 import time
+import uuid
 from collections.abc import Sequence
 from pathlib import Path
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _log = logging.getLogger("bdec.staging")
 
 
+def local_path(uri: str) -> str:
+    """The local filesystem path of ``uri``, a plain path or a ``file:`` URI.
+
+    Driver-side writers use the local filesystem directly. Any other scheme
+    (``s3a://``, ``hdfs://``) raises a ``ValueError`` naming the URI; a plain
+    ``pathlib`` write would put ``s3a://bucket/k`` under a relative local
+    directory ``s3a:/bucket/k`` without any error.
+    """
+    parts = urlsplit(uri)
+    if not parts.scheme:
+        return uri
+    if parts.scheme == "file" and parts.netloc in ("", "localhost"):
+        return url2pathname(parts.path)
+    raise ValueError(f"driver-side writers take local paths only, not {uri!r}")
+
+
+# Spark's ExternalCatalogUtils.escapePathName escape set (non-Windows): each
+# of these becomes %XX (uppercase hex) in a partition directory name.
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+def _partition_dir(cols: Sequence[str], values: Sequence[str | None]) -> str:
+    """``c1=v1/c2=v2`` as Spark names it: escaped names and values, a null or
+    empty value as ``__HIVE_DEFAULT_PARTITION__``."""
+    return "/".join(
+        f"{_escape_path_name(c)}={_escape_path_name(v) if v else _DEFAULT_PARTITION}"
+        for c, v in zip(cols, values)
+    )
+
+
+def _write_arrow_partitioned(table: pa.Table, path: str, partition_cols: Sequence[str]) -> None:
+    """The driver-side twin of the Spark write for a ``pyarrow.Table``.
+
+    One file per leaf directory, the directories named as Spark names them
+    (:func:`_partition_dir`). Every leaf is written
+    whole in a hidden staging directory next to ``path`` and then renamed
+    into place over the leaf it replaces (dynamic overwrite); with no
+    partition columns the whole of ``path`` is replaced. pyarrow.dataset's
+    hive partitioning is not used: it URI-encodes directory names (space as
+    ``%20``, ``%`` as ``%25``), which is not Spark's escape set.
+    """
+    root = Path(local_path(path))
+    token = uuid.uuid4().hex
+    staging = root.parent / f".{root.name}-{token}.staging"
+    data = table.drop_columns(list(partition_cols))
+    if partition_cols:
+        keys = zip(*(table.column(c).cast(pa.string()).to_pylist() for c in partition_cols))
+        rows_by_leaf: dict[str, list[int]] = {}
+        for i, key in enumerate(keys):
+            rows_by_leaf.setdefault(_partition_dir(partition_cols, key), []).append(i)
+        leaves = {leaf: data.take(rows) for leaf, rows in rows_by_leaf.items()}
+    else:
+        leaves = {"": data}
+    try:
+        for leaf, part in leaves.items():
+            d = staging / leaf
+            d.mkdir(parents=True)
+            pq.write_table(part, d / f"part-00000-{token}.snappy.parquet", compression="snappy")
+        for leaf in leaves:
+            target = root / leaf
+            if target.exists():
+                shutil.rmtree(target)
+            target.parent.mkdir(parents=True, exist_ok=True)
+            os.replace(staging / leaf, target)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
 def write_partitioned_parquet(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     path: str,
     partition_cols: Sequence[str],
-    mode: str = "overwrite",
-    compression: str = "snappy",
-    max_records_per_file: int | None = None,
-    dynamic_overwrite: bool = True,
 ) -> None:
-    """Hive-partitioned snappy Parquet write (≈ S5).
+    """Hive-partitioned snappy Parquet write with dynamic overwrite (≈ S5).
 
-    ``dynamic_overwrite`` pins ``partitionOverwriteMode=dynamic`` as a
-    per-write option (NOT relying on session conf — an externally-created
-    session defaults to static, which silently wipes every other partition):
-    ``overwrite`` then replaces only the partitions this DataFrame contains —
-    the semantic twin of DuckDB's ``OVERWRITE_OR_IGNORE``
-    (app/tasks/silver.py:69). ``max_records_per_file`` caps file size to keep
-    downstream scan tasks balanced (small-files vs giant-files tradeoff).
+    The input picks the engine; the lake layout is the same either way.
+
+    - A ``DataFrame`` is written by Spark. ``partitionOverwriteMode=dynamic``
+      is a per-write option (NOT the session conf — an externally-created
+      session defaults to static, which silently wipes every other
+      partition): ``overwrite`` then replaces only the partitions this
+      DataFrame contains — the semantic twin of DuckDB's
+      ``OVERWRITE_OR_IGNORE`` (app/tasks/silver.py:69).
+    - A ``pyarrow.Table`` is already on the driver and is written there, to a
+      local path (see :func:`_write_arrow_partitioned`), with no Spark job
+      and no Hadoop commit protocol.
     """
-    w = df.write.option("compression", compression)
-    if dynamic_overwrite:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.partitionBy(*partition_cols).mode(mode).parquet(path)
+    if isinstance(df, pa.Table):
+        _write_arrow_partitioned(df, path, partition_cols)
+        return
+    (
+        df.write.option("compression", "snappy")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .mode("overwrite")
+        .parquet(path)
+    )
 
 
 def idempotent_date_overwrite(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     path: str,
     date_value: str | _dt.date,
     date_col: str = "ingestion_date",
@@ -73,15 +157,19 @@ def idempotent_date_overwrite(
 ) -> None:
     """Replace exactly one date's slice of a date-partitioned dataset (≈ S6).
 
-    Stamps ``date_col`` with the run date, then dynamic-partition-overwrites.
-    Re-running the same date yields identical table contents — the
-    "Idempotency for this run" contract of app/tasks/gold.py:100-113.
+    Stamps ``date_col`` with the run date, then dynamic-partition-overwrites
+    through :func:`write_partitioned_parquet` (a ``pyarrow.Table`` stays on
+    the driver). Re-running the same date yields identical table contents —
+    the "Idempotency for this run" contract of app/tasks/gold.py:100-113.
     """
     if isinstance(date_value, _dt.date):
         date_value = date_value.isoformat()
-    stamped = df.withColumn(date_col, F.to_date(F.lit(date_value)))
-    cols = [date_col, *extra_partition_cols]
-    write_partitioned_parquet(stamped, path, cols, mode="overwrite")
+    if isinstance(df, pa.Table):
+        day = pa.scalar(_dt.date.fromisoformat(date_value), pa.date32())
+        stamped = df.append_column(date_col, pa.repeat(day, df.num_rows))
+    else:
+        stamped = df.withColumn(date_col, F.to_date(F.lit(date_value)))
+    write_partitioned_parquet(stamped, path, [date_col, *extra_partition_cols])
 
 
 def compact_parquet(

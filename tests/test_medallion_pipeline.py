@@ -11,6 +11,7 @@ import threading
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,7 +22,11 @@ from breweries_data_engineering_case_spark.plans.pipeline import run, with_retri
 from breweries_data_engineering_case_spark.plans.quality import QualityError, run_checks
 from breweries_data_engineering_case_spark.plans.silver import clean_breweries
 from breweries_data_engineering_case_spark.schemas import GOLD_GRANULARITIES, SILVER_SCHEMA
-from breweries_data_engineering_case_spark.sources.writers import idempotent_date_overwrite
+from breweries_data_engineering_case_spark.sources.rest import ingest_to_bronze
+from breweries_data_engineering_case_spark.sources.writers import (
+    idempotent_date_overwrite,
+    write_partitioned_parquet,
+)
 
 # Dirty fixture: exercises trim, blank→NULL, state fallback, try_cast NULL,
 # range drop, dedup, not-null drops (FIXTURES.md §1).
@@ -100,17 +105,83 @@ def test_gold_rerun_is_idempotent(spark, lake):
     assert history.agg(F.sum("brewery_count")).collect()[0][0] == 3
 
 
-def test_date_overwrite_touches_only_its_partition(spark, tmp_path):
+@pytest.mark.parametrize("engine", ["spark", "arrow"])
+def test_date_overwrite_touches_only_its_partition(spark, tmp_path, engine):
     path = str(tmp_path / "hist")
-    df1 = spark.createDataFrame([("a", 1)], "k string, v long")
-    df2 = spark.createDataFrame([("b", 2)], "k string, v long")
-    idempotent_date_overwrite(df1, path, "2024-01-01")
-    idempotent_date_overwrite(df2, path, "2024-01-02")
+
+    def frame(k: str, v: int):
+        if engine == "arrow":
+            return pa.table({"k": [k], "v": pa.array([v], pa.int64())})
+        return spark.createDataFrame([(k, v)], "k string, v long")
+
+    idempotent_date_overwrite(frame("a", 1), path, "2024-01-01")
+    idempotent_date_overwrite(frame("b", 2), path, "2024-01-02")
     # re-write day 2 with different contents; day 1 must be untouched
-    df3 = spark.createDataFrame([("c", 3)], "k string, v long")
-    idempotent_date_overwrite(df3, path, "2024-01-02")
+    idempotent_date_overwrite(frame("c", 3), path, "2024-01-02")
     rows = {(r.k, r.v) for r in spark.read.parquet(path).select("k", "v").collect()}
     assert rows == {("a", 1), ("c", 3)}
+    assert {r.ingestion_date.isoformat() for r in spark.read.parquet(path).collect()} == {
+        "2024-01-01", "2024-01-02"}
+
+
+def test_arrow_and_spark_writes_share_the_partition_layout(spark, tmp_path):
+    """The pyarrow.Table branch of write_partitioned_parquet names its
+    directories the way Spark does (escapes, empty value → default
+    partition), writes one file per leaf, and leaves no staging behind."""
+    odd = ["plain", "with space", "a/b", "c:d", "e=f", "50%", "#tag", ""]
+    rows = [(a, b, i) for i, (a, b) in enumerate(zip(odd, reversed(odd)))]
+    rows.append(("plain", "", 99))  # a second row in the first leaf
+    cols = ["p1", "p2"]
+    spark_dir, arrow_dir = str(tmp_path / "spark"), str(tmp_path / "arrow")
+    write_partitioned_parquet(spark.createDataFrame(rows, "p1 string, p2 string, n long"),
+                              spark_dir, cols)
+    table = pa.table({"p1": [r[0] for r in rows], "p2": [r[1] for r in rows],
+                      "n": pa.array([r[2] for r in rows], pa.int64())})
+    write_partitioned_parquet(table, arrow_dir, cols)
+    # a second write replaces only its own leaf, both of its rows
+    write_partitioned_parquet(table.slice(0, 1).set_column(2, "n", pa.array([7], pa.int64())),
+                              arrow_dir, cols)
+
+    assert _leaf_dirs(arrow_dir) == _leaf_dirs(spark_dir)
+    assert len(_leaf_dirs(spark_dir)) == len(rows) - 1
+    for leaf in _leaf_dirs(arrow_dir):
+        assert len(list((Path(arrow_dir) / leaf).glob("*.parquet"))) == 1
+
+    def read(path: str) -> set[tuple]:
+        return {tuple(r) for r in spark.read.parquet(path).select("p1", "p2", "n").collect()}
+
+    want = read(spark_dir)
+    assert ("plain", None, 99) in want  # the empty value reads back as NULL
+    assert read(arrow_dir) == {r for r in want if r[:2] != ("plain", None)} | {("plain", None, 7)}
+    assert not [p for p in tmp_path.rglob(".*") if "staging" in p.name]
+
+
+def test_arrow_write_replaces_an_unpartitioned_path(spark, tmp_path):
+    out = tmp_path / "flat"
+    write_partitioned_parquet(pa.table({"n": [1, 2]}), str(out), [])
+    write_partitioned_parquet(pa.table({"n": [3]}), f"file://{out}", [])
+    assert [r.n for r in spark.read.parquet(str(out)).collect()] == [3]
+    assert len(list(out.glob("*.parquet"))) == 1
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["flat"]
+
+
+def test_bronze_ingest_takes_local_paths_only(tmp_path, monkeypatch):
+    """A non-file URI raises naming it, instead of landing pages under a
+    relative ``s3a:/bucket`` directory; a ``file://`` URI is a local path."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="s3a://bucket/bronze"):
+        ingest_to_bronze(_page_fetcher([PAGE_1, []]), "s3a://bucket/bronze", "2024-06-09", 3)
+    assert list(tmp_path.iterdir()) == []
+    assert ingest_to_bronze(_page_fetcher([PAGE_1, []]), f"file://{tmp_path}/bronze",
+                            "2024-06-09", 3) == (1, 3)
+    assert len(list((tmp_path / "bronze" / "ingestion_date=2024-06-09").glob("*.json"))) == 1
+
+
+def test_arrow_write_takes_local_paths_only(tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="s3a://bucket/gold"):
+        write_partitioned_parquet(pa.table({"n": [1]}), "s3a://bucket/gold", [])
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_quality_uniqueness_check(spark):
@@ -298,9 +369,13 @@ def test_silver_reads_only_json_pages(spark, tmp_path):
 
 
 def test_daily_run_job_budget(spark, tmp_path):
-    """One date's run stays within 12 Spark jobs: no silver recount, no
-    warehouse re-read or whole-history check, no sort-sampling jobs, and no
-    parallel listing of its 40 bronze pages."""
+    """One date's run takes 5 Spark jobs: silver's dedup map stage and
+    write, Spark's parallel discovery of the 37 ``state=`` directories under
+    one ``country=`` (more than its 32-path threshold) when gold reads
+    silver, and gold's aggregate map stage and collect. No silver recount,
+    no schema inference, no warehouse re-read or whole-history check, no
+    sort-sampling job, no Spark write of gold and no parallel listing of the
+    40 bronze pages."""
     pages = [[{"id": f"{p}-{i}", "name": f"N{p}", "brewery_type": "micro", "country": "US",
                "state": f"S{p % 37}"} for i in range(2)] for p in range(40)]
     cfg = Settings(lake_root=str(tmp_path / "lake"),
@@ -316,4 +391,4 @@ def test_daily_run_job_budget(spark, tmp_path):
     assert result["bronze_pages"] == 40 and result["silver_rows"] == 80
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # let job events reach the tracker
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 12, f"{len(jobs)} jobs"
+    assert 0 < len(jobs) <= 5, f"{len(jobs)} jobs"

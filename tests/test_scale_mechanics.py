@@ -358,6 +358,35 @@ def test_bounded_collect_guard(spark):
         bounded_collect(df, 5, "planted lattice overflow")
 
 
+def test_shapley_channel_guard_runs_before_the_lattice_collect(spark, tmp_path, monkeypatch):
+    """21 channels (> _SHAPLEY_CHANNELS_MAX = 20) raise from the capped
+    channel collect: the ≤2^C touch-set collect, up to 2^20 rows on the
+    driver, never runs."""
+    import pandas as pd
+    import pytest
+
+    from breweries_data_engineering_case_spark.operators import agg
+    from breweries_data_engineering_case_spark.plans.registry import QUERIES
+
+    lattice_collects: list[str] = []
+
+    def no_lattice(df, bound, what):
+        lattice_collects.append(what)
+        raise AssertionError(f"lattice collect ran: {what}")
+
+    monkeypatch.setattr(agg, "bounded_collect", no_lattice)
+    ts = pd.Timestamp("2024-01-01")
+    rows = [(u % 3, u, ts, f"ch_{u:02d}") for u in range(21)]
+    rows.append((0, 99, ts, "purchase"))
+    ev = pd.DataFrame(rows, columns=["user_id", "event_id", "ts", "event_type"])
+    d = tmp_path / "wide_channels"
+    d.mkdir()
+    ev.to_parquet(d / "events.parquet")
+    with pytest.raises(RuntimeError, match="at least 21 distinct channels exceed"):
+        QUERIES["events_shapley_attribution"](spark, str(d))
+    assert lattice_collects == []
+
+
 def test_bounded_collect_conf_override_is_serialized(spark):
     """bounded_collect scopes spark.sql.limit.initialNumPartitions to its
     collect. The conf is session-global, so two concurrent callers must not

@@ -30,8 +30,8 @@ per-round job/planning overhead IS the cost — round-11 rework, VERDICT r10
   bucketed table on the gather key ``d``, the in-loop scan reports
   HashPartitioning that EnsureRequirements honors: the only per-round
   exchange is the tiny label side. The shuffle over the dominant table is
-  paid once per corpus snapshot (manifest-backed staging reuses it across
-  processes — sources/writers.stage_bucketed_table).
+  paid once per session and corpus snapshot
+  (sources/writers.stage_bucketed_table).
 
 Per round: one gather join (bucketed probe, shuffle_hash), one label join,
 and two pointer-jumping self-joins (adopt the label OF my label, twice —
@@ -44,8 +44,6 @@ from __future__ import annotations
 
 import hashlib
 import re
-import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -71,111 +69,28 @@ LOCAL_THRESHOLD_OVERRIDE: int | None = None
 _CHECK_CADENCE = 2
 
 
-def _reap_legacy_layouts(parent: Path) -> None:
-    """One-time cleanup of staged-dir layouts older than the round-12
-    scope-hash naming (pre-r12 ``cc_<md5>``; interim-r12 ``cc_<tag>_<md5>``)
-    — unreachable by current code, so they'd leak otherwise. Marker-gated
-    via run_once_layout_migration: a single migration sweep, retried until
-    clean, not a per-call directory scan forever (round-12 review). A
-    valid current dir is ``cc_<8-hex-scope>_<12-hex-key>``; the interim
-    check excludes exactly that middle shape so a rare all-[a-f] scope
-    hash can never self-match as "legacy"."""
-    from ..sources.writers import run_once_layout_migration
-
-    def _sweep(p: Path) -> bool:
-        ok = True
-        for d in p.glob("cc_*"):
-            nm = d.name
-            legacy = bool(
-                re.fullmatch(r"cc_[0-9a-f]{12}", nm)
-                or re.fullmatch(r"cc_[0-9a-f]{12}_unscoped", nm)
-            )
-            if not legacy:
-                m = re.fullmatch(r"cc_(.+)_([0-9a-f]{12})", nm)
-                legacy = bool(m) and not re.fullmatch(r"[0-9a-f]{8}", m.group(1))
-            if legacy:
-                try:
-                    shutil.rmtree(d)
-                except OSError:
-                    ok = False
-        return ok
-
-    run_once_layout_migration(parent, "_bdec_cc_layout_v3", _sweep)
-
-
-def _staged_sym(sym: DataFrame, stage_key: str, stage_scope: str) -> DataFrame:
+def _staged_sym(sym: DataFrame, stage_key: str) -> DataFrame:
     """Stage the symmetrized edge list as a bucketed table on the gather
     key ``d`` so the per-iteration join never re-exchanges it. Keyed by the
     caller's ``stage_key`` (content-deterministic, e.g. the operator tag +
-    a source fingerprint): same-session calls reuse the catalog entry,
-    fresh processes re-register the on-disk files via the staging manifest
-    (which also folds in the builder frame's analyzed-plan fingerprint, so
-    a code change to pair-gen upstream restages automatically).
+    a source fingerprint): later calls in the session reuse the table."""
+    from ..sources.writers import stage_bucketed_table
 
-    ``stage_scope`` (e.g. ``"cascade_sym:<sf_dir>"``) identifies the
-    (operator, corpus-path) pair STABLY across regenerations: when the
-    corpus is rewritten at the same path, the fingerprint in ``stage_key``
-    changes but the scope doesn't, so the previous generation's staged dir
-    — identifiable by the scope hash in its name — is reaped and its
-    catalog entry dropped (ADVICE r11: old generations leaked /tmp disk
-    forever). Scoping by (tag + path), not tag alone, is load-bearing:
-    the same operator staged for DIFFERENT corpora (sf0.01 vs sf0.1 vs
-    the SF1 stress dir) must coexist, or alternating runs would ping-pong
-    restage and a reap could delete a sibling corpus's live staged files
-    out from under its still-registered catalog table (round-12 review).
-    ``stage_scope`` is REQUIRED alongside ``stage_key`` (enforced by
-    ``connected_components``): a scope-less staged dir would never be
-    reaped — the unbounded /tmp-leak class this round closes."""
-    from ..sources.writers import reap_stale_stage_siblings, stage_bucketed_table
-
-    spark = sym.sparkSession
     key = hashlib.md5(stage_key.encode()).hexdigest()[:12]
-    raw_tag = stage_key.split(":", 1)[0]
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", raw_tag)
-    name = f"bdec_cc_sym_{tag}_{key}"
-    parent = Path(tempfile.gettempdir()) / "bdec_bucketed"
-    # the catalog DROP below reconstructs the reaped generation's table
-    # name from the CURRENT tag, which is only correct if the scope
-    # belongs to the same operator — enforce the "<tag>:<corpus>"
-    # convention so a copy-paste mismatch across the near-identical
-    # call sites fails loudly instead of deleting one operator's files
-    # while dropping another's table (round-12 review). Compared against
-    # the RAW tag as the caller wrote it in stage_key, not the sanitized
-    # table-name form — a tag like "my-op" must accept "my-op:<corpus>".
-    if not stage_scope.startswith(raw_tag + ":"):
-        raise ValueError(
-            f"stage_scope {stage_scope!r} does not start with the "
-            f"stage_key tag prefix {raw_tag + ':'!r} — scope and key must "
-            "identify the same operator"
-        )
-    scope8 = hashlib.md5(stage_scope.encode()).hexdigest()[:8]
-    dirname = f"cc_{scope8}_{key}"
-    for reaped in reap_stale_stage_siblings(parent, f"cc_{scope8}_", dirname):
-        # the reaped generation's same-session catalog entry (if any)
-        # would dangle over deleted files — drop it with the dir
-        old_key = reaped.rsplit("_", 1)[-1]
-        spark.sql(f"DROP TABLE IF EXISTS `bdec_cc_sym_{tag}_{old_key}`")
-    _reap_legacy_layouts(parent)
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", stage_key.split(":", 1)[0])
     return stage_bucketed_table(
-        spark,
-        name,
-        ["d"],
-        num_buckets=32,
-        path=str(parent / dirname / "sym"),
-        builder=lambda: sym,
+        sym.sparkSession, f"bdec_cc_sym_{tag}_{key}", ["d"], num_buckets=32, builder=lambda: sym
     )
 
 
 def _staged_row_count(df: DataFrame) -> int | None:
     """Exact row count of a STAGED bucketed frame from parquet footer
     metadata — no Spark job (r15, VERDICT r14 #4). Only answers for
-    frames ``stage_bucketed_table`` tagged with their immutable
-    generation dir; anything else (or any read hiccup) returns None and
-    the caller falls back to the limit-probe job. Footer num_rows over a
-    committed generation (_SUCCESS present, dir immutable by the MVCC
-    staging contract) equals the scan's row count by parquet's own
-    commit semantics."""
-    path = getattr(df, "_bdec_stage_gen_path", None)
+    frames ``stage_bucketed_table`` tagged with their directory; anything
+    else (or any read hiccup) returns None and the caller falls back to the
+    limit-probe job. A staged table is written once per session and never
+    rewritten, so footer num_rows equals the scan's row count."""
+    path = getattr(df, "_bdec_stage_path", None)
     if path is None:
         return None
     try:
@@ -227,7 +142,6 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 10,
     stage_key: str | None = None,
-    stage_scope: str | None = None,
     local_threshold: int = 0,
 ) -> DataFrame:
     """(id, component) — component = min vertex id reachable via edges.
@@ -239,11 +153,9 @@ def connected_components(
 
     ``stage_key``: optional content key (deterministic for the input
     graph); when set, the symmetrized edge list is staged as a bucketed
-    table reused across runs/processes for the same key — the iterative
-    staging pattern. When None the edge list is lazily checkpointed
-    per-run. ``stage_scope``: stable (operator, corpus-path) identity for
-    reaping the previous generation's staged dir when the corpus is
-    regenerated — see ``_staged_sym``.
+    table reused by every call in the session with the same key — the
+    iterative staging pattern. When None the edge list is lazily
+    checkpointed per-run.
 
     ``local_threshold``: opt-in small-graph fast path (round 12, VERDICT
     r11 #2). The same adaptivity Spark applies to joins via
@@ -262,15 +174,6 @@ def connected_components(
     (off) so existing callers and the unit tests keep exercising the
     distributed loop.
     """
-    if (stage_key is None) != (stage_scope is None):
-        # one without the other is always a caller bug: key-only would
-        # stage a dir no reap path ever touches (the /tmp-leak class this
-        # round closes), scope-only would be silently ignored
-        raise ValueError(
-            "stage_key and stage_scope must be provided together "
-            f"(got stage_key={'set' if stage_key else None}, "
-            f"stage_scope={'set' if stage_scope else None})"
-        )
     ids = vertices.select(F.col(id_col).alias("__vid"))
     sym = (
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
@@ -282,7 +185,7 @@ def connected_components(
         .distinct()
     )
     if stage_key is not None:
-        sym = _staged_sym(sym, stage_key, stage_scope)
+        sym = _staged_sym(sym, stage_key)
     else:
         sym = sym.localCheckpoint(eager=False)
 
@@ -297,7 +200,7 @@ def connected_components(
         # scale-up jobs to find out there is no 8193rd row — measured
         # ~0.4 s of pure job scheduling per construction on the portable
         # pipeline). The decision boundary is identical: footer count ==
-        # scan row count for a committed immutable generation, and the
+        # scan row count for a table staged once per session, and the
         # old probe's len(head) <= threshold ⟺ count <= threshold.
         # Un-staged (localCheckpoint) callers keep the limit probe.
         n_staged = _staged_row_count(sym)
@@ -477,7 +380,6 @@ def keep_one_per_cluster(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     stage_key: str | None = None,
-    stage_scope: str | None = None,
     local_threshold: int = 0,
 ) -> DataFrame:
     """Dedup decision table: (id, component, is_kept) — the minimum id of
@@ -489,7 +391,6 @@ def keep_one_per_cluster(
         src_col=src_col,
         dst_col=dst_col,
         stage_key=stage_key,
-        stage_scope=stage_scope,
         local_threshold=local_threshold,
     )
     return comps.select(

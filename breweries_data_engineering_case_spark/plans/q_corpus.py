@@ -799,7 +799,6 @@ def q_entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_col="u",
         dst_col="v",
         stage_key="er_fuzzy_sym:v1:" + source_fingerprint(sf_dir, "part"),
-        stage_scope="er_fuzzy_sym:" + sf_dir,
         local_threshold=8192,
     )
     return (
@@ -927,7 +926,6 @@ def q_dedup_cascade_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # plan-asserted in tests/test_components_staged.py via the
         # LOCAL_THRESHOLD_OVERRIDE hook.
         stage_key="cascade_sym:v1:" + source_fingerprint(sf_dir, "documents"),
-        stage_scope="cascade_sym:" + sf_dir,
         local_threshold=8192,
     )
     s3 = comp.groupBy("component").agg(F.min("node").alias("doc_id"))

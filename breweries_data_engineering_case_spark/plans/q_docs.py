@@ -7,7 +7,6 @@ aggregator in registry.py restores the historical registration order.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import tempfile
@@ -43,12 +42,8 @@ from ..operators.similarity import (
 from ..sources.readers import json_array_scan, source_fingerprint, spread, table_scan
 from ..sources.writers import (
     idempotent_date_overwrite,
-    pid_workspace_alive,
-    reap_stale_stage_siblings,
-    run_once_layout_migration,
-    run_workspace_name,
-    stage_lock,
-    staged_once,
+    session_workspace,
+    staged_dir,
     write_partitioned_parquet,
 )
 from .silver import clean_breweries
@@ -1437,7 +1432,6 @@ def q_doc_dedup_portable_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         src_col="id_a",
         dst_col="id_b",
         stage_key="portable_sym:v1:" + source_fingerprint(sf_dir, "documents"),
-        stage_scope="portable_sym:" + sf_dir,
         local_threshold=8192,
     )
     return comp.select(
@@ -3719,13 +3713,14 @@ def q_streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.fuzzy_dedup import minhash_band_exprs
     from ..streaming.stateful import lsh_band_dedup
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_docs" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "documents").select(
-                "doc_id", "text"
-            ).coalesce(1).write.mode("overwrite").parquet(str(staging))
+    staging = staged_dir(
+        spark,
+        "stream_docs:" + source_fingerprint(sf_dir, "documents"),
+        lambda out: table_scan(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .coalesce(1)
+        .write.parquet(str(out)),
+    )
 
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -3758,7 +3753,7 @@ def q_streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=4,
     )
 
-    qname = f"bdec_stream_neardup_{key}"
+    qname = f"bdec_stream_neardup_{staging.name}"
     q = (
         lsh_band_dedup(banded)
         .writeStream.format("memory")
@@ -3868,20 +3863,18 @@ def q_doc_neardup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> Data
     from ..operators.fuzzy_dedup import minhash_band_exprs
     from ..sources.readers import spread
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    state_dir = Path(tempfile.gettempdir()) / "bdec_incr_neardup" / key
     d = table_scan(spark, sf_dir, "documents").select("doc_id", "text")
-    with staged_once(state_dir / "state" / "_SUCCESS") as _need:
-        if _need:
-            snap0 = spread(d).filter(F.col("doc_id") % 3 != 0)
-            (
-                minhash_band_exprs(snap0, num_hashes=16, bands=4)
-                .groupBy("band_idx", "band_hash")
-                .agg(F.min("doc_id").alias("canon"))
-                .write.mode("overwrite")
-                .parquet(str(state_dir / "state"))
-            )
-    state = spark.read.parquet(str(state_dir / "state"))
+    state_dir = staged_dir(
+        spark,
+        "incr_neardup:" + source_fingerprint(sf_dir, "documents"),
+        lambda out: minhash_band_exprs(
+            spread(d).filter(F.col("doc_id") % 3 != 0), num_hashes=16, bands=4
+        )
+        .groupBy("band_idx", "band_hash")
+        .agg(F.min("doc_id").alias("canon"))
+        .write.parquet(str(out)),
+    )
+    state = spark.read.parquet(str(state_dir))
 
     delta_bands = minhash_band_exprs(
         spread(d).filter(F.col("doc_id") % 3 == 0), num_hashes=16, bands=4
@@ -3914,12 +3907,11 @@ def q_doc_neardup_incremental_snapshot(spark: SparkSession, sf_dir: str) -> Data
         .groupBy("band_idx", "band_hash")
         .agg(F.min("canon").alias("canon"))
     )
-    # serialized under the staging flock: the publish target is shared per
-    # corpus key, and two co-running processes' overwrites would delete
-    # each other's in-flight _temporary dirs (round 13); the data is
-    # deterministic, so last-writer-wins is safe once serialized
-    with stage_lock(state_dir / "state_next"):
-        merged.write.mode("overwrite").parquet(str(state_dir / "state_next"))
+    # a fresh directory per call: two concurrent overwrites of one shared
+    # target would delete each other's in-flight _temporary dirs
+    merged.write.parquet(
+        str(Path(tempfile.mkdtemp(dir=session_workspace(spark))) / "state_next")
+    )
     return (
         hits.groupBy("doc_id")
         .agg(
@@ -4059,58 +4051,21 @@ def q_streaming_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     doc_id % 3) make the whole run SQL-replayable: the oracle scores
     batch 1 against its own local mins, batch 2 against batch 1's state —
     the sequential semantics the state table materializes."""
-    import shutil
     import time as _time
 
     from ..operators.fuzzy_dedup import minhash_band_exprs
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    base = Path(tempfile.gettempdir()) / "bdec_stream_incr" / key
-    src = base / "src"
-    with staged_once(src / "_STAGED") as _need:
-        if _need:
-            # clear only src — rmtree(base) would delete the very lock
-            # file (base/src.lock) this process is holding, silently
-            # re-admitting a concurrent builder (round-13 review), and
-            # would also destroy sibling processes' run-* workspaces
-            shutil.rmtree(src, ignore_errors=True)
-            d = table_scan(spark, sf_dir, "documents").select("doc_id", "text")
-            d.filter(F.col("doc_id") % 3 != 0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(src / "b1.parquet"))
-            _time.sleep(1.2)  # strict mtime order => deterministic batch order
-            d.filter(F.col("doc_id") % 3 == 0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(src / "b2.parquet"))
-            (src / "_STAGED").touch()
-    # fresh state/out per run, in a RUN-UNIQUE (pid+thread) workspace:
-    # the stream replays both batches each time, and a shared mutable
-    # state/out/ckpt would let two co-running processes — or two threads
-    # of one session — rmtree each other's in-flight state (round 13;
-    # the src staging above stays shared: immutable once _STAGED lands).
-    # Old workspaces (dead pids) age out via the grace-window reap, and
-    # the pre-round-13 SHARED-layout leftovers (state/out/ckpt directly
-    # under base) are swept once, marker-gated.
-    def _legacy_incr_sweep(b) -> bool:
-        ok = True
-        for nm in ("state", "state_prev", "out", "ckpt"):
-            d = b / nm
-            if d.is_dir():
-                try:
-                    shutil.rmtree(d)
-                except OSError:
-                    ok = False
-        (b / "state_initialized").unlink(missing_ok=True)
-        return ok
+    def build(src: Path) -> None:
+        d = table_scan(spark, sf_dir, "documents").select("doc_id", "text")
+        d.filter(F.col("doc_id") % 3 != 0).coalesce(1).write.parquet(str(src / "b1.parquet"))
+        _time.sleep(1.2)  # strict mtime order => deterministic batch order
+        d.filter(F.col("doc_id") % 3 == 0).coalesce(1).write.parquet(str(src / "b2.parquet"))
 
-    run_once_layout_migration(base, "_bdec_incr_layout_v2", _legacy_incr_sweep)
-    work = base / run_workspace_name()
-    reap_stale_stage_siblings(base, "run-", work.name, keep=pid_workspace_alive)
-    shutil.rmtree(work / "state", ignore_errors=True)
-    shutil.rmtree(work / "state_prev", ignore_errors=True)
-    shutil.rmtree(work / "out", ignore_errors=True)
-    shutil.rmtree(work / "ckpt", ignore_errors=True)
-    (work / "state_initialized").unlink(missing_ok=True)
+    src = staged_dir(spark, "stream_incr:" + source_fingerprint(sf_dir, "documents"), build)
+    # fresh state/out/ckpt per call: the stream replays both batches each
+    # time, and a shared mutable state would let two concurrent calls
+    # rmtree each other's in-flight state (src above is immutable)
+    work = Path(tempfile.mkdtemp(dir=session_workspace(spark)))
 
     parallelism = spark.sparkContext.defaultParallelism
     big = 0x7FFFFFFFFFFFFFFF

@@ -7,9 +7,9 @@ aggregator in registry.py restores the historical registration order.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import tempfile
+import threading
 from collections.abc import Callable
 from pathlib import Path
 
@@ -39,11 +39,11 @@ from ..operators.similarity import (
     embedding_near_dup_pairs,
     semantic_dedup,
 )
-from ..sources.readers import json_array_scan, table_scan
+from ..sources.readers import json_array_scan, source_fingerprint, table_scan
 from ..sources.writers import (
     idempotent_date_overwrite,
-    stage_lock,
-    staged_once,
+    session_workspace,
+    staged_dir,
     write_partitioned_parquet,
 )
 from .silver import clean_breweries
@@ -55,6 +55,19 @@ from .qshared import (
     register,
 )
 
+
+# serializes streaming_file_sink_exactly_once's restarts over its sink
+_FILE_SINK_LOCK = threading.Lock()
+
+
+def _staged_events(spark: SparkSession, sf_dir: str) -> Path:
+    """events re-landed once per session as 4 parquet files with µs
+    timestamps (streaming scans reject the raw ns files)."""
+    return staged_dir(
+        spark,
+        "stream_events:" + source_fingerprint(sf_dir, "events"),
+        lambda out: table_scan(spark, sf_dir, "events").repartition(4).write.parquet(str(out)),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -251,15 +264,9 @@ def q_streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling aggregation executed through Structured Streaming
     (readStream → window agg → complete-mode memory sink, AvailableNow) and
     checked against the SAME batch oracle — proving the streaming path
-    computes identical results. Events are re-landed once per sf_dir as
+    computes identical results. Events are re-landed once per session as
     µs-timestamp parquet (streaming scans reject the raw ns files)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(
-                str(staging)
-            )
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import stream_events
 
     stream = stream_events(spark, str(staging))
@@ -270,7 +277,7 @@ def q_streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "event_cnt", "value_sum"
         )
     )
-    qname = f"bdec_stream_tumble_{key}"
+    qname = f"bdec_stream_tumble_{staging.name}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -317,13 +324,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded (right for a finite replay); the production continuous shape
     adds a watermark + append mode so closed sessions flush and state is
     GC'd — same aggregation, different output trigger."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(
-                str(staging)
-            )
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import stream_events
 
     stream = stream_events(spark, str(staging))
@@ -339,7 +340,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_sum",
         )
     )
-    qname = f"bdec_stream_sess_{key}"
+    qname = f"bdec_stream_sess_{staging.name}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -385,24 +386,20 @@ def q_streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon instead of growing with the whole stream (the scale
     fix over plain ``dropDuplicates``). Duplicates are full-row copies, so
     the surviving row is well-defined and the batch oracle is DISTINCT."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_dedup" / key
-    with staged_once(staging / "_DONE") as _need:
-        if _need:
-            ev = table_scan(spark, sf_dir, "events")
-            ev.repartition(4).write.mode("overwrite").parquet(str(staging))
-            # plant exact duplicates: every 100th event re-delivered
-            ev.filter(F.col("event_id") % 100 == 0).write.mode("append").parquet(
-                str(staging)
-            )
-            (staging / "_DONE").touch()
+    def build(out: Path) -> None:
+        ev = table_scan(spark, sf_dir, "events")
+        ev.repartition(4).write.parquet(str(out))
+        # plant exact duplicates: every 100th event re-delivered
+        ev.filter(F.col("event_id") % 100 == 0).write.mode("append").parquet(str(out))
+
+    staging = staged_dir(spark, "stream_dedup:" + source_fingerprint(sf_dir, "events"), build)
     from ..streaming.events import stream_events, streaming_dedup
 
     stream = stream_events(spark, str(staging))
     deduped = streaming_dedup(stream, ["event_id"], watermark="1 hour").select(
         "event_id", "event_type", "value"
     )
-    qname = f"bdec_stream_dedup_{key}"
+    qname = f"bdec_stream_dedup_{staging.name}"
     q = (
         deduped.writeStream.format("memory")
         .queryName(qname)
@@ -505,18 +502,12 @@ def q_streaming_stateful_tracker(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy oracle. count/max are order-exact; the float running sum is
     rounded to 2 decimals on both sides (accumulation-order error ~1e-10,
     five orders below the rounding step, so the round is stable)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(str(staging))
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import stream_events
     from ..streaming.stateful import user_activity_tracker
 
     tracked = user_activity_tracker(stream_events(spark, str(staging)))
-    qname = f"bdec_stateful_{key}"
+    qname = f"bdec_stateful_{staging.name}"
     q = (
         tracked.writeStream.format("memory")
         .queryName(qname)
@@ -557,13 +548,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
     future purchase, so the buffers stay bounded however long the streams
     run. AvailableNow + memory sink, checked against the batch self-join
     oracle (ids only in the output — never raw ns timestamps)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(str(staging))
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import stream_events
 
     purchases = (
@@ -592,7 +577,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id")
-    qname = f"bdec_ss_join_{key}"
+    qname = f"bdec_ss_join_{staging.name}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1255,13 +1240,7 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
     THIS container lacks protobuf, so the fallback is the executed path
     here; the TWS processor is plan-built and covered by a skip-gated
     pytest."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(str(staging))
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import stream_events
     from ..streaming.stateful import (
         tws_available,
@@ -1269,7 +1248,7 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
         user_type_counter_fallback,
     )
 
-    qname = f"bdec_tws_{key}"
+    qname = f"bdec_tws_{staging.name}"
     src = stream_events(spark, str(staging))
     if tws_available():
         prev = spark.conf.get(
@@ -1577,16 +1556,10 @@ def q_streaming_foreachbatch_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     checks. Each invocation replays into a fresh snapshot + checkpoint dir
     (deterministic final state); an incremental production run would keep
     both and only process new files."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(str(staging))
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import EVENTS_STREAM_SCHEMA, maintain_rollup_foreach_batch
 
-    run_dir = Path(tempfile.mkdtemp(prefix="bdec_fbr_"))
+    run_dir = Path(tempfile.mkdtemp(dir=session_workspace(spark)))
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -1644,23 +1617,17 @@ def q_streaming_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> Data
     one-file micro-batches (maxFilesPerTrigger=1, AvailableNow) through a
     map-only cleaning projection into an append-mode parquet sink. Unlike
     the other streaming queries, sink AND checkpoint are PERSISTENT per
-    sf_dir: a re-invocation restarts the query over the same checkpoint,
+    session and events snapshot: a re-invocation restarts the query over the same checkpoint,
     finds no unprocessed files, and appends nothing — the file-sink
     transaction log (_spark_metadata) plus the source checkpoint give
     exactly-once delivery across restarts, which is precisely what the
     oracle equality witnesses (a duplicated batch would double counts).
     The aggregate runs over the SINK's files, so the driver check also
     proves the sink wrote every row exactly once."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_stream_events" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "events").repartition(4).write.mode(
-                "overwrite"
-            ).parquet(str(staging))
+    staging = _staged_events(spark, sf_dir)
     from ..streaming.events import EVENTS_STREAM_SCHEMA
 
-    run_dir = Path(tempfile.gettempdir()) / "bdec_filesink" / key
+    run_dir = staged_dir(spark, "filesink:" + source_fingerprint(sf_dir, "events"), Path.mkdir)
     sink, ckpt = run_dir / "out", run_dir / "ckpt"
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
@@ -1670,12 +1637,12 @@ def q_streaming_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> Data
     cleaned = stream.select(
         "event_id", "event_type", F.to_date("ts").alias("day")
     )
-    # sink+checkpoint are deliberately PERSISTENT per sf_dir (the restart /
-    # exactly-once semantics under test), so two processes co-running this
-    # query share them: serialize the run under the staging flock — the
-    # loser restarts over the winner's committed checkpoint, availableNow
-    # finds no new input, and the sink is unchanged (round 13)
-    with stage_lock(sink):
+    # sink+checkpoint are deliberately PERSISTENT for the session (the
+    # restart / exactly-once semantics under test), so two threads running
+    # this query share them: serialize the runs — the later one restarts
+    # over the committed checkpoint, availableNow finds no new input, and
+    # the sink is unchanged
+    with _FILE_SINK_LOCK:
         q = (
             cleaned.writeStream.format("parquet")
             .option("path", str(sink))
@@ -2029,44 +1996,42 @@ def q_streaming_stream_stream_left_outer(
     watermark − 1 h can never match and is dropped."""
     from ..streaming.events import EVENTS_STREAM_SCHEMA
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    run_dir = Path(tempfile.gettempdir()) / "bdec_ss_lo_v3" / key
-    in_dir = run_dir / "in"
-    with staged_once(run_dir / "staged.done") as _need:
-        if _need:
-            # ONE file => ALL real data lands in micro-batch 0, before any
-            # watermark has advanced: with per-file batches and out-of-order
-            # staging, later real files would arrive below the sentinel-raised
-            # watermark and be dropped as late (measured: 1016 of 1981 rows).
-            # Replaying history through a file stream is harness staging; a
-            # production stream ingests in arrival order and never re-batches
-            # its own past.
-            table_scan(spark, sf_dir, "events").repartition(1).write.mode(
-                "overwrite"
-            ).parquet(str(in_dir))
-            import time as _time
+    def build(run_dir: Path) -> None:
+        in_dir = run_dir / "in"
+        # ONE file => ALL real data lands in micro-batch 0, before any
+        # watermark has advanced: with per-file batches and out-of-order
+        # staging, later real files would arrive below the sentinel-raised
+        # watermark and be dropped as late (measured: 1016 of 1981 rows).
+        # Replaying history through a file stream is harness staging; a
+        # production stream ingests in arrival order and never re-batches
+        # its own past.
+        table_scan(spark, sf_dir, "events").repartition(1).write.parquet(str(in_dir))
+        import time as _time
 
-            for tick, stamp in (
-                (1, "2024-02-15 12:00:00"),
-                (2, "2024-03-15 12:00:00"),
-            ):
-                _time.sleep(1.2)  # strictly increasing mtimes order the batches
-                spark.createDataFrame(
-                    [
-                        (-tick, stamp, -1, "purchase", 0.0, "{}"),
-                        (-100 - tick, stamp, -2, "click", 0.0, "{}"),
-                    ],
-                    "event_id long, ts_s string, user_id long, event_type string,"
-                    " value double, props string",
-                ).select(
-                    "event_id",
-                    F.col("ts_s").cast("timestamp").alias("ts"),
-                    "user_id",
-                    "event_type",
-                    "value",
-                    "props",
-                ).repartition(1).write.mode("append").parquet(str(in_dir))
-            (run_dir / "staged.done").touch()
+        for tick, stamp in (
+            (1, "2024-02-15 12:00:00"),
+            (2, "2024-03-15 12:00:00"),
+        ):
+            _time.sleep(1.2)  # strictly increasing mtimes order the batches
+            spark.createDataFrame(
+                [
+                    (-tick, stamp, -1, "purchase", 0.0, "{}"),
+                    (-100 - tick, stamp, -2, "click", 0.0, "{}"),
+                ],
+                "event_id long, ts_s string, user_id long, event_type string,"
+                " value double, props string",
+            ).select(
+                "event_id",
+                F.col("ts_s").cast("timestamp").alias("ts"),
+                "user_id",
+                "event_type",
+                "value",
+                "props",
+            ).repartition(1).write.mode("append").parquet(str(in_dir))
+
+    in_dir = (
+        staged_dir(spark, "ss_lo:" + source_fingerprint(sf_dir, "events"), build) / "in"
+    )
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -2097,7 +2062,7 @@ def q_streaming_stream_stream_left_outer(
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     ).select("purchase_id", "click_id")
-    qname = f"bdec_ss_lo_{key}"
+    qname = f"bdec_ss_lo_{in_dir.parent.name}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)

@@ -9,9 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-import tempfile
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -225,83 +223,24 @@ def q_graph_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured honestly (same-session A/B at SF1, NOTES round 10): the
     bucketed LOOP runs ≈ the cached loop (6.9 vs 6.0 s warm) — the win is
     the COLD path (9.3 vs 24.4 s: no cache materialization) and the
-    amortization model: the staged table is paid once per corpus
-    snapshot, not once per run. Round 11: the in-memory catalog forgetting
-    bucket metadata between processes (the r10 caveat — a fresh process
-    restaged ~15 s at SF1) is fixed by manifest-backed staging
-    (sources/writers.stage_bucketed_table): a fresh process re-registers
-    the on-disk files via a metadata-only DDL and reuses them.
+    amortization model: the staged tables are paid once per session and
+    corpus snapshot, not once per run
+    (sources/writers.stage_bucketed_table); a fresh process stages them
+    again (~15 s at SF1, measured in round 10).
     sf0.1 best-of-4: 7.1 s (r9 cached plan) → 5.2 s."""
     from ..sources.readers import source_fingerprint
+    from ..sources.writers import stage_bucketed_table
 
     edges, nodes = _pagerank_graph_int(spark, sf_dir)
     n_salt = 8
-    # keyed by corpus CONTENT (mtime+size), not just path: a regenerated
-    # testdata snapshot at the same path must invalidate the staged tables
-    # now that the manifest lets fresh processes reuse them
-    key = hashlib.md5(
-        (sf_dir + "|" + source_fingerprint(sf_dir, "orders", "lineitem")).encode()
-    ).hexdigest()[:12]
-    et = f"bdec_pr_salted_edges_{key}"
-    nt = f"bdec_pr_nodes_{key}"
-    parent = Path(tempfile.gettempdir()) / "bdec_bucketed"
-    # the dir name leads with a hash of the CORPUS PATH (stable across
-    # regenerations) and ends with the content key (changes per
-    # generation): reaping is scoped to this corpus, so staged state for
-    # other scale-factor dirs coexists — tag-wide reaping would ping-pong
-    # restage between alternating sf runs and could delete a sibling
-    # corpus's live files under its registered table (round-12 review)
-    sfid = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base_dir = parent / f"pr_{sfid}_{key}"
-    from ..sources.writers import reap_stale_stage_siblings, stage_bucketed_table
-
-    # a regenerated corpus mints a new content key; reap the previous
-    # generation's staged dir (ADVICE r11: old-fingerprint siblings leaked
-    # /tmp disk forever — at SF1 each pagerank edge table is sizeable) and
-    # drop its now-dangling same-session catalog entries
-    for reaped in reap_stale_stage_siblings(
-        parent, f"pr_{sfid}_", f"pr_{sfid}_{key}"
-    ):
-        old_key = reaped.rsplit("_", 1)[-1]
-        spark.sql(f"DROP TABLE IF EXISTS `bdec_pr_salted_edges_{old_key}`")
-        spark.sql(f"DROP TABLE IF EXISTS `bdec_pr_nodes_{old_key}`")
-    # legacy layouts: the interim round-12 pr_<12-hex-key> dir, and the
-    # pre-round-12 pr_* children under a bare-hex dir shared with other
-    # stagers (only those children are reaped there). Marker-gated
-    # one-time migration via the shared helper (retries until a clean
-    # sweep; never marks done over a failed removal — r12 review).
-    from ..sources.writers import run_once_layout_migration
-
-    def _pr_legacy_sweep(p) -> bool:
-        import re as _re
-        import shutil as _sh
-
-        ok = True
-        targets = [
-            d for d in p.glob("pr_*") if _re.fullmatch(r"pr_[0-9a-f]{12}", d.name)
-        ]
-        for legacy in p.glob("[0-9a-f]" * 12):
-            targets += [legacy / "pr_edges", legacy / "pr_nodes"]
-        for d in targets:
-            if d.is_dir():
-                try:
-                    _sh.rmtree(d)
-                except OSError:
-                    ok = False
-        return ok
-
-    run_once_layout_migration(parent, "_bdec_pr_layout_v2", _pr_legacy_sweep)
-
-    # manifest-backed staging (VERDICT r10 #5): a fresh process re-registers
-    # the on-disk bucketed files with a metadata-only DDL instead of
-    # recomputing + rewriting them — the staged tables are keyed by corpus
-    # snapshot, not by process lifetime
+    # keyed by corpus CONTENT (path, mtime, size): a testdata snapshot
+    # regenerated at the same path stages fresh tables
+    key = hashlib.md5(source_fingerprint(sf_dir, "orders", "lineitem").encode()).hexdigest()[:12]
     salted_edges = stage_bucketed_table(
         spark,
-        et,
+        f"bdec_pr_salted_edges_{key}",
         ["src", "__salt"],
         num_buckets=32,
-        path=str(base_dir / "pr_edges"),
         builder=lambda: edges.withColumn(
             "__salt", F.abs(F.xxhash64("src", "dst")) % n_salt
         ),
@@ -311,10 +250,9 @@ def q_graph_pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never re-exchanges inside the loop either
     bnodes = stage_bucketed_table(
         spark,
-        nt,
+        f"bdec_pr_nodes_{key}",
         ["node"],
         num_buckets=32,
-        path=str(base_dir / "pr_nodes"),
         builder=lambda: nodes,
     )
     r = bnodes.withColumn("pr", F.col("base"))

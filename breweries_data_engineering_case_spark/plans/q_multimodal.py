@@ -9,9 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-import tempfile
 from collections.abc import Callable
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,7 +40,7 @@ from ..operators.similarity import (
 from ..sources.readers import json_array_scan, table_scan
 from ..sources.writers import (
     idempotent_date_overwrite,
-    staged_once,
+    staged_dir,
     write_partitioned_parquet,
 )
 from .silver import clean_breweries
@@ -185,11 +183,11 @@ def q_multimodal_real_codec_extract(spark: SparkSession, sf_dir: str) -> DataFra
     tests/test_multimodal.py."""
     from ..operators.multimodal import extract_features, synthetic_real_assets
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_real_assets" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            synthetic_real_assets(spark, n=64).write.mode("overwrite").parquet(str(staging))
+    staging = staged_dir(
+        spark,
+        "real_assets",
+        lambda out: synthetic_real_assets(spark, n=64).write.parquet(str(out)),
+    )
     assets = spark.read.parquet(str(staging))
     return extract_features(assets, require_real_codec=True).orderBy("asset_id")
 

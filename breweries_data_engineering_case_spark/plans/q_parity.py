@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 import tempfile
 from collections.abc import Callable
 from pathlib import Path
@@ -40,13 +39,11 @@ from ..operators.similarity import (
     embedding_near_dup_pairs,
     semantic_dedup,
 )
-from ..sources.readers import json_array_scan, table_scan
+from ..sources.readers import json_array_scan, source_fingerprint, table_scan
 from ..sources.writers import (
     idempotent_date_overwrite,
-    pid_workspace_alive,
-    reap_stale_stage_siblings,
-    run_workspace_name,
-    staged_once,
+    session_workspace,
+    staged_dir,
     write_partitioned_parquet,
 )
 from .silver import clean_breweries
@@ -75,26 +72,14 @@ def q_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 — JSON-array file scan with explicit schema (≈ read_json_auto over
     bronze page files, app/tasks/silver.py:19; files are arrays per
     app/io/storage.py:23 so multiLine is required)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "bdec_json_scan" / key
+    def build(out: Path) -> None:
+        rows = [r.asDict() for r in table_scan(spark, sf_dir, "nation").collect()]
+        rows.sort(key=lambda r: r["n_nationkey"])
+        out.mkdir()
+        (out / "nation.json").write_text(json.dumps(rows))
+
+    out = staged_dir(spark, "json_scan:" + source_fingerprint(sf_dir, "nation"), build)
     target = out / "nation.json"
-    with staged_once(target) as _need:
-        if _need:
-            rows = [
-                r.asDict() for r in table_scan(spark, sf_dir, "nation").collect()
-            ]
-            rows.sort(key=lambda r: r["n_nationkey"])
-            out.mkdir(parents=True, exist_ok=True)
-            # tmps are only ever created while HOLDING this lock, so any
-            # found now belong to a crashed builder — clean them up
-            for orphan in out.glob(target.name + ".tmp-*"):
-                orphan.unlink(missing_ok=True)
-            # single FILE target: the marker IS the payload, so it must
-            # appear atomically — a plain write_text streams content into a
-            # visible file and an unlocked reader could scan it half-written
-            tmp = target.with_name(target.name + f".tmp-{os.getpid()}")
-            tmp.write_text(json.dumps(rows))
-            os.replace(tmp, target)
     schema = StructType(
         [
             StructField("n_nationkey", IntegerType()),
@@ -1119,8 +1104,6 @@ def q_rest_paginated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expected records from an integer range — the whole fetch → bronze
     JSON write → glob read-back loop is value-checked, not just
     row-counted."""
-    import shutil
-
     from ..schemas import BREWERY_RAW_SCHEMA
     from ..sources.rest import ingest_to_bronze
 
@@ -1145,24 +1128,9 @@ def q_rest_paginated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fetch(page: int):
         return (pages[page - 1] if page <= len(pages) else []), None
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    # per-RUN bronze dir (pid+thread id): the ingest rmtree+rewrites on
-    # every run, and a shared path would let two co-running processes — or
-    # two THREADS of one session (ADVICE r13) — delete each other's page
-    # files under the returned frame's lazy glob scan; dead pids' dirs age
-    # out via the grace reap (pid_workspace_alive accepts run-<pid>-<tid>).
-    # Accepted bounds of the pid+tid key (round-14 review): a live
-    # process's dirs are reap-exempt, so a long-lived session pays one
-    # ~KB-scale dir per distinct thread ident until exit (idents recycle
-    # aggressively in CPython, keeping the set small), and a RECYCLED
-    # ident rmtrees its predecessor's dir — safe here because the frame a
-    # run returns is consumed by its own caller before the ident can be
-    # reused (a dead thread cannot hold an unread lazy frame; the registry
-    # gate collects immediately)
-    root = Path(tempfile.gettempdir()) / "bdec_rest_ingest" / key
-    bronze = root / run_workspace_name()
-    reap_stale_stage_siblings(root, "run-", bronze.name, keep=pid_workspace_alive)
-    shutil.rmtree(bronze, ignore_errors=True)
+    # a fresh bronze dir per call: the returned frame scans its pages
+    # lazily, so a shared dir would let a concurrent call rewrite them
+    bronze = Path(tempfile.mkdtemp(dir=session_workspace(spark)))
     ingest_to_bronze(fetch, str(bronze), "2024-06-01", per_page=per_page)
     raw = json_array_scan(
         spark, str(bronze / "ingestion_date=2024-06-01" / "*.json"), BREWERY_RAW_SCHEMA
@@ -1349,13 +1317,12 @@ def q_partitioned_parquet_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_returnflag, l_linestatus); the read-back recovers partition columns
     from directories and must aggregate to exactly the source's numbers —
     the oracle never sees the round-trip, so any loss would mismatch."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "bdec_part_write" / key
+    out = tempfile.mkdtemp(dir=session_workspace(spark))
     li = table_scan(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    write_partitioned_parquet(li, str(out), ["l_returnflag", "l_linestatus"])
-    back = spark.read.parquet(str(out))
+    write_partitioned_parquet(li, out, ["l_returnflag", "l_linestatus"])
+    back = spark.read.parquet(out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt"), _dsum(F.col("l_quantity"), 2, "qty_sum")
     )
@@ -1374,14 +1341,13 @@ def q_idempotent_date_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition overwrite): date1 is written TWICE (second write must replace,
     not append) plus a different date2; the read-back per-date counts only
     match the oracle if the overwrite touched exactly its own partition."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "bdec_idem_write" / key
+    out = tempfile.mkdtemp(dir=session_workspace(spark))
     nation = table_scan(spark, sf_dir, "nation")
     region = table_scan(spark, sf_dir, "region")
-    idempotent_date_overwrite(nation, str(out), "2024-01-01")
-    idempotent_date_overwrite(nation, str(out), "2024-01-01")  # re-run, same date
-    idempotent_date_overwrite(region, str(out), "2024-01-02")
-    back = spark.read.parquet(str(out))
+    idempotent_date_overwrite(nation, out, "2024-01-01")
+    idempotent_date_overwrite(nation, out, "2024-01-01")  # re-run, same date
+    idempotent_date_overwrite(region, out, "2024-01-02")
+    back = spark.read.parquet(out)
     return back.groupBy("ingestion_date").agg(F.count(F.lit(1)).alias("cnt"))
 
 
@@ -1543,15 +1509,16 @@ def q_window_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source with an explicit schema (no inference pass — schema
     inference reads the data twice and is banned at 100 TB), header on,
-    PERMISSIVE mode. The nation table is landed as CSV once per sf_dir so
+    PERMISSIVE mode. The nation table is landed as CSV once per session so
     the oracle can check the round-trip against the parquet original."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_csv_nation" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "nation").select(
-                "n_nationkey", "n_name", "n_regionkey"
-            ).write.mode("overwrite").option("header", True).csv(str(staging))
+    staging = staged_dir(
+        spark,
+        "csv_nation:" + source_fingerprint(sf_dir, "nation"),
+        lambda out: table_scan(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .write.option("header", True)
+        .csv(str(out)),
+    )
     return (
         spark.read.schema("n_nationkey bigint, n_name string, n_regionkey bigint")
         .option("header", True)
@@ -1610,24 +1577,21 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sorted_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-layout-aware scan: lineitem is landed ONCE per sf_dir
+    """Data-layout-aware scan: lineitem is landed ONCE per session
     range-partitioned + sorted by l_shipdate, so each parquet file covers a
     narrow, non-overlapping shipdate range and the pushed-down date predicate
     skips whole files/row-groups via footer min/max — the layout that turns
     a 100 TB full scan into a touched-fraction scan. The oracle runs the
     same filter over the unsorted original: identical results, different
     I/O. File-range disjointness is asserted in tests/test_scale_mechanics.py."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_sorted_lineitem" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            (
-                table_scan(spark, sf_dir, "lineitem")
-                .repartitionByRange(8, "l_shipdate")
-                .sortWithinPartitions("l_shipdate")
-                .write.mode("overwrite")
-                .parquet(str(staging))
-            )
+    staging = staged_dir(
+        spark,
+        "sorted_lineitem:" + source_fingerprint(sf_dir, "lineitem"),
+        lambda out: table_scan(spark, sf_dir, "lineitem")
+        .repartitionByRange(8, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.parquet(str(out)),
+    )
     li = spark.read.parquet(str(staging))
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp_ntz"))
@@ -1744,32 +1708,25 @@ def q_bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle joins the unbucketed originals."""
     from ..sources.writers import stage_bucketed_table
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    ot, lt = f"bdec_orders_b_{key}", f"bdec_lineitem_b_{key}"
-    # manifest-backed generation staging (round 13): a plain tableExists
-    # gate is per-session, so a fresh process used to REWRITE the bucketed
-    # files — and two processes co-running this query would rmtree each
-    # other's in-flight write. stage_bucketed_table gives cross-process
-    # adoption of the published generation plus the publish flock.
-    base = Path(tempfile.gettempdir()) / "bdec_bucketed" / key
+    def table_key(name: str) -> str:
+        return hashlib.md5(source_fingerprint(sf_dir, name).encode()).hexdigest()[:12]
+
     o = stage_bucketed_table(
         spark,
-        ot,
+        f"bdec_orders_b_{table_key('orders')}",
         ["o_orderkey"],
         num_buckets=16,
         sort_cols=["o_orderkey"],
-        path=str(base / "orders"),
         builder=lambda: table_scan(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
         ),
     )
     li = stage_bucketed_table(
         spark,
-        lt,
+        f"bdec_lineitem_b_{table_key('lineitem')}",
         ["l_orderkey"],
         num_buckets=16,
         sort_cols=["l_orderkey"],
-        path=str(base / "lineitem"),
         builder=lambda: table_scan(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice"
         ),
@@ -1935,16 +1892,16 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("orc_scan", "SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source round-trip (columnar format #2): nation landed as ORC once
-    per sf_dir, read back with pushdown/pruning semantics identical to the
+    per session, read back with pushdown/pruning semantics identical to the
     parquet path — the same declarative plan works across storage formats.
     Oracle checks against the parquet original."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_orc_nation" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "nation").select(
-                "n_nationkey", "n_name", "n_regionkey"
-            ).write.mode("overwrite").orc(str(staging))
+    staging = staged_dir(
+        spark,
+        "orc_nation:" + source_fingerprint(sf_dir, "nation"),
+        lambda out: table_scan(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .write.orc(str(out)),
+    )
     return spark.read.orc(str(staging))
 
 
@@ -1965,28 +1922,28 @@ def q_zorder_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     can only do for its one key. The interleave is pure integer arithmetic
     (16 shift-mask terms, whole-stage codegen); the oracle filters the
     unsorted original."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_zorder_lineitem" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            li = table_scan(spark, sf_dir, "lineitem")
-            a = F.pmod(F.col("l_orderkey"), F.lit(256))
-            b = F.pmod(F.col("l_partkey"), F.lit(256))
-            z = F.lit(0).cast("long")
-            for i in range(8):
-                z = (
-                    z
-                    + (F.shiftright(a, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i)))
-                    + (F.shiftright(b, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i + 1)))
-                )
-            (
-                li.withColumn("__z", z)
-                .repartitionByRange(8, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-                .write.mode("overwrite")
-                .parquet(str(staging))
+    def build(out: Path) -> None:
+        a = F.pmod(F.col("l_orderkey"), F.lit(256))
+        b = F.pmod(F.col("l_partkey"), F.lit(256))
+        z = F.lit(0).cast("long")
+        for i in range(8):
+            z = (
+                z
+                + (F.shiftright(a, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i)))
+                + (F.shiftright(b, i).bitwiseAND(F.lit(1)) * F.lit(1 << (2 * i + 1)))
             )
+        (
+            table_scan(spark, sf_dir, "lineitem")
+            .withColumn("__z", z)
+            .repartitionByRange(8, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__z")
+            .write.parquet(str(out))
+        )
+
+    staging = staged_dir(
+        spark, "zorder_lineitem:" + source_fingerprint(sf_dir, "lineitem"), build
+    )
     li = spark.read.parquet(str(staging))
     return li.filter(
         (F.pmod(F.col("l_partkey"), F.lit(256)) < 16)
@@ -2257,17 +2214,13 @@ def q_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the listing — never reading payloads it can drop."""
     import hashlib as _hl
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_binary_files" / key
-    with staged_once(staging / ".done") as _need:
-        if _need:
-            staging.mkdir(parents=True, exist_ok=True)
-            for i in range(5):
-                body = (
-                    f"blob-{i}:" + _hl.md5(f"seed:{i}".encode()).hexdigest()
-                ) * (i + 1)
-                (staging / f"blob-{i}.bin").write_bytes(body.encode())
-            (staging / ".done").write_text("ok")
+    def build(out: Path) -> None:
+        out.mkdir()
+        for i in range(5):
+            body = (f"blob-{i}:" + _hl.md5(f"seed:{i}".encode()).hexdigest()) * (i + 1)
+            (out / f"blob-{i}.bin").write_bytes(body.encode())
+
+    staging = staged_dir(spark, "binary_files", build)
     raw = spark.read.format("binaryFile").load(str(staging / "*.bin"))
     return (
         raw.select(
@@ -2429,7 +2382,7 @@ def q_sql_recursive_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def q_parquet_meta_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hidden ``_metadata`` file-metadata column over a hive-partitioned
-    parquet layout: nation is landed once per sf_dir partitioned by
+    parquet layout: nation is landed once per session partitioned by
     n_regionkey, read back, and audited — rows are grouped by the partition
     value EXTRACTED FROM THE PHYSICAL FILE PATH (``_metadata.file_path``),
     and ``path_ok`` asserts the path-derived key equals the logical
@@ -2438,13 +2391,13 @@ def q_parquet_meta_partition_audit(spark: SparkSession, sf_dir: str) -> DataFram
     show up as path_ok=false or a count drift); ``_metadata`` is evaluated
     scan-side from the file listing, so the audit adds no extra I/O beyond
     the scan itself."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_meta_nation" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "nation").write.mode("overwrite").partitionBy(
-                "n_regionkey"
-            ).parquet(str(staging))
+    staging = staged_dir(
+        spark,
+        "meta_nation:" + source_fingerprint(sf_dir, "nation"),
+        lambda out: table_scan(spark, sf_dir, "nation")
+        .write.partitionBy("n_regionkey")
+        .parquet(str(out)),
+    )
     df = spark.read.parquet(str(staging))
     meta = df.select(
         F.col("n_regionkey").cast("long").alias("rk_col"),
@@ -2463,19 +2416,19 @@ def q_parquet_meta_partition_audit(spark: SparkSession, sf_dir: str) -> DataFram
 @register("xml_scan", "SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def q_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native XML source (merged into Spark 4 from spark-xml): nation is
-    landed as XML once per sf_dir (rowTag elements), read back with an
+    landed as XML once per session (rowTag elements), read back with an
     explicit schema — schema inference over XML costs a full extra pass and
     is banned at scale, same rule as csv_scan. The oracle checks the
     round-trip against the parquet original."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_xml_nation" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "nation").select(
-                "n_nationkey", "n_name", "n_regionkey"
-            ).write.mode("overwrite").format("xml").option("rowTag", "nation").save(
-                str(staging)
-            )
+    staging = staged_dir(
+        spark,
+        "xml_nation:" + source_fingerprint(sf_dir, "nation"),
+        lambda out: table_scan(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .write.format("xml")
+        .option("rowTag", "nation")
+        .save(str(out)),
+    )
     return (
         spark.read.format("xml")
         .option("rowTag", "nation")
@@ -2505,21 +2458,17 @@ def q_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver check proves no record was lost OR misclassified. Parsing is
     JVM-side Jackson; the quarantine branch is a column predicate, not a
     Python pass."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_json_corrupt" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            ev = table_scan(spark, sf_dir, "events").select(
-                "event_id", "user_id", "event_type"
-            )
-            line = F.to_json(F.struct("event_id", "user_id", "event_type"))
-            ev.select(
-                F.when(
-                    F.col("event_id") % 97 == 0, F.concat(F.lit("{corrupt!"), line)
-                )
-                .otherwise(line)
-                .alias("value")
-            ).write.mode("overwrite").text(str(staging))
+    def build(out: Path) -> None:
+        line = F.to_json(F.struct("event_id", "user_id", "event_type"))
+        table_scan(spark, sf_dir, "events").select(
+            F.when(F.col("event_id") % 97 == 0, F.concat(F.lit("{corrupt!"), line))
+            .otherwise(line)
+            .alias("value")
+        ).write.text(str(out))
+
+    staging = staged_dir(
+        spark, "json_corrupt:" + source_fingerprint(sf_dir, "events"), build
+    )
     df = (
         spark.read.schema(
             "event_id long, user_id long, event_type string, _corrupt string"
@@ -2546,7 +2495,7 @@ def q_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic partition pruning: orders are landed once per sf_dir as
+    """Dynamic partition pruning: orders are landed once per session as
     parquet partitioned by order month, then joined to a month dimension
     that is filtered at runtime. Because the join key is the fact's
     PARTITION column and the dim side broadcasts, Catalyst injects a
@@ -2557,15 +2506,18 @@ def q_dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dynamicpruningexpression`` is present in the executed plan. The dim
     is derived from the unpartitioned orders table (a different source
     than the fact), as in a real date-dimension join."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_dpp_orders" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "orders").select(
-                "o_orderkey",
-                "o_totalprice",
-                F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
-            ).write.mode("overwrite").partitionBy("o_month").parquet(str(staging))
+    staging = staged_dir(
+        spark,
+        "dpp_orders:" + source_fingerprint(sf_dir, "orders"),
+        lambda out: table_scan(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            "o_totalprice",
+            F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
+        )
+        .write.partitionBy("o_month")
+        .parquet(str(out)),
+    )
     fact = spark.read.parquet(str(staging))
     dim = (
         table_scan(spark, sf_dir, "orders")
@@ -2618,8 +2570,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state carries across micro-batch boundaries; the feed is md5-portable,
     so the oracle regenerates every streamed row from a bare integer range
     and the final aggregate is fully value-checked."""
-    import tempfile as _tf
-
     from ..sources.python_datasource import register_feed_stream_source
 
     register_feed_stream_source(spark)
@@ -2639,7 +2589,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="bdec_feed_stream_ckpt"))
+        .option("checkpointLocation", tempfile.mkdtemp(dir=session_workspace(spark)))
         .start()
     )
     try:
@@ -2836,7 +2786,7 @@ def q_agg_functions_modern(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_parquet_sized_files_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-size governance — the small-files/large-files control every
-    100 TB lakehouse write needs: orders are landed once per sf_dir with
+    100 TB lakehouse write needs: orders are landed once per session with
     ``maxRecordsPerFile=5000`` from a single writer task, so the layout is
     deterministic (⌈total/5000⌉ sequential chunks). The AUDIT reads the
     landing back and derives the file statistics from the
@@ -2846,15 +2796,16 @@ def q_parquet_sized_files_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     the writer actually honored the record cap. (In production the cap
     pairs with AQE advisory partition sizes; one task is used here only to
     pin determinism.)"""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    staging = Path(tempfile.gettempdir()) / "bdec_sized_orders" / key
-    with staged_once(staging / "_SUCCESS") as _need:
-        if _need:
-            table_scan(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_totalprice"
-            ).repartition(1).sortWithinPartitions("o_orderkey").write.mode(
-                "overwrite"
-            ).option("maxRecordsPerFile", 5000).parquet(str(staging))
+    staging = staged_dir(
+        spark,
+        "sized_orders:" + source_fingerprint(sf_dir, "orders"),
+        lambda out: table_scan(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice")
+        .repartition(1)
+        .sortWithinPartitions("o_orderkey")
+        .write.option("maxRecordsPerFile", 5000)
+        .parquet(str(out)),
+    )
     per_file = (
         spark.read.parquet(str(staging))
         .groupBy(F.col("_metadata.file_name").alias("f"))
@@ -3116,16 +3067,9 @@ def q_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.python_datasource import register_jsonl_sink
 
     register_jsonl_sink(spark)
-    # key by (sf_dir, applicationId): two concurrent sessions on the same
-    # sf_dir otherwise share one _staged dir and each commit/abort rmtree
-    # deletes the other writer's staged files — the nonce gives every
-    # session its own sink root, keeping the exactly-once read-back proof
-    # honest (ADVICE r7).
-    key = hashlib.md5(
-        f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    out = Path(tempfile.gettempdir()) / "bdec_jsonl_sink" / key
-    out.mkdir(parents=True, exist_ok=True)
+    # a fresh sink root per call: a commit/abort rmtree of a shared root
+    # would delete a concurrent writer's staged files (ADVICE r7)
+    out = Path(tempfile.mkdtemp(dir=session_workspace(spark)))
     src = table_scan(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )

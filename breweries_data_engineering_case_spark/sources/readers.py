@@ -140,13 +140,14 @@ def table_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def source_fingerprint(sf_dir: str, *names: str) -> str:
-    """Cheap content fingerprint (mtime_ns:size per table file) for keying
-    cross-process staged artifacts (bucketed tables, stream staging dirs).
+    """Cheap content fingerprint (path=mtime_ns:size per table file) for
+    keying staged artifacts (bucketed tables, stream staging dirs).
 
     Staged state derived from a corpus snapshot must be invalidated when
     the snapshot is REGENERATED at the same path — mtime+size changes on
     any rewrite, so baking this string into a stage key makes stale-reuse
-    impossible without paying a content hash over the data.
+    impossible without paying a content hash over the data. Each part
+    names the table's full path, so two corpora never share a key.
 
     A table may be a single parquet FILE (driver testdata) or a
     Spark-written DIRECTORY (stress corpora). For a directory, the stat of
@@ -196,9 +197,9 @@ def source_fingerprint(sf_dir: str, *names: str) -> str:
                     fst = _os.stat(_os.path.join(root, fn))
                     rel = fn if rel_root == "." else f"{rel_root}/{fn}"
                     entries.append(f"{rel}:{fst.st_mtime_ns}:{fst.st_size}")
-            parts.append(f"{n}=dir[{','.join(entries)}]")
+            parts.append(f"{p}=dir[{','.join(entries)}]")
         else:
-            parts.append(f"{n}={st.st_mtime_ns}:{st.st_size}")
+            parts.append(f"{p}={st.st_mtime_ns}:{st.st_size}")
     return ";".join(parts)
 
 

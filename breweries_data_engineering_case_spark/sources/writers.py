@@ -16,20 +16,23 @@ delete-then-insert becomes **dynamic partition overwrite** — with
 partitions present in the written data and leaves every other date alone.
 Same idempotency contract, and it scales: the overwrite is a metadata swap of
 one date directory, never a table rewrite.
+
+The module ends with the session staging helpers (``session_workspace``,
+``staged_dir``, ``stage_bucketed_table``): derived tables and files live in
+one temp directory per SparkContext and are built once per session.
 """
 
 from __future__ import annotations
 
-import contextlib
+import atexit
 import datetime as _dt
 import hashlib
-import logging
 import os
 import shutil
+import tempfile
 import threading
-import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from pathlib import Path
 from urllib.parse import urlsplit
 from urllib.request import url2pathname
@@ -38,8 +41,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_log = logging.getLogger("bdec.staging")
 
 
 def local_path(uri: str) -> str:
@@ -172,36 +173,6 @@ def idempotent_date_overwrite(
     write_partitioned_parquet(stamped, path, [date_col, *extra_partition_cols])
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_mb: int = 128,
-    partition_cols: Sequence[str] = (),
-) -> int:
-    """Small-files compaction: rewrite a dataset into ~target-sized files.
-
-    The small-files problem is the classic failure mode of incremental
-    pipelines (every micro-batch/run appends a few KB files; a year later the
-    scan spends longer listing+opening than reading). Rewrites with a file
-    count derived from the actual byte size; returns the file count used.
-    Partitioned datasets compact within partitions via a repartition on the
-    partition key (one shuffle, each output partition dir gets coalesced
-    files).
-    """
-    df = spark.read.parquet(path)
-    total_bytes = sum(f.stat().st_size for f in Path(path).rglob("*.parquet"))
-    n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    if partition_cols:
-        df = df.repartition(n_files, *[F.col(c) for c in partition_cols])
-        write_partitioned_parquet(df, out_path, partition_cols)
-    else:
-        df.repartition(n_files).write.mode("overwrite").option(
-            "compression", "snappy"
-        ).parquet(out_path)
-    return n_files
-
-
 def write_bucketed_table(
     df: DataFrame,
     name: str,
@@ -236,388 +207,49 @@ def write_bucketed_table(
     w.mode(mode).saveAsTable(name)
 
 
-_MANIFEST = "_bdec_manifest.json"
-
-# Staged-generation FILE LAYOUT version (r15, guide §6). v1 wrote the
-# builder frame as-is: every upstream task wrote one file per bucket it
-# held rows for, so an N-task builder produced up to N×num_buckets tiny
-# files (measured: the sf0.1 pagerank edge generation held 470 files for
-# 32 buckets, ~9 KB each). Each bucketed-scan task then opened ~15 files,
-# and every parquet file open clones a Hadoop Configuration/JobConf whose
-# constructor is SYNCHRONIZED on the shared parent conf — thread dumps
-# during the pagerank iteration stages showed 25/32 task threads BLOCKED
-# in org.apache.hadoop.conf.Configuration.<init>, i.e. a lock convoy that
-# left the CPUs 76% idle (runTime≫cpuTime with zero GC/fetch-wait). v2
-# repartitions the staged frame by the bucket columns into num_buckets
-# partitions before the bucketed write: repartition's HashPartitioning
-# and the writer's bucket id use the same murmur3-pmod function, so each
-# task holds exactly one bucket and writes exactly ONE file — the
-# canonical bucketed layout (one file per bucket per table). At scale the
-# same rule holds: num_buckets is already the knob that must balance
-# file size against parallelism for a bucketed table.
-_STAGE_LAYOUT = "one-file-per-bucket-v2"
-
-# _plan_fingerprint mutates session-global maxToStringFields around its two
-# stringifications; in a multithreaded driver sharing one SparkSession a
-# concurrent fingerprint (or any other plan stringify) could interleave
-# set/restore and observe the truncated default — an unstable fingerprint
-# and a spurious restage (ADVICE r12). Module-level lock: fingerprints are
-# rare (once per stage call), contention is nil.
-_FP_CONF_LOCK = threading.Lock()
-
-# Per-table-name SESSION-level lock for stage_bucketed_table's
-# drop-and-register sequence (ADVICE r13): the per-root flock serializes
-# PROCESSES, but two threads of one session share the flock's usefulness
-# only for the write itself — a lagging thread that observed a stale
-# catalog entry could DROP the fresh entry the winning thread just
-# registered, making the winner's immediately-following spark.table(name)
-# raise TABLE_OR_VIEW_NOT_FOUND (a transient abort; final state correct).
-# The name set is small and static (one per staged operator), so the dict
-# never grows unboundedly.
-_TABLE_LOCKS: dict[str, threading.RLock] = {}
-_TABLE_LOCKS_GUARD = threading.Lock()
+# Staging: one temp workspace per SparkContext. Queries derive tables and
+# files from a corpus (bucketed edge lists, CSV/ORC/XML landings, streaming
+# inputs) and reuse them for the rest of the session. The workspace is a
+# ``tempfile.mkdtemp`` directory under ``tempfile.gettempdir()`` (so TMPDIR
+# decides where it goes), made on first use and removed at interpreter exit,
+# the same lifetime as the in-memory catalog that registers its bucketed
+# tables. Nothing is shared between processes, so there is nothing to lock
+# across them, reap or migrate. Callers put the content of what they read
+# into every key (``readers.source_fingerprint``): a corpus rewritten at the
+# same path mid-session gets a fresh stage. One reentrant lock serializes
+# staging within the process (a build may itself stage).
+_STAGE_LOCK = threading.RLock()
 
 
-def _table_thread_lock(name: str) -> threading.RLock:
-    with _TABLE_LOCKS_GUARD:
-        return _TABLE_LOCKS.setdefault(name, threading.RLock())
+def session_workspace(spark: SparkSession) -> Path:
+    """The staging workspace of ``spark``'s SparkContext, made on first use."""
+    sc = spark.sparkContext
+    with _STAGE_LOCK:
+        ws = getattr(sc, "_bdec_workspace", None)
+        if ws is None:
+            ws = Path(tempfile.mkdtemp(prefix="bdec-"))
+            atexit.register(shutil.rmtree, ws, True)
+            sc._bdec_workspace, sc._bdec_staged = ws, set()
+    return ws
 
 
-@contextlib.contextmanager
-def _publish_lock(target: Path):
-    """Inter-process advisory lock for publishing a staged dir at
-    ``target`` (VERDICT r12 #1/#5). The lock file is a SIBLING of the
-    published dir (``<target>.lock``), so it survives the rmtree+rename
-    publish and is itself removed only when a reap removes the whole
-    generation dir above it. flock auto-releases on process death — a
-    crashed stager never wedges the key."""
-    target.parent.mkdir(parents=True, exist_ok=True)
-    lock_path = target.with_name(target.name + ".lock")
-    import fcntl
-
-    fd = os.open(str(lock_path), os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """Deterministic hash of a frame's analyzed plan, built from TWO
-    stringifications whose blind spots are disjoint (round-12 review):
-
-    - the CANONICALIZED plan — Catalyst's semantic-equality form:
-      expression ids normalized (session-global counters that differ
-      across processes), literals preserved verbatim — catches every
-      expression/literal change, but erases output NAMES (aliases print
-      as ``AS #0L``), so a builder that merely renames or SWAPS output
-      columns would hash identically while the served schema binding
-      changed;
-    - the raw analyzed plan with ``#<digits>`` id suffixes stripped —
-      carries the name↔expression binding (``expr AS name#``), closing
-      the rename/swap hole; its own blind spot (the strip also mangles
-      ``#N`` inside string literals) is covered by the canonicalized
-      half, which keeps literals intact.
-
-    ``maxToStringFields`` is raised for both stringifies (and restored)
-    because the default (25) elides wide projections as "... N more
-    fields" — a change to the 26th expression would otherwise mint the
-    SAME fingerprint and silently reuse stale staged data.
-
-    This is the CODE half of stage-key invalidation (VERDICT r11 #5 /
-    NOTES "Staging version discipline"): ``source_fingerprint`` catches a
-    regenerated corpus (DATA change), but a code change to pair-gen /
-    salting / surrogate-id logic used to silently reuse stale cross-process
-    staged state unless someone remembered to bump a ``:vN:`` tag.
-    Folding the analyzed-plan hash into the staging manifest makes that
-    automatic: any upstream change that alters the staged frame's lineage
-    mints a different fingerprint and forces a restage. (An upstream
-    ``localCheckpoint`` truncates lineage to an opaque ``LogicalRDD`` node,
-    so code changes ABOVE a checkpoint are not visible — stagers should
-    build their frame un-checkpointed, as all in-repo call sites do.)
-
-    MEMOIZED per session on ``(analyzed.semanticHash(), schema
-    catalogString)`` — r15, VERDICT r14 #4: the two stringifications cost
-    ~0.2 s per call on the portable pipeline's LSH lineage, paid on every
-    construction (a bench pass constructs up to 9×). The key is sound for
-    the fingerprint's two halves: ``semanticHash`` IS the canonicalized
-    plan's hash (expressions + literals — the canonical half), and the
-    schema string carries the output name↔position↔type binding (the
-    rename/swap hole the named half exists to close). The named half's
-    extra sensitivity — INTERMEDIATE alias renames — distinguishes plans
-    that are canonically equal, i.e. produce identical data, so a memo
-    hit across such a pair would reuse a byte-identical generation: over-
-    invalidation forgone, never stale data. Residual risk is a 32-bit
-    semanticHash collision between genuinely different same-schema plans
-    built in ONE session (the memo dies with it; cross-process reuse
-    always goes through the manifest's stored full fingerprint) — with a
-    handful of staged plans per session the pair-collision odds are
-    ~n²/2³³; accepted and documented."""
-    import re
-
-    spark = df.sparkSession
-    memo: dict = spark.__dict__.setdefault("_bdec_plan_fp_memo", {})
-    try:
-        analyzed0 = df._jdf.queryExecution().analyzed()
-        mkey = (analyzed0.semanticHash(), analyzed0.schema().catalogString())
-    except Exception:
-        mkey = None
-    if mkey is not None and mkey in memo:
-        return memo[mkey]
-    key = "spark.sql.debug.maxToStringFields"
-    with _FP_CONF_LOCK:  # set/stringify/restore must not interleave (r12)
-        # SQLConf.get is resolved through the JVM thread's ACTIVE session;
-        # a py4j call from any Python thread other than the one that built
-        # the session lands on a fresh JVM thread with no active session,
-        # where the stringify silently falls back to the 25-field default
-        # and mints a truncated — hence different — fingerprint (found by
-        # this round's thread-safety test). Pin the active session on the
-        # calling thread before stringifying.
-        try:
-            spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-                spark._jsparkSession
-            )
-        except Exception:  # pre-4.0 package layout
-            spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
-                spark._jsparkSession
-            )
-        prev = spark.conf.get(key, None)
-        try:
-            spark.conf.set(key, "100000")
-            analyzed = df._jdf.queryExecution().analyzed()
-            canonical = analyzed.canonicalized().toString()
-            named = re.sub(r"#\d+", "#", analyzed.toString())
-            # higher-order-function lambda variables carry a SESSION-GLOBAL
-            # counter in the NAME itself ("lambda x_2#4L" in a fresh session
-            # prints as "lambda x_79#312L" after other lambda columns were
-            # built), which the #-strip does not touch — found live in round
-            # 13: two pytest shards minted different fingerprints for the
-            # IDENTICAL cascade builder and ping-pong-restaged each other's
-            # staged files out from under an active scan. Normalize the
-            # counter; the canonicalized half (verified identical across
-            # warmed sessions) still guards real expression changes.
-            named = re.sub(r"(lambda \w+?)_\d+#", r"\1_#", named)
-            # CTE relation ids are another session-global counter that
-            # prints WITHOUT a '#' ("CTERelationDef 12"); none of the
-            # in-repo stagers use CTEs today, but a SQL-built stager would
-            # hit the same class of churn — normalize defensively
-            named = re.sub(r"\b(CTERelation(?:Def|Ref)) \d+", r"\1 _", named)
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    if " more fields]" in canonical or " more fields]" in named:
-        # belt over the conf plumbing: a truncated stringify must never
-        # become a fingerprint — stale-reuse via a hash collision of
-        # elided tails is the exact failure this function exists to stop
-        raise RuntimeError(
-            "_plan_fingerprint: plan stringification was truncated despite "
-            f"{key}=100000 — refusing to fingerprint an elided plan"
-        )
-    h = hashlib.md5()
-    h.update(canonical.encode())
-    h.update(b"\x00")
-    h.update(named.encode())
-    fp = h.hexdigest()[:12]
-    if mkey is not None:
-        if len(memo) > 64:  # bound growth across many staged plans
-            memo.clear()
-        memo[mkey] = fp
-    return fp
-
-
-def _catalog_table_meta(
-    spark: SparkSession, name: str
-) -> tuple[dict | None, str | None]:
-    """(bucket spec, location) the session catalog has registered for
-    ``name`` (parsed from DESCRIBE TABLE EXTENDED); spec is None if the
-    table has no bucket spec, location is None if absent."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED `{name}`").collect()
-    info = {r.col_name: r.data_type for r in rows}
-
-    def _cols(s: str | None) -> list[str]:
-        s = (s or "").strip().strip("[]")
-        return [c.strip().strip("`") for c in s.split(",") if c.strip()]
-
-    location = info.get("Location") or None
-    try:
-        nb = int(info.get("Num Buckets", ""))
-    except (TypeError, ValueError):
-        return None, location
-    spec = {
-        "bucket_cols": _cols(info.get("Bucket Columns")),
-        "num_buckets": nb,
-        "sort_cols": _cols(info.get("Sort Columns")),
-    }
-    return spec, location
-
-
-
-
-# Reap grace window (seconds). A stale sibling generation younger than this
-# is left alone: a CONCURRENT process may still be scanning it (round-12
-# judge repro: 4-way parallel pytest — one shard's reap yanked staged files
-# under a sibling shard's active FileScanRDD) or may be mid-publish of it.
-# Spark holds no OS handle on parquet files between tasks, so no lock can
-# protect a reader for the whole life of a lazy query — a mtime lease is the
-# honest mechanism: dir mtime is stamped by the publish rename, so age ==
-# time since that generation was (re)staged. A generation only BECOMES
-# stale when the corpus is regenerated, and a reader still scanning the
-# previous generation >grace after that regeneration is the documented-
-# unsupported mode (concurrent runs against different generations of one
-# corpus). Leak bound: one superseded generation lingers at most one grace
-# window past its successor's first reap attempt.
-STAGE_REAP_GRACE_SEC = 900.0
-
-
-def _tree_bytes(d: Path) -> int:
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(d):
-            for fn in files:
-                try:
-                    total += os.stat(os.path.join(root, fn)).st_size
-                except OSError:
-                    pass
-    except OSError:
-        pass
-    return total
-
-
-def run_workspace_name() -> str:
-    """Name for a per-RUN mutable staging workspace: pid + thread id —
-    two THREADS of one session running the same query must not share a
-    mutable dir either (they would rmtree each other's in-flight state;
-    round-13 review #3), and a pid alone is only process-unique."""
-    return f"run-{os.getpid()}-{threading.get_ident()}"
-
-
-def pid_workspace_alive(name: str) -> bool:
-    """keep-predicate for ``run-<pid>[-<tid>]`` per-run workspaces: True
-    while the owning PROCESS is alive (its workspaces must never be reaped
-    mid-run, however long the run outlives the lease; thread liveness is
-    not observable cross-process, and pid granularity errs safe). A
-    recycled pid protects a dead workspace until the recycler exits — a
-    bounded leak, unlike deleting a live run's state."""
-    import re as _re
-
-    m = _re.fullmatch(r"run-(\d+)(?:-\d+)?", name)
-    if not m:
-        return False
-    try:
-        os.kill(int(m.group(1)), 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-
-
-def reap_stale_stage_siblings(
-    parent,
-    prefix: str,
-    active_name: str,
-    grace_sec: float | None = None,
-    keep=None,
-) -> list[str]:
-    """Remove sibling staged dirs under ``parent`` that share the stage
-    ``prefix`` but are not the active key dir (ADVICE r11: fingerprint-keyed
-    staging mints a brand-new dir per corpus generation and the
-    old-fingerprint siblings would otherwise leak /tmp disk forever — at
-    SF1 each leaked pagerank edge table is sizeable). The prefix must
-    identify ONE (operator, corpus) scope — callers hash the corpus path
-    into it, so staged state for other corpora is never touched (round-12
-    review). Returns the reaped dir names so the caller can drop any
-    same-session catalog entries that pointed into them.
-
-    Round 13 (VERDICT r12 #1): reaping is LEASED from the moment of
-    SUPERSESSION, not publication. The first reap call that sights a stale
-    sibling only stamps a tombstone file (``<dir>.stale`` next to it) and
-    leaves the dir alone; removal happens on a later call once the
-    tombstone is older than ``grace_sec`` (default
-    ``STAGE_REAP_GRACE_SEC``). Leasing on the dir's own mtime would give a
-    long-published generation ZERO grace the instant it was superseded —
-    deleting it under a sibling's active scan, the exact round-12 abort
-    (round-13 review). A dir is only REPORTED reaped if it is actually
-    gone afterwards (ADVICE r12): on a failed removal the caller must keep
-    its catalog entry — the files are still there — and the leak is logged
-    instead of silently retried as success. Each successful reap logs the
-    reclaimed bytes so long-lived hosts can audit /tmp hygiene
-    (VERDICT r12 #7)."""
-    if grace_sec is None:
-        grace_sec = STAGE_REAP_GRACE_SEC
-    try:
-        candidates = list(Path(parent).glob(prefix + "*"))
-    except OSError:
-        return []
-    now = time.time()
-    reaped = []
-    for d in candidates:
-        if d.name == active_name or d.name.endswith(".stale") or not d.is_dir():
-            continue
-        if keep is not None and keep(d.name):
-            continue  # e.g. a live process's run-<pid> workspace
-        tomb = d.with_name(d.name + ".stale")
-        try:
-            tomb_age = now - tomb.stat().st_mtime
-        except OSError:
-            # first sighting as stale: start the lease, reap later
-            # (grace_sec=0 keeps eager semantics — reap in this call)
-            tomb_age = 0.0
-            if grace_sec > 0:
-                try:
-                    tomb.touch()
-                except OSError:
-                    pass
-                _log.debug("reap: lease started for stale sibling %s", d.name)
-                continue
-        if tomb_age < grace_sec:
-            _log.debug(
-                "reap: leaving leased sibling %s (lease %.0fs < grace %.0fs)",
-                d.name, tomb_age, grace_sec,
-            )
-            continue
-        nbytes = _tree_bytes(d)
-        shutil.rmtree(d, ignore_errors=True)
-        if d.exists():
-            _log.warning(
-                "reap: FAILED to remove stale staged dir %s (%d bytes leak; "
-                "will retry on a later reap)", d, nbytes,
-            )
-            continue
-        tomb.unlink(missing_ok=True)
-        _log.info("reap: removed stale staged dir %s (%d bytes)", d, nbytes)
-        reaped.append(d.name)
-    # tombstones whose dir is already gone (crash between rmtree and
-    # unlink, or the active generation re-adopted after a code flip-back)
-    for tomb in Path(parent).glob(prefix + "*.stale"):
-        owner = tomb.with_name(tomb.name[: -len(".stale")])
-        if owner.name == active_name or not owner.exists():
-            tomb.unlink(missing_ok=True)
-    return reaped
-
-
-def run_once_layout_migration(parent, marker_name: str, sweep) -> None:
-    """Marker-gated one-time staged-layout migration. ``sweep(parent)``
-    (returning True when every removal succeeded or nothing was left to
-    remove) runs until a clean pass, then the marker file stops future
-    directory scans. The marker is NOT written after a failed removal
-    (e.g. a legacy dir owned by another user on a shared /tmp) — the sweep
-    retries on the next call instead of silently leaking that dir forever
-    (round-12 review)."""
-    parent = Path(parent)
-    marker = parent / marker_name
-    if marker.exists():
-        return
-    if sweep(parent):
-        try:
-            parent.mkdir(parents=True, exist_ok=True)
-            marker.touch()
-        except OSError:
-            pass
+def staged_dir(spark: SparkSession, key: str, build: Callable[[Path], object]) -> Path:
+    """The workspace directory staged for ``key``: ``build(path)`` runs once
+    per session per key and must create ``path``. A build that raises
+    leaves nothing behind, and the next call builds again."""
+    ws = session_workspace(spark)
+    path = ws / hashlib.md5(key.encode()).hexdigest()
+    staged = spark.sparkContext._bdec_staged
+    with _STAGE_LOCK:
+        if key not in staged:
+            shutil.rmtree(path, ignore_errors=True)
+            try:
+                build(path)
+            except BaseException:
+                shutil.rmtree(path, ignore_errors=True)
+                raise
+            staged.add(key)
+    return path
 
 
 def stage_bucketed_table(
@@ -625,377 +257,40 @@ def stage_bucketed_table(
     name: str,
     bucket_cols: Sequence[str],
     num_buckets: int,
-    path: str,
-    builder,
+    builder: Callable[[], DataFrame],
     sort_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Idempotent bucketed staging with CROSS-PROCESS reuse (VERDICT r10 #5).
+    """Bucketed table ``name`` staged once per session from ``builder()``.
 
-    The iterative-graph staging pattern (PageRank, connected components)
-    pays the edge-list shuffle once per corpus snapshot by writing it as a
-    bucketed table. ``saveAsTable`` records the bucket spec in the session
-    catalog — which for the in-memory catalog is forgotten at process exit,
-    so a fresh process used to RESTAGE (~15 s at SF1 for PageRank) even
-    though the bucketed files were still on disk. The fix is a tiny on-disk
-    metastore: a manifest JSON written next to the bucketed files AFTER a
-    successful write records the schema + bucket spec, and a fresh process
-    re-REGISTERS the existing files with a metadata-only DDL
-    (``CREATE TABLE … CLUSTERED BY … INTO n BUCKETS LOCATION …`` — verified
-    to scan ``Bucketed: true`` exactly like the original saveAsTable entry)
-    instead of recomputing and rewriting the data.
+    The iterative-graph staging pattern (PageRank, connected components):
+    the edge-list shuffle is paid once, at write time, and every later scan
+    reports HashPartitioning on the bucket columns, so an in-loop join on
+    them never re-exchanges. A catalog hit returns ``spark.table(name)``
+    without calling ``builder``; ``name`` must therefore carry the content
+    key of what the builder reads.
 
-    Layout (round 13 — MVCC generations): ``path`` is the KEY ROOT, and
-    each (builder plan fingerprint, bucket spec) pair publishes into its
-    own IMMUTABLE content-addressed generation dir underneath::
+    The frame is repartitioned by the bucket columns into ``num_buckets``
+    tasks before the write. Repartition's HashPartitioning and the writer's
+    bucket id use the same murmur3-pmod function, so each task holds one
+    bucket and writes ONE file. Written as-is, an N-task builder produced
+    up to N x num_buckets tiny files (470 files for 32 buckets on the sf0.1
+    PageRank edge table), and every file open clones a Hadoop Configuration
+    whose constructor is synchronized on the shared parent conf: thread
+    dumps of the PageRank stages showed 25 of 32 task threads blocked
+    there, a lock convoy that left the CPUs 76% idle.
 
-        <path>/
-          _bdec_manifest.json   # latest generation's spec+schema+plan
-          gen-<hash12>/         # bucketed parquet + Spark _SUCCESS marker
-          gen-<hash12'>/        # an older/newer code version's generation
-
-    Generations are never rewritten in place: a published ``gen-*`` dir
-    (identified by Spark's ``_SUCCESS`` commit marker — the publish is an
-    atomic tmp-dir rename, so a visible marker implies a complete table)
-    is adopted as-is by every process whose builder hashes to it. This is
-    what makes restaging NON-DESTRUCTIVE (the round-12 judge repro, still
-    reproducible in round 13 with a mutable layout: a same-key restage
-    swapped in differently-NAMED part files and aborted sibling
-    processes' in-flight scans through their sessions' cached file
-    listings): a code change mints a NEW generation next to the old one,
-    and live readers of the old generation keep their files until the
-    grace-window reap ages them out (``reap_stale_stage_siblings`` over
-    the ``gen-`` siblings, run after each publish).
-
-    Resolution order:
-      1. session catalog hit whose bucket spec matches AND whose location
-         is THIS builder's generation → ``spark.table(name)`` (a mismatch
-         drops the entry — metadata only — and falls through; this is
-         also what re-points a session at its own code's generation after
-         a different code version published a newer one);
-      2. the generation dir exists with its ``_SUCCESS`` marker → DDL
-         re-registration over it (fresh-process reuse, no data movement —
-         the 100 TB economics: the staged table is keyed by corpus
-         snapshot + builder code, not by process);
-      3. otherwise → write the frame as bucketed files to a tmp dir under
-         the root, publish with an atomic rename to ``gen-<hash>``, then
-         write the manifest (observability: latest spec/schema/plan).
-
-    The generation hash folds together the builder frame's analyzed-plan
-    fingerprint (code/semantics) and the bucket spec (layout), so either
-    kind of change mints a new generation automatically — the manual
-    ``:vN:``-bump discipline footgun (VERDICT r11 #5) stays closed.
-
-    Concurrency (VERDICT r12 #1/#5): the stage decision and publish run
-    under a per-root inter-process flock (``<path>.lock``); a concurrent
-    same-generation stager blocks, re-checks, and adopts the winner's
-    files without paying the duplicate shuffle+write. flock releases on
-    process death. The residual unsupported mode is a reader still
-    scanning a SUPERSEDED generation more than one grace window after a
-    newer one was published.
+    The returned frame records its directory as ``_bdec_stage_path``, so a
+    size question can be answered from Parquet footers without a job (see
+    ``operators.components._staged_row_count``).
     """
-    import json as _json
-    import os as _os
-
-    spec = {
-        "bucket_cols": list(bucket_cols),
-        "num_buckets": int(num_buckets),
-        "sort_cols": list(sort_cols) if sort_cols else [],
-    }
-    # The builder runs first: its analyzed-plan fingerprint names the
-    # generation. Construction is cheap (call sites have already built the
-    # lineage; the thunk returns it) — the expensive parts a generation hit
-    # skips are the shuffle, the write, and the data movement. The
-    # fingerprint itself is memoized per session on the analyzed plan's
-    # (semanticHash, schema) — see _plan_fingerprint. A stage-LEVEL memo
-    # keyed on (name, path, spec) that skipped builder()+fingerprint was
-    # tried in r15 and REJECTED: a same-session caller staging a changed
-    # builder under an unchanged key would silently reuse stale data —
-    # exactly the manual-:vN:-bump footgun the fingerprint closes
-    # (test_round12_fixes.py::test_changed_builder_code_restages caught
-    # it). The plan-keyed memo below has no such hole: a semantic change
-    # changes the key.
-    df = builder()
-    plan_fp = _plan_fingerprint(df)
-    # _STAGE_LAYOUT is folded into the generation key (NOT into `spec`,
-    # which must keep matching what DESCRIBE TABLE reports) so a layout
-    # change below re-stages existing generations exactly like a code
-    # change would — old-layout generations age out via the normal
-    # supersession reap.
-    gen_key = hashlib.md5(
-        (plan_fp + "|" + _json.dumps(spec, sort_keys=True) + "|" + _STAGE_LAYOUT)
-        .encode()
-    ).hexdigest()[:12]
-    gen_name = f"gen-{gen_key}"
-    root = Path(path)
-    gen_path = root / gen_name
-    schema_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-    def _register() -> DataFrame:
-        clustered = ", ".join(f"`{c}`" for c in spec["bucket_cols"])
-        sorted_by = (
-            " SORTED BY (" + ", ".join(f"`{c}`" for c in spec["sort_cols"]) + ")"
-            if spec["sort_cols"]
-            else ""
-        )
-        # IF NOT EXISTS: same-name threads are serialized by
-        # _table_thread_lock since ADVICE r13, but a caller outside
-        # stage_bucketed_table (or an old-code process) can still register
-        # the name between a drop and this CREATE — the loser must adopt
-        # the entry, not throw TABLE_OR_VIEW_ALREADY_EXISTS (round-13
-        # review)
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS `{name}` ({schema_ddl}) "
-            f"USING PARQUET CLUSTERED BY ({clustered}){sorted_by} "
-            f"INTO {spec['num_buckets']} BUCKETS "
-            f"LOCATION '{gen_path}'"
-        )
-        return spark.table(name)
-
-    def _gen_published() -> bool:
-        return (gen_path / "_SUCCESS").exists()
-
-    def _tag(frame: DataFrame) -> DataFrame:
-        # Breadcrumb for callers (r15, VERDICT r14 #4): the resolved
-        # generation's immutable on-disk location, so a bounded-size
-        # question ("does this staged table fit under a threshold?") can
-        # be answered from parquet FOOTER metadata instead of a Spark
-        # probe job — see connected_components' fast path. Metadata only;
-        # every execution still scans the data. Inert for callers that
-        # ignore it.
-        frame._bdec_stage_gen_path = str(gen_path)
-        return frame
-
-    # per-name SESSION lock around the whole catalog-resolution + publish
-    # sequence (ADVICE r13): without it, a lagging thread that observed a
-    # stale entry can DROP the fresh entry the winning thread registered an
-    # instant earlier, so the winner's spark.table(name) inside _register
-    # raises TABLE_OR_VIEW_NOT_FOUND. The flock below serializes PROCESSES;
-    # this RLock serializes the one session's threads for this name.
-    with _table_thread_lock(name):
-        tomb = gen_path.with_name(gen_name + ".stale")
-        if spark.catalog.tableExists(name):
-            # validate the registered layout against the requested spec
-            # (ADVICE r11) AND the registered location against THIS
-            # builder's generation: a stale entry (spec change, or a table
-            # registered over a different code version's generation) is
-            # dropped — metadata only, the files stay — and resolution
-            # falls through.
-            cat_spec, cat_loc = _catalog_table_meta(spark, name)
-            if (
-                cat_spec == spec
-                and cat_loc
-                and Path(cat_loc.rstrip("/")).name == gen_name
-                # the generation can have been reaped by a newer code
-                # version in another process (>grace): serving the entry
-                # over deleted files would never self-heal — drop it and
-                # restage instead (round-13 review)
-                and _gen_published()
-            ):
-                if not tomb.exists():
-                    # steady state: no supersession in sight — lock-free.
-                    # A reaper that stamps the tombstone right after this
-                    # check must still wait a full grace window before
-                    # removing anything, so the scan this validate admits
-                    # is covered.
-                    return _tag(spark.table(name))
-                # an ACTIVE adoption contradicts the supersession tombstone
-                # a concurrent newer-code process stamped on this
-                # generation: clear it so the reap lease restarts from the
-                # next sighting — without this, a session re-validating its
-                # generation before every scan (the supported long-lived
-                # reader pattern) would still lose the files one grace
-                # window after a different code version first published
-                # (the round-14 two-process churn stress aborts). Clearing
-                # MUST hold the flock (round-14 review): an expired
-                # tombstone can already be mid stat-then-rmtree in a
-                # concurrent reaper, and an unlocked unlink would not stop
-                # it — under the flock either this validate renews the
-                # lease before any reaper stats it, or the reap already
-                # won and the re-check below falls through to restage.
-                with _publish_lock(root):
-                    if _gen_published():
-                        tomb.unlink(missing_ok=True)
-                        return _tag(spark.table(name))
-            # IF EXISTS belt-and-braces: a CONCURRENT PROCESS can drop and
-            # re-register independently of this session's thread lock
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-
-        # adopt-or-stage under the per-root inter-process lock: a
-        # concurrent same-generation stager either already published
-        # (adopt its files — the generation is content+code-addressed, the
-        # data is identical) or is mid-write (block until it publishes,
-        # then adopt). Holding the lock across the write means the loser
-        # never pays a duplicate write. The published check itself runs
-        # INSIDE the flock (round-14 review): deciding to adopt on an
-        # unlocked check left a window where an expired-lease reap deleted
-        # the generation between the check and _register, and CREATE TABLE
-        # over the vanished LOCATION would serve an EMPTY table — worse
-        # than the abort it replaced. Housekeeping in the same block also
-        # keeps the old adopt-path property: a superseded generation's
-        # lease progresses even once the code stabilizes and nothing
-        # publishes here anymore (round-13 review #3).
-        with _publish_lock(root):
-            if not _gen_published():
-                tmp_path = root / f"{gen_name}.tmp-{_os.getpid()}"
-                tmp_name = f"{name}__stage_tmp"
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                spark.sql(f"DROP TABLE IF EXISTS `{tmp_name}`")
-                # layout v2: one task per bucket → one file per bucket
-                # (see _STAGE_LAYOUT). Row content identical; only the
-                # file layout of the immutable generation changes.
-                df_w = df.repartition(
-                    int(num_buckets), *[F.col(c) for c in bucket_cols]
-                )
-                write_bucketed_table(
-                    df_w,
-                    tmp_name,
-                    bucket_cols,
-                    num_buckets=num_buckets,
-                    sort_cols=sort_cols,
-                    mode="overwrite",
-                    path=str(tmp_path),
-                )
-                # external table: dropping the catalog entry keeps the
-                # files
-                spark.sql(f"DROP TABLE `{tmp_name}`")
-                # a gen dir without its _SUCCESS marker is a torn artifact
-                # (no process can have registered it — adoption requires
-                # the marker); clear it so the rename publishes cleanly
-                if gen_path.exists():
-                    shutil.rmtree(gen_path, ignore_errors=True)
-                tmp_path.rename(gen_path)
-                # manifest = observability record of the LATEST generation
-                # (adoption never depends on it — the _SUCCESS marker
-                # inside the immutable generation dir is the commit
-                # evidence); write it atomically so an observer never
-                # reads a torn JSON
-                mf_tmp = root / (_MANIFEST + f".tmp-{_os.getpid()}")
-                mf_tmp.write_text(
-                    _json.dumps(
-                        {
-                            **spec,
-                            "schema": schema_ddl,
-                            "plan": plan_fp,
-                            "generation": gen_name,
-                        }
-                    )
-                )
-                _os.replace(mf_tmp, root / _MANIFEST)
-            # housekeeping, still under the lock: generations superseded
-            # longer than the grace window ago (plus any dead stagers' tmp
-            # dirs) age out here — live readers of a RECENT generation
-            # keep their files
-            reap_stale_stage_siblings(root, "gen-", gen_name)
-            _reap_legacy_root_files(root)
-        return _tag(_register())
-
-
-def stage_lock(target):
-    """Public handle on the per-path inter-process staging flock, for call
-    sites whose critical section is a whole RUN over shared mutable state
-    (e.g. a Structured Streaming restart over a persistent
-    checkpoint+sink pair, where two concurrent first-runs would interleave
-    commits) rather than a marker-gated write-once block."""
-    return _publish_lock(Path(target))
-
-
-@contextlib.contextmanager
-def staged_once(marker_path):
-    """Cross-process guard for marker-gated write-once staging dirs.
-
-    The registry is full of ``if not (staging / "_SUCCESS").exists():
-    <derive + write>`` blocks keyed by corpus content — correct
-    single-process, but two processes hitting the check together BOTH
-    write, and Spark's ``mode("overwrite")`` starts by deleting the target
-    dir, taking the sibling writer's in-flight ``_temporary`` with it (the
-    same family as the round-13 bucketed-staging race; reachable whenever
-    two pytest shards or a bench and a test co-run the same query).
-
-    Usage::
-
-        with staged_once(staging / "_SUCCESS") as need:
-            if need:
-                ...derive and write; the marker lands LAST...
-
-    Yields True when THIS process must build (checked again under the
-    per-dir publish flock, so exactly one concurrent builder runs and the
-    rest block until the marker exists), False when the staged data is
-    already published. The marker must be the LAST effect of the build
-    (Spark's parquet/json writers do this via ``_SUCCESS``) so an
-    unlocked reader's marker check still implies a complete dir."""
-    marker = Path(marker_path)
-    if marker.exists():
-        yield False
-        return
-    with _publish_lock(marker.parent):
-        yield not marker.exists()
-
-
-def _reap_legacy_root_files(root: Path, grace_sec: float | None = None) -> None:
-    """Remove pre-generation-layout bucketed files sitting directly in a
-    stage root (part-*.parquet, their .crc shadows, _SUCCESS, torn
-    ``_bdec_manifest.json.tmp-*`` leftovers) once a full grace window has
-    passed since the migration first SIGHTED them (a ``_legacy.stale``
-    tombstone in the root starts the lease — the files' own mtimes are
-    their publish times, which would give a long-lived legacy layout zero
-    grace under a concurrent old-code reader's scan). The round-13 layout
-    migration therefore leaves them in place at first and ages them out on
-    later stage calls."""
-    if grace_sec is None:
-        grace_sec = STAGE_REAP_GRACE_SEC
-
-    def _is_legacy(f: Path) -> bool:
-        nm = f.name.lstrip(".")
-        return (
-            nm.startswith("part-")
-            or nm.startswith("_SUCCESS")
-            # a stager killed between mf_tmp.write_text and os.replace
-            # leaves a torn manifest temp — reap it with the same lease
-            # (round-13 review)
-            or nm.startswith(_MANIFEST + ".tmp-")
-        )
-
-    files = [f for f in root.glob("*") if f.is_file() and _is_legacy(f)]
-    tomb = root / "_legacy.stale"
-    if not files:
-        tomb.unlink(missing_ok=True)
-        return
-    try:
-        lease_age = time.time() - tomb.stat().st_mtime
-    except OSError:
-        lease_age = 0.0
-        if grace_sec > 0:
-            try:
-                tomb.touch()
-            except OSError:
-                pass
-            return
-    if lease_age < grace_sec:
-        return
-    freed, skipped = 0, 0
-    now = time.time()
-    for f in files:
-        try:
-            st = f.stat()
-            # per-file grace ON TOP of the lease: an expired lease must not
-            # license deleting fresh files — both stage_bucketed_table call
-            # sites now hold _publish_lock, but OLD-CODE writers (and any
-            # future unlocked caller) don't take the flock, so their
-            # microseconds-old part files / manifest temps each still get
-            # their own full window (ADVICE r13: comment corrected — the
-            # old "runs outside the flock on the adopt path" rationale is
-            # stale, the per-file grace is not)
-            if now - st.st_mtime < grace_sec:
-                skipped += 1
-                continue
-            f.unlink()
-            freed += st.st_size
-        except OSError:
-            skipped += 1
-            continue
-    if not skipped:
-        tomb.unlink(missing_ok=True)
-    if freed:
-        _log.info("reap: removed legacy root-layout files (%d bytes)", freed)
+    path = session_workspace(spark) / name
+    with _STAGE_LOCK:
+        if not spark.catalog.tableExists(name):
+            df = builder().repartition(int(num_buckets), *[F.col(c) for c in bucket_cols])
+            write_bucketed_table(
+                df, name, bucket_cols, num_buckets=num_buckets, sort_cols=sort_cols,
+                path=str(path),
+            )
+    frame = spark.table(name)
+    frame._bdec_stage_path = str(path)
+    return frame

@@ -2,20 +2,20 @@
 
 Covers: (a) the bucket-staged symmetrized edge list is scanned
 ``Bucketed: true`` with no Exchange above the probe inside the CC loop
-(the pagerank plan-assertion pattern, tests/test_pagerank.py), (b) the
-staging manifest lets a FRESH catalog (≈ fresh process) re-register the
-on-disk bucketed files via a metadata-only DDL instead of recomputing and
-rewriting them, and (c) the reworked operator's semantics: incident-only
-iteration + appended singletons, induced-subgraph edge restriction, and
-the fused min/max convergence check all preserve the exact (id, component)
-output of the pre-rework implementation.
+(the pagerank plan-assertion pattern, tests/test_pagerank.py), (b) session
+staging of bucketed tables: a failed stage leaves no catalog entry, a
+dropped entry is staged again, one file per bucket, and (c) the reworked
+operator's semantics: incident-only iteration + appended singletons,
+induced-subgraph edge restriction, and the fused min/max convergence check
+all preserve the exact (id, component) output of the pre-rework
+implementation.
 """
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.operators.components import (
@@ -131,202 +131,57 @@ def test_cascade_cc_probe_scans_bucketed_no_reexchange(spark, sf_dir):
         assert n_probe >= 1, "no exchange-free bucketed probe in the round"
 
 
-def test_staging_manifest_fresh_catalog_reuses_files(spark, tmp_path):
-    """VERDICT r10 #5: after a successful stage, dropping the catalog entry
-    (what a fresh process starts with) and re-staging must re-REGISTER the
-    existing files via DDL — same data, untouched parquet files, still a
-    bucketed scan — not recompute/rewrite."""
-    name = "bdec_test_stage_reuse"
-    path = tmp_path / "staged"
-    calls = []
-
-    def builder():
-        calls.append(1)
-        return spark.range(500).select(
-            F.col("id").alias("d"), (F.col("id") % 9).alias("payload")
-        )
-
-    t1 = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=8, path=str(path), builder=builder
-    )
-    assert t1.count() == 500 and calls == [1]
-    files_before = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    assert files_before, "stage wrote no bucketed files"
-    manifest = json.loads((path / "_bdec_manifest.json").read_text())
-    assert manifest["bucket_cols"] == ["d"] and manifest["num_buckets"] == 8
-
-    # fresh-process simulation: the in-memory catalog forgets the table
-    spark.sql(f"DROP TABLE `{name}`")
-    t2 = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=8, path=str(path), builder=builder
-    )
-    # the builder runs on every resolution (its analyzed-plan fingerprint
-    # is the CODE half of the manifest key — an r15 attempt to memoize it
-    # away per (name,path,spec) was rejected, see stage_bucketed_table),
-    # so reuse is proven by the data files being untouched, not by the
-    # builder call count
-    assert calls == [1, 1]
-    files_after = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    assert files_after == files_before, "re-stage rewrote the data files"
-    assert t2.count() == 500
-
-    # and the re-registered table still joins off a bucketed scan
-    other = spark.range(100).select(F.col("id").alias("d"))
-    j = t2.join(other.hint("shuffle_hash"), "d")
-    j.write.format("noop").mode("overwrite").save()
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan
-    spark.sql(f"DROP TABLE `{name}`")
-
-
-def test_staging_manifest_spec_mismatch_restages(spark, tmp_path):
-    """A manifest whose bucket spec no longer matches the code's request
-    (layout changed between versions) must invalidate the cache and
-    restage rather than serve a stale layout."""
-    name = "bdec_test_stage_mismatch"
-    path = tmp_path / "staged2"
-    calls = []
-
-    def builder():
-        calls.append(1)
-        return spark.range(100).select(F.col("id").alias("d"))
-
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=8, path=str(path), builder=builder
-    )
-    spark.sql(f"DROP TABLE `{name}`")
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=16, path=str(path), builder=builder
-    )
-    assert calls == [1, 1], "spec mismatch must trigger a restage"
-    m = json.loads((path / "_bdec_manifest.json").read_text())
-    assert m["num_buckets"] == 16
-    spark.sql(f"DROP TABLE `{name}`")
-
-
-def test_staging_crash_windows_restage_never_torn(spark, tmp_path):
-    """Crash-safety of the generation publish protocol: files land via an
-    atomic tmp-dir rename, and the commit evidence is Spark's _SUCCESS
-    marker INSIDE the immutable generation dir (the root manifest is
-    observability only). So (a) a deleted manifest does not force a
-    recompute — the committed generation is adopted as-is; (b) a TORN
-    generation dir (marker missing — a partially-copied artifact) is never
-    trusted: the next stage clears it and republishes; (c) a dead stager's
-    leftover tmp dir never breaks a stage."""
+def test_staging_crash_windows_restage_never_torn(spark):
+    """A stage whose builder fails registers nothing, so the next call in
+    the session stages again and serves the complete table."""
     name = "bdec_test_stage_crash"
-    path = tmp_path / "staged3"
     calls = []
 
     def builder():
         calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("stager died")
         return spark.range(64).select(F.col("id").alias("d"))
 
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder
-    )
-    gen_dirs = [d for d in path.glob("gen-*") if d.is_dir()]
-    assert len(gen_dirs) == 1 and (gen_dirs[0] / "_SUCCESS").exists()
-    files_v1 = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    # crash window (a): manifest gone after a committed generation — the
-    # generation's _SUCCESS marker is the commit evidence, so the next call
-    # adopts the existing files instead of rewriting them
-    spark.sql(f"DROP TABLE `{name}`")
-    (path / "_bdec_manifest.json").unlink()
-    t = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder
-    )
-    assert t.count() == 64
-    files_v2 = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    assert files_v2 == files_v1, "committed generation rewritten on adopt"
-    # crash window (b): a torn generation (marker missing) must restage —
-    # a partially-visible table is never served
-    spark.sql(f"DROP TABLE `{name}`")
-    (gen_dirs[0] / "_SUCCESS").unlink()
-    t = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder
-    )
-    assert (gen_dirs[0] / "_SUCCESS").exists(), "torn generation not republished"
-    assert t.count() == 64
-    # crash window (c): a dead stager's tmp dir must not break a stage
-    spark.sql(f"DROP TABLE `{name}`")
-    fake_tmp = path / f"{gen_dirs[0].name}.tmp-99999"
-    fake_tmp.mkdir()
-    (fake_tmp / "junk").write_text("torn")
-    t = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder
-    )
-    assert t.count() == 64
-    assert len(calls) == 4  # the builder thunk runs per call by design
+    with pytest.raises(RuntimeError, match="stager died"):
+        stage_bucketed_table(spark, name, ["d"], num_buckets=4, builder=builder)
+    assert not spark.catalog.tableExists(name)
+    t = stage_bucketed_table(spark, name, ["d"], num_buckets=4, builder=builder)
+    assert t.count() == 64 and len(calls) == 2
+    # a catalog hit serves the staged table without calling the builder
+    assert stage_bucketed_table(
+        spark, name, ["d"], num_buckets=4, builder=builder
+    ).count() == 64
+    assert len(calls) == 2
     spark.sql(f"DROP TABLE `{name}`")
 
 
 def test_pagerank_staging_survives_catalog_reset(spark, sf_dir):
-    """The pagerank staged tables go through the same manifest helper: after
-    a catalog reset the query must come back green without rewriting the
-    staged files (the r10 NOTES caveat — fresh-process restage — is gone)."""
+    """The pagerank staged tables live in the session workspace: after their
+    catalog entries are dropped the query stages them again there and
+    returns the same ranks."""
+    from breweries_data_engineering_case_spark.sources.writers import (
+        session_workspace,
+    )
+
     q = registry.queries()["graph_pagerank_salted"]
     base = {(r.node, r.pr) for r in q(spark, sf_dir).collect()}
-    # find the staged edge table the run registered and its files on disk
     tables = [
         t.name
         for t in spark.catalog.listTables()
-        if t.name.startswith("bdec_pr_salted_edges_")
+        if t.name.startswith(("bdec_pr_salted_edges_", "bdec_pr_nodes_"))
     ]
-    assert tables
-    loc_row = [
-        r
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tables[0]}").collect()
-        if r.col_name == "Location"
-    ]
-    path = Path(loc_row[0].data_type.replace("file:", ""))
-    before = sorted((p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet"))
-    for t in spark.catalog.listTables():
-        if t.name.startswith(("bdec_pr_salted_edges_", "bdec_pr_nodes_")):
-            spark.sql(f"DROP TABLE `{t.name}`")
+    assert len(tables) == 2
+    for t in tables:
+        spark.sql(f"DROP TABLE `{t}`")
     again = {(r.node, r.pr) for r in q(spark, sf_dir).collect()}
     assert again == base
-    after = sorted((p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet"))
-    assert after == before, "fresh catalog rewrote the staged pagerank files"
+    for t in tables:
+        assert spark.catalog.tableExists(t)
+        assert list((session_workspace(spark) / t).glob("*.parquet"))
 
 
-def test_plan_fingerprint_memo_keyed_on_semantics_and_schema(spark):
-    """r15 _plan_fingerprint memo (VERDICT r14 #4): rebuilding the SAME
-    frame hits the (semanticHash, schema) memo and returns the identical
-    fingerprint without re-stringifying; a literal change (different
-    canonicalized plan) and an output RENAME (same canonicalized plan,
-    different schema — the named half's reason to exist) both miss the
-    memo and mint DIFFERENT fingerprints. This pins exactly the two blind
-    spots the memo key must cover for the r13 invalidation contract."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        _plan_fingerprint,
-    )
-
-    def frame(mod: int, out: str):
-        return spark.range(100).select(
-            F.col("id").alias("d"), (F.col("id") % mod).alias(out)
-        )
-
-    fp1 = _plan_fingerprint(frame(7, "payload"))
-    memo = spark.__dict__["_bdec_plan_fp_memo"]
-    n0 = len(memo)
-    assert _plan_fingerprint(frame(7, "payload")) == fp1
-    assert len(memo) == n0, "identical rebuild must hit the memo"
-    fp_lit = _plan_fingerprint(frame(5, "payload"))
-    assert fp_lit != fp1, "a literal change must mint a new fingerprint"
-    fp_ren = _plan_fingerprint(frame(7, "renamed"))
-    assert fp_ren != fp1, "an output rename must mint a new fingerprint"
-    assert len(memo) == n0 + 2
-
-
-def test_staged_row_count_matches_scan(spark, tmp_path):
+def test_staged_row_count_matches_scan(spark):
     """r15 footer-metadata row count (the CC fast-path probe): exact for a
     staged frame, None for a plain frame (which must fall back to the
     limit-probe job)."""
@@ -335,13 +190,11 @@ def test_staged_row_count_matches_scan(spark, tmp_path):
     )
 
     name = "bdec_test_stage_rowcount"
-    path = tmp_path / "staged_rc"
     staged = stage_bucketed_table(
         spark,
         name,
         ["d"],
         num_buckets=4,
-        path=str(path),
         builder=lambda: spark.range(137).select(F.col("id").alias("d")),
     )
     assert _staged_row_count(staged) == 137 == staged.count()
@@ -349,29 +202,25 @@ def test_staged_row_count_matches_scan(spark, tmp_path):
     spark.sql(f"DROP TABLE `{name}`")
 
 
-def test_staged_generation_writes_one_file_per_bucket(spark, tmp_path):
+def test_staged_generation_writes_one_file_per_bucket(spark):
     """r15 layout v2 (guide §6): the staged bucketed write repartitions by
-    the bucket columns into num_buckets tasks, so a committed generation
-    holds at most ONE parquet file per bucket — a many-task builder must
+    the bucket columns into num_buckets tasks, so a staged table holds at
+    most ONE parquet file per bucket — a many-task builder must
     not fan out into tasks×buckets tiny files (the sf0.1 pagerank edge
     table reached 2048 files for 32 buckets; every scan task then paid ~64
     synchronized Hadoop-Configuration clones per stage, a measured lock
     convoy). Layout, not content: rows and bucketing semantics unchanged."""
     name = "bdec_test_stage_layout"
-    path = tmp_path / "staged_layout"
     staged = stage_bucketed_table(
         spark,
         name,
         ["d"],
         num_buckets=8,
-        path=str(path),
         builder=lambda: spark.range(10_000)
         .repartition(64)  # a many-task builder, the pathological input
         .select(F.col("id").alias("d")),
     )
-    gens = [d for d in path.glob("gen-*") if d.is_dir()]
-    assert len(gens) == 1
-    files = [p for p in gens[0].glob("*.parquet")]
+    files = list(Path(staged._bdec_stage_path).glob("*.parquet"))
     assert 0 < len(files) <= 8, f"{len(files)} files for 8 buckets"
     assert staged.count() == 10_000
     spark.sql(f"DROP TABLE `{name}`")

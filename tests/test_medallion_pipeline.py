@@ -240,21 +240,19 @@ def test_silver_sql_twin_is_expression_identical(spark):
     clean_str ≈ NULLIF(TRIM(CAST(x AS VARCHAR)), '') at
     app/tasks/silver.py:23-34, the state fallback ≈ :27-30, try_double ≈
     TRY_CAST at :33-34, NOT-NULL enforcement ≈ :44-48, lat/lon range ≈
-    :49-50 — and the SQL form must share its exact plan fingerprint
-    (canonicalized expressions + literals AND output-name binding), so a
-    drift in either build fails here before it can ship."""
+    :49-50 — and the SQL form must be semantically the same plan
+    (canonicalized expressions + literals) with the same output schema
+    (names, order, types), so a drift in either build fails here before it
+    can ship."""
     from breweries_data_engineering_case_spark.plans.silver import (
         clean_breweries_columns,
     )
     from breweries_data_engineering_case_spark.schemas import BREWERY_RAW_SCHEMA
-    from breweries_data_engineering_case_spark.sources.writers import (
-        _plan_fingerprint,
-    )
 
     raw = spark.createDataFrame([], BREWERY_RAW_SCHEMA)
-    assert _plan_fingerprint(clean_breweries(raw)) == _plan_fingerprint(
-        clean_breweries_columns(raw)
-    )
+    sql_form, column_form = clean_breweries(raw), clean_breweries_columns(raw)
+    assert sql_form.sameSemantics(column_form)
+    assert sql_form.schema == column_form.schema
 
 
 def _leaf_dirs(root: str) -> set[str]:

@@ -12,6 +12,11 @@ from tools.replica import select_window  # noqa: E402
 NAMES = [f"q{i}" for i in range(10)]
 
 
+def _latest(paths):
+    """The most recently written of ``paths``."""
+    return max(paths, key=lambda p: p.stat().st_mtime_ns)
+
+
 class TestReplicaWindowSlicer:
     """VERDICT r9 #2: --window is a chunk size relative to --start."""
 
@@ -106,10 +111,6 @@ class TestIncrementalNearDup:
         """The republished state (old ∪ delta, min per bucket) must equal
         the band-bucket mins of the FULL corpus — the invariant that makes
         the next drop's join correct without ever re-hashing history."""
-        import tempfile
-        from hashlib import md5
-        from pathlib import Path
-
         from pyspark.sql import functions as F
 
         from breweries_data_engineering_case_spark.operators.fuzzy_dedup import (
@@ -117,11 +118,14 @@ class TestIncrementalNearDup:
         )
         from breweries_data_engineering_case_spark.plans import registry
         from breweries_data_engineering_case_spark.sources.readers import table_scan
+        from breweries_data_engineering_case_spark.sources.writers import (
+            session_workspace,
+        )
 
         registry.QUERIES["doc_neardup_incremental_snapshot"](spark, sf_dir).collect()
-        key = md5(sf_dir.encode()).hexdigest()[:12]
+        # each run publishes into its own workspace dir: read the latest
         state_next = spark.read.parquet(
-            str(Path(tempfile.gettempdir()) / "bdec_incr_neardup" / key / "state_next")
+            str(_latest(session_workspace(spark).glob("*/state_next")))
         )
         full = (
             minhash_band_exprs(
@@ -141,18 +145,22 @@ class TestIncrementalNearDup:
         hashing is the point): the state parquet's mtime is unchanged and
         the output is identical."""
         import os
-        import tempfile
-        from hashlib import md5
-        from pathlib import Path
 
         from breweries_data_engineering_case_spark.plans import registry
+        from breweries_data_engineering_case_spark.sources.readers import (
+            source_fingerprint,
+        )
+        from breweries_data_engineering_case_spark.sources.writers import staged_dir
+
+        def restage(_path):
+            pytest.fail("the snapshot state was staged again")
 
         fn = registry.QUERIES["doc_neardup_incremental_snapshot"]
         r1 = fn(spark, sf_dir).collect()
-        key = md5(sf_dir.encode()).hexdigest()[:12]
-        marker = (
-            Path(tempfile.gettempdir()) / "bdec_incr_neardup" / key / "state" / "_SUCCESS"
+        state = staged_dir(
+            spark, "incr_neardup:" + source_fingerprint(sf_dir, "documents"), restage
         )
+        marker = state / "_SUCCESS"
         mtime = os.path.getmtime(marker)
         r2 = fn(spark, sf_dir).collect()
         assert os.path.getmtime(marker) == mtime
@@ -235,10 +243,6 @@ def test_streaming_incremental_state_equals_full_corpus(spark, sf_dir):
     """After the two-micro-batch run, the published band-bucket state must
     equal the full corpus's bucket mins — the same invariant as the batch
     merge twin, held across the foreachBatch write-new-then-swap."""
-    import tempfile
-    from hashlib import md5
-    from pathlib import Path
-
     from pyspark.sql import functions as F
 
     from breweries_data_engineering_case_spark.operators.fuzzy_dedup import (
@@ -247,24 +251,14 @@ def test_streaming_incremental_state_equals_full_corpus(spark, sf_dir):
     from breweries_data_engineering_case_spark.plans import registry
     from breweries_data_engineering_case_spark.sources.readers import table_scan
 
-    registry.QUERIES["streaming_neardup_incremental"](spark, sf_dir).collect()
-    key = md5(sf_dir.encode()).hexdigest()[:12]
-    # round 13: the mutable state lives in THIS run's pid+thread-unique
-    # workspace (shared-layout state was a cross-process rmtree race and
-    # is now migrated away)
     from breweries_data_engineering_case_spark.sources.writers import (
-        run_workspace_name,
+        session_workspace,
     )
 
-    state = spark.read.parquet(
-        str(
-            Path(tempfile.gettempdir())
-            / "bdec_stream_incr"
-            / key
-            / run_workspace_name()
-            / "state"
-        )
-    )
+    registry.QUERIES["streaming_neardup_incremental"](spark, sf_dir).collect()
+    # each run keeps its mutable state in its own workspace dir: read the
+    # latest
+    state = spark.read.parquet(str(_latest(session_workspace(spark).glob("*/state"))))
     full = (
         minhash_band_exprs(
             table_scan(spark, sf_dir, "documents").select("doc_id", "text"),

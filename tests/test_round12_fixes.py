@@ -1,32 +1,21 @@
-"""Round-12 fixes (VERDICT r11 #3/#5 + ADVICE r11).
+"""Round-12 fixes (VERDICT r11 #3 + ADVICE r11).
 
 Covers: (a) source_fingerprint fails loudly on a missing table and carries
-a real content signal for Spark-written DIRECTORY tables, (b) the
+a real content signal for Spark-written DIRECTORY tables, and (b) the
 connected-components unconverged-exit guard raises instead of silently
-returning wrong labels when max_iter is exhausted, (c) the staging
-manifest's analyzed-plan fingerprint restages when the BUILDER CODE
-changes (the automatic replacement for manual ``:vN:`` bumps), (d) a
-same-session catalog hit with a mismatched bucket spec restages instead of
-serving the stale layout, and (e) stale staged-dir generations sharing a
-stage tag are reaped when a new fingerprint key is staged.
+returning wrong labels when max_iter is exhausted, next to the small-graph
+fast path.
 """
 
 from __future__ import annotations
 
-import json
-
 import pytest
-from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.operators.components import (
     connected_components,
 )
 from breweries_data_engineering_case_spark.sources.readers import (
     source_fingerprint,
-)
-from breweries_data_engineering_case_spark.sources.writers import (
-    reap_stale_stage_siblings,
-    stage_bucketed_table,
 )
 
 
@@ -157,119 +146,6 @@ def test_cc_converged_graph_unaffected_by_guard(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (9, 9)}
 
 
-# ---------------------------------------------------------------------------
-# (c) builder-code change invalidates manifest reuse (VERDICT r11 #5)
-# ---------------------------------------------------------------------------
-
-
-def test_changed_builder_code_restages(spark, tmp_path):
-    name = "bdec_test_stage_codechange"
-    path = tmp_path / "staged"
-
-    def builder_v1():
-        return spark.range(100).select(
-            F.col("id").alias("d"), (F.col("id") % 7).alias("payload")
-        )
-
-    def builder_v2():  # same schema, different semantics — the footgun case
-        return spark.range(100).select(
-            F.col("id").alias("d"), (F.col("id") % 5).alias("payload")
-        )
-
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder_v1
-    )
-    m1 = json.loads((path / "_bdec_manifest.json").read_text())
-    assert m1.get("plan"), "manifest must record the builder plan fingerprint"
-
-    # fresh-process simulation with UNCHANGED code: reuse, files untouched
-    spark.sql(f"DROP TABLE `{name}`")
-    files_before = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder_v1
-    )
-    files_same = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in path.rglob("*.parquet")
-    )
-    assert files_same == files_before, "unchanged code must not restage"
-
-    # fresh-process simulation with CHANGED builder code: silently reusing
-    # the stale staged data was the manual-:vN:-bump footgun — must restage
-    spark.sql(f"DROP TABLE `{name}`")
-    t = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder_v2
-    )
-    m2 = json.loads((path / "_bdec_manifest.json").read_text())
-    assert m2["plan"] != m1["plan"]
-    assert t.filter(F.col("payload") >= 5).count() == 0, "stale data served"
-    spark.sql(f"DROP TABLE `{name}`")
-
-
-def test_plan_fingerprint_stable_across_reconstruction(spark):
-    """Expression-id churn (session-global counters) must not shake the
-    fingerprint: two independent constructions of the same lineage hash
-    identically — this is what makes CROSS-PROCESS manifest reuse work."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        _plan_fingerprint,
-    )
-
-    def build():
-        return spark.range(50).select(
-            F.col("id").alias("d"), F.sha2(F.col("id").cast("string"), 256).alias("h")
-        )
-
-    assert _plan_fingerprint(build()) == _plan_fingerprint(build())
-
-
-def test_plan_fingerprint_sees_wide_projections_and_hash_literals(spark):
-    """Round-12 review regressions: (a) the default maxToStringFields (25)
-    elides wide projections as '... N more fields', so a change to the
-    26th expression used to mint the SAME fingerprint; (b) a regex strip
-    of #\\d+ also mangled '#N' inside string literals, conflating
-    different builders. The canonicalized-plan fingerprint must detect
-    both."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        _plan_fingerprint,
-    )
-
-    wide = [(F.col("id") + i).alias(f"c{i}") for i in range(30)]
-    a = spark.range(10).select(*wide)
-    b = spark.range(10).select(*wide[:-1], (F.col("id") + 999).alias("c29"))
-    assert _plan_fingerprint(a) != _plan_fingerprint(b)
-
-    l1 = spark.range(5).select(F.lit("tag#1").alias("t"))
-    l2 = spark.range(5).select(F.lit("tag#2").alias("t"))
-    assert _plan_fingerprint(l1) != _plan_fingerprint(l2)
-    # and the conf tweak must not leak out of the helper
-    assert (
-        spark.conf.get("spark.sql.debug.maxToStringFields", "25") != "100000"
-    )
-
-
-def test_plan_fingerprint_sees_output_name_binding(spark):
-    """canonicalized() erases alias names, so a builder that merely SWAPS
-    two output column names would hash identically while the served schema
-    binding changed (verified empirically in the round-12 review) — the
-    fingerprint's second (name-carrying) half must catch it."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        _plan_fingerprint,
-    )
-
-    a = spark.range(10).select(
-        (F.col("id") + 1).alias("x"), (F.col("id") * 2).alias("y")
-    )
-    b = spark.range(10).select(
-        (F.col("id") + 1).alias("y"), (F.col("id") * 2).alias("x")
-    )
-    c = spark.range(10).select(
-        (F.col("id") + 1).alias("x"), (F.col("id") * 2).alias("z")
-    )
-    assert _plan_fingerprint(a) != _plan_fingerprint(b), "alias swap missed"
-    assert _plan_fingerprint(a) != _plan_fingerprint(c), "rename missed"
-
-
 def test_fingerprint_ignores_transient_writer_dirs(tmp_path, spark):
     """A crashed/concurrent Spark overwrite leaves _temporary/ trees whose
     INNER part files carry plain names; folding them into the fingerprint
@@ -284,63 +160,6 @@ def test_fingerprint_ignores_transient_writer_dirs(tmp_path, spark):
     junk.mkdir(parents=True)
     (junk / "part-0.parquet").write_bytes(b"transient")
     assert source_fingerprint(str(d), "t") == fp1
-
-
-def test_cc_stage_scope_tag_mismatch_raises(spark):
-    """The catalog DROP during reaping reconstructs table names from the
-    stage_key tag; a scope belonging to a DIFFERENT operator (copy-paste
-    across the near-identical call sites) must fail loudly instead of
-    reaping one operator's files while dropping another's table."""
-    verts = spark.createDataFrame([(1,), (2,)], "node bigint")
-    edges = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    with pytest.raises(ValueError, match="does not start with"):
-        connected_components(
-            verts, edges, id_col="node", src_col="id_a", dst_col="id_b",
-            stage_key="portable_sym:v1:fp", stage_scope="cascade_sym:/x",
-        )
-
-
-def test_cc_stage_key_requires_scope(spark):
-    """stage_key without stage_scope would stage a dir no reap path ever
-    touches (the /tmp-leak class); scope without key is silently ignored —
-    both are caller bugs and must fail loudly."""
-    verts = spark.createDataFrame([(1,), (2,)], "node bigint")
-    edges = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    for kwargs in (
-        {"stage_key": "t1:v1:fp"},
-        {"stage_scope": "t1:/x"},
-    ):
-        with pytest.raises(ValueError, match="together"):
-            connected_components(
-                verts, edges, id_col="node", src_col="id_a", dst_col="id_b",
-                **kwargs,
-            )
-
-
-def test_run_once_migration_retries_after_failed_sweep(tmp_path):
-    """The one-time layout migration must NOT write its marker over a
-    failed removal (a legacy dir owned by another user on shared /tmp
-    would otherwise leak forever) — it retries until a clean pass."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        run_once_layout_migration,
-    )
-
-    calls = []
-
-    def failing(p):
-        calls.append(1)
-        return False
-
-    def clean(p):
-        calls.append(1)
-        return True
-
-    run_once_layout_migration(tmp_path, "_m", failing)
-    assert not (tmp_path / "_m").exists(), "marker written over failed sweep"
-    run_once_layout_migration(tmp_path, "_m", clean)
-    assert (tmp_path / "_m").exists()
-    run_once_layout_migration(tmp_path, "_m", clean)
-    assert calls == [1, 1], "marker did not stop further sweeps"
 
 
 def test_fingerprint_dir_walk_is_recursive(tmp_path, spark):
@@ -362,123 +181,3 @@ def test_fingerprint_dir_walk_is_recursive(tmp_path, spark):
     os.utime(part, ns=(pstat.st_atime_ns, pstat.st_mtime_ns))
     os.utime(d / "t.parquet", ns=(dstat.st_atime_ns, dstat.st_mtime_ns))
     assert source_fingerprint(str(d), "t") != fp1
-
-
-# ---------------------------------------------------------------------------
-# (d) same-session catalog hit validates the bucket spec (ADVICE r11)
-# ---------------------------------------------------------------------------
-
-
-def test_catalog_hit_spec_mismatch_restages(spark, tmp_path):
-    name = "bdec_test_stage_catalog_spec"
-    path = tmp_path / "staged"
-
-    def builder():
-        return spark.range(64).select(F.col("id").alias("d"))
-
-    stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=builder
-    )
-    # same session, same name, DIFFERENT spec (the A/B-harness collision):
-    # pre-round-12 the catalog hit served the stale 4-bucket layout silently
-    t = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=8, path=str(path), builder=builder
-    )
-    m = json.loads((path / "_bdec_manifest.json").read_text())
-    assert m["num_buckets"] == 8
-    plan = t.join(
-        spark.range(10).select(F.col("id").alias("d")).hint("shuffle_hash"), "d"
-    )
-    plan.write.format("noop").mode("overwrite").save()
-    assert "Bucketed: true" in plan._jdf.queryExecution().executedPlan().toString()
-    spark.sql(f"DROP TABLE `{name}`")
-
-
-# ---------------------------------------------------------------------------
-# (e) stale staged-generation reaping (ADVICE r11)
-# ---------------------------------------------------------------------------
-
-
-def test_reap_stale_stage_siblings(tmp_path):
-    import os
-    import time
-
-    parent = tmp_path / "bdec_bucketed"
-    old = time.time() - 86400
-    for n in ("cc_scopeaa_aaa", "cc_scopeaa_bbb", "cc_scopebb_ccc", "pr_ddd"):
-        (parent / n).mkdir(parents=True)
-        (parent / n / "junk").write_text("x")
-        # start every dir's supersession lease in the past (round 13:
-        # removal keys on an expired tombstone, never the dir mtime)
-        tomb = parent / (n + ".stale")
-        tomb.touch()
-        os.utime(tomb, (old, old))
-    reaped = reap_stale_stage_siblings(parent, "cc_scopeaa_", "cc_scopeaa_bbb")
-    left = sorted(
-        p.name for p in parent.iterdir() if not p.name.endswith(".stale")
-    )
-    # the active key survives; the stale same-scope generation is reaped
-    # (and reported back for catalog cleanup); OTHER scopes are untouched
-    # (their pre-seeded lease tombstones, outside this reap's prefix, are
-    # someone else's to act on)
-    assert reaped == ["cc_scopeaa_aaa"]
-    assert left == ["cc_scopeaa_bbb", "cc_scopebb_ccc", "pr_ddd"]
-    # the active generation's own tombstone was cleared (re-adoption)
-    assert not (parent / "cc_scopeaa_bbb.stale").exists()
-
-
-def test_cc_staging_reaps_old_generation_same_scope_only(
-    spark, tmp_path, monkeypatch
-):
-    """Reaping is scoped to ONE (operator, corpus-path): an old generation
-    of the same scope is reaped (and its dangling catalog entry dropped),
-    a DIFFERENT corpus's staged dir coexists untouched — tag-wide reaping
-    would ping-pong restage between alternating sf runs (round-12
-    review) — and legacy-format dirs are cleaned up."""
-    import hashlib as _hl
-    import tempfile as _tf
-
-    import os as _os
-    import time as _time
-
-    monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
-    parent = tmp_path / "bdec_bucketed"
-    scope8 = _hl.md5(b"t1:/corpus/A").hexdigest()[:8]
-    other8 = _hl.md5(b"t1:/corpus/B").hexdigest()[:8]
-    (parent / f"cc_{scope8}_deadbeef0000").mkdir(parents=True)  # old gen, A
-    (parent / f"cc_{other8}_deadbeef0000").mkdir(parents=True)  # corpus B
-    (parent / "cc_aaaabbbbcccc").mkdir(parents=True)  # pre-r12 legacy
-    (parent / "cc_t1_aaaabbbbcccc").mkdir(parents=True)  # interim-r12 legacy
-    # expire the old generations' supersession leases (round 13): a
-    # stale sibling is only removed once its tombstone — stamped at first
-    # sighting — outlives the grace window, so a concurrent process's
-    # in-flight scan is never yanked
-    _old = _time.time() - 86400
-    for _n in (f"cc_{scope8}_deadbeef0000", f"cc_{other8}_deadbeef0000"):
-        _t = parent / (_n + ".stale")
-        _t.touch()
-        _os.utime(_t, (_old, _old))
-    # a dangling same-session catalog entry for the old generation
-    spark.sql(
-        "CREATE TABLE `bdec_cc_sym_t1_deadbeef0000` (d bigint) USING PARQUET "
-        f"LOCATION '{tmp_path / 'dangling'}'"
-    )
-    verts = spark.createDataFrame([(1,), (2,), (3,)], "node bigint")
-    edges = spark.createDataFrame([(1, 2)], "id_a bigint, id_b bigint")
-    connected_components(
-        verts, edges, id_col="node", src_col="id_a", dst_col="id_b",
-        stage_key="t1:v1:fp", stage_scope="t1:/corpus/A",
-    ).collect()
-    names = sorted(p.name for p in parent.iterdir())
-    assert f"cc_{scope8}_deadbeef0000" not in names, "same-scope old gen kept"
-    assert f"cc_{other8}_deadbeef0000" in names, "OTHER corpus's dir reaped!"
-    assert "cc_aaaabbbbcccc" not in names, "pre-r12 legacy dir not reaped"
-    assert "cc_t1_aaaabbbbcccc" not in names, "interim legacy dir not reaped"
-    assert any(n.startswith(f"cc_{scope8}_") for n in names), "active missing"
-    assert not spark.catalog.tableExists("bdec_cc_sym_t1_deadbeef0000"), (
-        "reaped generation's catalog entry left dangling over deleted files"
-    )
-    # drop the catalog entry so other tests don't see a dangling table
-    for t in spark.catalog.listTables():
-        if t.name.startswith("bdec_cc_sym_t1_"):
-            spark.sql(f"DROP TABLE `{t.name}`")

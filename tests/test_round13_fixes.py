@@ -1,152 +1,18 @@
-"""Round-13 hardening units (VERDICT r12 #1/#2/#7 + ADVICE r12).
-
-The two-process stress repros live in test_round13_concurrency.py; these
-are the fast single-process units for the same fixes plus the smaller
-ADVICE items: the reap grace lease, honest reap reporting + reclaimed-byte
-telemetry, the enforced bench steal gate, and source_fingerprint's errno
-discipline.
+"""Round-13 hardening units (VERDICT r12 #2 + ADVICE r12): the enforced
+bench steal gate and source_fingerprint's errno discipline.
 """
 
 from __future__ import annotations
 
 import importlib.util
-import logging
-import os
 import sys
-import time
 from pathlib import Path
 
 import pytest
 
-from breweries_data_engineering_case_spark.sources import writers
 from breweries_data_engineering_case_spark.sources.readers import source_fingerprint
-from breweries_data_engineering_case_spark.sources.writers import (
-    reap_stale_stage_siblings,
-    stage_bucketed_table,
-)
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _mk_gen(parent: Path, name: str, nbytes: int = 64, age_sec: float = 0) -> Path:
-    d = parent / name
-    d.mkdir(parents=True)
-    (d / "part-0.parquet").write_bytes(b"x" * nbytes)
-    if age_sec:
-        old = time.time() - age_sec
-        os.utime(d, (old, old))
-    return d
-
-
-def _age_tombstone(d: Path, age_sec: float = 86400) -> None:
-    """Simulate a reap lease started age_sec ago (round 13: removal keys
-    on the supersession tombstone's age, never the dir's publish mtime)."""
-    tomb = d.with_name(d.name + ".stale")
-    tomb.touch()
-    old = time.time() - age_sec
-    os.utime(tomb, (old, old))
-
-
-# ---------------------------------------------------------------------------
-# reap grace lease (VERDICT r12 #1)
-# ---------------------------------------------------------------------------
-
-
-def test_reap_leases_from_supersession_not_publish(tmp_path):
-    """Removal keys on the SUPERSESSION tombstone's age, never the dir's
-    publish mtime: a generation published hours ago gets a FULL grace
-    window from the moment it is first sighted as stale (a publish-mtime
-    lease would delete it instantly under a sibling's active scan — the
-    round-12 abort, round-13 review). First sighting only stamps the
-    tombstone; removal happens once the lease expires."""
-    aged_pub = _mk_gen(tmp_path, "cc_s_old", age_sec=86400)  # old PUBLISH
-    assert reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_active") == []
-    assert aged_pub.exists(), "published-long-ago dir reaped with no lease"
-    assert (tmp_path / "cc_s_old.stale").exists(), "lease not started"
-    # still inside the lease: untouched
-    assert reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_active") == []
-    # lease expired: removed, tombstone cleared, reported for catalog drop
-    _age_tombstone(aged_pub)
-    assert reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_active") == [
-        "cc_s_old"
-    ]
-    assert not aged_pub.exists()
-    assert not (tmp_path / "cc_s_old.stale").exists()
-
-
-def test_reap_clears_tombstone_of_readopted_generation(tmp_path):
-    """A generation stamped stale and then re-adopted (code flip-back)
-    must have its lease cleared — otherwise the half-expired tombstone
-    would delete the now-ACTIVE generation on a later flip."""
-    d = _mk_gen(tmp_path, "cc_s_flip")
-    reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_other")
-    assert (tmp_path / "cc_s_flip.stale").exists()
-    # flip back: cc_s_flip is active again
-    reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_flip")
-    assert not (tmp_path / "cc_s_flip.stale").exists()
-    assert d.exists()
-
-
-def test_reap_keep_predicate_protects_live_pid_workspace(tmp_path):
-    """run-<pid> per-process workspaces pass a pid-liveness keep predicate:
-    a live process's workspace is never reaped regardless of lease age; a
-    dead pid's workspace goes through the normal lease."""
-    from breweries_data_engineering_case_spark.sources.writers import (
-        pid_workspace_alive,
-    )
-
-    live = _mk_gen(tmp_path, f"run-{os.getpid()}")  # this very process
-    _age_tombstone(live)  # even an expired lease must not matter
-    # a pid that cannot exist (> pid_max on linux)
-    dead = _mk_gen(tmp_path, "run-99999999")
-    _age_tombstone(dead)
-    reaped = reap_stale_stage_siblings(
-        tmp_path, "run-", "run-none", keep=pid_workspace_alive
-    )
-    assert reaped == [dead.name]
-    assert live.exists() and not dead.exists()
-    assert pid_workspace_alive(f"run-{os.getpid()}")
-    assert not pid_workspace_alive("run-99999999")
-    assert not pid_workspace_alive("not-a-run-dir")
-
-
-def test_reap_grace_zero_reaps_immediately(tmp_path):
-    """grace_sec=0 restores eager reaping (tests / explicit cleanup)."""
-    _mk_gen(tmp_path, "cc_s_young")
-    assert reap_stale_stage_siblings(
-        tmp_path, "cc_s_", "cc_s_active", grace_sec=0
-    ) == ["cc_s_young"]
-
-
-# ---------------------------------------------------------------------------
-# honest reap reporting + reclaimed-byte telemetry (ADVICE r12 / VERDICT #7)
-# ---------------------------------------------------------------------------
-
-
-def test_reap_does_not_report_failed_removal(tmp_path, monkeypatch, caplog):
-    """If rmtree fails, the dir must NOT be reported reaped (the caller
-    would drop a catalog entry over still-existing files) and the leak is
-    logged instead of silently retried as success."""
-    stuck = _mk_gen(tmp_path, "cc_s_stuck", age_sec=86400)
-    _age_tombstone(stuck)
-    monkeypatch.setattr(writers.shutil, "rmtree", lambda *a, **k: None)
-    with caplog.at_level(logging.WARNING, logger="bdec.staging"):
-        reaped = reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_active")
-    assert reaped == []
-    assert (tmp_path / "cc_s_stuck").exists()
-    assert any("FAILED to remove" in r.message for r in caplog.records)
-
-
-def test_reap_logs_reclaimed_bytes(tmp_path, caplog):
-    """Each successful reap logs one line with the reclaimed byte count so
-    long-lived hosts can audit /tmp staging hygiene (VERDICT r12 #7)."""
-    big = _mk_gen(tmp_path, "cc_s_big", nbytes=1234, age_sec=86400)
-    _age_tombstone(big)
-    with caplog.at_level(logging.INFO, logger="bdec.staging"):
-        reaped = reap_stale_stage_siblings(tmp_path, "cc_s_", "cc_s_active")
-    assert reaped == ["cc_s_big"]
-    lines = [r.message for r in caplog.records if "removed stale" in r.message]
-    assert len(lines) == 1 and "1234 bytes" in lines[0]
 
 
 # ---------------------------------------------------------------------------
@@ -203,137 +69,3 @@ def test_source_fingerprint_other_oserrors_propagate(tmp_path):
     (tmp_path / "sf").write_text("a file where a directory should be")
     with pytest.raises(NotADirectoryError):
         source_fingerprint(str(tmp_path / "sf"), "t")
-
-
-# ---------------------------------------------------------------------------
-# fingerprint conf lock (ADVICE r12)
-# ---------------------------------------------------------------------------
-
-
-def test_plan_fingerprint_ignores_lambda_counter(spark):
-    """Higher-order-function lambda variables embed a SESSION-GLOBAL
-    counter in their NAME ("lambda x_2" in a fresh session, "lambda x_79"
-    after other lambda columns were built) that the #-id strip does not
-    touch. Found live in round 13: two pytest shards computed different
-    fingerprints for the IDENTICAL cascade builder and ping-pong-restaged
-    each other's staged files out from under an active scan. Building
-    other lambda columns between two constructions must not change the
-    fingerprint."""
-    from pyspark.sql import functions as F
-
-    def frame():
-        return spark.range(8).select(
-            F.col("id").alias("d"),
-            F.aggregate(
-                F.sequence(F.lit(1), F.lit(4)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x * 2,
-            ).alias("s"),
-            F.transform(F.sequence(F.lit(1), F.lit(3)), lambda v: v + 1).alias(
-                "t"
-            ),
-        )
-
-    fp1 = writers._plan_fingerprint(frame())
-    # advance the session-global lambda-variable counter the way any other
-    # query in the same session would
-    for _ in range(5):
-        spark.range(2).select(
-            F.transform(F.sequence(F.lit(1), F.lit(2)), lambda v: v * 3)
-        ).collect()
-    fp2 = writers._plan_fingerprint(frame())
-    assert fp1 == fp2
-    # and a REAL semantic change still moves it
-    fp3 = writers._plan_fingerprint(
-        frame().withColumn("s", F.col("s") + 1)
-    )
-    assert fp3 != fp1
-
-
-def test_restage_is_non_destructive(spark, tmp_path):
-    """A builder-code change publishes a NEW generation NEXT TO the old one
-    — it never deletes the files a live reader (this session's earlier
-    registration, or another process) may still be scanning. The old
-    generation ages out via the grace-window reap instead."""
-    from pyspark.sql import functions as F
-
-    name = "bdec_t13_mvcc"
-    path = tmp_path / "staged"
-
-    def v1():
-        return spark.range(50).select(
-            F.col("id").alias("d"), (F.col("id") % 7).alias("p")
-        )
-
-    def v2():
-        return spark.range(50).select(
-            F.col("id").alias("d"), (F.col("id") % 5).alias("p")
-        )
-
-    t1 = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=v1
-    )
-    gen1 = [d for d in path.glob("gen-*") if d.is_dir()]
-    assert len(gen1) == 1
-    files1 = sorted(
-        (p.name, p.stat().st_mtime_ns) for p in gen1[0].rglob("*.parquet")
-    )
-    # v2 (code change) restages — old generation must survive intact
-    t2 = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=v2
-    )
-    gens = sorted(d.name for d in path.glob("gen-*") if d.is_dir())
-    assert len(gens) == 2, "restage must publish a NEW generation"
-    assert (
-        sorted((p.name, p.stat().st_mtime_ns) for p in gen1[0].rglob("*.parquet"))
-        == files1
-    ), "old generation's files were touched by the restage"
-    assert t2.filter(F.col("p") >= 5).count() == 0  # serving v2
-    # flipping back to v1 re-adopts the surviving old generation: zero
-    # writes, exact same part files (the cross-process A/B ping-pong case)
-    t1b = stage_bucketed_table(
-        spark, name, ["d"], num_buckets=4, path=str(path), builder=v1
-    )
-    assert (
-        sorted((p.name, p.stat().st_mtime_ns) for p in gen1[0].rglob("*.parquet"))
-        == files1
-    )
-    assert t1b.filter(F.col("p") >= 5).count() > 0  # serving v1 again
-    # aged-out generations are reaped on a later publish once their
-    # supersession lease expires
-    spark.sql(f"DROP TABLE `{name}`")
-    # v2's gen dir still exists → adoption path; reap only runs on publish,
-    # so call reap directly the way the publish path does. Removal needs an
-    # EXPIRED supersession lease (first sighting only stamps it).
-    from breweries_data_engineering_case_spark.sources.writers import (
-        reap_stale_stage_siblings,
-    )
-
-    gen2 = [d.name for d in path.glob("gen-*") if d.name != gen1[0].name]
-    assert reap_stale_stage_siblings(path, "gen-", gen2[0]) == []
-    assert gen1[0].exists(), "reaped inside the supersession lease"
-    _age_tombstone(gen1[0])
-    reaped = reap_stale_stage_siblings(path, "gen-", gen2[0])
-    assert reaped == [gen1[0].name] and not gen1[0].exists()
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-
-
-def test_plan_fingerprint_threadsafe(spark):
-    """Concurrent fingerprints on one session must not interleave the
-    maxToStringFields set/restore: every thread sees the full-width
-    stringification and all fingerprints of the same lineage agree."""
-    import concurrent.futures
-
-    from pyspark.sql import functions as F
-
-    def frame():
-        # >25 projected expressions: a truncated stringify would elide the
-        # tail as "... N more fields" and mint a DIFFERENT fingerprint
-        return spark.range(10).select(
-            *[(F.col("id") + i).alias(f"c{i}") for i in range(40)]
-        )
-
-    expected = writers._plan_fingerprint(frame())
-    with concurrent.futures.ThreadPoolExecutor(8) as ex:
-        got = list(ex.map(lambda _: writers._plan_fingerprint(frame()), range(32)))
-    assert set(got) == {expected}

@@ -1,11 +1,10 @@
-"""applyInPandasWithState tracker, parquet compaction."""
+"""applyInPandasWithState tracker."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.sources.readers import table_scan
-from breweries_data_engineering_case_spark.sources.writers import compact_parquet
 from breweries_data_engineering_case_spark.streaming.events import stream_events
 from breweries_data_engineering_case_spark.streaming.stateful import (
     user_activity_tracker,
@@ -44,16 +43,4 @@ def test_stateful_user_tracker_matches_batch(spark, sf_dir, tmp_path):
         if cur is None or r.event_cnt > cur[0]:
             g[r.user_id] = (r.event_cnt, round(r.value_sum, 6), r.max_value)
     assert g == b
-
-
-def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "fragmented")
-    li = table_scan(spark, sf_dir, "lineitem")
-    li.repartition(64).write.mode("overwrite").parquet(src)  # 64 tiny files
-    out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, out, target_file_mb=128)
-    assert n == 1  # tiny dataset → single target file
-    files = [f for f in __import__("pathlib").Path(out).rglob("*.parquet")]
-    assert len(files) == 1
-    assert spark.read.parquet(out).count() == li.count()
 

@@ -1,5 +1,5 @@
 """Column-level expression helpers (all JVM-side, codegen-friendly)."""
 
-from .cleaning import clean_str, nullif_blank, stamp_date, try_double
+from .cleaning import stamp_date
 
-__all__ = ["clean_str", "nullif_blank", "stamp_date", "try_double"]
+__all__ = ["stamp_date"]

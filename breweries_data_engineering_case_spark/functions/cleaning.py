@@ -1,11 +1,10 @@
-"""Cleaning expressions — the silver projection vocabulary.
+"""Cleaning expressions.
 
-Re-expresses the reference's scalar cleaning constructs
-(``app/tasks/silver.py:21-36``): CAST→VARCHAR, TRIM, NULLIF(.., ''),
-COALESCE fallback, TRY_CAST→DOUBLE, DATE literal stamping
-(``app/tasks/gold.py:101``). Everything is a pure Column expression built
-from ``pyspark.sql.functions`` — no UDFs — so the whole projection stays
-inside whole-stage codegen and Catalyst can constant-fold / push down.
+``stamp_date`` re-expresses the reference's DATE literal stamping
+(``app/tasks/gold.py:101``) as a pure Column expression built from
+``pyspark.sql.functions`` — no UDF — so it stays inside whole-stage codegen
+and Catalyst can constant-fold it. The silver cleaning projection itself is
+SQL text in ``plans/silver.clean_breweries``.
 """
 
 from __future__ import annotations
@@ -14,37 +13,6 @@ import datetime as _dt
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def nullif_blank(c: Column | str) -> Column:
-    """Empty-string → NULL (blank-as-missing policy).
-
-    ≈ ``NULLIF(s, '')`` at app/tasks/silver.py:24-34.
-    """
-    return F.nullif(_col(c), F.lit(""))
-
-
-def clean_str(c: Column | str) -> Column:
-    """Normalize any value to a trimmed, blank-to-NULL string.
-
-    The composite ``NULLIF(TRIM(CAST(x AS VARCHAR)), '')`` applied to every
-    silver source field (app/tasks/silver.py:23-34).
-    """
-    return nullif_blank(F.trim(_col(c).cast("string")))
-
-
-def try_double(c: Column | str) -> Column:
-    """String → DOUBLE, NULL on malformed input, never an error.
-
-    ≈ ``TRY_CAST(s AS DOUBLE)`` (app/tasks/silver.py:33-34). ``try_cast`` is
-    used (not plain ``cast``) so the semantics survive
-    ``spark.sql.ansi.enabled`` in either setting.
-    """
-    return _col(c).try_cast("double")
 
 
 def stamp_date(d: str | _dt.date) -> Column:

@@ -51,7 +51,3 @@ def dedup_rownum(
     rn = F.row_number().over(w)
     return df.withColumn("__rn", rn).filter(F.col("__rn") <= keep).drop("__rn")
 
-
-def distinct_rows(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Full-row (or projected) DISTINCT — partial+final hash aggregate."""
-    return (df.select(*cols) if cols else df).distinct()

@@ -1,29 +1,15 @@
-"""Row-level contract enforcement (constraint filters).
+"""Row-level contract enforcement: the NULL-passing range filter.
 
-≈ the reference's ``enforced`` CTE (app/tasks/silver.py:42-51): conjunctive
-NOT NULL checks on contract columns plus NULL-passing range checks on
-coordinates. Pure ``filter`` expressions — Catalyst pushes them into the scan
-where possible, which matters enormously at 100 TB (row groups whose stats
-exclude the range are never read).
+≈ the coordinate checks of the reference's ``enforced`` CTE
+(app/tasks/silver.py:49-50). A pure ``filter`` expression — Catalyst pushes
+it into the scan where possible (row groups whose stats exclude the range
+are never read).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def require_not_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Drop rows where any listed column is NULL.
-
-    ≈ ``WHERE id IS NOT NULL AND name IS NOT NULL AND …``
-    (app/tasks/silver.py:44-48).
-    """
-    pred = reduce(lambda a, b: a & b, (F.col(c).isNotNull() for c in cols))
-    return df.filter(pred)
 
 
 def range_check(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
@@ -35,8 +21,3 @@ def range_check(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
     c = F.col(col)
     return df.filter(c.isNull() | c.between(lo, hi))
 
-
-def null_pass_range_pred(col: str, lo: float, hi: float) -> Column:
-    """The predicate form of :func:`range_check`, for composing filters."""
-    c = F.col(col)
-    return c.isNull() | c.between(lo, hi)

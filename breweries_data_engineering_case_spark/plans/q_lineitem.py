@@ -1,51 +1,14 @@
-"""Lineitem fact analytics: pricing summaries, medians, regressions, time-bucketed rollups.
-
-Split out of the monolithic plans/registry.py (VERDICT r8 #8); the
-aggregator in registry.py restores the historical registration order.
-"""
-
+"""Lineitem fact analytics: pricing summaries, medians, regressions, time-bucketed rollups."""
 
 from __future__ import annotations
 
-import hashlib
-import json
-import tempfile
-from collections.abc import Callable
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from ..caching import cached, release_all
-from ..functions.cleaning import stamp_date
-from ..functions.text import LANG_MARKERS, fingerprint, lang_id, quality_score, token_count
-from ..operators.agg import grouped_count, grouping_sets_counts, regroup_sum
-from ..operators.dedup import dedup_rownum
-from ..operators.enforce import range_check
-from ..operators.asof import asof_join_backward
-from ..operators.fuzzy_dedup import (
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_near_dup_pairs,
-)
-from ..operators.joins import broadcast_dim_join, shuffle_join
-from ..operators.similarity import (
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
-    embedding_near_dup_pairs,
-    semantic_dedup,
-)
-from ..sources.readers import json_array_scan, table_scan
-from ..sources.writers import idempotent_date_overwrite, write_partitioned_parquet
-from .silver import clean_breweries
+from ..caching import cached
+from ..sources.readers import table_scan
 
-from .qshared import (
-    register,
-)
+from .qshared import register
 
 
 

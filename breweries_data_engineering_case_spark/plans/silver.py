@@ -27,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import clean_str, try_double
 from ..operators.dedup import dedup_any
-from ..operators.enforce import null_pass_range_pred, require_not_null
 from ..schemas import BREWERY_RAW_SCHEMA, SILVER_PARTITION_COLS
 from ..sources.readers import json_array_scan
 from ..sources.writers import write_partitioned_parquet
@@ -37,8 +35,7 @@ from .quality import check_aggs
 
 
 def _clean_sql(col: str) -> str:
-    """SQL-text twin of functions/cleaning.clean_str — same tree:
-    ``NULLIF(TRIM(CAST(x AS STRING)), '')``."""
+    """Trimmed, blank-to-NULL string: ``NULLIF(TRIM(CAST(x AS VARCHAR)), '')``."""
     return f"nullif(trim(cast(`{col}` as string)), '')"
 
 
@@ -48,16 +45,13 @@ def clean_breweries(raw: DataFrame) -> DataFrame:
     ≈ CTEs ``cleaned`` (app/tasks/silver.py:21-36), ``dedup`` (:37-41),
     ``enforced`` (:42-51).
 
-    r15 (VERDICT r14 #7): the projection + filters are built as SQL TEXT
-    (three parses) instead of ~90 py4j Column calls — ~0.2 s of driver
-    time per construction (job-submission latency at 100 TB, guide §5).
-    Reference-line traceability moved to the parity twin below:
-    ``clean_breweries_columns`` maps line-by-line onto the reference and
-    ``tests/test_medallion_pipeline.py::test_silver_sql_twin_is_expression_
-    identical`` proves both builds share one plan fingerprint, so the SQL
-    text can never drift from the audited Column form unnoticed.
+    The projection and filters are built as SQL text (three parses), not as
+    ~90 py4j Column calls that each cost driver time on every construction.
+    The comments map each piece onto the reference.
     """
     cleaned = raw.selectExpr(
+        # Each string column is NULLIF(TRIM(CAST(x AS VARCHAR)), '')
+        # (app/tasks/silver.py:24-34).
         # DELIBERATE DEVIATION from the reference (recorded per VERDICT r8
         # #7): app/tasks/silver.py:23 bare-casts id (a whitespace-only id
         # survives there and then passes its :45 IS NOT NULL filter), while
@@ -74,47 +68,26 @@ def clean_breweries(raw: DataFrame) -> DataFrame:
         f"coalesce({_clean_sql('state')}, {_clean_sql('state_province')}) AS state",
         f"{_clean_sql('city')} AS city",
         f"{_clean_sql('postal_code')} AS postal_code",
+        # TRY_CAST(.. AS DOUBLE) (silver.py:33-34): NULL on malformed input,
+        # never an error, under either spark.sql.ansi.enabled setting
         f"try_cast({_clean_sql('latitude')} as double) AS latitude",
         f"try_cast({_clean_sql('longitude')} as double) AS longitude",
     )
+    # one row per id, arbitrary pick (silver.py:37-41)
     deduped = dedup_any(cleaned, ["id"])
     enforced = deduped.filter(
+        # NOT NULL contract columns (silver.py:44-48)
         F.expr(
             "id IS NOT NULL AND name IS NOT NULL AND "
             "country IS NOT NULL AND state IS NOT NULL"
         )
     ).filter(
+        # coordinates NULL or in range (silver.py:49-50)
         F.expr(
             "(latitude IS NULL OR (latitude >= -90.0D AND latitude <= 90.0D))"
             " AND (longitude IS NULL OR"
             " (longitude >= -180.0D AND longitude <= 180.0D))"
         )
-    )
-    return enforced
-
-
-def clean_breweries_columns(raw: DataFrame) -> DataFrame:
-    """Column-API twin of :func:`clean_breweries`, kept as the
-    reference-traceability surface (each line ≈ one reference construct;
-    see clean_str / try_double docstrings for the app/tasks/silver.py line
-    map). NOT on the hot path — the parity test asserts the SQL-text form
-    above compiles to the IDENTICAL analyzed plan, so auditing this
-    function audits the served one."""
-    cleaned = raw.select(
-        clean_str("id").alias("id"),
-        clean_str("name").alias("name"),
-        clean_str("brewery_type").alias("brewery_type"),
-        clean_str("country").alias("country"),
-        F.coalesce(clean_str("state"), clean_str("state_province")).alias("state"),
-        clean_str("city").alias("city"),
-        clean_str("postal_code").alias("postal_code"),
-        try_double(clean_str("latitude")).alias("latitude"),
-        try_double(clean_str("longitude")).alias("longitude"),
-    )
-    deduped = dedup_any(cleaned, ["id"])
-    enforced = require_not_null(deduped, ["id", "name", "country", "state"]).filter(
-        null_pass_range_pred("latitude", -90.0, 90.0)
-        & null_pass_range_pred("longitude", -180.0, 180.0)
     )
     return enforced
 

@@ -11,14 +11,7 @@ is never acceptable.
 
 from __future__ import annotations
 
-from pyspark.sql.types import (
-    DateType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 
 def _s(name: str) -> StructField:
@@ -67,19 +60,6 @@ SILVER_SCHEMA = StructType(
         StructField("postal_code", StringType(), nullable=True),
         StructField("latitude", DoubleType(), nullable=True),
         StructField("longitude", DoubleType(), nullable=True),
-    ]
-)
-
-#: Gold warehouse history table (app/tasks/gold.py:91-98). Dimension columns
-#: are coalesced to '' before landing here (gold.py:78-80), so they are
-#: declared non-nullable.
-GOLD_COUNTS_SCHEMA = StructType(
-    [
-        StructField("ingestion_date", DateType(), nullable=False),
-        StructField("country", StringType(), nullable=False),
-        StructField("state", StringType(), nullable=False),
-        StructField("brewery_type", StringType(), nullable=False),
-        StructField("brewery_count", LongType(), nullable=False),
     ]
 )
 

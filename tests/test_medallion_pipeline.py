@@ -19,7 +19,12 @@ from breweries_data_engineering_case_spark.config import Settings
 from breweries_data_engineering_case_spark.plans.gold import aggregate_gold, base_counts
 from breweries_data_engineering_case_spark.plans import silver as silver_stage
 from breweries_data_engineering_case_spark.plans.pipeline import run, with_retries
-from breweries_data_engineering_case_spark.plans.quality import QualityError, run_checks
+from breweries_data_engineering_case_spark.plans.quality import (
+    GOLD_CHECKS,
+    QualityError,
+    check_aggs,
+    run_checks,
+)
 from breweries_data_engineering_case_spark.plans.silver import clean_breweries
 from breweries_data_engineering_case_spark.schemas import GOLD_GRANULARITIES, SILVER_SCHEMA
 from breweries_data_engineering_case_spark.sources.rest import ingest_to_bronze
@@ -184,15 +189,6 @@ def test_arrow_write_takes_local_paths_only(tmp_path, monkeypatch):
     assert list(tmp_path.iterdir()) == []
 
 
-def test_quality_uniqueness_check(spark):
-    dup = spark.createDataFrame([("a",), ("a",), ("b",)], "id string")
-    with pytest.raises(QualityError):
-        run_checks(dup, unique_cols=("id",))
-    uniq = spark.createDataFrame([("a",), ("b",), (None,)], "id string")
-    results = run_checks(uniq, unique_cols=("id",))  # NULLs don't break uniqueness
-    assert all(r.passed for r in results)
-
-
 def test_corrupt_bronze_page_does_not_poison_run(spark, tmp_path):
     """A malformed JSON page yields an all-NULL row under the explicit read
     schema (PERMISSIVE mode); the contract filters drop it — the run
@@ -214,11 +210,15 @@ def test_corrupt_bronze_page_does_not_poison_run(spark, tmp_path):
 
 
 def test_quality_checks_fail_hard(spark):
-    empty = spark.createDataFrame([], "brewery_count long")
+    def checked(df):
+        return run_checks(df.agg(*check_aggs(**GOLD_CHECKS)).first().asDict(), **GOLD_CHECKS)
+
     with pytest.raises(QualityError):
-        run_checks(empty, positive_cols=("brewery_count",))
-    ok = spark.createDataFrame([(5,)], "brewery_count long")
-    results = run_checks(ok, positive_cols=("brewery_count",))
+        checked(spark.createDataFrame([], "brewery_count long"))
+    with pytest.raises(QualityError):
+        checked(spark.createDataFrame([(0,)], "brewery_count long"))
+    results = checked(spark.createDataFrame([(5,)], "brewery_count long"))
+    assert [r.name for r in results] == ["row_count > 0", "max(brewery_count) > 0"]
     assert all(r.passed for r in results)
 
 
@@ -230,29 +230,6 @@ def test_base_counts_blank_fill(spark):
     got = {(r.country, r.state, r.brewery_type): r.brewery_count
            for r in base_counts(silver).collect()}
     assert got == {("US", "CA", ""): 1, ("US", "CA", "micro"): 1}
-
-
-def test_silver_sql_twin_is_expression_identical(spark):
-    """r15 (VERDICT r14 #7): clean_breweries now builds its projection +
-    filters as SQL text (3 parses instead of ~90 py4j Column calls). This
-    parity test keeps the reference-line traceability: the Column twin
-    (clean_breweries_columns) maps line-by-line onto the reference —
-    clean_str ≈ NULLIF(TRIM(CAST(x AS VARCHAR)), '') at
-    app/tasks/silver.py:23-34, the state fallback ≈ :27-30, try_double ≈
-    TRY_CAST at :33-34, NOT-NULL enforcement ≈ :44-48, lat/lon range ≈
-    :49-50 — and the SQL form must be semantically the same plan
-    (canonicalized expressions + literals) with the same output schema
-    (names, order, types), so a drift in either build fails here before it
-    can ship."""
-    from breweries_data_engineering_case_spark.plans.silver import (
-        clean_breweries_columns,
-    )
-    from breweries_data_engineering_case_spark.schemas import BREWERY_RAW_SCHEMA
-
-    raw = spark.createDataFrame([], BREWERY_RAW_SCHEMA)
-    sql_form, column_form = clean_breweries(raw), clean_breweries_columns(raw)
-    assert sql_form.sameSemantics(column_form)
-    assert sql_form.schema == column_form.schema
 
 
 def _leaf_dirs(root: str) -> set[str]:

@@ -5,7 +5,9 @@ names, and order-insensitive values.
 
 from __future__ import annotations
 
+import ast
 import math
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -138,6 +140,34 @@ def test_query_matches_oracle(spark, sf_dir, name):
 def test_all_queries_have_callables():
     assert set(registry.ORACLES) <= set(registry.QUERIES)
     assert registry.QUERIES, "registry must not be empty"
+
+
+def test_window_leads_and_plans_name_every_import():
+    """``@register`` is the registry: its first 50 entries are
+    ``_WINDOW_PRIORITY`` in order, and no module under ``plans/`` keeps a
+    module-level import it never names (an import kept for its side effect
+    says so with ``# noqa: F401``)."""
+    assert len(registry._WINDOW_PRIORITY) == 50
+    assert list(registry.queries())[:50] == registry._WINDOW_PRIORITY
+    unused = []
+    for path in sorted(Path(registry.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        tree = ast.parse(src)
+        lines = src.splitlines()
+        named = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for stmt in tree.body:
+            if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(stmt, "module", None) == "__future__":
+                continue
+            if "noqa: F401" in lines[stmt.lineno - 1]:
+                continue
+            unused += [
+                f"{path.name}:{stmt.lineno} {a.asname or a.name}"
+                for a in stmt.names
+                if (a.asname or a.name.split(".")[0]) not in named
+            ]
+    assert not unused, f"{len(unused)} unused imports: {unused}"
 
 
 @pytest.mark.parametrize(

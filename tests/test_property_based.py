@@ -35,15 +35,15 @@ _texty = st.text(
 @settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.lists(st.one_of(st.none(), _texty), min_size=1, max_size=50))
 def test_clean_str_blank_to_null_invariant(spark, values):
-    """clean_str(x) is NULL iff trim(x) is empty/NULL; otherwise it equals
-    the trimmed input (no content mutation). NOTE: SQL TRIM (Spark and
-    DuckDB alike) strips ONLY ASCII spaces — not \\r/\\t/\\n like Python's
-    str.strip() — so the property uses strip(' ') (hypothesis caught the
-    difference)."""
-    from breweries_data_engineering_case_spark.functions.cleaning import clean_str
+    """The silver string cleaning (``plans/silver._clean_sql``) is NULL iff
+    trim(x) is empty/NULL; otherwise it equals the trimmed input (no content
+    mutation). NOTE: SQL TRIM (Spark and DuckDB alike) strips ONLY ASCII
+    spaces — not \\r/\\t/\\n like Python's str.strip() — so the property
+    uses strip(' ') (hypothesis caught the difference)."""
+    from breweries_data_engineering_case_spark.plans.silver import _clean_sql
 
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    out = [r.c for r in df.select(clean_str("v").alias("c")).collect()]
+    out = [r.c for r in df.selectExpr(f"{_clean_sql('v')} AS c").collect()]
     for v, c in zip(values, out):
         expected = None if v is None or v.strip(" ") == "" else v.strip(" ")
         assert c == expected, (v, c, expected)
@@ -62,12 +62,14 @@ def test_clean_str_blank_to_null_invariant(spark, values):
     )
 )
 def test_try_double_never_errors(spark, values):
-    """try_double returns a float for parseable strings and NULL for
-    garbage — it must never raise, under any input, ANSI mode included."""
-    from breweries_data_engineering_case_spark.functions.cleaning import try_double
+    """The silver coordinate cast (``try_cast`` of the cleaned string, as in
+    ``plans/silver.clean_breweries``) returns a float for parseable strings
+    and NULL for garbage — it must never raise, under any input, ANSI mode
+    included."""
+    from breweries_data_engineering_case_spark.plans.silver import _clean_sql
 
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    out = [r.d for r in df.select(try_double("v").alias("d")).collect()]
+    out = [r.d for r in df.selectExpr(f"try_cast({_clean_sql('v')} as double) AS d").collect()]
     for v, d in zip(values, out):
         if d is not None:
             assert isinstance(d, float)
@@ -192,7 +194,7 @@ def test_ewma_matches_python_reference_on_generated_series(spark, slots):
     from pathlib import Path
 
     from breweries_data_engineering_case_spark.plans import registry
-    from breweries_data_engineering_case_spark.plans.registry import _EWMA_W
+    from breweries_data_engineering_case_spark.plans.qshared import _EWMA_W
 
     base = dt.datetime(2024, 1, 1)
     rows = [

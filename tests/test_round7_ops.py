@@ -14,6 +14,7 @@ from breweries_data_engineering_case_spark.sources.python_datasource import (
     JsonlSinkWriter,
     register_jsonl_sink,
 )
+from breweries_data_engineering_case_spark.sources.readers import table_scan
 
 
 class TestJsonlSink:
@@ -100,7 +101,7 @@ def test_entity_resolution_merges_transitive_spellings(spark, sf_dir):
     # base but 2 edits from each other: only transitive closure unites them
     # (at tiny SF not every name draws all four variants, so witness >=3)
     assert any(r.n_spellings >= 3 for r in out)
-    assert sum(r.n_records for r in out) == registry.table_scan(
+    assert sum(r.n_records for r in out) == table_scan(
         spark, sf_dir, "part"
     ).count()
 
@@ -143,10 +144,7 @@ def test_ab_test_inequality_matches_float_ztest(spark, sf_dir):
 def test_observe_metrics_ride_the_cleaning_job(spark, sf_dir):
     from pyspark.sql import Observation
 
-    from breweries_data_engineering_case_spark.plans.registry import (
-        observed_events_clean,
-        table_scan,
-    )
+    from breweries_data_engineering_case_spark.plans.q_events import observed_events_clean
 
     obs = Observation()
     result = observed_events_clean(spark, sf_dir, observation=obs)
@@ -179,7 +177,7 @@ def test_ewma_hand_computed_on_planted_series(spark):
     # plant a 3-point series and check the renormalized truncated EWMA
     import datetime as dt
 
-    from breweries_data_engineering_case_spark.plans.registry import _EWMA_W
+    from breweries_data_engineering_case_spark.plans.qshared import _EWMA_W
 
     vals = [100, 200, 400]
     rows = [
@@ -228,7 +226,7 @@ def test_sssp_source_zero_and_edge_relaxation_bound(spark, sf_dir):
     assert dist[src] == 0
     # triangle inequality against every direct edge among settled nodes
     li = (
-        registry.table_scan(spark, sf_dir, "lineitem")
+        table_scan(spark, sf_dir, "lineitem")
         .filter(F.col("l_partkey") < 200)
         .select("l_orderkey", "l_partkey")
         .distinct()

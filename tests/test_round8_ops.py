@@ -8,10 +8,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from breweries_data_engineering_case_spark.plans import registry
-from breweries_data_engineering_case_spark.plans.registry import (
+from breweries_data_engineering_case_spark.plans.qshared import (
     _exact_rank_cutoffs,
     _QUARTILE_RANKS,
 )
+from breweries_data_engineering_case_spark.sources.readers import table_scan
 
 
 def test_exact_rank_cutoffs_match_sorted_multiset(spark):
@@ -55,7 +56,7 @@ def test_ntile_scaled_buckets_are_quartile_sized_and_ordered(spark, sf_dir):
     # value-based quartiles: bucket boundaries respect value order and each
     # bucket holds ~n/4 rows (ties may shift counts, never order)
     df = registry.QUERIES["window_ntile_quartiles_scaled"](spark, sf_dir)
-    o = registry.table_scan(spark, sf_dir, "orders").select(
+    o = table_scan(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     j = df.join(o, "o_orderkey")
@@ -912,7 +913,7 @@ def test_cem_att_matches_fraction_replay(spark, sf_dir):
 def test_croston_matches_sequential_replay(spark, sf_dir):
     import pandas as pd
 
-    from breweries_data_engineering_case_spark.plans.registry import _EWMA_W
+    from breweries_data_engineering_case_spark.plans.qshared import _EWMA_W
 
     li = pd.read_parquet(
         f"{sf_dir}/lineitem.parquet",

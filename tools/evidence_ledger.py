@@ -12,8 +12,8 @@ Usage:
         round, max age in rounds) — the maintenance-rotation health check
         VERDICT r13 #7 asked for; paste the line into NOTES.md.
 
-Pure metadata: reads CORRECTNESS_r*.json and the registry names via a
-regex (no Spark session). Run `--next-window` at session end and record
+Pure metadata: reads CORRECTNESS_r*.json and imports the registry for its
+names (no Spark session). Run `--next-window` at session end and record
 the output in NOTES.md so no name waits more than two windows
 (VERDICT r7 ask #3).
 """
@@ -21,39 +21,18 @@ the output in NOTES.md so no name waits more than two windows
 from __future__ import annotations
 
 import json
-import re
 import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def registry_names() -> list[str]:
-    """All registry names in registration order.
+    """All registry names in listing order (no Spark session is started)."""
+    from breweries_data_engineering_case_spark.plans import registry
 
-    Since the round-9 split the @register calls live in the plans/q_*.py
-    domain modules, and registry.py's ``_REGISTRATION_ORDER`` literal is
-    the assert-guarded complete list (it must name every registered query
-    or the aggregator raises) — parse that with ast instead of regexing
-    decorators across files."""
-    import ast
-
-    src = (
-        ROOT
-        / "breweries_data_engineering_case_spark"
-        / "plans"
-        / "registry.py"
-    ).read_text()
-    for node in ast.walk(ast.parse(src)):
-        targets = []
-        if isinstance(node, ast.AnnAssign) and node.value is not None:
-            targets = [node.target]
-        elif isinstance(node, ast.Assign):
-            targets = node.targets
-        for t in targets:
-            if isinstance(t, ast.Name) and t.id == "_REGISTRATION_ORDER":
-                return [ast.literal_eval(e) for e in node.value.elts]
-    raise RuntimeError("_REGISTRATION_ORDER not found in registry.py")
+    return list(registry.queries())
 
 
 def latest_evidence() -> dict[str, tuple[str, bool]]:

@@ -12,15 +12,9 @@ the driver once, as an Arrow table. Everything after that is driver-side:
 
 - Why Arrow: gold's size is bounded by the dimension cardinality, not by the
   data volume — at most one row per (country, state, brewery_type), a few
-  hundred rows (about 17 KB) however many breweries silver holds. Writing
-  such a table through Spark costs far more than the data: each write is a
-  Spark job plus the Hadoop commit protocol, and on a local lake without
-  libhadoop, Hadoop forks a ``chmod`` process for every file, ``.crc`` file
-  and directory it creates. Measured on a 4-vCPU Linux host (Spark 4.1.2,
-  ``local[4]``): a Spark write of a small frame costs about 220 ms and 28
-  forked processes, plus about 11 ms and 6 forks per partition directory;
-  the same write from an Arrow table costs about 1 ms plus 0.2 ms per
-  directory and forks nothing. Gold writes about 90 files per date.
+  hundred rows (about 17 KB) however many breweries silver holds. Gold
+  writes about 90 files per date, and a driver-side write skips the fixed
+  cost of a Spark write (``sources.writers`` gives the figures).
 - DELETE+INSERT → dynamic partition overwrite on ``ingestion_date``
   (sources.writers.idempotent_date_overwrite; the writer picks the engine
   from its input and keeps the lake layout of the Spark write).

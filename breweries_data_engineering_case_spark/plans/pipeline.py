@@ -34,11 +34,11 @@ def with_retries(retries: int = 2, delay_s: float = 5.0) -> Callable[[Callable[.
     def deco(fn: Callable[..., T]) -> Callable[..., T]:
         @functools.wraps(fn)
         def wrapped(*args: Any, **kwargs: Any) -> T:
-            last: BaseException | None = None
+            last: Exception | None = None
             for attempt in range(retries + 1):
                 try:
                     return fn(*args, **kwargs)
-                except BaseException as e:  # noqa: BLE001 — retry anything, like Prefect
+                except Exception as e:  # an interrupt or exit propagates at once
                     last = e
                     if attempt < retries:
                         log.warning("%s failed (attempt %d/%d): %s — retrying in %.0fs",

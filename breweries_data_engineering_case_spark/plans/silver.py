@@ -7,14 +7,20 @@ DataFrame chain:
     → cleaning projection                  ≈ silver.py:21-36
     → dedup on id                          ≈ silver.py:37-41
     → contract enforcement filters         ≈ silver.py:42-51
+    → collect to one Arrow table
     → partitioned snappy parquet write     ≈ silver.py:56-71
     → row count                            ≈ silver.py:73
 
 Fidelity notes:
 - the reference's final COUNT(*) re-executes the whole CTE (views aren't
   materialized); here the count — and the silver quality aggregates — are
-  a ``DataFrame.observe`` on the written frame, so the write is the only
+  a ``DataFrame.observe`` on the collect, so ``toArrow()`` is the only
   action and bronze is read once (SURVEY.md §3.2).
+- the collected table is written on the driver by ``sources.writers``'
+  Arrow branch, in the Spark write's layout, with no Spark write job
+  (SURVEY.md D6). Its size is the deduplicated day of the feed, about 8k
+  rows for the whole Open Brewery DB; ``spark.driver.maxResultSize`` caps
+  the collect and fails it loudly beyond that.
 - bronze is read as the date DIRECTORY with a ``*.json`` file filter, not as
   the ``…/*.json`` glob: a glob expanding to more than 32 paths makes Spark
   list them in a parallel listing job, a directory is listed on the driver.
@@ -99,19 +105,19 @@ def transform_silver(
     ingestion_date: str,
     metrics: dict[str, object] | None = None,
 ) -> tuple[int, str]:
-    """Full silver stage: bronze JSON pages → clean → partitioned write.
+    """Full silver stage: bronze JSON pages → clean → collect → partitioned write.
 
     Returns (row_count, output_path), like app/tasks/silver.py:73-74. The
-    count and the silver quality aggregates are observed on the written
-    frame; ``metrics``, when given, receives that observed row for
-    ``quality.run_checks``.
+    count and the silver quality aggregates are observed on the collect of
+    the rows written; ``metrics``, when given, receives that observed row
+    for ``quality.run_checks``.
     """
     date_dir = f"{bronze_dir.rstrip('/')}/ingestion_date={ingestion_date}"
     raw = json_array_scan(spark, date_dir, schema=BREWERY_RAW_SCHEMA, glob_filter="*.json")
     obs = Observation()  # one per call: an Observation serves one action
-    clean = clean_breweries(raw).observe(obs, *check_aggs())
+    table = clean_breweries(raw).observe(obs, *check_aggs()).toArrow()
     out = f"{silver_dir.rstrip('/')}/ingestion_date={ingestion_date}"
-    write_partitioned_parquet(clean, out, SILVER_PARTITION_COLS)
+    write_partitioned_parquet(table, out, SILVER_PARTITION_COLS)
     observed = obs.get
     if metrics is not None:
         metrics.update(observed)

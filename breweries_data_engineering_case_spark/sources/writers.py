@@ -17,6 +17,17 @@ partitions present in the written data and leaves every other date alone.
 Same idempotency contract, and it scales: the overwrite is a metadata swap of
 one date directory, never a table rewrite.
 
+A ``pyarrow.Table`` is written on the driver instead, in the Spark write's
+layout. The daily stages collect their outputs to Arrow (silver's cleaned
+date, gold's base counts) because a small write through Spark costs far more
+than the data: each write is a Spark job plus the Hadoop commit protocol, and
+on a local lake without libhadoop, Hadoop forks a ``chmod`` process for every
+file, ``.crc`` file and directory it creates. Measured on a 4-vCPU Linux host
+(Spark 4.1.2, ``local[4]``): a Spark write of a small frame costs about
+220 ms and 28 forked processes, plus about 11 ms and 6 forks per partition
+directory; the same write from an Arrow table costs about 1 ms plus 0.2 ms
+per directory and forks nothing.
+
 The module ends with the session staging helpers (``session_workspace``,
 ``staged_dir``, ``stage_bucketed_table``): derived tables and files live in
 one temp directory per SparkContext and are built once per session.
@@ -80,6 +91,28 @@ def _partition_dir(cols: Sequence[str], values: Sequence[str | None]) -> str:
     )
 
 
+def _leaf_rows(table: pa.Table, partition_cols: Sequence[str]) -> dict[str, pa.Array]:
+    """The row indices of each leaf directory of ``table``.
+
+    Arrow groups the rows by their partition key, so :func:`_partition_dir`
+    runs once per distinct key, not once per row. Keys naming the same
+    directory (a null and ``""`` are both the default partition) share one
+    leaf.
+    """
+    names = [f"k{i}" for i in range(len(partition_cols))]
+    keys = pa.table(
+        [table.column(c).cast(pa.string()) for c in partition_cols]
+        + [pa.array(range(table.num_rows), pa.int64())],
+        names=[*names, "row"],
+    )
+    groups = keys.group_by(names, use_threads=False).aggregate([("row", "list")])
+    by_leaf: dict[str, list[pa.Array]] = {}
+    values = zip(*(groups.column(n).to_pylist() for n in names))
+    for key, rows in zip(values, groups.column("row_list")):
+        by_leaf.setdefault(_partition_dir(partition_cols, key), []).append(rows.values)
+    return {leaf: pa.concat_arrays(rows) for leaf, rows in by_leaf.items()}
+
+
 def _write_arrow_partitioned(table: pa.Table, path: str, partition_cols: Sequence[str]) -> None:
     """The driver-side twin of the Spark write for a ``pyarrow.Table``.
 
@@ -96,11 +129,7 @@ def _write_arrow_partitioned(table: pa.Table, path: str, partition_cols: Sequenc
     staging = root.parent / f".{root.name}-{token}.staging"
     data = table.drop_columns(list(partition_cols))
     if partition_cols:
-        keys = zip(*(table.column(c).cast(pa.string()).to_pylist() for c in partition_cols))
-        rows_by_leaf: dict[str, list[int]] = {}
-        for i, key in enumerate(keys):
-            rows_by_leaf.setdefault(_partition_dir(partition_cols, key), []).append(i)
-        leaves = {leaf: data.take(rows) for leaf, rows in rows_by_leaf.items()}
+        leaves = {leaf: data.take(rows) for leaf, rows in _leaf_rows(table, partition_cols).items()}
     else:
         leaves = {"": data}
     try:

@@ -12,6 +12,7 @@ import uuid
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,7 +27,13 @@ from breweries_data_engineering_case_spark.plans.quality import (
     run_checks,
 )
 from breweries_data_engineering_case_spark.plans.silver import clean_breweries
-from breweries_data_engineering_case_spark.schemas import GOLD_GRANULARITIES, SILVER_SCHEMA
+from breweries_data_engineering_case_spark.schemas import (
+    BREWERY_RAW_SCHEMA,
+    GOLD_GRANULARITIES,
+    SILVER_PARTITION_COLS,
+    SILVER_SCHEMA,
+)
+from breweries_data_engineering_case_spark.sources.readers import json_array_scan
 from breweries_data_engineering_case_spark.sources.rest import ingest_to_bronze
 from breweries_data_engineering_case_spark.sources.writers import (
     idempotent_date_overwrite,
@@ -50,6 +57,17 @@ PAGE_2 = [
     {"id": "5", "name": "Echo", "country": None, "state": "TX"},                   # country null → drop
     {"id": "6", "name": "Foxtrot", "brewery_type": "brewpub", "country": "US",
      "state": "CA", "latitude": "-89.9", "longitude": "179.9"},
+]
+
+# Partition values with spaces and a character Spark escapes (' → %27), and a
+# blank state that falls back to state_province.
+PAGE_3 = [
+    {"id": "m1", "name": "Kona", "brewery_type": "large", "country": "United States",
+     "state": "Hawai'i", "latitude": "19.6", "longitude": "-155.9"},
+    {"id": "m2", "name": "Okells", "brewery_type": "", "country": "Isle of Man",
+     "state": "", "state_province": "Douglas"},
+    {"id": "m3", "name": "Zeta", "brewery_type": "micro", "country": "United States",
+     "state": "Hawai'i"},
 ]
 
 
@@ -132,10 +150,12 @@ def test_date_overwrite_touches_only_its_partition(spark, tmp_path, engine):
 def test_arrow_and_spark_writes_share_the_partition_layout(spark, tmp_path):
     """The pyarrow.Table branch of write_partitioned_parquet names its
     directories the way Spark does (escapes, empty value → default
-    partition), writes one file per leaf, and leaves no staging behind."""
+    partition), writes one file per leaf, and leaves no staging behind. A
+    null and an empty value of one column share the default-partition leaf."""
     odd = ["plain", "with space", "a/b", "c:d", "e=f", "50%", "#tag", ""]
     rows = [(a, b, i) for i, (a, b) in enumerate(zip(odd, reversed(odd)))]
     rows.append(("plain", "", 99))  # a second row in the first leaf
+    rows.append(("plain", None, 98))  # a null beside the empty value: the same leaf
     cols = ["p1", "p2"]
     spark_dir, arrow_dir = str(tmp_path / "spark"), str(tmp_path / "arrow")
     write_partitioned_parquet(spark.createDataFrame(rows, "p1 string, p2 string, n long"),
@@ -143,20 +163,24 @@ def test_arrow_and_spark_writes_share_the_partition_layout(spark, tmp_path):
     table = pa.table({"p1": [r[0] for r in rows], "p2": [r[1] for r in rows],
                       "n": pa.array([r[2] for r in rows], pa.int64())})
     write_partitioned_parquet(table, arrow_dir, cols)
-    # a second write replaces only its own leaf, both of its rows
-    write_partitioned_parquet(table.slice(0, 1).set_column(2, "n", pa.array([7], pa.int64())),
-                              arrow_dir, cols)
-
-    assert _leaf_dirs(arrow_dir) == _leaf_dirs(spark_dir)
-    assert len(_leaf_dirs(spark_dir)) == len(rows) - 1
-    for leaf in _leaf_dirs(arrow_dir):
-        assert len(list((Path(arrow_dir) / leaf).glob("*.parquet"))) == 1
 
     def read(path: str) -> set[tuple]:
         return {tuple(r) for r in spark.read.parquet(path).select("p1", "p2", "n").collect()}
 
+    assert _leaf_dirs(arrow_dir) == _leaf_dirs(spark_dir)
+    assert len(_leaf_dirs(spark_dir)) == len(rows) - 2
+    for leaf in _leaf_dirs(arrow_dir):
+        assert len(list((Path(arrow_dir) / leaf).glob("*.parquet"))) == 1
     want = read(spark_dir)
-    assert ("plain", None, 99) in want  # the empty value reads back as NULL
+    # the empty value and the null both read back as NULL from one leaf
+    assert {r for r in want if r[:2] == ("plain", None)} == {
+        ("plain", None, 0), ("plain", None, 99), ("plain", None, 98)}
+    assert read(arrow_dir) == want
+
+    # a second write replaces only its own leaf, all three of its rows
+    write_partitioned_parquet(table.slice(0, 1).set_column(2, "n", pa.array([7], pa.int64())),
+                              arrow_dir, cols)
+    assert _leaf_dirs(arrow_dir) == _leaf_dirs(spark_dir)
     assert read(arrow_dir) == {r for r in want if r[:2] != ("plain", None)} | {("plain", None, 7)}
     assert not [p for p in tmp_path.rglob(".*") if "staging" in p.name]
 
@@ -343,14 +367,81 @@ def test_silver_reads_only_json_pages(spark, tmp_path):
     assert {r.id for r in spark.read.parquet(out).collect()} == {"1", "2"}
 
 
+def test_mixed_engine_silver_lake_reads_as_one(spark, tmp_path):
+    """A silver lake holding one date landed by a Spark write (the layout of
+    lakes written before silver was collected to Arrow) and one written by
+    transform_silver, from the same bronze pages, reads back as one table:
+    the same leaves, the same rows through Spark and pyarrow.dataset, and
+    the same gold counts. Re-running the Spark-written date replaces its
+    leaves whole, checksum files included."""
+    old_d, new_d = "2024-06-10", "2024-06-11"
+    bronze, silver = tmp_path / "bronze", tmp_path / "silver"
+    for d in (old_d, new_d):
+        _land(bronze, d, [PAGE_1, PAGE_2, PAGE_3])
+    old_out = str(silver / f"ingestion_date={old_d}")
+    raw = json_array_scan(spark, str(bronze / f"ingestion_date={old_d}"),
+                          schema=BREWERY_RAW_SCHEMA, glob_filter="*.json")
+    write_partitioned_parquet(clean_breweries(raw), old_out, SILVER_PARTITION_COLS)
+    rows, new_out = silver_stage.transform_silver(spark, str(bronze), str(silver), new_d)
+    assert rows == 6
+
+    assert _leaf_dirs(old_out) == _leaf_dirs(new_out) == {
+        "country=US/state=CA", "country=US/state=WA", "country=United States/state=Hawai%27i",
+        "country=Isle of Man/state=Douglas"}
+    # the Spark write leaves a checksum file beside each data file, the Arrow write none
+    assert {p.suffix for p in Path(old_out).rglob(".*")} == {".crc"}
+    assert not list(Path(new_out).rglob(".*"))
+
+    cols = SILVER_SCHEMA.fieldNames()
+    spark_rows: dict[str, set] = collections.defaultdict(set)
+    for r in spark.read.parquet(str(silver)).collect():
+        spark_rows[str(r["ingestion_date"])].add(tuple(r[c] for c in cols))
+    arrow_rows: dict[str, set] = collections.defaultdict(set)
+    for r in ds.dataset(str(silver), format="parquet", partitioning="hive").to_table().to_pylist():
+        arrow_rows[str(r["ingestion_date"])].add(tuple(r[c] for c in cols))
+    assert set(spark_rows) == {old_d, new_d}
+    assert spark_rows[old_d] == spark_rows[new_d] and len(spark_rows[new_d]) == rows
+    assert arrow_rows == spark_rows
+
+    warehouse = tmp_path / "warehouse"
+    for d in (old_d, new_d):
+        aggregate_gold(spark, str(silver / f"ingestion_date={d}"), str(tmp_path / "gold"),
+                       str(warehouse), d)
+    counts: dict[str, set] = collections.defaultdict(set)
+    for r in spark.read.parquet(str(warehouse)).collect():
+        counts[str(r.ingestion_date)].add((r.country, r.state, r.brewery_type, r.brewery_count))
+    assert counts[old_d] == counts[new_d]
+    assert sum(c[-1] for c in counts[new_d]) == rows
+
+    assert silver_stage.transform_silver(spark, str(bronze), str(silver), old_d) == (rows, old_out)
+    for leaf in _leaf_dirs(old_out):
+        assert [p.suffix for p in (Path(old_out) / leaf).iterdir()] == [".parquet"]
+    assert {tuple(r[c] for c in cols) for r in spark.read.parquet(old_out).collect()} == \
+        spark_rows[old_d]
+
+
+@pytest.mark.parametrize("interrupt", [KeyboardInterrupt, SystemExit])
+def test_retries_let_an_interrupt_through(interrupt):
+    """An interrupt inside a stage propagates at once; the stage is not run again."""
+    calls = []
+
+    def stage():
+        calls.append(1)
+        raise interrupt()
+
+    with pytest.raises(interrupt):
+        with_retries(retries=2, delay_s=0)(stage)()
+    assert calls == [1]
+
+
 def test_daily_run_job_budget(spark, tmp_path):
     """One date's run takes 5 Spark jobs: silver's dedup map stage and
-    write, Spark's parallel discovery of the 37 ``state=`` directories under
+    collect, Spark's parallel discovery of the 37 ``state=`` directories under
     one ``country=`` (more than its 32-path threshold) when gold reads
     silver, and gold's aggregate map stage and collect. No silver recount,
     no schema inference, no warehouse re-read or whole-history check, no
-    sort-sampling job, no Spark write of gold and no parallel listing of the
-    40 bronze pages."""
+    sort-sampling job, no Spark write of silver or gold and no parallel
+    listing of the 40 bronze pages."""
     pages = [[{"id": f"{p}-{i}", "name": f"N{p}", "brewery_type": "micro", "country": "US",
                "state": f"S{p % 37}"} for i in range(2)] for p in range(40)]
     cfg = Settings(lake_root=str(tmp_path / "lake"),

@@ -21,8 +21,13 @@ class Settings:
     """Lake + API configuration.
 
     Defaults mirror the reference (``app/config.py:5-20``) but point at local
-    filesystem paths so everything runs without MinIO; set ``LAKE_ROOT`` to an
-    ``s3a://bucket`` URI (plus the S3 fields) to target object storage.
+    filesystem paths so everything runs without MinIO. The daily run
+    (``plans.pipeline.run``) writes every layer on the driver, so it takes
+    local paths or ``file:`` URIs only and rejects any other ``LAKE_ROOT`` or
+    ``WAREHOUSE_DIR`` before the first fetch. An ``s3a://bucket`` ``LAKE_ROOT``
+    plus the S3 fields configures Spark's s3a filesystem
+    (:mod:`.session`) for Spark reads and writes of object storage, as in
+    ``tests/test_s3a_smoke.py``.
     """
 
     # storage
@@ -32,7 +37,7 @@ class Settings:
     gold_prefix: str = field(default_factory=lambda: _env("GOLD_PREFIX", "gold-layer"))
     warehouse_dir: str = field(default_factory=lambda: _env("WAREHOUSE_DIR", "/tmp/brewlake/warehouse"))
 
-    # S3/MinIO (only used when lake_root is s3a://; ≈ app/io/duck.py:12-25)
+    # S3/MinIO (Spark's s3a conf when lake_root is s3a://; ≈ app/io/duck.py:12-25)
     s3_endpoint: str = field(default_factory=lambda: _env("S3_ENDPOINT", ""))
     s3_access_key: str = field(default_factory=lambda: _env("S3_ACCESS_KEY", ""))
     s3_secret_key: str = field(default_factory=lambda: _env("S3_SECRET_KEY", ""))

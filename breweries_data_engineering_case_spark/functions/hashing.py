@@ -24,12 +24,8 @@ def portable_hash64(c: Column | str) -> Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
 
 
-def split_assign(
-    c: Column | str,
-    train_pct: int = 80,
-    val_pct: int = 10,
-) -> Column:
-    """Deterministic train/val/test assignment by hash bucket (0-99).
+def split_assign(c: Column | str) -> Column:
+    """Deterministic 80/10/10 train/val/test assignment by hash bucket (0-99).
 
     Hash-based (not random) so the split is stable across runs, engines,
     partitionings, and data order — a row's assignment depends only on its
@@ -37,7 +33,7 @@ def split_assign(
     """
     bucket = portable_hash64(c) % 100
     return (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < 80, F.lit("train"))
+        .when(bucket < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )

@@ -38,8 +38,8 @@ def token_count(c: Column | str) -> Column:
 # SQL-text builders (r14): the Column-API versions of word_hits/lang_id/
 # quality_score cost ~100+ py4j round trips per construction (the argmax
 # fold references each language's 5-regex score three times per level);
-# the same tree as ONE SQL string parses JVM-side in milliseconds. String
-# column names route through these; Column inputs keep the Column path.
+# the same tree as ONE SQL string parses JVM-side in milliseconds, so these
+# three take a column name and build SQL text.
 
 
 def _sql_quote(name: str) -> str:
@@ -53,94 +53,52 @@ def _sql_word_hits(col_sql: str, words: tuple[str, ...]) -> str:
     return f"cast(({terms}) as int)"
 
 
-def word_hits(c: Column | str, words: tuple[str, ...]) -> Column:
+def word_hits(c: str, words: tuple[str, ...]) -> Column:
     """How many of ``words`` occur as whole tokens in the text (0..len)."""
-    if isinstance(c, str):
-        return F.expr(_sql_word_hits(_sql_quote(c), words))
-    t = _col(c)
-    hit = None
-    for w in words:
-        h = F.when(t.rlike(rf"(^|\s){w}(\s|$)"), F.lit(1)).otherwise(F.lit(0))
-        hit = h if hit is None else hit + h
-    return hit.cast("int")
+    return F.expr(_sql_word_hits(_sql_quote(c), words))
 
 
-def lang_id(c: Column | str) -> Column:
+def lang_id(c: str) -> Column:
     """Heuristic language ID: argmax of per-language stopword hits, 'und' when
     nothing matches. Ties break by the fixed language order (en,es,de,fr)."""
-    if isinstance(c, str):
-        col_sql = _sql_quote(c)
-        best_lang, best_score = "'und'", "0"
-        # fixed fold order ⇒ deterministic tie-break: earlier lang wins ties
-        for lang, ws in LANG_MARKERS.items():
-            score = _sql_word_hits(col_sql, ws)
-            take = f"({score}) > ({best_score})"
-            best_lang = f"if({take}, '{lang}', {best_lang})"
-            best_score = f"if({take}, {score}, {best_score})"
-        return F.expr(best_lang)
-    scores = {lang: word_hits(c, ws) for lang, ws in LANG_MARKERS.items()}
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    # fixed iteration order ⇒ deterministic tie-break: earlier lang wins ties
-    for lang, score in scores.items():
-        take = score > best_score
-        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(take, score).otherwise(best_score)
-    return best_lang
+    col_sql = _sql_quote(c)
+    best_lang, best_score = "'und'", "0"
+    # fixed fold order ⇒ deterministic tie-break: earlier lang wins ties
+    for lang, ws in LANG_MARKERS.items():
+        score = _sql_word_hits(col_sql, ws)
+        take = f"({score}) > ({best_score})"
+        best_lang = f"if({take}, '{lang}', {best_lang})"
+        best_score = f"if({take}, {score}, {best_score})"
+    return F.expr(best_lang)
 
 
-def punct_ratio(c: Column | str) -> Column:
-    """Punctuation chars / total chars (0 for empty text)."""
-    t = _col(c)
-    n = F.length(t)
-    p = F.length(F.regexp_replace(t, r"[^.,;:!?'\"()\[\]-]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(p.cast("double") / n.cast("double"))
-
-
-def alpha_ratio(c: Column | str) -> Column:
-    """Alphabetic chars / total chars (0 for empty text)."""
-    t = _col(c)
-    n = F.length(t)
-    a = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(a.cast("double") / n.cast("double"))
-
-
-def quality_score(c: Column | str, stop_words: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    """Composite [0,1] quality score: length signal + alpha ratio + stopword
-    presence − punctuation excess. Deterministic per-row double arithmetic."""
-    if isinstance(c, str):
-        t = _sql_quote(c)
-        n_tok = (
-            f"cast(case when trim({t}) = '' then 0 "
-            f"else size(split(trim({t}), '\\\\s+')) end as bigint)"
-        )
-        len_sig = f"least(cast({n_tok} as double) / 100.0D, 1.0D)"
-        alpha = (
-            f"case when length({t}) = 0 then 0.0D else "
-            f"cast(length(regexp_replace({t}, '[^A-Za-z]', '')) as double)"
-            f" / cast(length({t}) as double) end"
-        )
-        punct = (
-            f"case when length({t}) = 0 then 0.0D else "
-            f"cast(length(regexp_replace({t}, '[^.,;:!?\\'\"()\\\\[\\\\]-]', ''))"
-            f" as double) / cast(length({t}) as double) end"
-        )
-        stop_sig = (
-            f"least(cast({_sql_word_hits(t, stop_words)} as double) / 3.0D, 1.0D)"
-        )
-        return F.expr(
-            f"greatest(0.0D, least(1.0D, 0.4D * ({len_sig}) + 0.4D * ({alpha})"
-            f" + 0.2D * ({stop_sig}) - 0.2D * ({punct})))"
-        )
-    t = _col(c)
-    n_tokens = token_count(t)
-    len_sig = F.least(n_tokens.cast("double") / F.lit(100.0), F.lit(1.0))
-    stop_sig = F.least(word_hits(t, stop_words).cast("double") / F.lit(3.0), F.lit(1.0))
-    score = (
-        F.lit(0.4) * len_sig + F.lit(0.4) * alpha_ratio(t) + F.lit(0.2) * stop_sig
-        - F.lit(0.2) * punct_ratio(t)
+def quality_score(c: str) -> Column:
+    """Composite [0,1] quality score: length signal + alpha ratio + English
+    stopword presence − punctuation excess. Deterministic per-row double
+    arithmetic."""
+    t = _sql_quote(c)
+    n_tok = (
+        f"cast(case when trim({t}) = '' then 0 "
+        f"else size(split(trim({t}), '\\\\s+')) end as bigint)"
     )
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
+    len_sig = f"least(cast({n_tok} as double) / 100.0D, 1.0D)"
+    alpha = (
+        f"case when length({t}) = 0 then 0.0D else "
+        f"cast(length(regexp_replace({t}, '[^A-Za-z]', '')) as double)"
+        f" / cast(length({t}) as double) end"
+    )
+    punct = (
+        f"case when length({t}) = 0 then 0.0D else "
+        f"cast(length(regexp_replace({t}, '[^.,;:!?\\'\"()\\\\[\\\\]-]', ''))"
+        f" as double) / cast(length({t}) as double) end"
+    )
+    stop_sig = (
+        f"least(cast({_sql_word_hits(t, LANG_MARKERS['en'])} as double) / 3.0D, 1.0D)"
+    )
+    return F.expr(
+        f"greatest(0.0D, least(1.0D, 0.4D * ({len_sig}) + 0.4D * ({alpha})"
+        f" + 0.2D * ({stop_sig}) - 0.2D * ({punct})))"
+    )
 
 
 def normalize_text(c: Column | str) -> Column:

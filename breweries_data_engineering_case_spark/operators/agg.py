@@ -32,16 +32,13 @@ def grouped_count(
     df: DataFrame,
     dims: Sequence[str],
     count_name: str = "brewery_count",
-    blank_fill: bool = True,
 ) -> DataFrame:
-    """``COUNT(*)`` grouped by ``dims``; NULL dims optionally coalesced to ''.
+    """``COUNT(*)`` grouped by ``dims``; NULL dims coalesced to ''.
 
     ≈ app/tasks/gold.py:76-85 (COALESCE at :78-80, COUNT(*) at :81,
     GROUP BY ALL at :83 — expanded explicitly; Spark has no GROUP BY ALL).
     """
-    sel = [
-        (F.coalesce(F.col(d), F.lit("")) if blank_fill else F.col(d)).alias(d) for d in dims
-    ]
+    sel = [F.coalesce(F.col(d), F.lit("")).alias(d) for d in dims]
     return df.select(*sel).groupBy(*dims).agg(F.count(F.lit(1)).alias(count_name))
 
 

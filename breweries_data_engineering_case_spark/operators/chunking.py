@@ -20,13 +20,10 @@ from .fuzzy_dedup import tokens
 
 
 def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 64,
-    overlap: int = 16,
+    df: DataFrame, chunk_tokens: int = 64, overlap: int = 16
 ) -> DataFrame:
-    """(doc_id, chunk_idx, chunk_text, n_tokens) — overlapping token windows.
+    """(doc_id, chunk_idx, chunk_text, n_tokens) — overlapping token windows
+    of each (doc_id, text) row.
 
     Window i covers tokens [i*step, i*step + chunk_tokens) with
     step = chunk_tokens - overlap; the last window may be short. Every
@@ -35,7 +32,7 @@ def chunk_documents(
     """
     assert overlap < chunk_tokens, "overlap must be smaller than chunk_tokens"
     step = chunk_tokens - overlap
-    base = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks"))
+    base = df.select("doc_id", tokens("text").alias("__toks"))
     n = F.size("__toks")
     # same double-ceil formula as the DuckDB oracle so chunk counts agree
     k = F.greatest(

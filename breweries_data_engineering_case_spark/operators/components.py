@@ -56,17 +56,11 @@ from pyspark.sql import functions as F
 # uses this to assert the bucketed probe never re-exchanges.
 PLAN_CAPTURE: list | None = None
 
-# Test hook: when not None, overrides every caller's ``local_threshold`` —
-# tests force 0 to exercise the distributed loop on graphs that would
-# otherwise take the small-graph fast path (the plan assertions need the
-# loop to actually run).
-LOCAL_THRESHOLD_OVERRIDE: int | None = None
-
-# Convergence-check cadence: the flag action runs on rounds where
-# it % _CHECK_CADENCE == _CHECK_CADENCE - 1 (round 1 never needs one —
-# see the loop comment). 2 halves the driver round-trips for at most one
-# wasted lazy round; module-level so the A/B harness can flip it.
-_CHECK_CADENCE = 2
+#: A symmetrized edge list of at most this many rows is solved on the
+#: driver by union-find instead of the distributed loop (see
+#: ``connected_components``). Tests lower it (monkeypatch) to run the loop
+#: on small graphs.
+LOCAL_THRESHOLD = 8192
 
 
 def _staged_sym(sym: DataFrame, stage_key: str) -> DataFrame:
@@ -142,7 +136,6 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 10,
     stage_key: str | None = None,
-    local_threshold: int = 0,
 ) -> DataFrame:
     """(id, component) — component = min vertex id reachable via edges.
 
@@ -157,22 +150,20 @@ def connected_components(
     iterative staging pattern. When None the edge list is lazily
     checkpointed per-run.
 
-    ``local_threshold``: opt-in small-graph fast path (round 12, VERDICT
-    r11 #2). The same adaptivity Spark applies to joins via
-    ``autoBroadcastJoinThreshold``: when the symmetrized edge list fits
-    under the threshold (probed with a short-circuiting
-    ``limit(n+1).collect()`` — bounded driver memory by construction, one
-    cheap job that scans only the first partitions), the component solve
-    is a driver-side union-find instead of a multi-round distributed
-    loop. On a tiny graph (entity resolution: |distinct names| blocks,
-    256 vertices at sf0.1) the loop's cost is pure per-round job/planning
-    overhead — the fast path removed 80%+ of the operator's wall time
-    there. Graphs over the threshold take the distributed loop unchanged,
-    which is the only viable path at 100 TB where near-dup edge lists run
-    to billions of rows; the threshold is the knob that keeps both
-    regimes honest, exactly like a broadcast-join threshold. Default 0
-    (off) so existing callers and the unit tests keep exercising the
-    distributed loop.
+    Small-graph fast path (round 12, VERDICT r11 #2). The same
+    adaptivity Spark applies to joins via ``autoBroadcastJoinThreshold``:
+    when the symmetrized edge list has at most ``LOCAL_THRESHOLD`` rows
+    (counted from a staged table's parquet footers, else probed with a
+    short-circuiting ``limit(n+1).collect()`` — bounded driver memory by
+    construction, one cheap job that scans only the first partitions),
+    the component solve is a driver-side union-find instead of a
+    multi-round distributed loop. On a tiny graph (entity resolution:
+    |distinct names| blocks, 256 vertices at sf0.1) the loop's cost is
+    pure per-round job/planning overhead — the fast path removed 80%+ of
+    the operator's wall time there. Larger graphs take the distributed
+    loop, which is the only viable path at 100 TB where near-dup edge
+    lists run to billions of rows. The solver is chosen from the
+    observed edge count alone.
     """
     ids = vertices.select(F.col(id_col).alias("__vid"))
     sym = (
@@ -189,50 +180,46 @@ def connected_components(
     else:
         sym = sym.localCheckpoint(eager=False)
 
-    if LOCAL_THRESHOLD_OVERRIDE is not None:
-        local_threshold = LOCAL_THRESHOLD_OVERRIDE
-    if local_threshold > 0:
-        # Fast-path size probe (r15, VERDICT r14 #4): for a STAGED edge
-        # list the exact count comes from parquet footers — no job at
-        # all. Over the threshold that saves the entire probe; under it,
-        # ONE plain collect job replaces the incremental CollectLimit
-        # scan (limit n+1 on a sparse 32-bucket table runs up to 4
-        # scale-up jobs to find out there is no 8193rd row — measured
-        # ~0.4 s of pure job scheduling per construction on the portable
-        # pipeline). The decision boundary is identical: footer count ==
-        # scan row count for a table staged once per session, and the
-        # old probe's len(head) <= threshold ⟺ count <= threshold.
-        # Un-staged (localCheckpoint) callers keep the limit probe.
-        n_staged = _staged_row_count(sym)
-        if n_staged is not None and n_staged > local_threshold:
-            head = None  # distributed loop; probe job skipped entirely
-        elif n_staged is not None:
-            head = sym.collect()
-        else:
-            head = sym.limit(local_threshold + 1).collect()
-        if head is not None and len(head) <= local_threshold:
-            comp = _union_find([(r["s"], r["d"]) for r in head])
-            from pyspark.sql import types as T
+    # Fast-path size probe (r15, VERDICT r14 #4): for a STAGED edge list
+    # the exact count comes from parquet footers — no job at all. Over the
+    # threshold that saves the entire probe; under it, ONE plain collect
+    # job replaces the incremental CollectLimit scan (limit n+1 on a
+    # sparse 32-bucket table runs up to 4 scale-up jobs to find out there
+    # is no 8193rd row — measured ~0.4 s of pure job scheduling per
+    # construction on the portable pipeline). The decision boundary is
+    # identical: footer count == scan row count for a table staged once
+    # per session, and the probe's len(head) <= threshold ⟺ count <=
+    # threshold. Un-staged (localCheckpoint) callers keep the limit probe.
+    n_staged = _staged_row_count(sym)
+    if n_staged is not None and n_staged > LOCAL_THRESHOLD:
+        head = None  # distributed loop; probe job skipped entirely
+    elif n_staged is not None:
+        head = sym.collect()
+    else:
+        head = sym.limit(LOCAL_THRESHOLD + 1).collect()
+    if head is not None and len(head) <= LOCAL_THRESHOLD:
+        comp = _union_find([(r["s"], r["d"]) for r in head])
+        from pyspark.sql import types as T
 
-            id_type = sym.schema["d"].dataType
-            labels = sym.sparkSession.createDataFrame(
-                list(comp.items()),
-                T.StructType(
-                    [
-                        T.StructField("v", id_type),
-                        T.StructField("component", id_type),
-                    ]
-                ),
-            )
-            incident = labels.select("v")
-            singletons = ids.join(
-                incident, ids["__vid"] == incident["v"], "left_anti"
-            ).select(
-                F.col("__vid").alias(id_col), F.col("__vid").alias("component")
-            )
-            return labels.select(
-                F.col("v").alias(id_col), "component"
-            ).unionByName(singletons)
+        id_type = sym.schema["d"].dataType
+        labels = sym.sparkSession.createDataFrame(
+            list(comp.items()),
+            T.StructType(
+                [
+                    T.StructField("v", id_type),
+                    T.StructField("component", id_type),
+                ]
+            ),
+        )
+        incident = labels.select("v")
+        singletons = ids.join(
+            incident, ids["__vid"] == incident["v"], "left_anti"
+        ).select(
+            F.col("__vid").alias(id_col), F.col("__vid").alias("component")
+        )
+        return labels.select(
+            F.col("v").alias(id_col), "component"
+        ).unionByName(singletons)
 
     # Only vertices that touch an edge iterate; with sym bucketed on d the
     # distinct is exchange-free. (sym is symmetric, so the d-side set == the
@@ -285,7 +272,7 @@ def connected_components(
         # at most one wasted lazy round — the frames BETWEEN checks stay
         # lazily checkpointed (plans shallow), and the next flag action
         # materializes both rounds in one job with fewer barriers.
-        if it % _CHECK_CADENCE != _CHECK_CADENCE - 1:
+        if it % 2 == 0:
             inconsistent = 1
         else:
             inconsistent = joined.agg(_inconsistent_flag()).collect()[0]["bad"]
@@ -373,28 +360,13 @@ def connected_components(
     )
 
 
-def keep_one_per_cluster(
-    docs: DataFrame,
-    dup_pairs: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    stage_key: str | None = None,
-    local_threshold: int = 0,
-) -> DataFrame:
-    """Dedup decision table: (id, component, is_kept) — the minimum id of
-    each near-dup cluster survives; singletons keep themselves."""
-    comps = connected_components(
-        docs.select(id_col),
-        dup_pairs,
-        id_col=id_col,
-        src_col=src_col,
-        dst_col=dst_col,
-        stage_key=stage_key,
-        local_threshold=local_threshold,
-    )
+def keep_one_per_cluster(docs: DataFrame, dup_pairs: DataFrame) -> DataFrame:
+    """Dedup decision table: (doc_id, component, is_kept) — the minimum
+    doc_id of each near-dup cluster of (id_a, id_b) pairs survives;
+    singletons keep themselves."""
+    comps = connected_components(docs.select("doc_id"), dup_pairs, id_col="doc_id")
     return comps.select(
-        id_col,
+        "doc_id",
         "component",
-        (F.col(id_col) == F.col("component")).alias("is_kept"),
+        (F.col("doc_id") == F.col("component")).alias("is_kept"),
     )

@@ -37,17 +37,15 @@ def dedup_rownum(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column | str],
-    keep: int = 1,
 ) -> DataFrame:
     """ROW_NUMBER-based dedup with an explicit, deterministic tie-break.
 
     Faithful shape of app/tasks/silver.py:37-41 (QUALIFY = filter-after-window)
-    but with a real ordering so the survivor is reproducible. ``keep`` > 1
-    generalizes to per-key top-k.
+    but with a real ordering so the survivor is reproducible.
     """
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
         *[F.col(c) if isinstance(c, str) else c for c in order_by]
     )
     rn = F.row_number().over(w)
-    return df.withColumn("__rn", rn).filter(F.col("__rn") <= keep).drop("__rn")
+    return df.withColumn("__rn", rn).filter(F.col("__rn") <= 1).drop("__rn")
 

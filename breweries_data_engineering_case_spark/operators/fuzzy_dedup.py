@@ -35,9 +35,9 @@ from ..caching import cached
 from pyspark.sql import functions as F
 
 
-def tokens(c: Column | str, pattern: str = r"\s+") -> Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.split(F.trim(col), pattern)
+def tokens(c: str) -> Column:
+    """Whitespace tokens of the trimmed text column ``c``."""
+    return F.split(F.trim(F.col(c)), r"\s+")
 
 
 # ---------------------------------------------------------------------------
@@ -47,9 +47,7 @@ def tokens(c: Column | str, pattern: str = r"\s+") -> Column:
 # pipeline); the same tree written as ONE SQL string parses JVM-side in
 # ~10 ms. Results are bit-identical (verified per operator against the
 # Column builds before the swap). The helpers below produce SQL TEXT; the
-# public operators route string column names through F.expr(...) and keep
-# the Column-API path for Column inputs (no call site in the repo passes
-# one, but the signature stays honest).
+# public operators take a column name and wrap the text in F.expr(...).
 # ---------------------------------------------------------------------------
 
 
@@ -84,30 +82,16 @@ def _sql_word_shingles(col: str, n: int) -> str:
     return _sql_bind(toks, "w", body)
 
 
-def word_shingles(c: Column | str, n: int = 3) -> Column:
-    """Distinct n-word shingles of the text (n=1 → token set).
+def word_shingles(c: str, n: int = 3) -> Column:
+    """Distinct n-word shingles of the text column ``c`` (n=1 → token set).
 
     Built by zipping n shifted copies of the token array (``zip_with`` over
     ``slice``), so the token-split expression is referenced a CONSTANT number
     of times. Any per-element lambda that touches the tokens (via
     ``element_at`` or per-index ``slice``) re-evaluates the split for every
     element — O(len²) per document, measured 2-8× slower at 5k docs.
-
-    String column names take the SQL-text fast path (one py4j call)."""
-    if isinstance(c, str):
-        return F.expr(_sql_word_shingles(c, n))
-    toks = tokens(c)
-    if n == 1:
-        return F.array_distinct(toks)
-    sz = F.size(toks)
-    acc = toks
-    for k in range(1, n):
-        shifted = F.slice(toks, k + 1, F.greatest(sz - k, F.lit(0)))
-        # zip_with pads the shorter side with NULL; concat_ws skips NULLs, so
-        # the tail holds partial shingles — sliced off below
-        acc = F.zip_with(acc, shifted, lambda x, y: F.concat_ws(" ", x, y))
-    valid = F.greatest(sz - (n - 1), F.lit(0))
-    return F.array_distinct(F.slice(acc, 1, valid))
+    One SQL-text parse (one py4j call)."""
+    return F.expr(_sql_word_shingles(c, n))
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -123,10 +107,10 @@ def jaccard(a: Column, b: Column) -> Column:
 _MH_P = (1 << 31) - 1
 
 
-def _mh_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
+def _mh_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     return [(rng.randrange(1, _MH_P), rng.randrange(0, _MH_P)) for _ in range(num_hashes)]
 
 
@@ -135,7 +119,7 @@ def _mh_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
 _MH_B = 1_000_003
 
 
-def shingle_hashes(c: Column | str, n: int = 3, portable: bool = False) -> Column:
+def shingle_hashes(c: str, n: int = 3, portable: bool = False) -> Column:
     """Distinct n-gram shingle hashes WITHOUT materializing shingle strings.
 
     Each token is hashed once; an n-gram's hash is the polynomial
@@ -179,36 +163,14 @@ def _sql_shingle_hash_sequence(col: str, n: int, portable: bool) -> str:
     return _sql_bind(th, "th", body)
 
 
-def shingle_hash_sequence(
-    c: Column | str, n: int = 3, portable: bool = False
-) -> Column:
+def shingle_hash_sequence(c: str, n: int = 3, portable: bool = False) -> Column:
     """POSITIONAL n-gram hash sequence — the same polynomial roll as
     ``shingle_hashes`` but WITHOUT the final distinct, so element i is the
     hash of the n-gram starting at token i (duplicates preserved). This is
     what position-sensitive algorithms need (winnowing's window-min runs
     over the positional sequence; set-based MinHash wants the distinct
-    form). String column names take the SQL-text fast path."""
-    if isinstance(c, str):
-        return F.expr(_sql_shingle_hash_sequence(c, n, portable))
-    if portable:
-        from ..functions.hashing import portable_hash64
-
-        base = lambda t: F.pmod(portable_hash64(t), F.lit(_MH_P))  # noqa: E731
-    else:
-        base = lambda t: F.pmod(F.xxhash64(t), F.lit(_MH_P))  # noqa: E731
-    th = F.transform(tokens(c), base)
-    if n == 1:
-        return th
-    sz = F.size(th)
-    acc = th
-    for k in range(1, n):
-        shifted = F.slice(th, k + 1, F.greatest(sz - k, F.lit(0)))
-        # zip_with pads the shorter side with NULL → partial tail, sliced off
-        acc = F.zip_with(
-            acc, shifted, lambda x, y: F.pmod(x * F.lit(_MH_B) + y, F.lit(_MH_P))
-        )
-    valid = F.greatest(sz - (n - 1), F.lit(0))
-    return F.slice(acc, 1, valid)
+    form). One SQL-text parse of the text column ``c``."""
+    return F.expr(_sql_shingle_hash_sequence(c, n, portable))
 
 
 #: (SparkContext identity, num_hashes) → the k parsed min-aggregate Columns.
@@ -260,23 +222,21 @@ def _minhash_cols(df: DataFrame, id_out: str, num_hashes: int) -> DataFrame:
 
 def minhash_signatures(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 64,
     shingle_n: int = 3,
     portable: bool = False,
 ) -> DataFrame:
-    """(id, sig: array<bigint>) — sig[i] = min over shingles of the i-th
-    universal hash of the shingle. Docs with no shingles produce no row
-    (explode of an empty array)."""
+    """(id, sig: array<bigint>) over (doc_id, text) — sig[i] = min over
+    shingles of the i-th universal hash of the shingle. Docs with no
+    shingles produce no row (explode of an empty array)."""
     from ..sources.readers import spread
 
     # The per-token hash roll is CPU-bound; a single-file scan upstream
     # (one row group = one task) would run it on one core regardless of
     # cluster width. spread() is a no-op when scan parallelism is adequate.
-    based = spread(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    based = spread(df.select(F.col("doc_id").alias("id"), F.col("text"))).select(
         "id",
-        shingle_hashes(text_col, shingle_n, portable=portable).alias("__h"),
+        shingle_hashes("text", shingle_n, portable=portable).alias("__h"),
     )
     mins = _minhash_cols(based, "id", num_hashes)
     return mins.select(
@@ -286,14 +246,13 @@ def minhash_signatures(
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 48,
     bands: int = 12,
     shingle_n: int = 3,
     portable: bool = False,
 ) -> DataFrame:
-    """Candidate pair stage of MinHash-LSH (id_a < id_b, deduped, persisted).
+    """Candidate pair stage of MinHash-LSH over (doc_id, text) (id_a < id_b,
+    deduped, persisted).
 
     The banded-signature self-join WITHOUT the exact-Jaccard verify —
     exposed separately so the candidate set itself can be evaluated
@@ -305,9 +264,9 @@ def minhash_lsh_candidates(
     rows_per_band = num_hashes // bands
     # fan a single-task upstream scan out before the CPU-bound hash roll
     # (no-op when scan parallelism is adequate — see readers.spread)
-    based = spread(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    based = spread(df.select(F.col("doc_id").alias("id"), F.col("text"))).select(
         "id",
-        shingle_hashes(text_col, shingle_n, portable=portable).alias("__h"),
+        shingle_hashes("text", shingle_n, portable=portable).alias("__h"),
     )
     with_sig = _minhash_cols(based, "id", num_hashes)
 
@@ -372,15 +331,14 @@ def minhash_lsh_candidates(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 48,
     bands: int = 12,
     shingle_n: int = 3,
     threshold: float = 0.7,
     portable: bool = False,
 ) -> DataFrame:
-    """Verified near-dup pairs (id_a < id_b, jaccard >= threshold).
+    """Verified near-dup pairs over (doc_id, text) (id_a < id_b,
+    jaccard >= threshold).
 
     bands×rows = num_hashes; candidate pairs come from any band collision,
     then exact shingle-set Jaccard verifies (no false positives; false
@@ -396,11 +354,9 @@ def minhash_lsh_pairs(
     DuckDB-replicable (registry ``doc_minhash_portable_lsh_pairs``), which
     oracle-checks the banded-join logic the production path shares.
     """
-    sh = word_shingles(text_col, shingle_n)
+    sh = word_shingles("text", shingle_n)
     cand = minhash_lsh_candidates(
         df,
-        id_col=id_col,
-        text_col=text_col,
         num_hashes=num_hashes,
         bands=bands,
         shingle_n=shingle_n,
@@ -414,8 +370,8 @@ def minhash_lsh_pairs(
         .distinct()
     )
     sub = (
-        df.join(F.broadcast(cand_ids), F.col(id_col) == cand_ids["id"], "left_semi")
-        .select(F.col(id_col).alias("id"), sh.alias("shingles"))
+        df.join(F.broadcast(cand_ids), F.col("doc_id") == cand_ids["id"], "left_semi")
+        .select(F.col("doc_id").alias("id"), sh.alias("shingles"))
     )
     sa = sub.select(F.col("id").alias("id_a"), F.col("shingles").alias("__sa"))
     sb = sub.select(F.col("id").alias("id_b"), F.col("shingles").alias("__sb"))
@@ -427,13 +383,9 @@ def minhash_lsh_pairs(
     return verified.filter(F.col("jaccard") >= threshold)
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-) -> DataFrame:
-    """(id, simhash) — per-bit sign votes over md5-based token hashes,
+def simhash(df: DataFrame, bits: int = 32) -> DataFrame:
+    """(id, simhash) over (doc_id, text) — per-bit sign votes over md5-based
+    token hashes,
     packed into a BIGINT. Pure map-side expressions (fold over the token
     hash array per bit); near-identical documents land on equal or
     near-equal values (Hamming distance ≈ edit distance)."""
@@ -447,10 +399,10 @@ def simhash(
 
     # md5-per-token is CPU-bound: fan a single-task upstream scan out to
     # the cluster's cores first (no-op when parallelism is adequate).
-    hashed = spread(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    hashed = spread(df.select(F.col("doc_id").alias("id"), F.col("text"))).select(
         "id",
         F.expr(
-            f"transform({_sql_tokens(_sql_quote(text_col))}, "
+            f"transform({_sql_tokens(_sql_quote('text'))}, "
             "t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
         ).alias("__hashes"),
     )
@@ -470,14 +422,12 @@ def simhash(
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     bits: int = 32,
     bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) — pairs whose SimHash Hamming distance is
-    ≤ ``max_hamming``, via banded LSH + exact verify.
+    """(id_a, id_b, hamming) — pairs of (doc_id, text) rows whose SimHash
+    Hamming distance is ≤ ``max_hamming``, via banded LSH + exact verify.
 
     Pigeonhole guarantee: ``max_hamming < bands`` means any qualifying pair
     differs in fewer bits than there are bands, so at least one band is
@@ -495,7 +445,7 @@ def simhash_near_dup_pairs(
     assert max_hamming < bands, "pigeonhole guarantee requires max_hamming < bands"
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-    sh = simhash(df, id_col, text_col, bits)
+    sh = simhash(df, bits)
     banded = sh.select(
         "id",
         "simhash",
@@ -540,18 +490,17 @@ def simhash_near_dup_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 1,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard (id_a < id_b, jaccard >= t).
+    """Exact all-pairs n-gram Jaccard over (doc_id, text) (id_a < id_b,
+    jaccard >= t).
 
     O(N²) — for bounded candidate sets or small corpora; the scale path is
     minhash_lsh_pairs. Set ops (array_intersect/union) are distinct-element
     semantics in both Spark and DuckDB."""
-    sh = word_shingles(text_col, shingle_n)
-    base = df.select(F.col(id_col).alias("id"), sh.alias("sh"))
+    sh = word_shingles("text", shingle_n)
+    base = df.select(F.col("doc_id").alias("id"), sh.alias("sh"))
     a = base.alias("a")
     b = base.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
@@ -564,13 +513,11 @@ def ngram_jaccard_pairs(
 
 def minhash_band_exprs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """(id_col, band_idx, band_hash) via PURE MAP expressions — no explode+
+    """(doc_id, band_idx, band_hash) of the text's 3-word shingles via PURE
+    MAP expressions — no explode+
     groupBy signature aggregation, so it works unchanged on a STREAMING
     frame (stateless stage ahead of a stateful band-bucket operator) as
     well as in batch. Portable base (md5 token roll + polynomial band
@@ -582,15 +529,15 @@ def minhash_band_exprs(
     parameters, so default-arg capture breaks higher-order binding."""
     rpb = num_hashes // bands
     based = df.select(
-        F.col(id_col),
-        shingle_hashes(text_col, shingle_n, portable=True).alias("__sh"),
+        F.col("doc_id"),
+        shingle_hashes("text", 3, portable=True).alias("__sh"),
     ).filter(F.size("__sh") > 0)
 
     # SQL-text per-hash mins and band rolls (r14): the Column-API builds
     # (16 transform lambdas + 4 chained band rolls) cost ~0.5 s of py4j per
     # construction; each F.expr is one JVM-side parse. `%` == pmod: h ≥ 0.
     sig = based.select(
-        id_col,
+        "doc_id",
         *[
             F.expr(
                 f"array_min(transform(__sh, h -> pmod(h * {a}L + {b}L, {_MH_P})))"
@@ -613,6 +560,6 @@ def minhash_band_exprs(
         )
         + ")"
     )
-    return sig.select(id_col, F.explode(band_arr).alias("e")).select(
-        id_col, "e.band_idx", "e.band_hash"
+    return sig.select("doc_id", F.explode(band_arr).alias("e")).select(
+        "doc_id", "e.band_idx", "e.band_hash"
     )

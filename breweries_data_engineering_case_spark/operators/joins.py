@@ -22,22 +22,23 @@ from pyspark.sql import functions as F
 
 
 def broadcast_dim_join(
-    fact: DataFrame, dim: DataFrame, on: Sequence[str] | object, how: str = "inner"
+    fact: DataFrame, dim: DataFrame, on: Sequence[str] | object
 ) -> DataFrame:
-    """Equi-join where the dimension side is broadcast (no fact shuffle)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    """Inner equi-join where the dimension side is broadcast (no fact shuffle)."""
+    return fact.join(F.broadcast(dim), on=on)
 
 
 def shuffle_join(
-    left: DataFrame, right: DataFrame, on: Sequence[str] | object, how: str = "inner"
+    left: DataFrame, right: DataFrame, on: Sequence[str] | object
 ) -> DataFrame:
-    """Large-large equi-join; Catalyst/AQE choose sort-merge vs shuffled-hash.
+    """Large-large inner equi-join; Catalyst/AQE choose sort-merge vs
+    shuffled-hash.
 
     Both inputs shuffle on the join key — co-partition upstream (bucketing /
     repartition on the key) to eliminate one side's shuffle when the same key
     is reused across stages.
     """
-    return left.join(right, on=on, how=how)
+    return left.join(right, on=on)
 
 
 def salted_join(
@@ -45,9 +46,9 @@ def salted_join(
     right_small_but_skewed: DataFrame,
     key: str,
     salt_buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: salt the big probe side, explode the build side.
+    """Skew-resistant inner equi-join: salt the big probe side, explode the
+    build side.
 
     Use when one key dominates and AQE skew-splitting is unavailable or
     insufficient. Probe rows get ``hash(row) % salt_buckets``; build rows are
@@ -58,7 +59,7 @@ def salted_join(
     build = right_small_but_skewed.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )
-    out = probe.join(build, on=[key, "__salt"], how=how)
+    out = probe.join(build, on=[key, "__salt"])
     return out.drop("__salt")
 
 
@@ -66,18 +67,15 @@ def hot_key_salted_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
+    hot_keys: DataFrame,
     salt_buckets: int = 8,
-    hot_keys: DataFrame | None = None,
-    hot_threshold: int | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Partial (hot-key-only) salting: salt ONLY the keys that are actually
-    skewed, leave the long tail un-replicated.
+    """Inner equi-join with partial (hot-key-only) salting: salt ONLY the
+    keys that are actually skewed, leave the long tail un-replicated.
 
     Full salting (``salted_join``) replicates the entire build side
     ``salt_buckets``× — at 100 TB that multiplies the build shuffle by N to
-    fix a handful of keys. Here the hot-key set (provided as ``hot_keys``,
-    or derived from probe-side counts ≥ ``hot_threshold``) is broadcast —
+    fix a handful of keys. Here the hot-key set ``hot_keys`` is broadcast —
     heavy hitters are few by definition — and:
 
     - probe rows of hot keys get ``hash % salt_buckets``, cold rows salt 0;
@@ -90,15 +88,6 @@ def hot_key_salted_join(
     row. At scale, derive ``hot_keys`` from a sample or sketch instead of
     an exact count — any superset of the truly-hot keys is correct.
     """
-    if hot_keys is None:
-        if hot_threshold is None:
-            raise ValueError("pass hot_keys or hot_threshold")
-        hot_keys = (
-            probe.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") >= hot_threshold)
-            .select(key)
-        )
     hot = hot_keys.select(key).withColumn("__hot", F.lit(True))
     p = probe.join(F.broadcast(hot), key, "left").withColumn(
         "__salt",
@@ -116,4 +105,4 @@ def hot_key_salted_join(
             ).otherwise(F.array(F.lit(0)))
         ),
     ).drop("__hot")
-    return p.join(b, on=[key, "__salt"], how=how).drop("__salt")
+    return p.join(b, on=[key, "__salt"]).drop("__salt")

@@ -12,7 +12,7 @@ itself is ONE full-outer join on the key:
 
 Scale shape: join on the table key, so bucketing/partitioning both sides by
 that key makes the merge shuffle-free at 100 TB (pay the shuffle once at
-write time via ``write_bucketed_table``). Update images win by PRESENCE, not
+write time via ``sources.writers.stage_bucketed_table``). Update images win by PRESENCE, not
 per-column COALESCE — a legitimate NULL in the new image must overwrite, so
 the decision column is the update's key, never the payload.
 """

@@ -22,7 +22,7 @@ import hashlib
 import importlib.util
 import io
 import wave
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
@@ -169,12 +169,7 @@ def real_decode(payload: bytes, media_type: str) -> dict[str, Any]:
     )
 
 
-def extract_features(
-    assets: DataFrame,
-    decode_fn: Callable[[bytes, str], dict[str, Any]] | None = None,
-    require_real_codec: bool = False,
-    batch_size_hint: int = 1024,
-) -> DataFrame:
+def extract_features(assets: DataFrame, require_real_codec: bool = False) -> DataFrame:
     """Decode + feature-extract each asset via Arrow-batched mapInPandas.
 
     One map pass, no shuffle; each task processes pandas batches of
@@ -187,7 +182,7 @@ def extract_features(
     PIL formats when installed); unsupported formats then fail the task with
     ``NotImplementedError`` rather than silently producing fake features.
     """
-    decode = decode_fn or (real_decode if require_real_codec else fake_decode)
+    decode = real_decode if require_real_codec else fake_decode
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -412,13 +407,14 @@ FINGERPRINT_SCHEMA = StructType(
 )
 
 
-def audio_peak_fingerprint(samples: "np.ndarray", frame: int = 1024, n_frames: int = 6) -> int:
-    """Spectral fingerprint: dominant FFT bin (DC excluded) per frame,
-    rolled into one integer (6 frames x 10-bit bins stay under 2^60,
+def audio_peak_fingerprint(samples: "np.ndarray") -> int:
+    """Spectral fingerprint: dominant FFT bin (DC excluded) per 1024-sample
+    frame, rolled into one integer (6 frames x 10-bit bins stay under 2^60,
     inside int64). Invariant to amplitude scaling and (for a steady tone)
     phase; pure argmax over |rfft| — deterministic."""
+    frame = 1024
     fp = 0
-    for f in range(n_frames):
+    for f in range(6):
         seg = samples[f * frame : (f + 1) * frame]
         if len(seg) < frame:
             break

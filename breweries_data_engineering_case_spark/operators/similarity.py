@@ -8,10 +8,10 @@ Two paths, as a production ANN stack needs both:
   is the *baseline*: cost is O(|corpus| · |queries|) but perfectly
   data-parallel with zero shuffle on the corpus until the (tiny) top-k
   aggregation.
-- **LSH-bucketed** (`cosine_topk_lsh`): the scale path. Random-hyperplane
-  signatures bucket the corpus (one cheap map pass, no shuffle); queries
-  only score vectors sharing a bucket, turning O(N·Q) into
-  O(N·Q / 2^bits · bands) with tunable recall. Approximate: recall < 1.
+- **LSH-bucketed** (`cosine_topk_lsh_portable`): the scale path.
+  Integer-hyperplane signatures bucket the corpus (one cheap map pass, no
+  shuffle); queries only score vectors sharing a bucket, turning O(N·Q)
+  into O(N·Q / 2^bits · bands). Approximate: recall < 1.
 """
 
 from __future__ import annotations
@@ -94,37 +94,32 @@ def int_hyperplane_bits(qvec_col, planes: list[list[int]]):
 
 
 def cosine_topk_lsh_portable(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bits_per_band: int = 4,
-    n_bands: int = 8,
-    tag: str = "annlsh",
-    exclude_self: bool = True,
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
-    """``cosine_topk_lsh`` with ENGINE-PORTABLE bucketing: integer
-    fixed-point projections onto md5-seeded integer hyperplanes instead of
-    float gaussian ones. Every bucket assignment (and therefore the exact
-    candidate set, scores, and ranks) is replicable in plain SQL — the
-    registry query's DuckDB oracle regenerates the planes from the tag and
-    replays the whole pipeline, making this approximate-ANN path fully
-    value-checkable, not just row-counted. Same join shape as the
-    non-portable twin: corpus signatures in one map pass, candidates from
-    a broadcast equi-join on (band_idx, band_sig), exact cosine re-score."""
-    total_bits = bits_per_band * n_bands
-    planes = portable_planes_int(dim, total_bits, tag)
+    """Approximate cosine top-k over (vec_id, embedding) via LSH with
+    ENGINE-PORTABLE bucketing: int64 fixed-point projections of the 64-dim
+    embeddings onto md5-seeded integer hyperplanes, 8 bands × 4 sign bits.
+    For a neighbor at angle θ the per-band match probability is
+    (1-θ/π)^4, any-band recall 1-(1-p)^8 ≈ 0.8 at cos≈0.5 (recall against
+    exact top-k is asserted in tests/test_ann_recall.py).
+    Every bucket assignment (and therefore the exact candidate set, scores,
+    and ranks) is replicable in plain SQL — the registry query's DuckDB
+    oracle regenerates the planes from the tag and replays the whole
+    pipeline, making this approximate-ANN path fully value-checkable, not
+    just row-counted. Corpus signatures in one map pass, candidates from a
+    broadcast equi-join on (band_idx, band_sig), self-pairs dropped, exact
+    cosine re-score."""
+    bits_per_band, n_bands = 4, 8
+    planes = portable_planes_int(64, bits_per_band * n_bands, "annlsh")
 
-    def with_bands(df: DataFrame, idc: str, vecc: str, out_id: str, out_vec: str) -> DataFrame:
+    def with_bands(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
         # materialize the UDF signature as a bound column FIRST: the n_bands
         # struct references below would otherwise re-evaluate the UDF per
         # band (NOTES.md expression-capture gotcha)
         based = df.select(
-            F.col(idc).alias(out_id),
-            F.col(vecc).alias(out_vec),
-            int_hyperplane_bits(quantize_embedding(vecc), planes).alias("__sig"),
+            F.col("vec_id").alias(out_id),
+            F.col("embedding").alias(out_vec),
+            int_hyperplane_bits(quantize_embedding("embedding"), planes).alias("__sig"),
         )
         bands = F.array(
             *[
@@ -140,14 +135,14 @@ def cosine_topk_lsh_portable(
             out_id, out_vec, "b.band_idx", "b.band_sig"
         )
 
-    cb = with_bands(corpus, id_col, vec_col, "neighbor_id", "__cvec")
-    qb = with_bands(queries, id_col, vec_col, "query_id", "__qvec")
-    cand = cb.join(F.broadcast(qb), on=["band_idx", "band_sig"]).select(
-        "query_id", "neighbor_id", "__qvec", "__cvec"
+    cb = with_bands(corpus, "neighbor_id", "__cvec")
+    qb = with_bands(queries, "query_id", "__qvec")
+    cand = (
+        cb.join(F.broadcast(qb), on=["band_idx", "band_sig"])
+        .select("query_id", "neighbor_id", "__qvec", "__cvec")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
     scored = cand.select(
         "query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score")
     )
@@ -159,89 +154,25 @@ def cosine_topk_lsh_portable(
     )
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Exact cosine top-k: (query_id, neighbor_id, score, rank).
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k over (vec_id, embedding), self-pairs dropped:
+    (query_id, neighbor_id, score, rank).
 
     ``queries`` is broadcast; ties break by neighbor_id so results are fully
     deterministic.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"))
-    pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec")
+    )
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     scored = pairs.select(
         "query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    bits_per_band: int = 4,
-    n_bands: int = 8,
-    seed: int = 42,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Approximate cosine top-k via random-hyperplane LSH.
-
-    Default 8 bands × 4 bits: for a neighbor at angle θ the per-band match
-    probability is (1-θ/π)^4, any-band recall 1-(1-p)^8 ≈ 0.8 at cos≈0.5.
-    Wider bands (8 bits) measured recall 0.08 on the test embeddings — too
-    selective; fewer bits per band trades candidate count for recall.
-
-    Each vector gets ``n_bands`` signatures of ``bits_per_band`` sign bits;
-    a (query, vector) pair is scored only if any band matches. Corpus
-    signatures are computed in a map pass (no shuffle); the join is on
-    (band_idx, signature) — a normal equi-join that AQE can plan, with the
-    tiny query side broadcast.
-    """
-    total_bits = bits_per_band * n_bands
-    planes = _rand_planes(dim, total_bits, seed)
-
-    def with_bands(df: DataFrame, idc: str, vecc: str, out_id: str, out_vec: str) -> DataFrame:
-        sig = hyperplane_bits(vecc, planes)
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    (F.shiftright(sig, b * bits_per_band) % (1 << bits_per_band)).alias("band_sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return df.select(
-            F.col(idc).alias(out_id), F.col(vecc).alias(out_vec), F.explode(bands).alias("b")
-        ).select(out_id, out_vec, "b.band_idx", "b.band_sig")
-
-    cb = with_bands(corpus, id_col, vec_col, "neighbor_id", "__cvec")
-    qb = with_bands(queries, id_col, vec_col, "query_id", "__qvec")
-    cand = cb.join(F.broadcast(qb), on=["band_idx", "band_sig"]).select(
-        "query_id", "neighbor_id", "__qvec", "__cvec"
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    scored = cand.select("query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -293,29 +224,23 @@ def _centroid_probe_udf(centroids, nprobe: int):
     return probe
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """K-means (Lloyd) coarse quantizer for IVF.
+def train_ivf_centroids(corpus: DataFrame, k: int = 16) -> list[list[float]]:
+    """K-means (Lloyd) coarse quantizer for IVF over (vec_id, embedding).
 
-    Deterministic init (first k vectors by id); each iteration is one
-    broadcast-assign map pass + one groupBy-mean — two jobs over the corpus,
-    no driver-side data beyond the k×dim centroid matrix.
+    Deterministic init (first k vectors by id), then 3 iterations; each is
+    one broadcast-assign map pass + one groupBy-mean — two jobs over the
+    corpus, no driver-side data beyond the k×dim centroid matrix.
     """
     init = (
-        corpus.orderBy(id_col).limit(k).select(vec_col).collect()
+        corpus.orderBy("vec_id").limit(k).select("embedding").collect()
     )
     centroids = [list(map(float, r[0])) for r in init]
-    for _ in range(iters):
+    for _ in range(3):
         assign = _centroid_assign_udf(centroids)
-        assigned = corpus.select(assign(F.col(vec_col)).alias("__c"), vec_col)
+        assigned = corpus.select(assign(F.col("embedding")).alias("__c"), "embedding")
         # mean per centroid via posexplode + avg (JVM-side), rebuilt in order
         means = (
-            assigned.select("__c", F.posexplode(vec_col).alias("__i", "__x"))
+            assigned.select("__c", F.posexplode("embedding").alias("__i", "__x"))
             .groupBy("__c", "__i")
             .agg(F.avg("__x").alias("__m"))
             .collect()
@@ -337,21 +262,18 @@ def cosine_topk_ivf(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: corpus is partitioned by nearest
-    centroid (inverted lists); each query scores only its ``nprobe`` nearest
-    lists. At 100 TB the assignment column is computed once at ingest and
-    the corpus is clustered/partitioned by it on disk, so a query touches
-    nprobe/k of the data; recall is tunable via nprobe."""
-    cents = centroids or train_ivf_centroids(corpus, k=n_centroids, id_col=id_col, vec_col=vec_col)
+    """IVF-style approximate top-k over (vec_id, embedding), self-pairs
+    dropped: corpus is partitioned by nearest k-means centroid (inverted
+    lists); each query scores only its ``nprobe`` nearest lists. At 100 TB
+    the assignment column is computed once at ingest and the corpus is
+    clustered/partitioned by it on disk, so a query touches nprobe/k of the
+    data; recall is tunable via nprobe."""
+    cents = train_ivf_centroids(corpus, k=n_centroids)
     assign = _centroid_assign_udf(cents)
     c_assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"),
-        assign(F.col(vec_col)).alias("__list"),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec"),
+        assign(F.col("embedding")).alias("__list"),
     )
 
     # distributed probe assignment: the SAME argmin kernel as the corpus
@@ -359,13 +281,13 @@ def cosine_topk_ivf(
     # no driver collect (queries scale to any volume)
     probe = _centroid_probe_udf(cents, nprobe)
     probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.explode(probe(F.col(vec_col))).alias("__list"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.explode(probe(F.col("embedding"))).alias("__list"),
     )
-    cand = c_assigned.join(F.broadcast(probes), on="__list")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
+    cand = c_assigned.join(F.broadcast(probes), on="__list").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     scored = cand.select("query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
@@ -379,12 +301,11 @@ def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.8,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
-    the embedding space with the IVF k-means quantizer, then inside each
+    """SemDeDup-style semantic deduplication (Abbas et al. 2023) over
+    (vec_id, embedding): cluster the embedding space with the IVF k-means
+    quantizer (or the given ``centroids``), then inside each
     cluster drop every vector whose cosine to a LOWER-id cluster-mate is
     >= ``threshold`` (keep-min, same convention as the MinHash keep list).
 
@@ -394,14 +315,12 @@ def semantic_dedup(
     so the self-join shuffles nothing that is not already co-located. The
     same keep-min rule applied per-cluster is embarrassingly parallel.
     """
-    cents = centroids or train_ivf_centroids(
-        corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-    )
+    cents = centroids or train_ivf_centroids(corpus, k=n_centroids)
     assign = _centroid_assign_udf(cents)
     a = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        assign(F.col(vec_col)).alias("cluster"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        assign(F.col("embedding")).alias("cluster"),
     )
     left = a.alias("l")
     right = a.alias("r")
@@ -431,38 +350,36 @@ def semantic_dedup(
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     bits_per_band: int = 7,
-    n_bands: int = 8,
-    seed: int = 7,
     portable: bool = False,
-    tag: str = "embnd",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= t).
+    """Embedding-cosine near-duplicate pairs over (vec_id, embedding):
+    (id_a < id_b, cosine >= t).
 
-    LSH candidate generation (band match) followed by exact cosine verify —
-    the standard near-dup sweep shape for 100 TB embedding stores: the
-    all-pairs O(N²) never materializes, only bucket-local pairs do.
+    LSH candidate generation (8 bands of 64-dim sign bits) followed by
+    exact cosine verify — the standard near-dup sweep shape for 100 TB
+    embedding stores: the all-pairs O(N²) never materializes, only
+    bucket-local pairs do.
 
-    ``portable=True`` swaps gaussian planes for md5-seeded INTEGER planes
-    over int64 fixed-point embeddings (see ``cosine_topk_lsh_portable``) —
-    exact integer projections make the bucket assignment, and therefore the
-    full verified-pair output, SQL-replicable (registry
-    ``embedding_near_dup`` is value-checked against a DuckDB replay).
+    ``portable=True`` swaps seeded gaussian planes for md5-seeded INTEGER
+    planes over int64 fixed-point embeddings (see
+    ``cosine_topk_lsh_portable``) — exact integer projections make the
+    bucket assignment, and therefore the full verified-pair output,
+    SQL-replicable (registry ``embedding_near_dup`` is value-checked
+    against a DuckDB replay).
     """
+    n_bands = 8
     total_bits = bits_per_band * n_bands
     if portable:
         sig = int_hyperplane_bits(
-            quantize_embedding(vec_col), portable_planes_int(dim, total_bits, tag)
+            quantize_embedding("embedding"), portable_planes_int(64, total_bits, "embnd")
         )
     else:
-        sig = hyperplane_bits(vec_col, _rand_planes(dim, total_bits, seed))
+        sig = hyperplane_bits("embedding", _rand_planes(64, total_bits, 7))
     # materialize the UDF signature as a bound column before the n_bands
     # references below (expression capture would re-run the UDF per band)
     based = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), sig.alias("__sig")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), sig.alias("__sig")
     )
     bands = F.array(
         *[
@@ -517,13 +434,10 @@ def semantic_dedup_portable(
     corpus: DataFrame,
     threshold: float = 0.4,
     cluster_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    tag: str = "semdd",
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) with an engine-portable coarse
-    quantizer: where ``semantic_dedup`` clusters with float k-means
+    """SemDeDup (Abbas et al. 2023) over 64-dim (vec_id, embedding) with
+    an engine-portable coarse quantizer: where ``semantic_dedup`` clusters
+    with float k-means
     (Python-seeded — not SQL-replicable, hence its rows-only registry
     check), this twin derives the cluster id from the ``cluster_bits``-bit
     sign signature of EXACT integer hyperplane projections (md5-seeded
@@ -539,10 +453,10 @@ def semantic_dedup_portable(
     nothing that is not already co-located. Returns (id, cluster, keep).
     """
     sig = int_hyperplane_bits(
-        quantize_embedding(vec_col), portable_planes_int(dim, cluster_bits, tag)
+        quantize_embedding("embedding"), portable_planes_int(64, cluster_bits, "semdd")
     )
     a = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), sig.alias("cluster")
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), sig.alias("cluster")
     )
     left, right = a.alias("l"), a.alias("r")
     dropped = (

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 
 from ..config import Settings, settings as default_settings
 from ..sources.rest import Fetcher, ingest_to_bronze, requests_fetcher
+from ..sources.writers import local_path
 from .gold import aggregate_gold
 from .quality import GOLD_CHECKS, run_checks
 from .silver import transform_silver
@@ -61,9 +62,14 @@ def run(
     """Full pipeline for one run date (defaults to today, app/pipeline.py:14).
 
     ``fetcher`` is injectable for offline runs/tests; defaults to the real
-    HTTP fetcher.
+    HTTP fetcher. Every layer is written on the driver, so a lake root or
+    warehouse that is not a local path or ``file:`` URI raises
+    ``ValueError`` before the first fetch, and a feed with no records fails
+    the ``row_count > 0`` check before silver runs; neither is retried.
     """
     cfg = cfg or default_settings
+    local_path(cfg.lake_root)
+    local_path(cfg.warehouse_dir)
     d = ingestion_date or _dt.date.today().isoformat()
     fetch = fetcher or requests_fetcher(cfg)
 
@@ -73,6 +79,8 @@ def run(
 
     pages, records = extract(fetch, cfg.bronze_breweries, d, cfg.per_page, cfg.max_pages)
     log.info("bronze: %d pages, %d records", pages, records)
+    if not records:
+        run_checks({"__rows": records})  # raises: no silver read of a missing date
 
     # each stage fills its dict with the check aggregates observed on its write
     silver_metrics: dict[str, object] = {}

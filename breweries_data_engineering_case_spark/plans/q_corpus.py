@@ -716,8 +716,8 @@ def q_entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled are pairwise 2 edits apart) are closed by the reusable
     `connected_components` operator (operators/components.py); the entity
     graph here is |distinct spellings|-sized (256 vertices at sf0.1), so
-    the call opts into the operator's small-graph fast path
-    (``local_threshold``): under the threshold the closure is a bounded
+    the operator takes its small-graph fast path
+    (``LOCAL_THRESHOLD``): under the threshold the closure is a bounded
     driver-side union-find — the distributed loop's per-round job
     overhead dominated 80%+ of this query's wall time (round-12 A/B;
     VERDICT r11 #2) — while an over-threshold graph (the 100 TB regime)
@@ -766,7 +766,6 @@ def q_entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_col="u",
         dst_col="v",
         stage_key="er_fuzzy_sym:v1:" + source_fingerprint(sf_dir, "part"),
-        local_threshold=8192,
     )
     return (
         names.join(comp, names["name_id"] == comp["node"])
@@ -887,13 +886,12 @@ def q_dedup_cascade_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # symmetrized edge list bucketed on the gather key so the CC loop
         # never re-exchanges it and reruns reuse it (pagerank pattern).
         # The post-URL-dedup graph is tiny at bench scale (1.2k edges /
-        # 500 vertices at sf0.1), so the solve opts into the operator's
+        # 500 vertices at sf0.1), so the operator solves it on its
         # adaptive small-graph fast path; an over-threshold graph (the
         # 100 TB regime) takes the staged distributed loop unchanged —
-        # plan-asserted in tests/test_components_staged.py via the
-        # LOCAL_THRESHOLD_OVERRIDE hook.
+        # plan-asserted in tests/test_components_staged.py, which lowers
+        # components.LOCAL_THRESHOLD.
         stage_key="cascade_sym:v1:" + source_fingerprint(sf_dir, "documents"),
-        local_threshold=8192,
     )
     s3 = comp.groupBy("component").agg(F.min("node").alias("doc_id"))
 

@@ -91,9 +91,7 @@ def q_doc_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table_scan(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(d, threshold=0.7)
-    decisions = keep_one_per_cluster(
-        d.select("doc_id"), pairs, local_threshold=8192
-    )
+    decisions = keep_one_per_cluster(d.select("doc_id"), pairs)
     return (
         decisions.filter(~F.col("is_kept"))
         .select(F.col("doc_id").alias("dropped_doc_id"), F.col("component").alias("kept_doc_id"))
@@ -1405,7 +1403,6 @@ def q_doc_dedup_portable_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         src_col="id_a",
         dst_col="id_b",
         stage_key="portable_sym:v1:" + source_fingerprint(sf_dir, "documents"),
-        local_threshold=8192,
     )
     return comp.select(
         "doc_id",

@@ -61,11 +61,11 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(emb, queries_df, k=10)
 
 
-def _lsh_band_cte(tag: str, total_bits: int, bits_per_band: int, dim: int = 64) -> str:
+def _lsh_band_cte(tag: str, total_bits: int, bits_per_band: int) -> str:
     """Shared CTE text replicating the portable integer-hyperplane LSH
     bucketing (operators/similarity.int_hyperplane_bits over
-    quantize_embedding): md5-seeded integer planes, int64 fixed-point
-    projections, per-band sign-bit packing. Expects the `embeddings` view;
+    quantize_embedding): md5-seeded integer planes over 64 dimensions, int64
+    fixed-point projections, per-band sign-bit packing. Expects the `embeddings` view;
     yields a `band (vec_id, band_idx, band_sig)` CTE."""
     arms = " ".join(f"WHEN {r} THEN {1 << r}" for r in range(bits_per_band))
     return f"""planes AS (
@@ -73,7 +73,7 @@ def _lsh_band_cte(tag: str, total_bits: int, bits_per_band: int, dim: int = 64) 
              CAST(concat('0x', substr(md5('{tag}:' || CAST(b AS VARCHAR)
                   || ':' || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT)
                % 2001 - 1000 AS w
-      FROM UNNEST(range({total_bits})) AS tb(b), UNNEST(range({dim})) AS tj(j)
+      FROM UNNEST(range({total_bits})) AS tb(b), UNNEST(range(64)) AS tj(j)
     ),
     e AS (
       SELECT vec_id, i AS j,
@@ -137,9 +137,8 @@ def q_ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection sums are exact integers (order-independent) and the oracle
     regenerates the identical buckets, candidate set, scores and ranks in
     SQL. Candidates only from matching buckets, then exact cosine re-score
-    (index-ordered double fold, bitwise cross-engine). The gaussian-plane
-    twin (operators/similarity.cosine_topk_lsh) stays as the generic API;
-    recall for both is anchored in tests/test_ann_recall.py."""
+    (index-ordered double fold, bitwise cross-engine). Its recall against
+    exact top-k is anchored in tests/test_ann_recall.py."""
     from ..operators.similarity import cosine_topk_lsh_portable
 
     emb = table_scan(spark, sf_dir, "embeddings")

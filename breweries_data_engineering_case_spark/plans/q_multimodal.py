@@ -495,7 +495,6 @@ def q_multimodal_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="node",
         src_col="id_a",
         dst_col="id_b",
-        local_threshold=8192,
     )
     return comp.select(
         F.col("node").alias("asset_id"),

@@ -1680,7 +1680,7 @@ def q_bucketed_join_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fact-fact join over tables BUCKETED on the join key (16 buckets,
     sorted): both sides arrive pre-partitioned, so the join itself plans
     with no Exchange — the shuffle was paid once at write time
-    (sources/writers.py:write_bucketed_table). The only exchange left is the
+    (sources/writers.py:stage_bucketed_table). The only exchange left is the
     final small aggregation's. Asserted in tests/test_plan_invariants.py;
     the oracle joins the unbucketed originals."""
     from ..sources.writers import stage_bucketed_table

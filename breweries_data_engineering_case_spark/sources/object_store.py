@@ -95,7 +95,6 @@ def ingest_to_bronze_s3(
     prefix: str,
     ingestion_date: str,
     per_page: int,
-    max_pages: int = 10_000,
 ) -> tuple[int, int]:
     """Paginated REST → S3 bronze: the object-store twin of
     ``rest.ingest_to_bronze`` (same page loop, same uuid-suffixed key
@@ -104,7 +103,7 @@ def ingest_to_bronze_s3(
     write swapped for an object put. Returns (pages, records)."""
     client = s3_client(options)
     pages = records = 0
-    for page, page_records in iter_pages(fetch, per_page, max_pages):
+    for page, page_records in iter_pages(fetch, per_page):
         put_json_page(
             client, bucket, bronze_key(prefix, ingestion_date, page), page_records
         )

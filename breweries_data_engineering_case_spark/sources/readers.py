@@ -46,29 +46,16 @@ def json_array_scan(
     return reader.json(path_or_glob)
 
 
-def parquet_scan(
-    spark: SparkSession,
-    path: str,
-    base_path: str | None = None,
-    columns: list[str] | None = None,
-    schema: StructType | None = None,
-) -> DataFrame:
+def parquet_scan(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Parquet scan with hive partition discovery.
 
     ≈ ``read_parquet('…/*/*/*.parquet')`` app/tasks/gold.py:50-53. Spark
     recovers ``country=/state=`` dirs as columns (the reference keeps them
-    in-file; same logical result, see SURVEY.md S4). ``base_path`` lets a
-    subdirectory read still recover partition columns above it. A known
-    ``schema`` (partition columns included) skips the Spark job that infers
-    it from the file footers.
+    in-file; same logical result, see SURVEY.md S4). The known ``schema``
+    (partition columns included) skips the Spark job that infers it from
+    the file footers.
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if base_path:
-        reader = reader.option("basePath", base_path)
-    df = reader.parquet(path)
-    return df.select(*columns) if columns else df
+    return spark.read.schema(schema).parquet(path)
 
 
 _NS_TS_COLS: dict[str, tuple[str, ...]] = {}

@@ -100,12 +100,12 @@ def iter_pages(fetch: Fetcher, per_page: int, max_pages: int = 10_000) -> Iterat
         page += 1
 
 
-def bronze_key(prefix: str, ingestion_date: str, page: int, uid: str | None = None) -> str:
+def bronze_key(prefix: str, ingestion_date: str, page: int) -> str:
     """Bronze object key: history-preserving uuid-suffixed page path.
 
     ≈ app/io/storage.py:14-20.
     """
-    uid = uid or uuid.uuid4().hex
+    uid = uuid.uuid4().hex
     return f"{prefix.rstrip('/')}/ingestion_date={ingestion_date}/page_{page}_{uid}.json"
 
 

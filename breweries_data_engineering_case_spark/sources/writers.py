@@ -178,62 +178,22 @@ def write_partitioned_parquet(
     )
 
 
-def idempotent_date_overwrite(
-    df: DataFrame | pa.Table,
-    path: str,
-    date_value: str | _dt.date,
-    date_col: str = "ingestion_date",
-    extra_partition_cols: Sequence[str] = (),
-) -> None:
-    """Replace exactly one date's slice of a date-partitioned dataset (≈ S6).
+def idempotent_date_overwrite(df: DataFrame | pa.Table, path: str, date_value: str) -> None:
+    """Replace exactly one date's slice of an ``ingestion_date``-partitioned
+    dataset (≈ S6).
 
-    Stamps ``date_col`` with the run date, then dynamic-partition-overwrites
-    through :func:`write_partitioned_parquet` (a ``pyarrow.Table`` stays on
-    the driver). Re-running the same date yields identical table contents —
-    the "Idempotency for this run" contract of app/tasks/gold.py:100-113.
+    Stamps ``ingestion_date`` with the run date (``YYYY-MM-DD``), then
+    dynamic-partition-overwrites through :func:`write_partitioned_parquet`
+    (a ``pyarrow.Table`` stays on the driver). Re-running the same date
+    yields identical table contents — the "Idempotency for this run"
+    contract of app/tasks/gold.py:100-113.
     """
-    if isinstance(date_value, _dt.date):
-        date_value = date_value.isoformat()
     if isinstance(df, pa.Table):
         day = pa.scalar(_dt.date.fromisoformat(date_value), pa.date32())
-        stamped = df.append_column(date_col, pa.repeat(day, df.num_rows))
+        stamped = df.append_column("ingestion_date", pa.repeat(day, df.num_rows))
     else:
-        stamped = df.withColumn(date_col, F.to_date(F.lit(date_value)))
-    write_partitioned_parquet(stamped, path, [date_col, *extra_partition_cols])
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Bucketed (hash-clustered) table — the co-located-join path.
-
-    Two tables bucketed on the same key with the same bucket count join with
-    ZERO shuffle (both sides arrive pre-partitioned; with sort_cols, even the
-    sort is pre-done). At 100 TB this converts the repeated fact-fact join
-    from two full shuffles per query into none — the shuffle is paid once at
-    write time. No DuckDB/reference counterpart (the reference is single-
-    process); Spark-native scale feature.
-
-    ``path`` makes the table EXTERNAL at that location. Catalog entries are
-    per-session (in-memory metastore) but the location persists — so a fresh
-    session re-creating the table would hit LOCATION_ALREADY_EXISTS on the
-    leftover directory; with mode='overwrite' the stale location is removed
-    first.
-    """
-    w = df.write.format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        if mode == "overwrite":
-            shutil.rmtree(path, ignore_errors=True)
-        w = w.option("path", path)
-    w.mode(mode).saveAsTable(name)
+        stamped = df.withColumn("ingestion_date", F.to_date(F.lit(date_value)))
+    write_partitioned_parquet(stamped, path, ["ingestion_date"])
 
 
 # Staging: one temp workspace per SparkContext. Queries derive tables and
@@ -291,12 +251,14 @@ def stage_bucketed_table(
 ) -> DataFrame:
     """Bucketed table ``name`` staged once per session from ``builder()``.
 
-    The iterative-graph staging pattern (PageRank, connected components):
-    the edge-list shuffle is paid once, at write time, and every later scan
-    reports HashPartitioning on the bucket columns, so an in-loop join on
-    them never re-exchanges. A catalog hit returns ``spark.table(name)``
-    without calling ``builder``; ``name`` must therefore carry the content
-    key of what the builder reads.
+    Two tables bucketed on the same key with the same bucket count join with
+    ZERO shuffle (both sides arrive pre-partitioned; with ``sort_cols``, even
+    the sort is pre-done): the shuffle is paid once, at write time. This is
+    the iterative-graph staging pattern (PageRank, connected components):
+    every later scan reports HashPartitioning on the bucket columns, so an
+    in-loop join on them never re-exchanges. A catalog hit returns
+    ``spark.table(name)`` without calling ``builder``; ``name`` must
+    therefore carry the content key of what the builder reads.
 
     The frame is repartitioned by the bucket columns into ``num_buckets``
     tasks before the write. Repartition's HashPartitioning and the writer's
@@ -316,10 +278,14 @@ def stage_bucketed_table(
     with _STAGE_LOCK:
         if not spark.catalog.tableExists(name):
             df = builder().repartition(int(num_buckets), *[F.col(c) for c in bucket_cols])
-            write_bucketed_table(
-                df, name, bucket_cols, num_buckets=num_buckets, sort_cols=sort_cols,
-                path=str(path),
-            )
+            w = df.write.format("parquet").bucketBy(num_buckets, *bucket_cols)
+            if sort_cols:
+                w = w.sortBy(*sort_cols)
+            # An EXTERNAL table at ``path``: its catalog entry lives in the
+            # session's in-memory metastore, but a directory left there would
+            # fail the write with LOCATION_ALREADY_EXISTS, so it goes first.
+            shutil.rmtree(path, ignore_errors=True)
+            w.option("path", str(path)).mode("overwrite").saveAsTable(name)
     frame = spark.table(name)
     frame._bdec_stage_path = str(path)
     return frame

@@ -5,13 +5,11 @@ The reference is pure batch (SURVEY.md §2.9) — incremental processing is the
 
 - ``stream_events``: file-source stream (works over a growing directory; use
   ``Trigger.AvailableNow`` for batch-like catch-up runs).
-- ``tumbling_counts``: watermarked event-time tumbling window aggregation —
-  the streaming twin of registry ``events_tumbling_window_hourly``; late
-  rows beyond the watermark are dropped, state is bounded.
-- ``sliding_counts``: overlapping windows.
 - ``streaming_dedup``: stateful ``dropDuplicatesWithinWatermark`` — the
   streaming analog of the silver dedup (W1, app/tasks/silver.py:37-41) with
   bounded state.
+- ``maintain_rollup_foreach_batch``: an incrementally maintained daily
+  rollup, merged per micro-batch in ``foreachBatch``.
 
 Scale notes: watermark delay bounds state size; the shuffle key is
 (window, event_type), which is low-cardinality — AQE coalesces. For
@@ -43,83 +41,27 @@ EVENTS_STREAM_SCHEMA = StructType(
 )
 
 
-def stream_events(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema: StructType | None = None
-) -> DataFrame:
-    """File-source stream over a directory of event files."""
-    return (
-        spark.readStream.format(fmt)
-        .schema(schema or EVENTS_STREAM_SCHEMA)
-        .load(path)
-    )
-
-
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts+sums by event_type."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_cnt"), F.sum("value").alias("value_sum"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "event_cnt", "value_sum")
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked sliding-window counts by event_type."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "event_cnt")
-    )
+def stream_events(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a directory of event parquet files."""
+    return spark.readStream.format("parquet").schema(EVENTS_STREAM_SCHEMA).load(path)
 
 
 def streaming_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
+    events: DataFrame, keys: list[str], watermark: str = "2 hours"
 ) -> DataFrame:
-    """Stateful exactly-once dedup with bounded state — the streaming analog
-    of silver's per-id dedup (W1): duplicates arriving within the watermark
-    horizon are dropped, state for older keys is evicted."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
-
-
-def run_available_now(stream_df: DataFrame, out_path: str, checkpoint: str) -> None:
-    """Process-everything-then-stop run (the batch-compatible trigger): the
-    incremental twin of a dated batch re-run — restart-safe via checkpoint."""
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """Stateful exactly-once dedup on ``keys`` with bounded state — the
+    streaming analog of silver's per-id dedup (W1): duplicates arriving
+    within the watermark horizon of ``ts`` are dropped, state for older
+    keys is evicted."""
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def maintain_rollup_foreach_batch(
     stream: DataFrame,
     rollup_path: str,
     checkpoint: str,
-    ts_col: str = "ts",
 ) -> None:
-    """Incrementally-maintained daily rollup: the continuous-aggregate
+    """Incrementally-maintained daily rollup of ``ts``: the continuous-aggregate
     pattern (streaming twin of registry ``events_time_rollup``'s leaf
     level). Each micro-batch is aggregated to per-day partials, then merged
     into the rollup snapshot with ``merge_upsert`` inside ``foreachBatch``
@@ -143,7 +85,7 @@ def maintain_rollup_foreach_batch(
         # rollup (float accumulation would drift with batch order). The
         # running total is re-narrowed to decimal(28,4) after each merge so
         # the stored schema stays stable across arbitrarily many batches.
-        partial = batch.groupBy(F.to_date(ts_col).alias("day")).agg(
+        partial = batch.groupBy(F.to_date("ts").alias("day")).agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("value_sum"),
         )

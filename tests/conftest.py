@@ -22,3 +22,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def cc_distributed(monkeypatch):
+    """Run every ``connected_components`` solve through the distributed
+    loop: the driver union-find otherwise takes any graph of up to
+    ``components.LOCAL_THRESHOLD`` symmetrized edges."""
+    from breweries_data_engineering_case_spark.operators import components
+
+    monkeypatch.setattr(components, "LOCAL_THRESHOLD", 0)

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from breweries_data_engineering_case_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_ivf,
-    cosine_topk_lsh,
     cosine_topk_lsh_portable,
 )
 from breweries_data_engineering_case_spark.sources.readers import table_scan
@@ -37,16 +36,13 @@ def test_ivf_and_lsh_recall(spark, sf_dir):
     exact = _topk_sets(cosine_topk(emb, q, k=10))
 
     ivf = _topk_sets(cosine_topk_ivf(emb, q, k=10, n_centroids=16, nprobe=4))
-    lsh = _topk_sets(cosine_topk_lsh(emb, q, k=10))
 
-    r_ivf, r_lsh = _recall(ivf, exact), _recall(lsh, exact)
+    r_ivf = _recall(ivf, exact)
     # nprobe=4/16 lists → good recall when clusters align with centroids
     assert r_ivf >= 0.5, f"IVF recall {r_ivf:.2f}"
-    # 8 bands × 4 bits: measured 0.73 on the seed-42 embeddings
-    assert r_lsh >= 0.5, f"LSH recall {r_lsh:.2f}"
 
-    # portable integer-plane twin (the oracle-checked registry path) must
-    # hold comparable recall — measured 0.66 at sf0.01
+    # integer-plane LSH (the oracle-checked registry path), 8 bands × 4
+    # bits — measured 0.66 at sf0.01
     lshp = _topk_sets(cosine_topk_lsh_portable(emb, q, k=10))
     r_lshp = _recall(lshp, exact)
     assert r_lshp >= 0.5, f"portable LSH recall {r_lshp:.2f}"

@@ -7,28 +7,22 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.sources.readers import table_scan
-from breweries_data_engineering_case_spark.sources.writers import write_bucketed_table
+from breweries_data_engineering_case_spark.sources.writers import stage_bucketed_table
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
+def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     orders = table_scan(spark, sf_dir, "orders")
     lineitem = table_scan(spark, sf_dir, "lineitem")
-    # external-table paths under tmp: a leftover cwd spark-warehouse dir from
-    # an earlier session would fail managed-table creation
-    write_bucketed_table(
-        orders, "b_orders", ["o_orderkey"], 8,
-        sort_cols=["o_orderkey"], path=str(tmp_path / "b_orders"),
+    bo = stage_bucketed_table(
+        spark, "b_orders", ["o_orderkey"], 8, lambda: orders, sort_cols=["o_orderkey"]
     )
-    write_bucketed_table(
-        lineitem, "b_lineitem", ["l_orderkey"], 8,
-        sort_cols=["l_orderkey"], path=str(tmp_path / "b_lineitem"),
+    bl = stage_bucketed_table(
+        spark, "b_lineitem", ["l_orderkey"], 8, lambda: lineitem, sort_cols=["l_orderkey"]
     )
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
     try:
-        bo = spark.table("b_orders")
-        bl = spark.table("b_lineitem")
         joined = bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"]).groupBy(
             "o_orderpriority"
         ).agg(F.count(F.lit(1)).alias("cnt"))

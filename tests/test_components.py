@@ -8,7 +8,7 @@ from breweries_data_engineering_case_spark.operators.components import (
 )
 
 
-def test_components_transitive_closure(spark):
+def test_components_transitive_closure(spark, cc_distributed):
     vertices = spark.createDataFrame([(i,) for i in range(8)], "id long")
     # {0,1,2} chained (0-1, 1-2), {3,4}, singletons 5,6,7
     edges = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], "id_a long, id_b long")
@@ -16,7 +16,7 @@ def test_components_transitive_closure(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
 
 
-def test_components_long_chain_converges(spark):
+def test_components_long_chain_converges(spark, cc_distributed):
     n = 12  # diameter > typical near-dup clusters; needs several rounds
     vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")

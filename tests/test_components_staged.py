@@ -40,7 +40,7 @@ def _components_of(spark, pairs, vertex_ids, **kwargs):
     return {(r.node, r.component) for r in out.collect()}
 
 
-def test_chain_star_and_singletons(spark):
+def test_chain_star_and_singletons(spark, cc_distributed):
     # chain 1-2-3-4, star 10-{11,12,13}, isolated 99 → min labels
     got = _components_of(
         spark,
@@ -60,12 +60,12 @@ def test_chain_star_and_singletons(spark):
     }
 
 
-def test_empty_edges_all_singletons(spark):
+def test_empty_edges_all_singletons(spark, cc_distributed):
     got = _components_of(spark, [], [5, 6, 7])
     assert got == {(5, 5), (6, 6), (7, 7)}
 
 
-def test_edges_outside_vertices_ignored(spark):
+def test_edges_outside_vertices_ignored(spark, cc_distributed):
     # (2,50): 50 is not a vertex → the edge is dropped entirely (induced
     # subgraph), matching the pre-round-11 join semantics where an unknown
     # endpoint contributed no label and received none
@@ -73,14 +73,14 @@ def test_edges_outside_vertices_ignored(spark):
     assert got == {(1, 1), (2, 1), (3, 3)}
 
 
-def test_long_chain_converges(spark):
+def test_long_chain_converges(spark, cc_distributed):
     # a 24-node path exercises multiple gather+jump rounds
     n = 24
     got = _components_of(spark, [(i, i + 1) for i in range(n - 1)], range(n))
     assert got == {(i, 0) for i in range(n)}
 
 
-def test_cascade_cc_probe_scans_bucketed_no_reexchange(spark, sf_dir):
+def test_cascade_cc_probe_scans_bucketed_no_reexchange(spark, sf_dir, cc_distributed):
     """VERDICT r10 #1 'done' criterion: inside the dedup_cascade_funnel CC
     loop, the gather join's probe side must scan the staged bucketed sym
     table (Bucketed: true) with NO shuffle Exchange between the scan and
@@ -90,17 +90,16 @@ def test_cascade_cc_probe_scans_bucketed_no_reexchange(spark, sf_dir):
     out of the returned frame's lineage)."""
     from breweries_data_engineering_case_spark.operators import components
 
-    components.PLAN_CAPTURE = captured = []
     # the cascade's bench-scale graph takes the small-graph fast path
-    # (round 12); force the distributed loop so its plan stays asserted —
-    # this is the path every over-threshold (100 TB-regime) graph takes
-    components.LOCAL_THRESHOLD_OVERRIDE = 0
+    # (round 12); cc_distributed forces the distributed loop so its plan
+    # stays asserted — the path every over-threshold (100 TB-regime) graph
+    # takes
+    components.PLAN_CAPTURE = captured = []
     try:
         df = registry.queries()["dedup_cascade_funnel"](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
     finally:
         components.PLAN_CAPTURE = None
-        components.LOCAL_THRESHOLD_OVERRIDE = None
     assert captured, "CC loop ran no rounds"
     for plan in captured:
         # the captured tree must be the AQE-FINAL plan of the round that

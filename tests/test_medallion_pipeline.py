@@ -313,6 +313,50 @@ def test_all_rejected_date_fails_the_silver_check(spark, lake):
     assert not (Path(lake.warehouse_dir) / f"ingestion_date={d}").exists()
 
 
+def test_empty_feed_fails_before_silver(spark, lake, monkeypatch):
+    """A feed whose first page is empty fails the ``row_count > 0`` check
+    at once: no retry, no Spark job, nothing written past bronze."""
+    from breweries_data_engineering_case_spark.plans import pipeline
+
+    sleeps = []
+    monkeypatch.setattr(pipeline.time, "sleep", sleeps.append)
+    group = f"empty-feed-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "empty feed")
+    try:
+        with pytest.raises(QualityError, match=r"row_count > 0"):
+            run(spark, "2024-06-05", cfg=lake, fetcher=_page_fetcher([[]]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sleeps == []
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # let job events reach the tracker
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for path in (lake.silver_breweries, lake.gold_counts, lake.warehouse_dir):
+        assert not Path(path).exists(), path
+
+
+@pytest.mark.parametrize("field", ["lake_root", "warehouse_dir"])
+def test_non_local_lake_is_rejected_before_the_first_fetch(tmp_path, monkeypatch, field):
+    """The daily run writes every layer on the driver, so an object-store
+    lake root or warehouse fails at once, before any page is fetched."""
+    from breweries_data_engineering_case_spark.plans import pipeline
+
+    sleeps, pages = [], []
+    monkeypatch.setattr(pipeline.time, "sleep", sleeps.append)
+    uri = "s3a://bucket/lake"
+    cfg = Settings(**{"lake_root": str(tmp_path / "lake"),
+                      "warehouse_dir": str(tmp_path / "warehouse"), field: uri})
+
+    def fetch(page: int):
+        pages.append(page)
+        return [], None
+
+    with pytest.raises(ValueError, match=uri):
+        run(None, "2024-06-06", cfg=cfg, fetcher=fetch)
+    assert pages == [] and sleeps == []
+
+
 def _land(bronze: Path, d: str, pages: list[list[dict]]) -> None:
     day = bronze / f"ingestion_date={d}"
     day.mkdir(parents=True)

@@ -399,8 +399,8 @@ def test_no_input_row_collect_in_operators():
         # per-round convergence flag: a 1-row MAX aggregate (map-side
         # combinable) — the scalar control-flow read every iterative
         # dataflow needs; never input rows. Round 12 adds the
-        # limit(local_threshold+1) small-graph probe: bounded by the
-        # caller's threshold by construction (broadcast-threshold
+        # limit(LOCAL_THRESHOLD+1) small-graph probe: bounded by the
+        # module's threshold by construction (broadcast-threshold
         # adaptivity), never the whole edge list; r15 replaces the probe
         # with a footer-metadata count + one under-threshold collect,
         # still bounded by the same threshold
@@ -424,6 +424,79 @@ def test_no_input_row_collect_in_operators():
                 if (rel, func) not in allowed:
                     offenders.append(f"{rel}:{i} in {func}")
     assert not offenders, f"unaudited .collect() of input rows: {offenders}"
+
+
+#: Shared-layer functions the guard below does not check, each referenced as
+#: a value (wrapped or passed as a callback), so a call through the wrapper
+#: carries its arguments under another name.
+_DEFAULTS_EXEMPT = {
+    # plans/pipeline.run wraps it in with_retries and calls the wrapper with
+    # cfg.max_pages; perfbench wraps the same binding
+    "ingest_to_bronze",
+}
+
+
+def test_shared_layer_defaults_have_a_caller():
+    """Every defaulted parameter of a module-level function in
+    ``operators/``, ``functions/``, ``sources/`` and ``streaming/`` is
+    passed, by keyword or by position, by at least one call in the package
+    or in ``tests/``; a default no call overrides is a constant. Calls are
+    matched by function name; a call with ``*args``/``**kwargs`` counts as
+    passing every parameter it could reach."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).parent.parent
+    pkg = root / "breweries_data_engineering_case_spark"
+    defs: dict[str, list[tuple[str, list[str], list[str]]]] = {}
+    for layer in ("operators", "functions", "sources", "streaming"):
+        for py in sorted((pkg / layer).glob("*.py")):
+            for st in ast.parse(py.read_text()).body:
+                if not isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = st.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+                defaulted += [
+                    k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                ]
+                if defaulted:
+                    defs.setdefault(st.name, []).append(
+                        (f"{layer}/{py.name}", pos, defaulted)
+                    )
+
+    passed: dict[str, set[str]] = {name: set() for name in defs}
+    as_value: set[str] = set()
+    for py in [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py")]:
+        tree = ast.parse(py.read_text())
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            for _, pos, _ in defs.get(name, ()):
+                starred = any(isinstance(x, ast.Starred) for x in node.args)
+                passed[name].update(pos if starred else pos[: len(node.args)])
+                for kw in node.keywords:
+                    passed[name].update(pos if kw.arg is None else [kw.arg])
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callees:
+                name = getattr(node, "id", None) or getattr(node, "attr", None)
+                if name in defs and isinstance(node.ctx, ast.Load):
+                    as_value.add(name)
+
+    assert _DEFAULTS_EXEMPT <= as_value, "an exempt function is no longer a value"
+    unused = [
+        f"{mod}:{name}({p})"
+        for name, entries in sorted(defs.items())
+        if name not in _DEFAULTS_EXEMPT
+        for mod, _, defaulted in entries
+        for p in defaulted
+        if p not in passed[name]
+    ]
+    assert not unused, f"{len(unused)} defaulted parameters no call passes: {unused}"
 
 
 def test_url_dedup_prunes_document_columns(spark, sf_dir):

@@ -293,7 +293,7 @@ def test_er_variants_stay_in_block_and_within_one_edit(name, mod):
 )
 def test_union_find_matches_bfs_closure(pairs):
     """The driver-side union-find behind connected_components'
-    local_threshold fast path must label every vertex with the MIN id of
+    small-graph fast path must label every vertex with the MIN id of
     its component — checked against a brute-force BFS closure on random
     graphs (self-loops and duplicate edges included)."""
     from collections import deque

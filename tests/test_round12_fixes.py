@@ -77,7 +77,7 @@ def _cc(spark, pairs, vertex_ids, **kwargs):
     )
 
 
-def test_cc_exhausted_unconverged_raises(spark):
+def test_cc_exhausted_unconverged_raises(spark, cc_distributed):
     # a 40-node chain cannot converge in one round; pre-round-12 the loop
     # fell through SILENTLY with wrong labels — at 100 TB a pathological
     # chain graph would corrupt the dedup keep/drop table with no signal
@@ -88,21 +88,24 @@ def test_cc_exhausted_unconverged_raises(spark):
         _cc(spark, [(i, i + 1) for i in range(n - 1)], range(n), max_iter=1)
 
 
-def test_cc_local_fast_path_matches_distributed(spark):
-    """The small-graph fast path (driver union-find under local_threshold,
+def test_cc_local_fast_path_matches_distributed(spark, monkeypatch):
+    """The small-graph fast path (driver union-find under LOCAL_THRESHOLD,
     VERDICT r11 #2) must produce the exact labels the distributed loop
     converges to — min vertex id per component, induced-subgraph edge
     restriction, singletons appended."""
+    from breweries_data_engineering_case_spark.operators import components
+
     pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (4, 99)]
     verts = [1, 2, 3, 4, 10, 11, 12, 50]  # 99 not a vertex → edge dropped
-    dist = {
-        (r.node, r.component)
-        for r in _cc(spark, pairs, verts, local_threshold=0).collect()
-    }
-    local = {
-        (r.node, r.component)
-        for r in _cc(spark, pairs, verts, local_threshold=1000).collect()
-    }
+    components.PLAN_CAPTURE = cap = []
+    try:
+        local = {(r.node, r.component) for r in _cc(spark, pairs, verts).collect()}
+        assert not cap, "a 10-edge graph left the driver fast path"
+        monkeypatch.setattr(components, "LOCAL_THRESHOLD", 0)
+        dist = {(r.node, r.component) for r in _cc(spark, pairs, verts).collect()}
+    finally:
+        components.PLAN_CAPTURE = None
+    assert cap, "LOCAL_THRESHOLD = 0 did not run the distributed loop"
     assert local == dist == {
         (1, 1),
         (2, 1),
@@ -115,21 +118,17 @@ def test_cc_local_fast_path_matches_distributed(spark):
     }
 
 
-def test_cc_over_threshold_takes_distributed_loop(spark):
-    """A graph whose symmetrized edge list exceeds local_threshold must run
+def test_cc_over_threshold_takes_distributed_loop(spark, monkeypatch):
+    """A graph whose symmetrized edge list exceeds LOCAL_THRESHOLD must run
     the distributed loop (observed via the PLAN_CAPTURE hook) — the fast
     path is strictly bounded, never a silent whole-graph collect."""
     from breweries_data_engineering_case_spark.operators import components
 
     n = 30  # chain: 29 edges → 58 symmetrized rows > threshold of 8
+    monkeypatch.setattr(components, "LOCAL_THRESHOLD", 8)
     components.PLAN_CAPTURE = cap = []
     try:
-        out = _cc(
-            spark,
-            [(i, i + 1) for i in range(n - 1)],
-            range(n),
-            local_threshold=8,
-        )
+        out = _cc(spark, [(i, i + 1) for i in range(n - 1)], range(n))
         got = {(r.node, r.component) for r in out.collect()}
     finally:
         components.PLAN_CAPTURE = None
@@ -137,7 +136,7 @@ def test_cc_over_threshold_takes_distributed_loop(spark):
     assert got == {(i, 0) for i in range(n)}
 
 
-def test_cc_converged_graph_unaffected_by_guard(spark):
+def test_cc_converged_graph_unaffected_by_guard(spark, cc_distributed):
     # a graph that converges inside max_iter never pays or trips the guard
     got = {
         (r.node, r.component)

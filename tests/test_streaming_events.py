@@ -1,5 +1,5 @@
 """Structured Streaming operators: file-source stream over event parquet,
-watermarked tumbling windows, stateful dedup — each run with AvailableNow and
+stateful dedup and a foreachBatch rollup — each run with AvailableNow and
 checked against the equivalent batch computation.
 """
 
@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.sources.readers import table_scan
 from breweries_data_engineering_case_spark.streaming.events import (
-    run_available_now,
     stream_events,
     streaming_dedup,
-    tumbling_counts,
 )
 
 
@@ -26,39 +24,18 @@ def events_dir(spark, sf_dir, tmp_path_factory):
     return d
 
 
-def test_tumbling_counts_match_batch(spark, events_dir):
-    stream = stream_events(spark, str(events_dir / "in"))
-    assert stream.isStreaming
-    agg = tumbling_counts(stream, window="1 hour", watermark="2 hours")
-    run_available_now(agg, str(events_dir / "out_tumble"), str(events_dir / "ck_tumble"))
-
-    got = spark.read.parquet(str(events_dir / "out_tumble"))
-    batch = (
-        spark.read.parquet(str(events_dir / "in"))
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_cnt"), F.sum("value").alias("value_sum"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "event_cnt", "value_sum")
-    )
-    g = {(r.window_start, r.event_type): (r.event_cnt, round(r.value_sum, 6))
-         for r in got.collect()}
-    b = {(r.window_start, r.event_type): (r.event_cnt, round(r.value_sum, 6))
-         for r in batch.collect()}
-    # append mode only emits windows the watermark has closed: windows within
-    # the 2h+1h horizon of max event time legitimately stay in state
-    import datetime as dt
-
-    max_ts = spark.read.parquet(str(events_dir / "in")).agg(F.max("ts")).collect()[0][0]
-    horizon = max_ts - dt.timedelta(hours=3)
-    closed_b = {k: v for k, v in b.items() if k[0] < horizon}
-    assert set(closed_b).issubset(set(g)), "closed windows must all be emitted"
-    assert all(g[k] == v for k, v in closed_b.items())
-    assert set(g).issubset(set(b)) and all(b[k] == v for k, v in g.items())
-
-
 def test_streaming_dedup_bounded_state(spark, events_dir):
     stream = stream_events(spark, str(events_dir / "in"))
     deduped = streaming_dedup(stream, keys=["user_id"], watermark="365 days")
-    run_available_now(deduped, str(events_dir / "out_dedup"), str(events_dir / "ck_dedup"))
+    (
+        deduped.writeStream.format("parquet")
+        .option("path", str(events_dir / "out_dedup"))
+        .option("checkpointLocation", str(events_dir / "ck_dedup"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     got = spark.read.parquet(str(events_dir / "out_dedup"))
     n_users = (
         spark.read.parquet(str(events_dir / "in")).select("user_id").distinct().count()

@@ -11,9 +11,6 @@ is an exact IEEE double op on exactly-representable inputs.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,31 +35,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     the caller's concern; embeddings here are never zero)."""
     return dot(a, b) / (norm2(a) * norm2(b))
 
-
-def hyperplane_bits(a: Column | str, planes: list[list[float]]) -> Column:
-    """Sign bits of projections onto fixed random hyperplanes (SimHash for
-    dense vectors): bit i = 1 if a·p_i >= 0. Returns a BIGINT bit-pack
-    (len(planes) <= 62 — bit 63 would overflow a signed long literal).
-    Used for LSH bucketing of embeddings.
-
-    Implemented as an Arrow-batched pandas UDF: the projection is one
-    (batch × dim) @ (dim × planes) numpy matmul — a per-row expression fold
-    over `planes` literal arrays runs interpreted and measured ~10× slower.
-    This is exactly the 'vectorized UDF where built-ins can't express it
-    efficiently' case; the bucketing result feeds normal JVM-side joins."""
-    if len(planes) > 62:
-        raise ValueError(f"at most 62 hyperplane bits fit a signed long, got {len(planes)}")
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(planes, dtype=np.float64).T.copy()  # (dim, n_planes)
-    weights = (np.int64(1) << np.arange(len(planes), dtype=np.int64))
-
-    @pandas_udf("long")
-    def _sig(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        arr = np.stack(col.to_numpy()).astype(np.float64)  # (n, dim)
-        bits = (arr @ mat) >= 0.0
-        return pd.Series(bits.astype(np.int64) @ weights)
-
-    return _sig(_col(a))

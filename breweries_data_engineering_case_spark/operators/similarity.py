@@ -16,8 +16,6 @@ Two paths, as a production ANN stack needs both:
 
 from __future__ import annotations
 
-import random
-
 import numpy as np
 import pandas as pd
 
@@ -26,12 +24,7 @@ from pyspark.sql import DataFrame, Window
 from ..caching import cached
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, hyperplane_bits
-
-
-def _rand_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+from ..functions.vectors import cosine
 
 
 def portable_planes_int(dim: int, n_planes: int, tag: str = "annlsh") -> list[list[int]]:
@@ -68,8 +61,7 @@ def int_hyperplane_bits(qvec_col, planes: list[list[int]]):
     """Sign bits of EXACT integer projections of a quantized (array<bigint>)
     embedding onto integer hyperplanes, packed into one BIGINT. Integer
     addition is associative — the numpy matmul's summation order cannot
-    change the result (unlike the float path in
-    functions/vectors.hyperplane_bits), so the bucket assignment is
+    change the result (unlike float projections), so the bucket assignment is
     bit-replicable by any engine that sums the same integers.
     Arrow-batched pandas UDF: one (batch × dim) @ (dim × planes) int64
     matmul per batch. Overflow-safe by construction: |qx|·|w|·dim must fit
@@ -301,11 +293,10 @@ def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.8,
     n_centroids: int = 16,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023) over
     (vec_id, embedding): cluster the embedding space with the IVF k-means
-    quantizer (or the given ``centroids``), then inside each
+    quantizer, then inside each
     cluster drop every vector whose cosine to a LOWER-id cluster-mate is
     >= ``threshold`` (keep-min, same convention as the MinHash keep list).
 
@@ -315,8 +306,7 @@ def semantic_dedup(
     so the self-join shuffles nothing that is not already co-located. The
     same keep-min rule applied per-cluster is embarrassingly parallel.
     """
-    cents = centroids or train_ivf_centroids(corpus, k=n_centroids)
-    assign = _centroid_assign_udf(cents)
+    assign = _centroid_assign_udf(train_ivf_centroids(corpus, k=n_centroids))
     a = corpus.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("vec"),
@@ -351,7 +341,6 @@ def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
     bits_per_band: int = 7,
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs over (vec_id, embedding):
     (id_a < id_b, cosine >= t).
@@ -361,21 +350,17 @@ def embedding_near_dup_pairs(
     embedding stores: the all-pairs O(N²) never materializes, only
     bucket-local pairs do.
 
-    ``portable=True`` swaps seeded gaussian planes for md5-seeded INTEGER
-    planes over int64 fixed-point embeddings (see
-    ``cosine_topk_lsh_portable``) — exact integer projections make the
-    bucket assignment, and therefore the full verified-pair output,
-    SQL-replicable (registry ``embedding_near_dup`` is value-checked
-    against a DuckDB replay).
+    The sign bits come from md5-seeded INTEGER planes over int64
+    fixed-point embeddings (see ``cosine_topk_lsh_portable``) — exact
+    integer projections make the bucket assignment, and therefore the full
+    verified-pair output, SQL-replicable (registry ``embedding_near_dup``
+    is value-checked against a DuckDB replay).
     """
     n_bands = 8
     total_bits = bits_per_band * n_bands
-    if portable:
-        sig = int_hyperplane_bits(
-            quantize_embedding("embedding"), portable_planes_int(64, total_bits, "embnd")
-        )
-    else:
-        sig = hyperplane_bits("embedding", _rand_planes(64, total_bits, 7))
+    sig = int_hyperplane_bits(
+        quantize_embedding("embedding"), portable_planes_int(64, total_bits, "embnd")
+    )
     # materialize the UDF signature as a bound column before the n_bands
     # references below (expression capture would re-run the UDF per band)
     based = corpus.select(

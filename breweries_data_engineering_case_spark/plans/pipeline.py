@@ -13,6 +13,7 @@ import functools
 import logging
 import time
 from collections.abc import Callable
+from pathlib import Path
 from typing import Any, TypeVar
 
 from pyspark.sql import SparkSession
@@ -21,7 +22,7 @@ from ..config import Settings, settings as default_settings
 from ..sources.rest import Fetcher, ingest_to_bronze, requests_fetcher
 from ..sources.writers import local_path
 from .gold import aggregate_gold
-from .quality import GOLD_CHECKS, run_checks
+from .quality import GOLD_CHECKS, QualityError, run_checks
 from .silver import transform_silver
 
 log = logging.getLogger("breweries_spark.pipeline")
@@ -64,8 +65,11 @@ def run(
     ``fetcher`` is injectable for offline runs/tests; defaults to the real
     HTTP fetcher. Every layer is written on the driver, so a lake root or
     warehouse that is not a local path or ``file:`` URI raises
-    ``ValueError`` before the first fetch, and a feed with no records fails
-    the ``row_count > 0`` check before silver runs; neither is retried.
+    ``ValueError`` before the first fetch, and a date with no bronze pages
+    (an empty feed, and no earlier run of the date captured any) fails the
+    ``row_count > 0`` check before silver runs; neither is retried. A rerun
+    whose feed comes back empty rebuilds silver from the pages captured
+    earlier that day.
     """
     cfg = cfg or default_settings
     local_path(cfg.lake_root)
@@ -79,8 +83,8 @@ def run(
 
     pages, records = extract(fetch, cfg.bronze_breweries, d, cfg.per_page, cfg.max_pages)
     log.info("bronze: %d pages, %d records", pages, records)
-    if not records:
-        run_checks({"__rows": records})  # raises: no silver read of a missing date
+    if not (Path(local_path(cfg.bronze_breweries)) / f"ingestion_date={d}").is_dir():
+        raise QualityError("row_count > 0 failed (observed 0)")
 
     # each stage fills its dict with the check aggregates observed on its write
     silver_metrics: dict[str, object] = {}

@@ -236,7 +236,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is asserted in tests/test_ann_recall.py. Production threshold
     (0.9+) is exercised with planted near-dups there."""
     emb = table_scan(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(emb, threshold=0.4, bits_per_band=4, portable=True)
+    return embedding_near_dup_pairs(emb, threshold=0.4, bits_per_band=4)
 
 
 _NEAR_DUP_EXACT_ORACLE = """

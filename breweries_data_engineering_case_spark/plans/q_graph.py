@@ -472,8 +472,11 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph sparsification — the co-purchase projection is near-complete,
     and the portable_hash64 edge sample keeps the structure non-trivial:
     ~100 components at sf0.01 — while staying bitwise SQL-replicable).
-    Min-label propagation with pointer jumping converges in O(log n)
-    rounds (operators/components.py); the oracle is the WITH RECURSIVE
+    ``connected_components`` solves a graph of at most
+    ``components.LOCAL_THRESHOLD`` symmetrized edges, as this one is at
+    bench scale, with a driver union-find; larger graphs run min-label
+    propagation with pointer jumping, which converges in O(log n) rounds
+    (operators/components.py). The oracle is the WITH RECURSIVE
     transitive closure, feasible because sampled components stay small.
     At 100 TB the iterative path is the only viable one — closure blows up
     quadratically per component, label propagation shuffles only

@@ -336,6 +336,17 @@ def test_empty_feed_fails_before_silver(spark, lake, monkeypatch):
         assert not Path(path).exists(), path
 
 
+def test_empty_feed_rerun_rebuilds_from_earlier_pages(spark, lake):
+    """Bronze keeps every page captured for a date, so a rerun whose feed
+    comes back empty still builds silver and gold from the earlier pages."""
+    first = run(spark, "2024-06-07", cfg=lake, fetcher=_page_fetcher([PAGE_1, PAGE_2, []]))
+    again = run(spark, "2024-06-07", cfg=lake, fetcher=_page_fetcher([[]]))
+    assert again["bronze_records"] == 0
+    assert again["silver_rows"] == first["silver_rows"] == 3
+    history = spark.read.parquet(lake.warehouse_dir)
+    assert history.agg(F.sum("brewery_count")).collect()[0][0] == 3
+
+
 @pytest.mark.parametrize("field", ["lake_root", "warehouse_dir"])
 def test_non_local_lake_is_rejected_before_the_first_fetch(tmp_path, monkeypatch, field):
     """The daily run writes every layer on the driver, so an object-store

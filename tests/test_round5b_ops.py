@@ -185,10 +185,11 @@ def test_pandas_zscore_group_moments(spark, sf_dir):
         assert math.isclose(r.s, 1.0, rel_tol=1e-6)
 
 
-def test_connected_components_match_union_find(spark, sf_dir):
-    """Registry components (iterative label propagation) vs a driver-side
-    union-find over the same sampled edge list — different algorithm, same
-    partition."""
+def test_connected_components_match_union_find(spark, sf_dir, cc_distributed):
+    """Registry components forced through the iterative label propagation
+    (``cc_distributed``; at this size the served query takes the driver
+    union-find) vs a union-find written here over the same sampled edge
+    list — different algorithm, same partition."""
     from breweries_data_engineering_case_spark.functions.hashing import (
         portable_hash64,
     )

@@ -32,21 +32,23 @@ def _jitter(base: list[float], eps: float, axis: int) -> list[float]:
 def test_planted_near_dups_dropped_keep_min(spark):
     rows = []
     # three well-separated clusters on axes 0/1/2; each has a base vector,
-    # one near-dup (cos ~ 0.995), and one distinct member (cos ~ 0.7)
+    # one near-dup (cos ~ 0.995), and one distinct member (cos ~ 0.7). The
+    # bases take ids 0-2, so the k-means init (the first k vectors by id)
+    # seeds one centroid per cluster.
     for c in range(3):
         base = _unit(c)
-        rows.append((c * 10 + 0, base))
-        rows.append((c * 10 + 1, _jitter(base, 0.1, (c + 3) % DIM)))  # near-dup
-        rows.append((c * 10 + 2, _jitter(base, 1.0, (c + 3) % DIM)))  # distinct
+        rows.append((c, base))
+        rows.append((c + 3, _jitter(base, 0.1, (c + 3) % DIM)))  # near-dup
+        rows.append((c + 6, _jitter(base, 1.0, (c + 3) % DIM)))  # distinct
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    cents = [_unit(0), _unit(1), _unit(2)]
-    out = semantic_dedup(df, threshold=0.9, centroids=cents).collect()
+    out = semantic_dedup(df, threshold=0.9, n_centroids=3).collect()
     decisions = {r["id"]: r["keep"] for r in out}
     assert len(decisions) == 9
+    assert len({r["cluster"] for r in out}) == 3
     for c in range(3):
-        assert decisions[c * 10 + 0] is True  # min id kept
-        assert decisions[c * 10 + 1] is False  # near-dup dropped
-        assert decisions[c * 10 + 2] is True  # distinct member kept
+        assert decisions[c] is True  # min id kept
+        assert decisions[c + 3] is False  # near-dup dropped
+        assert decisions[c + 6] is True  # distinct member kept
 
 
 def test_agrees_with_exact_all_pairs_within_cluster(spark, sf_dir):
@@ -54,8 +56,7 @@ def test_agrees_with_exact_all_pairs_within_cluster(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .limit(200)
     )
-    cents = None  # trained quantizer
-    got = semantic_dedup(emb, threshold=0.4, n_centroids=8, centroids=cents)
+    got = semantic_dedup(emb, threshold=0.4, n_centroids=8)
     rows = got.collect()
     by_cluster: dict[int, list[int]] = {}
     for r in rows:

@@ -9,17 +9,13 @@ SQL text in ``plans/silver.clean_breweries``.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def stamp_date(d: str | _dt.date) -> Column:
-    """Constant DATE column for the run date.
+def stamp_date(d: str) -> Column:
+    """Constant DATE column for the run date ``d`` (ISO ``YYYY-MM-DD``).
 
     ≈ ``DATE '{d}'`` literal injection (app/tasks/gold.py:101,106).
     """
-    if isinstance(d, _dt.date):
-        d = d.isoformat()
     return F.to_date(F.lit(d))

@@ -15,16 +15,14 @@ Four families, each a standard large-scale training-data dedup technique:
 - **N-gram Jaccard** (`ngram_jaccard_pairs`): exact set-similarity join for
   modest candidate sets (or verification of LSH candidates).
 
-Determinism: the production MinHash path uses xxhash64 (Spark-internal —
-rows-only driver check, anchored by ground-truth recall tests); the
-``portable=True`` base swaps that call (plus the band hash in
-``minhash_lsh_pairs``) for md5-prefix / polynomial-mod arithmetic, making
-the identical downstream pipeline DuckDB-replicable: registry
-``doc_minhash_portable_sig`` value-checks the signatures,
-``doc_minhash_portable_lsh_pairs`` the banded join + Jaccard verify, and
-``doc_dedup_portable_pipeline`` the end-to-end keep list — bit-for-bit.
-SimHash and Jaccard are built from md5/set algebra that DuckDB reproduces
-exactly, so they ARE oracle-checked.
+Determinism: MinHash has one hash base, engine-portable end to end —
+md5-prefix token hashes, a polynomial-mod shingle roll and a polynomial
+band hash over the band's min-hashes. DuckDB replays every stage
+bit-for-bit, so every registry query built on it carries a value oracle
+(signatures, banded pairs and keep lists alike); recall against exact
+Jaccard is anchored in tests/test_minhash_ground_truth.py. SimHash and
+Jaccard are built from md5/set algebra that DuckDB reproduces exactly, so
+they are oracle-checked too.
 """
 
 from __future__ import annotations
@@ -119,7 +117,7 @@ def _mh_coeffs(num_hashes: int) -> list[tuple[int, int]]:
 _MH_B = 1_000_003
 
 
-def shingle_hashes(c: str, n: int = 3, portable: bool = False) -> Column:
+def shingle_hashes(c: str, n: int = 3) -> Column:
     """Distinct n-gram shingle hashes WITHOUT materializing shingle strings.
 
     Each token is hashed once; an n-gram's hash is the polynomial
@@ -130,28 +128,31 @@ def shingle_hashes(c: str, n: int = 3, portable: bool = False) -> Column:
     MinHash signature pipeline, identical LSH semantics (hash collisions are
     what MinHash tolerates by construction).
 
-    ``portable=False`` (default) uses Spark-internal xxhash64 — the fast
-    production path. ``portable=True`` swaps the ONE non-portable step for
-    the md5-prefix hash (functions/hashing.py): everything downstream is
-    modular arithmetic both engines share, so the whole MinHash pipeline
-    becomes DuckDB-replicable bit-for-bit (registry
-    ``doc_minhash_portable_sig``) at the cost of md5 vs xxhash per token."""
-    return F.array_distinct(shingle_hash_sequence(c, n, portable=portable))
+    The token hash is the md5 prefix of functions/hashing.py and everything
+    downstream is modular arithmetic both engines share, so the whole
+    MinHash pipeline is DuckDB-replicable bit-for-bit (registry
+    ``doc_minhash_portable_sig``)."""
+    return F.array_distinct(shingle_hash_sequence(c, n))
 
 
-def _sql_hash_base(portable: bool) -> str:
-    """Per-token hash lambda: md5-prefix (engine-portable) or xxhash64,
-    reduced mod the Mersenne prime — SQL twin of functions/hashing."""
-    if portable:
-        return (
-            "t -> pmod(cast(conv(substring(md5(t), 1, 15), 16, 10)"
-            f" as bigint), {_MH_P})"
-        )
-    return f"t -> pmod(xxhash64(t), {_MH_P})"
+#: Per-token hash lambda: the md5-prefix hash of functions/hashing, reduced
+#: mod the Mersenne prime.
+_SQL_TOKEN_HASH = (
+    f"t -> pmod(cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint), {_MH_P})"
+)
 
 
-def _sql_shingle_hash_sequence(col: str, n: int, portable: bool) -> str:
-    th = f"transform({_sql_tokens(_sql_quote(col))}, {_sql_hash_base(portable)})"
+def _sql_band_hash(b: int, rows: int) -> str:
+    """Polynomial band hash of band ``b``: the mod-P roll ((m_i·B + m_i+1)·B
+    + ...) over its ``rows`` min-hash columns m{b·rows} .. m{b·rows+rows-1}."""
+    h = f"m{b * rows}"
+    for r in range(1, rows):
+        h = f"pmod({h} * {_MH_B} + m{b * rows + r}, {_MH_P})"
+    return h
+
+
+def _sql_shingle_hash_sequence(col: str, n: int) -> str:
+    th = f"transform({_sql_tokens(_sql_quote(col))}, {_SQL_TOKEN_HASH})"
     if n == 1:
         return th
     acc = "th"
@@ -163,14 +164,14 @@ def _sql_shingle_hash_sequence(col: str, n: int, portable: bool) -> str:
     return _sql_bind(th, "th", body)
 
 
-def shingle_hash_sequence(c: str, n: int = 3, portable: bool = False) -> Column:
+def shingle_hash_sequence(c: str, n: int = 3) -> Column:
     """POSITIONAL n-gram hash sequence — the same polynomial roll as
     ``shingle_hashes`` but WITHOUT the final distinct, so element i is the
     hash of the n-gram starting at token i (duplicates preserved). This is
     what position-sensitive algorithms need (winnowing's window-min runs
     over the positional sequence; set-based MinHash wants the distinct
     form). One SQL-text parse of the text column ``c``."""
-    return F.expr(_sql_shingle_hash_sequence(c, n, portable))
+    return F.expr(_sql_shingle_hash_sequence(c, n))
 
 
 #: (SparkContext identity, num_hashes) → the k parsed min-aggregate Columns.
@@ -224,7 +225,6 @@ def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 64,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig: array<bigint>) over (doc_id, text) — sig[i] = min over
     shingles of the i-th universal hash of the shingle. Docs with no
@@ -236,7 +236,7 @@ def minhash_signatures(
     # cluster width. spread() is a no-op when scan parallelism is adequate.
     based = spread(df.select(F.col("doc_id").alias("id"), F.col("text"))).select(
         "id",
-        shingle_hashes("text", shingle_n, portable=portable).alias("__h"),
+        shingle_hashes("text", shingle_n).alias("__h"),
     )
     mins = _minhash_cols(based, "id", num_hashes)
     return mins.select(
@@ -249,7 +249,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 48,
     bands: int = 12,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate pair stage of MinHash-LSH over (doc_id, text) (id_a < id_b,
     deduped, persisted).
@@ -266,26 +265,15 @@ def minhash_lsh_candidates(
     # (no-op when scan parallelism is adequate — see readers.spread)
     based = spread(df.select(F.col("doc_id").alias("id"), F.col("text"))).select(
         "id",
-        shingle_hashes("text", shingle_n, portable=portable).alias("__h"),
+        shingle_hashes("text", shingle_n).alias("__h"),
     )
     with_sig = _minhash_cols(based, "id", num_hashes)
-
-    def _band_hash_sql(b: int) -> str:
-        idx = [b * rows_per_band + r for r in range(rows_per_band)]
-        if portable:
-            bh = f"m{idx[0]}"
-            for i in idx[1:]:
-                bh = f"pmod({bh} * {_MH_B} + m{i}, {_MH_P})"
-            return bh
-        casts = ", ".join(f"cast(m{i} as string)" for i in idx)
-        return f"xxhash64(concat_ws(',', {casts}))"
-
     # one SQL parse for the whole band array (r14) — the Column build was
     # ~8 py4j calls per band per construction
     band_arr = F.expr(
         "array("
         + ", ".join(
-            f"named_struct('band_idx', {b}, 'band_hash', {_band_hash_sql(b)})"
+            f"named_struct('band_idx', {b}, 'band_hash', {_sql_band_hash(b, rows_per_band)})"
             for b in range(bands)
         )
         + ")"
@@ -335,7 +323,6 @@ def minhash_lsh_pairs(
     bands: int = 12,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    portable: bool = False,
 ) -> DataFrame:
     """Verified near-dup pairs over (doc_id, text) (id_a < id_b,
     jaccard >= threshold).
@@ -346,21 +333,12 @@ def minhash_lsh_pairs(
     12 bands × 4: P(candidate | j=0.7) = 1-(1-0.7⁴)¹² ≈ 0.96, measured
     identical output to 64/16 on the test corpus at ~25% less signature
     cost; recall vs exact Jaccard asserted in tests/test_minhash_ground_truth.py.
-
-    ``portable=True`` runs the SAME pipeline (identical join shape and
-    verify stage) on the engine-portable base: md5-prefix token hashes and a
-    polynomial band hash (mod-P roll over the band's min-hashes) instead of
-    xxhash64 — every stage through the final verified pairs is then
-    DuckDB-replicable (registry ``doc_minhash_portable_lsh_pairs``), which
-    oracle-checks the banded-join logic the production path shares.
+    Every stage through the verified pairs is DuckDB-replicable (registry
+    ``doc_dedup_minhash_lsh`` and ``doc_minhash_portable_lsh_pairs``).
     """
     sh = word_shingles("text", shingle_n)
     cand = minhash_lsh_candidates(
-        df,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        portable=portable,
+        df, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
     )
     # verify: shingle sets are recomputed ONLY for candidate ids (semi-join
     # first, shingle expression after) — never a second full-corpus pass
@@ -520,9 +498,9 @@ def minhash_band_exprs(
     MAP expressions — no explode+
     groupBy signature aggregation, so it works unchanged on a STREAMING
     frame (stateless stage ahead of a stateful band-bucket operator) as
-    well as in batch. Portable base (md5 token roll + polynomial band
-    hash). Each min-hash is array_min(transform(...)) over a shingle-hash
-    column bound ONCE — 16 traversals stays inside the codegen budget (64
+    well as in batch. Same md5 token roll and polynomial band hash as
+    ``minhash_lsh_candidates``. Each min-hash is array_min(transform(...))
+    over a shingle-hash column bound ONCE — 16 traversals stays inside the codegen budget (64
     would not; see _minhash_cols for the batch explode+agg shape).
 
     The factory for the per-hash lambda is required: pyspark counts lambda
@@ -530,7 +508,7 @@ def minhash_band_exprs(
     rpb = num_hashes // bands
     based = df.select(
         F.col("doc_id"),
-        shingle_hashes("text", 3, portable=True).alias("__sh"),
+        shingle_hashes("text", 3).alias("__sh"),
     ).filter(F.size("__sh") > 0)
 
     # SQL-text per-hash mins and band rolls (r14): the Column-API builds
@@ -546,16 +524,10 @@ def minhash_band_exprs(
         ],
     )
 
-    def _band_hash_sql(b: int) -> str:
-        h = f"m{b * rpb}"
-        for r in range(1, rpb):
-            h = f"pmod({h} * {_MH_B} + m{b * rpb + r}, {_MH_P})"
-        return h
-
     band_arr = F.expr(
         "array("
         + ", ".join(
-            f"named_struct('band_idx', {b}L, 'band_hash', {_band_hash_sql(b)})"
+            f"named_struct('band_idx', {b}L, 'band_hash', {_sql_band_hash(b, rpb)})"
             for b in range(bands)
         )
         + ")"

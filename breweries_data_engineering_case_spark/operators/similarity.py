@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (LLM-pipeline extension).
 
-Two paths, as a production ANN stack needs both:
+An exact baseline and two approximate scale paths:
 
 - **Brute-force top-k** (`cosine_topk`): exact. The query side is broadcast
   (queries are few), the corpus side streams — one pass over the corpus per
@@ -8,10 +8,17 @@ Two paths, as a production ANN stack needs both:
   is the *baseline*: cost is O(|corpus| · |queries|) but perfectly
   data-parallel with zero shuffle on the corpus until the (tiny) top-k
   aggregation.
-- **LSH-bucketed** (`cosine_topk_lsh_portable`): the scale path.
-  Integer-hyperplane signatures bucket the corpus (one cheap map pass, no
+- **LSH-bucketed** (`cosine_topk_lsh`):
+  integer-hyperplane signatures bucket the corpus (one cheap map pass, no
   shuffle); queries only score vectors sharing a bucket, turning O(N·Q)
   into O(N·Q / 2^bits · bands). Approximate: recall < 1.
+- **IVF** (`cosine_topk_ivf`): inverted lists from an exact int64 k-means
+  quantizer; queries score only their nearest lists. Approximate.
+
+Every approximate path quantizes embeddings to int64 fixed point and
+projects or clusters them with exact integer arithmetic, so the bucket or
+list each vector lands in, and therefore the whole result, replays
+bit-for-bit in SQL.
 """
 
 from __future__ import annotations
@@ -85,9 +92,7 @@ def int_hyperplane_bits(qvec_col, planes: list[list[int]]):
     return _sig(c)
 
 
-def cosine_topk_lsh_portable(
-    corpus: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
+def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Approximate cosine top-k over (vec_id, embedding) via LSH with
     ENGINE-PORTABLE bucketing: int64 fixed-point projections of the 64-dim
     embeddings onto md5-seeded integer hyperplanes, 8 bands × 4 sign bits.
@@ -173,167 +178,91 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
     )
 
 
-def _centroid_assign_udf(centroids):
-    """pandas UDF: index of the nearest centroid (L2) per embedding —
-    one numpy matmul per Arrow batch."""
-    from pyspark.sql.functions import pandas_udf
+def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """IVF approximate top-k over (vec_id, embedding), self-pairs dropped:
+    (query_id, neighbor_id, score, rank).
 
-    C = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-    C_norms = (C * C).sum(axis=1)
+    The coarse quantizer is one exact int64 Lloyd update (the kernel of
+    registry ``kmeans_lloyd_converge_int``): embeddings quantize to int64
+    fixed point, the corpus vectors with ``vec_id < 8`` seed 8 centroids,
+    squared-L2 distances fold as exact integers, argmin tiebreaks on the
+    centroid id, and the updated centroids are the trunc-toward-zero
+    ``div`` means. Every corpus vector joins its nearest list; each query
+    probes its 2 nearest lists and scores only their members (exact cosine
+    re-score, index-ordered double fold). No stage collects to the driver
+    and every one replays in plain SQL (registry
+    ``ann_cosine_topk_ivf_portable``). Recall against ``cosine_topk`` is
+    asserted in tests/test_ann_recall.py."""
 
-    @pandas_udf("int")
-    def assign(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int32")
-        X = np.stack(col.to_numpy()).astype(np.float64)  # (n, dim)
-        # argmin ||x-c||^2 = argmin (c.c - 2 x.c); ties -> lowest index (np)
-        d = C_norms[None, :] - 2.0 * (X @ C.T)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
-
-    return assign
-
-
-def _centroid_probe_udf(centroids, nprobe: int):
-    """pandas UDF: indices of the ``nprobe`` nearest centroids (L2) per
-    embedding, nearest first — the query-side twin of
-    :func:`_centroid_assign_udf` (same distance kernel, stable tie order
-    matching the driver-side ``np.argsort(kind="stable")`` it replaces)."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-    C_norms = (C * C).sum(axis=1)
-    n = min(nprobe, len(C))
-
-    @pandas_udf("array<int>")
-    def probe(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="object")
-        X = np.stack(col.to_numpy()).astype(np.float64)  # (n, dim)
-        d = C_norms[None, :] - 2.0 * (X @ C.T)
-        idx = np.argsort(d, axis=1, kind="stable")[:, :n].astype("int32")
-        return pd.Series(list(idx))
-
-    return probe
-
-
-def train_ivf_centroids(corpus: DataFrame, k: int = 16) -> list[list[float]]:
-    """K-means (Lloyd) coarse quantizer for IVF over (vec_id, embedding).
-
-    Deterministic init (first k vectors by id), then 3 iterations; each is
-    one broadcast-assign map pass + one groupBy-mean — two jobs over the
-    corpus, no driver-side data beyond the k×dim centroid matrix.
-    """
-    init = (
-        corpus.orderBy("vec_id").limit(k).select("embedding").collect()
-    )
-    centroids = [list(map(float, r[0])) for r in init]
-    for _ in range(3):
-        assign = _centroid_assign_udf(centroids)
-        assigned = corpus.select(assign(F.col("embedding")).alias("__c"), "embedding")
-        # mean per centroid via posexplode + avg (JVM-side), rebuilt in order
-        means = (
-            assigned.select("__c", F.posexplode("embedding").alias("__i", "__x"))
-            .groupBy("__c", "__i")
-            .agg(F.avg("__x").alias("__m"))
-            .collect()
+    def quantized(df: DataFrame) -> DataFrame:
+        return df.select(
+            "vec_id", "embedding", quantize_embedding("embedding").alias("qv")
         )
-        by_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_c.setdefault(r["__c"], {})[r["__i"]] = r["__m"]
-        dim = len(centroids[0])
-        centroids = [
-            [by_c.get(c, {}).get(i, centroids[c][i]) for i in range(dim)]
-            for c in range(len(centroids))
-        ]
-    return centroids
 
+    def distances(q: DataFrame, cents: DataFrame) -> DataFrame:
+        diff = F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b))
+        dist = F.aggregate(diff, F.lit(0).cast("long"), lambda acc, x: acc + x)
+        return q.crossJoin(F.broadcast(cents)).select(
+            "vec_id", "embedding", "qv", "cid", dist.alias("dist")
+        )
 
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF-style approximate top-k over (vec_id, embedding), self-pairs
-    dropped: corpus is partitioned by nearest k-means centroid (inverted
-    lists); each query scores only its ``nprobe`` nearest lists. At 100 TB
-    the assignment column is computed once at ingest and the corpus is
-    clustered/partitioned by it on disk, so a query touches nprobe/k of the
-    data; recall is tunable via nprobe."""
-    cents = train_ivf_centroids(corpus, k=n_centroids)
-    assign = _centroid_assign_udf(cents)
-    c_assigned = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cvec"),
-        assign(F.col("embedding")).alias("__list"),
+    q0 = quantized(corpus).transform(cached)
+    c0 = q0.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
-
-    # distributed probe assignment: the SAME argmin kernel as the corpus
-    # side, widened to top-nprobe — one Arrow batch pass over the query set,
-    # no driver collect (queries scale to any volume)
-    probe = _centroid_probe_udf(cents, nprobe)
-    probes = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("__qvec"),
-        F.explode(probe(F.col("embedding"))).alias("__list"),
+    a1 = (
+        distances(q0, c0)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("dist", "cid", "qv")).alias("m"))
+        .select("vec_id", F.col("m.cid").alias("cluster"), F.col("m.qv").alias("qv"))
     )
-    cand = c_assigned.join(F.broadcast(probes), on="__list").filter(
-        F.col("neighbor_id") != F.col("query_id")
+    c1 = (
+        a1.select("cluster", F.posexplode("qv").alias("i", "qx"))
+        .groupBy("cluster", "i")
+        .agg(F.sum("qx").alias("s"), F.count(F.lit(1)).alias("n"))
+        .selectExpr("cluster AS cid", "i", "s div n AS comp")
+        .groupBy("cid")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "comp"))),
+                lambda x: x["comp"],
+            ).alias("cv")
+        )
     )
-    scored = cand.select("query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score"))
+    members = (
+        distances(q0, c1)
+        .groupBy("vec_id")
+        .agg(F.min(F.struct("dist", "cid", "embedding")).alias("m"))
+        .select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("m.cid").alias("cid"),
+            F.col("m.embedding").alias("__cvec"),
+        )
+    )
+    wq = Window.partitionBy("vec_id").orderBy("dist", "cid")
+    probes = (
+        distances(quantized(queries), c1)
+        .select("vec_id", "cid", "embedding", F.row_number().over(wq).alias("rn"))
+        .filter(F.col("rn") <= 2)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            "cid",
+            F.col("embedding").alias("__qvec"),
+        )
+    )
+    cand = (
+        members.join(F.broadcast(probes), "cid")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+    scored = cand.select(
+        "query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score")
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    threshold: float = 0.8,
-    n_centroids: int = 16,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023) over
-    (vec_id, embedding): cluster the embedding space with the IVF k-means
-    quantizer, then inside each
-    cluster drop every vector whose cosine to a LOWER-id cluster-mate is
-    >= ``threshold`` (keep-min, same convention as the MinHash keep list).
-
-    Returns (id, cluster, keep). The pair join is cluster-local — cost is
-    Σ n_c², never corpus-wide O(N²); at 100 TB the cluster assignment is
-    computed once at ingest and the corpus is hash-partitioned by cluster,
-    so the self-join shuffles nothing that is not already co-located. The
-    same keep-min rule applied per-cluster is embarrassingly parallel.
-    """
-    assign = _centroid_assign_udf(train_ivf_centroids(corpus, k=n_centroids))
-    a = corpus.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("vec"),
-        assign(F.col("embedding")).alias("cluster"),
-    )
-    left = a.alias("l")
-    right = a.alias("r")
-    dropped = (
-        left.join(
-            right,
-            on=[
-                F.col("l.cluster") == F.col("r.cluster"),
-                F.col("l.id") > F.col("r.id"),
-            ],
-        )
-        .select(
-            F.col("l.id").alias("id"),
-            cosine("l.vec", "r.vec").alias("__score"),
-        )
-        .filter(F.col("__score") >= threshold)
-        .select("id")
-        .distinct()
-    )
-    return a.select("id", "cluster").join(
-        dropped.withColumn("__dup", F.lit(True)), on="id", how="left"
-    ).select(
-        "id", "cluster", F.coalesce(~F.col("__dup"), F.lit(True)).alias("keep")
     )
 
 
@@ -351,7 +280,7 @@ def embedding_near_dup_pairs(
     bucket-local pairs do.
 
     The sign bits come from md5-seeded INTEGER planes over int64
-    fixed-point embeddings (see ``cosine_topk_lsh_portable``) — exact
+    fixed-point embeddings (see ``cosine_topk_lsh``) — exact
     integer projections make the bucket assignment, and therefore the full
     verified-pair output, SQL-replicable (registry ``embedding_near_dup``
     is value-checked against a DuckDB replay).
@@ -415,23 +344,21 @@ def embedding_near_dup_pairs(
     )
 
 
-def semantic_dedup_portable(
+def semantic_dedup(
     corpus: DataFrame,
     threshold: float = 0.4,
     cluster_bits: int = 4,
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) over 64-dim (vec_id, embedding) with
-    an engine-portable coarse quantizer: where ``semantic_dedup`` clusters
-    with float k-means
-    (Python-seeded — not SQL-replicable, hence its rows-only registry
-    check), this twin derives the cluster id from the ``cluster_bits``-bit
-    sign signature of EXACT integer hyperplane projections (md5-seeded
-    integer planes over int64 fixed-point embeddings, the
-    ``cosine_topk_lsh_portable`` machinery). Same keep-min decision rule,
-    same cluster-local pair join (cost Σ n_c², never corpus-wide O(N²)),
-    but every stage — cluster assignment, candidate pairs, the
-    index-ordered double cosine fold — is bitwise replicable in ANSI SQL,
-    so the registry query carries a full value oracle.
+    """SemDeDup (Abbas et al. 2023) over 64-dim (vec_id, embedding): the
+    cluster id is the ``cluster_bits``-bit sign signature of EXACT integer
+    hyperplane projections (md5-seeded integer planes over int64
+    fixed-point embeddings, the ``cosine_topk_lsh`` machinery); inside each
+    cluster every vector whose cosine to a LOWER-id cluster-mate is >=
+    ``threshold`` is dropped (keep-min, same convention as the MinHash keep
+    list). The pair join is cluster-local — cost Σ n_c², never corpus-wide
+    O(N²) — and every stage (cluster assignment, candidate pairs, the
+    index-ordered double cosine fold) is bitwise replicable in ANSI SQL,
+    so the registry queries carry a full value oracle.
 
     At 100 TB the signature is one Arrow-batched matmul pass at ingest; the
     corpus is then hash-partitioned by cluster and the self-join shuffles

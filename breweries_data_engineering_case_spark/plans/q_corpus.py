@@ -1952,7 +1952,7 @@ def q_doc_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "lang",
-            F.explode(shingle_hash_sequence("text", 2, portable=True)).alias("s"),
+            F.explode(shingle_hash_sequence("text", 2)).alias("s"),
         )
         .select("doc_id", "lang", (F.col("s") % n_buckets).alias("b"))
         # read three times: raw counts, target counts, and the scoring pass
@@ -2191,7 +2191,7 @@ def q_doc_kneser_ney_ppl_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.trim("text") != "")
     )
     th = F.transform(
-        shingle_hash_sequence("text", 1, portable=True), lambda t: t % V
+        shingle_hash_sequence("text", 1), lambda t: t % V
     )
     seq = spread(d).select("doc_id", "lang", th.alias("th"))
     sz = F.size("th")
@@ -2400,7 +2400,7 @@ def q_doremi_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.trim("text") != "")
     )
     th = F.transform(
-        shingle_hash_sequence("text", 1, portable=True), lambda t: t % V
+        shingle_hash_sequence("text", 1), lambda t: t % V
     )
     ckv = (
         spread(d)
@@ -2662,7 +2662,7 @@ def q_doc_quality_classifier_distill(spark: SparkSession, sf_dir: str) -> DataFr
     )
     # --- student features: hashed \s+ unigrams, per-doc counts
     th = F.transform(
-        shingle_hash_sequence("text", 1, portable=True), lambda t: t % V
+        shingle_hash_sequence("text", 1), lambda t: t % V
     )
     fv = (
         spread(docs.filter(F.trim("text") != "").select("doc_id", "text"))

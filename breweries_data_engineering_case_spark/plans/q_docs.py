@@ -71,22 +71,217 @@ def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fuzzy dedup (LLM-pipeline extension)
 # ---------------------------------------------------------------------------
 
-@register("doc_dedup_minhash_lsh")  # xxhash64-based → rows-only driver check
+#: Transitive-closure tail of the keep-list oracles: a ``pairs`` (id_a, id_b)
+#: CTE → symmetric edges → WITH RECURSIVE reachability → (doc_id,
+#: component, is_kept), the minimum id of each component kept. The
+#: recursive closure is O(cluster²) per component; exact verify keeps
+#: clusters tiny.
+_CLOSURE_KEEP_TAIL = """    sym AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION SELECT id_b AS a, id_a AS b FROM pairs
+    ),
+    reach(a, b) AS (
+      SELECT a, b FROM sym
+      UNION
+      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
+    )
+    SELECT a AS doc_id, LEAST(a, MIN(b)) AS component,
+           a = LEAST(a, MIN(b)) AS is_kept
+    FROM reach GROUP BY a
+    """
+
+
+def _minhash_portable_oracle(num_hashes: int = 16) -> str:
+    """Full-SQL replication of the MinHash signature pipeline: the
+    universal-hash coefficients come from the SAME seeded generator the
+    Spark operator uses, interpolated into the oracle text."""
+    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
+
+    vals = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes)))
+    return rf"""
+    WITH t AS (
+      SELECT doc_id,
+             list_transform(string_split_regex(TRIM(text), '\s+'),
+                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
+                                        AS BIGINT) % {_MH_P}) AS th
+      FROM documents
+    ),
+    sh AS (
+      SELECT DISTINCT doc_id,
+             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
+              + th[i + 3]) % {_MH_P} AS s
+      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
+    ),
+    c(i, a, b) AS (VALUES {vals}),
+    sig AS (
+      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
+      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
+    )
+    SELECT doc_id, string_agg(CAST(m AS VARCHAR), '-' ORDER BY i) AS sig
+    FROM sig GROUP BY doc_id
+    """
+
+
+def _dedup_portable_oracle(num_hashes: int = 16, bands: int = 4) -> str:
+    """Full-SQL oracle for the END-TO-END dedup decision of
+    doc_dedup_portable_pipeline: signatures → banded LSH candidates → exact
+    integer Jaccard verify → transitive closure → min-id keep list."""
+    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
+
+    vals = ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes))
+    )
+    rpb = num_hashes // bands
+    bh = "m0"
+    for r in range(1, rpb):
+        bh = f"({bh} * {_MH_B} + m{r}) % {_MH_P}"
+    mcols = ", ".join(
+        f"MAX(CASE WHEN i % {rpb} = {r} THEN m END) AS m{r}" for r in range(rpb)
+    )
+    return rf"""
+    WITH RECURSIVE t AS (
+      SELECT doc_id,
+             list_transform(string_split_regex(TRIM(text), '\s+'),
+                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
+                                        AS BIGINT) % {_MH_P}) AS th
+      FROM documents
+    ),
+    sh AS (
+      SELECT DISTINCT doc_id,
+             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
+              + th[i + 3]) % {_MH_P} AS s
+      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
+    ),
+    sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    c(i, a, b) AS (VALUES {vals}),
+    sig AS (
+      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
+      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
+    ),
+    bandm AS (
+      SELECT doc_id, i // {rpb} AS b, {mcols}
+      FROM sig GROUP BY doc_id, i // {rpb}
+    ),
+    band AS (SELECT doc_id, b, {bh} AS bh FROM bandm),
+    cand AS (
+      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+      FROM band x JOIN band y
+        ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id
+    ),
+    inter AS (
+      SELECT c.id_a, c.id_b, COUNT(*) AS icnt
+      FROM cand c
+      JOIN sh sa ON sa.doc_id = c.id_a
+      JOIN sh sb ON sb.doc_id = c.id_b AND sb.s = sa.s
+      GROUP BY c.id_a, c.id_b
+    ),
+    pairs AS (
+      SELECT id_a, id_b
+      FROM inter
+      JOIN sz za ON za.doc_id = id_a
+      JOIN sz zb ON zb.doc_id = id_b
+      WHERE icnt * 10 >= (za.n + zb.n - icnt) * 7
+    ),
+{_CLOSURE_KEEP_TAIL}"""
+
+
+def _lsh_pairs_portable_oracle(num_hashes: int = 16, bands: int = 4) -> str:
+    """Full-SQL oracle for the minhash_lsh_pairs pipeline: md5 token
+    hashes → signatures → polynomial band hash → banded candidate join →
+    exact string-shingle Jaccard verify → threshold filter. Ends at the
+    verified-pairs stage (the shape doc_dedup_minhash_lsh runs), with the
+    verify on 3-word STRING shingles exactly as the Spark operator's
+    word_shingles-based jaccard()."""
+    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
+
+    vals = ", ".join(
+        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes))
+    )
+    rpb = num_hashes // bands
+    bh = "m0"
+    for r in range(1, rpb):
+        bh = f"({bh} * {_MH_B} + m{r}) % {_MH_P}"
+    mcols = ", ".join(
+        f"MAX(CASE WHEN i % {rpb} = {r} THEN m END) AS m{r}" for r in range(rpb)
+    )
+    return rf"""
+    WITH t AS (
+      SELECT doc_id, string_split_regex(TRIM(text), '\s+') AS toks,
+             list_transform(string_split_regex(TRIM(text), '\s+'),
+                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
+                                        AS BIGINT) % {_MH_P}) AS th
+      FROM documents
+    ),
+    sh AS (
+      SELECT DISTINCT doc_id,
+             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
+              + th[i + 3]) % {_MH_P} AS s
+      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
+    ),
+    strsh AS (
+      SELECT DISTINCT doc_id,
+             toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] AS g
+      FROM t, UNNEST(range(GREATEST(len(toks) - 2, 0))) AS u(i)
+    ),
+    ssz AS (SELECT doc_id, COUNT(*) AS n FROM strsh GROUP BY doc_id),
+    c(i, a, b) AS (VALUES {vals}),
+    sig AS (
+      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
+      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
+    ),
+    bandm AS (
+      SELECT doc_id, i // {rpb} AS b, {mcols}
+      FROM sig GROUP BY doc_id, i // {rpb}
+    ),
+    band AS (SELECT doc_id, b, {bh} AS bh FROM bandm),
+    cand AS (
+      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+      FROM band x JOIN band y
+        ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id
+    ),
+    inter AS (
+      SELECT c.id_a, c.id_b, COUNT(*) AS icnt
+      FROM cand c
+      JOIN strsh sa ON sa.doc_id = c.id_a
+      JOIN strsh sb ON sb.doc_id = c.id_b AND sb.g = sa.g
+      GROUP BY c.id_a, c.id_b
+    ),
+    j AS (
+      SELECT i.id_a, i.id_b,
+             CAST(i.icnt AS DOUBLE) / (za.n + zb.n - i.icnt) AS jaccard
+      FROM inter i
+      JOIN ssz za ON za.doc_id = i.id_a
+      JOIN ssz zb ON zb.doc_id = i.id_b
+    )
+    SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.7
+    """
+
+
+@register("doc_dedup_minhash_lsh", _lsh_pairs_portable_oracle(48, 12))
 def q_doc_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(64) + LSH(16 bands × 4) near-dup pairs over documents,
-    verified by exact shingle Jaccard >= 0.7. Uses Spark-internal xxhash64
-    (no cross-engine twin) ⇒ rows-only check; the Jaccard verifier itself is
-    oracle-checked separately (ngram_jaccard_pairs)."""
+    """MinHash(48) + LSH(12 bands × 4) near-dup pairs over documents,
+    verified by exact shingle Jaccard >= 0.7. The DuckDB oracle replays
+    every stage: md5 token hashes, signatures, polynomial band hashes, the
+    banded candidate join and the string-shingle Jaccard verify."""
     d = table_scan(spark, sf_dir, "documents")
     return minhash_lsh_pairs(d, threshold=0.7)
 
 
-@register("doc_dedup_keep_list")  # minhash-derived edges → rows-only check
+@register(
+    "doc_dedup_keep_list",
+    f"""
+    SELECT doc_id AS dropped_doc_id, component AS kept_doc_id FROM (
+    WITH RECURSIVE pairs AS ({_lsh_pairs_portable_oracle(48, 12)}),
+{_CLOSURE_KEEP_TAIL})
+    WHERE doc_id <> component
+    """,
+)
 def q_doc_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END dedup decision: MinHash-LSH verified pairs → connected
     components (duplicates are transitive) → one canonical survivor per
     cluster. Returns only the dropped docs + their surviving representative
-    (empty ⇒ corpus is already unique at the 0.7 Jaccard level)."""
+    (empty ⇒ corpus is already unique at the 0.7 Jaccard level). The
+    oracle closes doc_dedup_minhash_lsh's pairs transitively in SQL."""
     from ..operators.components import keep_one_per_cluster
 
     d = table_scan(spark, sf_dir, "documents")
@@ -99,10 +294,15 @@ def q_doc_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("doc_minhash_signature")  # xxhash64-based → rows-only driver check
+@register(
+    "doc_minhash_signature",
+    "SELECT doc_id, "
+    + ", ".join(f"CAST(split_part(sig, '-', {i + 1}) AS BIGINT) AS mh{i}" for i in range(4))
+    + f" FROM ({_minhash_portable_oracle(64)})",
+)
 def q_doc_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document MinHash signature head (first 4 of 64 hashes) — exercises
-    the full signature pipeline deterministically (same output every run)."""
+    """Per-document MinHash signature head (first 4 of 64 hashes), checked
+    against the head of the full 64-hash SQL replay."""
     d = table_scan(spark, sf_dir, "documents")
     sigs = minhash_signatures(d, num_hashes=64)
     return sigs.select(
@@ -1156,132 +1356,21 @@ def q_doc_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_portable_oracle(num_hashes: int = 16) -> str:
-    """Full-SQL replication of the portable-base MinHash pipeline: the
-    universal-hash coefficients come from the SAME seeded generator the
-    Spark operator uses, interpolated into the oracle text."""
-    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
-
-    vals = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes)))
-    return rf"""
-    WITH t AS (
-      SELECT doc_id,
-             list_transform(string_split_regex(TRIM(text), '\s+'),
-                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
-                                        AS BIGINT) % {_MH_P}) AS th
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
-              + th[i + 3]) % {_MH_P} AS s
-      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
-    ),
-    c(i, a, b) AS (VALUES {vals}),
-    sig AS (
-      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
-      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
-    )
-    SELECT doc_id, string_agg(CAST(m AS VARCHAR), '-' ORDER BY i) AS sig
-    FROM sig GROUP BY doc_id
-    """
-
-
 @register("doc_minhash_portable_sig", _minhash_portable_oracle(16))
 def q_doc_minhash_portable_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures on the PORTABLE hash base, value-checked end to
     end: token md5-prefix hash → rolling 3-gram shingle hash → 16 seeded
     universal min-hashes, with the DuckDB oracle re-running the identical
     arithmetic (the universal-hash coefficients are interpolated from the
-    same seeded generator into the SQL). This anchors the whole MinHash
-    family — the production path (doc_minhash_signature /
-    doc_dedup_minhash_lsh) keeps Spark-internal xxhash64 for speed and
-    differs ONLY in that one base-hash call, so a value-exact check here
-    plus the ground-truth recall tests there covers both. Signature emitted
-    as a '-'-joined string (the driver value-hash can't hash arrays)."""
-    from ..operators.fuzzy_dedup import minhash_signatures
-
+    same seeded generator into the SQL). doc_minhash_signature checks the
+    head of the 64-hash signature the same way. Signature emitted as a
+    '-'-joined string (the driver value-hash can't hash arrays)."""
     d = table_scan(spark, sf_dir, "documents")
-    sig = minhash_signatures(d, num_hashes=16, shingle_n=3, portable=True)
+    sig = minhash_signatures(d, num_hashes=16, shingle_n=3)
     return sig.select(
         F.col("id").alias("doc_id"),
         F.array_join(F.col("sig"), "-").alias("sig"),
     )
-
-
-def _dedup_portable_oracle(num_hashes: int = 16, bands: int = 4) -> str:
-    """Full-SQL oracle for the END-TO-END portable dedup decision:
-    signatures → banded LSH candidates → exact integer Jaccard verify →
-    transitive closure (WITH RECURSIVE) → min-id keep list."""
-    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
-
-    vals = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes))
-    )
-    rpb = num_hashes // bands
-    bh = "m0"
-    for r in range(1, rpb):
-        bh = f"({bh} * {_MH_B} + m{r}) % {_MH_P}"
-    mcols = ", ".join(
-        f"MAX(CASE WHEN i % {rpb} = {r} THEN m END) AS m{r}" for r in range(rpb)
-    )
-    return rf"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id,
-             list_transform(string_split_regex(TRIM(text), '\s+'),
-                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
-                                        AS BIGINT) % {_MH_P}) AS th
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
-              + th[i + 3]) % {_MH_P} AS s
-      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
-    ),
-    sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    c(i, a, b) AS (VALUES {vals}),
-    sig AS (
-      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
-      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
-    ),
-    bandm AS (
-      SELECT doc_id, i // {rpb} AS b, {mcols}
-      FROM sig GROUP BY doc_id, i // {rpb}
-    ),
-    band AS (SELECT doc_id, b, {bh} AS bh FROM bandm),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-      FROM band x JOIN band y
-        ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS icnt
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.id_a
-      JOIN sh sb ON sb.doc_id = c.id_b AND sb.s = sa.s
-      GROUP BY c.id_a, c.id_b
-    ),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sz za ON za.doc_id = id_a
-      JOIN sz zb ON zb.doc_id = id_b
-      WHERE icnt * 10 >= (za.n + zb.n - icnt) * 7
-    ),
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b AS a, id_a AS b FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM sym
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    )
-    SELECT a AS doc_id, LEAST(a, MIN(b)) AS component,
-           a = LEAST(a, MIN(b)) AS is_kept
-    FROM reach GROUP BY a
-    """
 
 
 @register("doc_dedup_portable_pipeline", _dedup_portable_oracle(16, 4))
@@ -1294,92 +1383,24 @@ def q_doc_dedup_portable_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     replays every stage in SQL, closing the component step with a
     WITH RECURSIVE transitive closure — so the thing that actually deletes
     documents at 100 TB (the keep list) is what's checked, not just an
-    intermediate. The production path (doc_dedup_minhash_lsh /
-    doc_dedup_keep_list, 48-hash xxhash64) differs only in hash base and
-    band count; its recall is anchored separately in
-    tests/test_minhash_ground_truth.py. Closure note: the oracle's
+    intermediate. doc_dedup_keep_list runs the same hash base at 48/12
+    with the string-shingle verify. Closure note: the oracle's
     recursive closure is O(cluster²) per component — exact-verify keeps
     clusters tiny; Spark's pointer-jumping loop is the form that scales."""
     from ..operators.components import connected_components
-    from ..operators.fuzzy_dedup import (
-        _MH_B,
-        _MH_P,
-        _minhash_cols,
-        shingle_hashes,
-    )
+    from ..operators.fuzzy_dedup import minhash_lsh_candidates, shingle_hashes
 
     d = table_scan(spark, sf_dir, "documents")
-    # Materialize the md5-portable shingle arrays ONCE: both the signature
-    # stage and the exact-Jaccard verify read this skinny (id, sh) table.
-    # Without it the corpus is tokenized+md5-hashed twice, and the explode
-    # feeding the 16 min-aggregates re-evaluates the (expensive) portable
-    # hash expression instead of reading a materialized array — measured
-    # 12 s → ~5 s cold at sf0.1 for the whole pipeline. Bytes are
-    # |shingles| longs per doc (MEMORY_AND_DISK), far below the raw text.
-    # spread(): the md5 roll is CPU-bound, and a single-file scan would
-    # otherwise run it on one core (4.2 s → 1.4 s at sf0.1; no-op at scale).
-    shs_all = (
-        d.select("doc_id", "text")
-        .transform(spread)
-        .select(
-            F.col("doc_id").alias("id"),
-            shingle_hashes("text", 3, portable=True).alias("sh"),
-        )
-        .transform(cached)
-    )
-    num_hashes = 16
-    mins = _minhash_cols(
-        shs_all.select("id", F.col("sh").alias("__h")), "id", num_hashes
-    )
-    sig = mins.select(
-        "id",
-        F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig"),
-    )
-    bands, rpb = 4, 4
-
-    def band_hash_sql(b: int) -> str:
-        h = f"sig[{b * rpb}]"
-        for r in range(1, rpb):
-            h = f"pmod({h} * {_MH_B} + sig[{b * rpb + r}], {_MH_P})"
-        return h
-
-    # one SQL parse for the band array (r14, same as operators/fuzzy_dedup):
-    # the Column build was ~8 py4j round trips per band per construction
-    banded = (
-        sig.select(
-            F.col("id"),
-            F.explode(
-                F.expr(
-                    "array("
-                    + ", ".join(
-                        f"named_struct('b', {b}, 'bh', {band_hash_sql(b)})"
-                        for b in range(bands)
-                    )
-                    + ")"
-                )
-            ).alias("e"),
-        )
-        .select("id", "e.b", "e.bh")
-        .transform(cached)
-    )
-    x, y = banded.alias("x"), banded.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.b") == F.col("y.b"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-        .transform(cached)
-    )
+    cand = minhash_lsh_candidates(d, 16, 4, 3)
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .unionByName(cand.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    sub = shs_all.join(F.broadcast(cand_ids), "id", "left_semi")
+    # verify on the hashed shingle sets, recomputed only for candidate ids
+    sub = d.join(
+        F.broadcast(cand_ids), F.col("doc_id") == cand_ids["id"], "left_semi"
+    ).select(F.col("doc_id").alias("id"), shingle_hashes("text", 3).alias("sh"))
     a = sub.select(F.col("id").alias("id_a"), F.col("sh").alias("__sa"))
     b = sub.select(F.col("id").alias("id_b"), F.col("sh").alias("__sb"))
     inter = F.size(F.array_intersect("__sa", "__sb"))
@@ -1411,94 +1432,16 @@ def q_doc_dedup_portable_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _lsh_pairs_portable_oracle(num_hashes: int = 16, bands: int = 4) -> str:
-    """Full-SQL oracle for the PRODUCTION minhash_lsh_pairs pipeline on the
-    portable base: signatures → polynomial band hash → banded candidate
-    join → exact string-shingle Jaccard verify → threshold filter. Ends at
-    the verified-pairs stage (the shape doc_dedup_minhash_lsh runs), with
-    the verify on 3-word STRING shingles exactly as the Spark operator's
-    word_shingles-based jaccard()."""
-    from ..operators.fuzzy_dedup import _MH_B, _MH_P, _mh_coeffs
-
-    vals = ", ".join(
-        f"({i}, {a}, {b})" for i, (a, b) in enumerate(_mh_coeffs(num_hashes))
-    )
-    rpb = num_hashes // bands
-    bh = "m0"
-    for r in range(1, rpb):
-        bh = f"({bh} * {_MH_B} + m{r}) % {_MH_P}"
-    mcols = ", ".join(
-        f"MAX(CASE WHEN i % {rpb} = {r} THEN m END) AS m{r}" for r in range(rpb)
-    )
-    return rf"""
-    WITH t AS (
-      SELECT doc_id, string_split_regex(TRIM(text), '\s+') AS toks,
-             list_transform(string_split_regex(TRIM(text), '\s+'),
-                            tok -> CAST(concat('0x', substr(md5(tok), 1, 15))
-                                        AS BIGINT) % {_MH_P}) AS th
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             ((th[i + 1] * {_MH_B} + th[i + 2]) % {_MH_P} * {_MH_B}
-              + th[i + 3]) % {_MH_P} AS s
-      FROM t, UNNEST(range(GREATEST(len(th) - 2, 0))) AS u(i)
-    ),
-    strsh AS (
-      SELECT DISTINCT doc_id,
-             toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] AS g
-      FROM t, UNNEST(range(GREATEST(len(toks) - 2, 0))) AS u(i)
-    ),
-    ssz AS (SELECT doc_id, COUNT(*) AS n FROM strsh GROUP BY doc_id),
-    c(i, a, b) AS (VALUES {vals}),
-    sig AS (
-      SELECT doc_id, c.i, MIN((sh.s * c.a + c.b) % {_MH_P}) AS m
-      FROM sh CROSS JOIN c GROUP BY doc_id, c.i
-    ),
-    bandm AS (
-      SELECT doc_id, i // {rpb} AS b, {mcols}
-      FROM sig GROUP BY doc_id, i // {rpb}
-    ),
-    band AS (SELECT doc_id, b, {bh} AS bh FROM bandm),
-    cand AS (
-      SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-      FROM band x JOIN band y
-        ON x.b = y.b AND x.bh = y.bh AND x.doc_id < y.doc_id
-    ),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS icnt
-      FROM cand c
-      JOIN strsh sa ON sa.doc_id = c.id_a
-      JOIN strsh sb ON sb.doc_id = c.id_b AND sb.g = sa.g
-      GROUP BY c.id_a, c.id_b
-    ),
-    j AS (
-      SELECT i.id_a, i.id_b,
-             CAST(i.icnt AS DOUBLE) / (za.n + zb.n - i.icnt) AS jaccard
-      FROM inter i
-      JOIN ssz za ON za.doc_id = i.id_a
-      JOIN ssz zb ON zb.doc_id = i.id_b
-    )
-    SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.7
-    """
-
-
 @register("doc_minhash_portable_lsh_pairs", _lsh_pairs_portable_oracle(16, 4))
 def q_doc_minhash_portable_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION MinHash-LSH pair pipeline (operators/fuzzy_dedup.
-    minhash_lsh_pairs — the exact function doc_dedup_minhash_lsh runs) on
-    the portable base, value-checked end to end: md5-prefix token hashes,
-    polynomial band hash, banded candidate self-join, and the SAME
-    string-shingle Jaccard verify stage, so the banded-join + verify logic
-    the production (xxhash64, 48/12) query shares is oracle-checked here
-    while the production entry keeps the fast hash (its recall is anchored
-    in tests/test_minhash_ground_truth.py). 16 hashes / 4 bands matches
-    doc_minhash_portable_sig's geometry; threshold 0.7 matches production."""
-    from ..operators.fuzzy_dedup import minhash_lsh_pairs
-
+    """The MinHash-LSH pair pipeline (operators/fuzzy_dedup.
+    minhash_lsh_pairs — the function doc_dedup_minhash_lsh runs at 48/12)
+    at the 16/4 geometry of doc_minhash_portable_sig, value-checked end to
+    end: md5-prefix token hashes, polynomial band hash, banded candidate
+    self-join and the string-shingle Jaccard verify at threshold 0.7."""
     d = table_scan(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        d, num_hashes=16, bands=4, shingle_n=3, threshold=0.7, portable=True
+        d, num_hashes=16, bands=4, shingle_n=3, threshold=0.7
     ).select("id_a", "id_b", "jaccard")
 
 
@@ -1877,7 +1820,7 @@ def q_doc_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EXACT 3-shingle Jaccard ≥ 0.7 ground truth, on a fixed 400-doc
     probe slice so the O(n²) truth stays bounded at any SF. Uses the
     production candidate stage (operators/fuzzy_dedup.minhash_lsh_candidates,
-    portable base, 16/4 geometry) and the O(n²) exact join as ground
+    16/4 geometry) and the O(n²) exact join as ground
     truth; the comparison is a full-outer pair join reduced to five
     integers — all BIGINT, bitwise cross-engine. The counts themselves are
     data-dependent, which is exactly the point: the oracle recomputes both
@@ -1886,7 +1829,7 @@ def q_doc_lsh_candidate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sub = table_scan(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     cand = minhash_lsh_candidates(
-        sub, num_hashes=16, bands=4, shingle_n=3, portable=True
+        sub, num_hashes=16, bands=4, shingle_n=3
     ).withColumn("c", F.lit(1))
     truth = (
         ngram_jaccard_pairs(sub, shingle_n=3, threshold=0.7)
@@ -2233,7 +2176,7 @@ def q_doc_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg = d.select(
         "doc_id",
         F.posexplode(
-            shingle_hash_sequence("text", 3, portable=True)
+            shingle_hash_sequence("text", 3)
         ).alias("pos", "h"),
     )
     nkg = kg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nk"))

@@ -139,11 +139,11 @@ def q_ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL. Candidates only from matching buckets, then exact cosine re-score
     (index-ordered double fold, bitwise cross-engine). Its recall against
     exact top-k is anchored in tests/test_ann_recall.py."""
-    from ..operators.similarity import cosine_topk_lsh_portable
+    from ..operators.similarity import cosine_topk_lsh
 
     emb = table_scan(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
-    return cosine_topk_lsh_portable(emb, queries_df, k=10)
+    return cosine_topk_lsh(emb, queries_df, k=10)
 
 
 @register(
@@ -156,24 +156,16 @@ def q_ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed ANN: k-means coarse quantizer (deterministic init, 3
-    Lloyd iterations), corpus probed only in the query's 4 nearest of 16
-    inverted lists.
-
-    Bounded oracle (VERDICT r8 #1): the IVF results themselves depend on
-    float k-means and are not DuckDB-reproducible, so the query emits the
-    *recall witness* instead — the exact brute-force top-10 rides the same
-    plan, and ``recall_pass`` asserts IVF recall@10 ≥ 0.5 per query
-    (measured 0.7–0.9 at sf0.01; bound chosen with 0.2 slack so float
-    last-ulp drift in `avg`-built centroids can never flip it). The oracle
-    asserts every query id reaches the bound, making rows+schema+hash all
-    checkable. The fully value-checked twin is ``ann_cosine_topk_ivf_portable``
-    (int64 fixed-point quantizer); per-neighbor recall is also anchored in
-    tests/test_ann_recall.py, and the Lloyd update kernel is oracle-checked
-    bitwise in ``kmeans_lloyd_step_int``."""
+    """IVF-bucketed ANN recall witness: the exact int64 k-means quantizer of
+    ``cosine_topk_ivf`` (8 inverted lists, each query probes its 2 nearest),
+    measured against the exact brute-force top-10 that rides the same plan.
+    ``recall_pass`` asserts IVF recall@10 ≥ 0.5 per query (at least 7 of 10
+    found at sf0.001, sf0.01 and sf0.1); the oracle asserts every query id
+    reaches the bound. The IVF neighbors themselves are value-checked in
+    ``ann_cosine_topk_ivf_portable``."""
     emb = table_scan(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
-    ivf = cosine_topk_ivf(emb, queries_df, k=10, n_centroids=16, nprobe=4)
+    ivf = cosine_topk_ivf(emb, queries_df, k=10)
     exact = cosine_topk(emb, queries_df, k=10).select(
         "query_id", "neighbor_id"
     )
@@ -319,17 +311,45 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scaled.select("vec_id", "scale", F.array_join(q, ",").alias("q"))
 
 
-@register("embedding_semantic_dedup")  # k-means UDF → rows-only
+_SEMDD_PORTABLE_ORACLE = """
+    WITH """ + _lsh_band_cte("semdd", 4, 4) + """,
+    cl AS (SELECT vec_id AS id, band_sig AS cluster FROM band),
+    pr AS (
+      SELECT l.id AS id, r.id AS rid
+      FROM cl l JOIN cl r ON l.cluster = r.cluster AND l.id > r.id
+    ),
+    p AS (
+      SELECT pr.id, pr.rid,
+             UNNEST(x.embedding) AS xa, UNNEST(y.embedding) AS xb,
+             UNNEST(range(len(x.embedding))) AS i
+      FROM pr JOIN embeddings x ON x.vec_id = pr.id
+              JOIN embeddings y ON y.vec_id = pr.rid
+    ),
+    d AS (
+      SELECT id, rid,
+             SUM(CAST(xa AS DOUBLE) * CAST(xb AS DOUBLE) ORDER BY i) AS dot,
+             SUM(CAST(xa AS DOUBLE) * CAST(xa AS DOUBLE) ORDER BY i) AS na,
+             SUM(CAST(xb AS DOUBLE) * CAST(xb AS DOUBLE) ORDER BY i) AS nb
+      FROM p GROUP BY id, rid
+    ),
+    dr AS (
+      SELECT DISTINCT id FROM d
+      WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.4
+    )
+    SELECT cl.id, cl.cluster, dr.id IS NULL AS keep
+    FROM cl LEFT JOIN dr ON cl.id = dr.id
+"""
+
+
+@register("embedding_semantic_dedup", _SEMDD_PORTABLE_ORACLE)
 def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic dedup over the embeddings table: IVF k-means
+    """SemDeDup semantic dedup over the embeddings table: 16 integer-plane
     clusters, within-cluster cosine >= 0.4 to a lower id → drop (keep-min).
     Emits ALL vectors with a keep flag so the driver row is never vacuous;
     planted-duplicate recovery is asserted in tests/test_semantic_dedup.py.
-    The k-means quantizer is Python-seeded (not SQL-expressible) → rows-only
-    check; ``embedding_semantic_dedup_portable`` runs the same keep-min
-    decision on an integer-plane quantizer with a FULL value oracle."""
+    Same operator and oracle as ``embedding_semantic_dedup_portable``."""
     emb = table_scan(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, threshold=0.4, n_centroids=16).orderBy("id")
+    return semantic_dedup(emb, threshold=0.4, cluster_bits=4).orderBy("id")
 
 
 _POWER_ITER = """
@@ -478,8 +498,8 @@ def q_embedding_top_pc_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def q_kmeans_lloyd_step_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One exact Lloyd iteration of k-means in int64 fixed point — the
-    distributed-ML kernel under ann_cosine_topk_ivf's float quantizer,
-    made bitwise oracle-checkable: embeddings quantize to int64
+    distributed-ML kernel under cosine_topk_ivf's quantizer, bitwise
+    oracle-checkable: embeddings quantize to int64
     (ROUND(x·10⁶), the NOTES portable-reduction idiom), the 8 seed
     centroids (vec_id < 8) broadcast, squared-L2 distances fold as exact
     integers JVM-side (zip_with + aggregate — no UDF), argmin tiebreaks
@@ -517,52 +537,16 @@ def q_kmeans_lloyd_step_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDD_PORTABLE_ORACLE = """
-    WITH """ + _lsh_band_cte("semdd", 4, 4) + """,
-    cl AS (SELECT vec_id AS id, band_sig AS cluster FROM band),
-    pr AS (
-      SELECT l.id AS id, r.id AS rid
-      FROM cl l JOIN cl r ON l.cluster = r.cluster AND l.id > r.id
-    ),
-    p AS (
-      SELECT pr.id, pr.rid,
-             UNNEST(x.embedding) AS xa, UNNEST(y.embedding) AS xb,
-             UNNEST(range(len(x.embedding))) AS i
-      FROM pr JOIN embeddings x ON x.vec_id = pr.id
-              JOIN embeddings y ON y.vec_id = pr.rid
-    ),
-    d AS (
-      SELECT id, rid,
-             SUM(CAST(xa AS DOUBLE) * CAST(xb AS DOUBLE) ORDER BY i) AS dot,
-             SUM(CAST(xa AS DOUBLE) * CAST(xa AS DOUBLE) ORDER BY i) AS na,
-             SUM(CAST(xb AS DOUBLE) * CAST(xb AS DOUBLE) ORDER BY i) AS nb
-      FROM p GROUP BY id, rid
-    ),
-    dr AS (
-      SELECT DISTINCT id FROM d
-      WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.4
-    )
-    SELECT cl.id, cl.cluster, dr.id IS NULL AS keep
-    FROM cl LEFT JOIN dr ON cl.id = dr.id
-"""
-
-
 @register("embedding_semantic_dedup_portable", _SEMDD_PORTABLE_ORACLE)
 def q_embedding_semantic_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with the portable integer-plane coarse quantizer — the
-    oracle-checkable twin of embedding_semantic_dedup (whose float k-means
-    is Python-seeded, hence rows-only): 16 clusters from the 4-bit exact
-    integer projection signature, keep-min within cluster at cosine ≥ 0.4
-    (index-ordered double fold, bitwise cross-engine). The whole decision
-    pipeline — cluster assignment, candidate pairs, verify, keep flags —
-    is value-checked against the DuckDB replay, closing the same
-    trust-the-pytest gap the portable MinHash pipeline closed for text
-    dedup. Emits ALL vectors with keep flags so the row is never
-    vacuous."""
-    from ..operators.similarity import semantic_dedup_portable
-
+    """SemDeDup with the integer-plane coarse quantizer: 16 clusters from
+    the 4-bit exact integer projection signature, keep-min within cluster
+    at cosine ≥ 0.4 (index-ordered double fold, bitwise cross-engine). The
+    whole decision pipeline — cluster assignment, candidate pairs, verify,
+    keep flags — is value-checked against the DuckDB replay. Emits ALL
+    vectors with keep flags so the row is never vacuous."""
     emb = table_scan(spark, sf_dir, "embeddings")
-    return semantic_dedup_portable(emb, threshold=0.4, cluster_bits=4)
+    return semantic_dedup(emb, threshold=0.4, cluster_bits=4)
 
 
 @register(
@@ -766,93 +750,16 @@ _IVF_PORTABLE_ORACLE = """
 
 @register("ann_cosine_topk_ivf_portable", _IVF_PORTABLE_ORACLE)
 def q_ann_cosine_topk_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN on the PORTABLE integer coarse quantizer — the fully
-    oracle-checked twin of ``ann_cosine_topk_ivf``, closing the last
-    rows-only family the same way the MinHash/SemDeDup portables did:
-    centroids come from one exact int64 Lloyd update (the bitwise-checked
-    kernel of kmeans_lloyd_converge_int: deterministic init on vec_id<8,
-    integer distance folds, trunc-consistent `div` mean), so the inverted
-    lists, the queries' top-2 probe lists, the candidate set, and the
-    exact re-scored ranks (index-ordered double fold) all replay in plain
-    SQL. Shape is the production IVF shape: corpus assigned once (scan ×
-    broadcast 8-row centroid table), queries probe nprobe/k of the lists,
-    candidates only from probed lists; recall vs the exact baseline is
-    asserted in tests/test_ann_recall.py (measured 0.90 at sf0.01 with
-    nprobe=2 of 8 lists)."""
-    from ..functions.vectors import cosine
-    from ..operators.similarity import quantize_embedding
-
+    """IVF ANN on the exact integer coarse quantizer
+    (operators/similarity.cosine_topk_ivf): centroids come from one exact
+    int64 Lloyd update (the bitwise-checked kernel of
+    kmeans_lloyd_converge_int: deterministic init on vec_id<8, integer
+    distance folds, trunc-consistent `div` mean), so the inverted lists,
+    the queries' top-2 probe lists, the candidate set, and the exact
+    re-scored ranks (index-ordered double fold) all replay in plain SQL.
+    Recall vs the exact baseline is asserted in tests/test_ann_recall.py."""
     emb = table_scan(spark, sf_dir, "embeddings")
-    q0 = emb.select(
-        "vec_id", "embedding", quantize_embedding("embedding").alias("qv")
-    ).transform(cached)
-
-    def distances(cents: DataFrame) -> DataFrame:
-        diff = F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b))
-        dist = F.aggregate(diff, F.lit(0).cast("long"), lambda acc, x: acc + x)
-        return q0.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "embedding", "qv", "cid", dist.alias("dist")
-        )
-
-    c0 = q0.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
-    )
-    a1 = (
-        distances(c0)
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cid", "qv")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cluster"), F.col("m.qv").alias("qv"))
-    )
-    c1 = (
-        a1.select("cluster", F.posexplode("qv").alias("i", "qx"))
-        .groupBy("cluster", "i")
-        .agg(F.sum("qx").alias("s"), F.count(F.lit(1)).alias("n"))
-        .selectExpr("cluster AS cid", "i", "s div n AS comp")
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "comp"))),
-                lambda x: x["comp"],
-            ).alias("cv")
-        )
-    )
-    d2 = distances(c1).transform(cached)
-    members = (
-        d2.groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cid", "embedding")).alias("m"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("m.cid").alias("cid"),
-            F.col("m.embedding").alias("__cvec"),
-        )
-    )
-    wq = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    probes = (
-        d2.filter(F.col("vec_id") < 5)
-        .select(
-            "vec_id", "cid", "embedding", F.row_number().over(wq).alias("rn")
-        )
-        .filter(F.col("rn") <= 2)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cid",
-            F.col("embedding").alias("__qvec"),
-        )
-    )
-    cand = (
-        members.join(F.broadcast(probes), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.select(
-        "query_id", "neighbor_id", cosine("__qvec", "__cvec").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return cosine_topk_ivf(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 @register(

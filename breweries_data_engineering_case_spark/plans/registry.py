@@ -54,8 +54,7 @@ _WINDOW_PRIORITY: list[str] = [
     # of them, so their oracle evidence is builder-run only
     # (REPLICA_r14.json + per-rewrite 3-SF replicas). Seat every
     # rewritten query at the head so CORRECTNESS_r15.json certifies them
-    # driver-grade. (doc_dedup_minhash_lsh is the designed no_oracle
-    # rows-only row, accepted since r8.)
+    # driver-grade.
     "events_markov_removal_attribution",
     "events_markov_absorption_4step",
     "events_shapley_attribution",

@@ -170,16 +170,10 @@ def test_window_leads_and_plans_name_every_import():
     assert not unused, f"{len(unused)} unused imports: {unused}"
 
 
-@pytest.mark.parametrize(
-    "name", sorted(set(registry.QUERIES) - set(registry.ORACLES))
-)
-def test_rows_only_query_executes_deterministically(spark, sf_dir, name):
-    """Rows-only queries (no SQL oracle) must still execute, return a stable
-    schema, and be run-to-run deterministic."""
-    fn = registry.QUERIES[name]
-    df1 = fn(spark, sf_dir)
-    rows1 = sorted(map(str, df1.collect()))
-    df2 = fn(spark, sf_dir)
-    rows2 = sorted(map(str, df2.collect()))
-    assert df1.columns == df2.columns
-    assert rows1 == rows2, f"{name} is not deterministic across runs"
+def test_every_query_has_an_oracle():
+    """Every registry query carries a DuckDB value oracle: a rows-only
+    check shows only that a query runs, not what it returns."""
+    no_oracle = sorted(set(registry.QUERIES) - set(registry.ORACLES))
+    assert set(registry.QUERIES) == set(registry.ORACLES), (
+        f"queries without an oracle: {no_oracle}"
+    )

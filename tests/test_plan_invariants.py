@@ -386,16 +386,14 @@ def test_shuffle_hash_hint_honored(spark, sf_dir):
 
 def test_no_input_row_collect_in_operators():
     """VERDICT r5 #3: no operator may ``.collect()`` input rows — every
-    remaining collect in ``operators/`` must be a bounded reduction (the
-    k-means init/means in train_ivf_centroids, which move only k centroids /
-    k x dim aggregate cells to the driver, never a row per input)."""
+    remaining collect in ``operators/`` must be a bounded reduction, never
+    a row per input."""
     import pathlib
     import re
 
     pkg = pathlib.Path(__file__).parent.parent / "breweries_data_engineering_case_spark"
     allowed = {
         # (file, containing function) pairs audited as bounded reductions
-        ("operators/similarity.py", "train_ivf_centroids"),
         # per-round convergence flag: a 1-row MAX aggregate (map-side
         # combinable) — the scalar control-flow read every iterative
         # dataflow needs; never input rows. Round 12 adds the

@@ -29,10 +29,10 @@ from breweries_data_engineering_case_spark.plans import registry
 #: (broadcast) side — the documented exact baselines and scalar broadcasts
 BNLJ_OK = {
     "ann_cosine_topk",  # exact baseline: ≤50 query vectors broadcast
-    "ann_cosine_topk_ivf",  # since r9 the bounded oracle rides an exact
+    "ann_cosine_topk_ivf",  # the bounded oracle rides an exact
     #   brute-force recall witness in the same plan (≤5 query vectors
-    #   broadcast, corpus streamed — the ann_cosine_topk shape); the IVF
-    #   serving path itself stays equi-join-only
+    #   broadcast, corpus streamed — the ann_cosine_topk shape), and the
+    #   IVF path broadcasts ≤8-row centroid tables
     "embedding_matryoshka_recall",  # two exact ground-truth searches,
     #   5-query broadcast each (the ablation harness, not the serving path)
     "embedding_near_dup_exact",  # exact all-pairs ground-truth twin
@@ -347,9 +347,8 @@ _GLOBAL_WINDOW_RE = re.compile(
 PANDAS_OK = {
     "embedding_near_dup",  # hyperplane-sign UDF over embeddings
     "ann_cosine_topk_lsh",
-    "ann_cosine_topk_ivf",
     "grouped_zscore_pandas",  # the applyInPandas twin, by definition
-    "embedding_semantic_dedup",  # k-means centroid-assign UDF
+    "embedding_semantic_dedup",  # integer hyperplane-sign UDF
     "multimodal_feature_extract",
     "multimodal_real_codec_extract",
     "multimodal_resize",  # nearest-neighbor numpy kernel over mapInPandas

@@ -117,7 +117,7 @@ def test_semantic_dedup_portable_keep_min_exact_replay(spark, sf_dir):
 
 def test_semantic_dedup_portable_drops_planted_duplicate(spark, sf_dir):
     from breweries_data_engineering_case_spark.operators.similarity import (
-        semantic_dedup_portable,
+        semantic_dedup,
     )
 
     emb = table_scan(spark, sf_dir, "embeddings")
@@ -125,7 +125,7 @@ def test_semantic_dedup_portable_drops_planted_duplicate(spark, sf_dir):
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
     )
     planted = emb.unionByName(donor)
-    out = semantic_dedup_portable(planted, threshold=0.4, cluster_bits=4)
+    out = semantic_dedup(planted, threshold=0.4, cluster_bits=4)
     flags = {r.id: r.keep for r in out.collect()}
     assert flags[1_000_003] is False  # identical vector, lower-id donor wins
     assert flags[3] is True or any(

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.operators.similarity import semantic_dedup
 
-DIM = 8
+DIM = 64  # the integer planes of semantic_dedup are 64-dim
+
+#: base axes of the three planted clusters: each base, its near-dup and its
+#: distinct member (jittered toward axis + 3) share one 4-bit sign signature
+#: of the md5-seeded integer planes, and the three signatures differ
+AXES = (1, 6, 17)
 
 
 def _unit(axis: int) -> list[float]:
@@ -31,17 +36,15 @@ def _jitter(base: list[float], eps: float, axis: int) -> list[float]:
 
 def test_planted_near_dups_dropped_keep_min(spark):
     rows = []
-    # three well-separated clusters on axes 0/1/2; each has a base vector,
-    # one near-dup (cos ~ 0.995), and one distinct member (cos ~ 0.7). The
-    # bases take ids 0-2, so the k-means init (the first k vectors by id)
-    # seeds one centroid per cluster.
-    for c in range(3):
-        base = _unit(c)
+    # three well-separated clusters on AXES; each has a base vector, one
+    # near-dup (cos ~ 0.995), and one distinct member (cos ~ 0.7)
+    for c, axis in enumerate(AXES):
+        base = _unit(axis)
         rows.append((c, base))
-        rows.append((c + 3, _jitter(base, 0.1, (c + 3) % DIM)))  # near-dup
-        rows.append((c + 6, _jitter(base, 1.0, (c + 3) % DIM)))  # distinct
+        rows.append((c + 3, _jitter(base, 0.1, axis + 3)))  # near-dup
+        rows.append((c + 6, _jitter(base, 1.0, axis + 3)))  # distinct
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<double>")
-    out = semantic_dedup(df, threshold=0.9, n_centroids=3).collect()
+    out = semantic_dedup(df, threshold=0.9, cluster_bits=4).collect()
     decisions = {r["id"]: r["keep"] for r in out}
     assert len(decisions) == 9
     assert len({r["cluster"] for r in out}) == 3
@@ -56,7 +59,7 @@ def test_agrees_with_exact_all_pairs_within_cluster(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .limit(200)
     )
-    got = semantic_dedup(emb, threshold=0.4, n_centroids=8)
+    got = semantic_dedup(emb, threshold=0.4, cluster_bits=3)
     rows = got.collect()
     by_cluster: dict[int, list[int]] = {}
     for r in rows:
@@ -82,8 +85,8 @@ def test_agrees_with_exact_all_pairs_within_cluster(spark, sf_dir):
 
 def test_semantic_dedup_is_deterministic(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
-    a = sorted(map(tuple, semantic_dedup(emb, threshold=0.4, n_centroids=4).collect()))
-    b = sorted(map(tuple, semantic_dedup(emb, threshold=0.4, n_centroids=4).collect()))
+    a = sorted(map(tuple, semantic_dedup(emb, threshold=0.4, cluster_bits=2).collect()))
+    b = sorted(map(tuple, semantic_dedup(emb, threshold=0.4, cluster_bits=2).collect()))
     assert a == b
 
 

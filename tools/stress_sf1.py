@@ -2,7 +2,8 @@
 sf0.1 tables in /tmp/bdec_sf1, then time representative heavy operators.
 
 Usage: python tools/stress_sf1.py [query ...]
-With no args runs the standard batch. Results are wall-clock + row counts
+With no args runs the standard batch. A name the registry does not know
+exits 2 before the build. Results are wall-clock + row counts
 only (no oracle at this scale — correctness is the driver's sf0.01 gate;
 this harness exists to catch plans that stop scaling, like the
 embedding_near_dup wide-carry join it caught in round 6).
@@ -104,10 +105,17 @@ def build(spark) -> None:
         print(f"built {table}: {spark.read.parquet(out).count()} rows")
 
 
-def main() -> None:
+def main() -> int:
     from pyspark.sql import SparkSession
 
     from breweries_data_engineering_case_spark.plans import registry
+
+    # every name is checked before the (minutes-long) corpus build
+    names = sys.argv[1:] or STANDARD_BATCH
+    unknown = [n for n in names if n not in registry.QUERIES]
+    if unknown:
+        print(f"ERROR: not in registry: {unknown}", file=sys.stderr)
+        return 2
 
     # r15: core count honors $SPARK_GRAFT_CPUS (default 16, the historical
     # value) so the SF1 heavy-tail scaling record (VERDICT r14 #6) can run
@@ -134,7 +142,6 @@ def main() -> None:
         except Exception:
             return 0
 
-    names = sys.argv[1:] or STANDARD_BATCH
     for name in names:
         times, steals = [], []
         try:
@@ -154,7 +161,8 @@ def main() -> None:
         except Exception as ex:  # keep the batch going; report the failure
             print(f"{name}: ERROR {str(ex)[:200]}")
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

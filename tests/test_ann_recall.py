@@ -119,3 +119,17 @@ def test_embedding_near_dup_recall_vs_exact(spark, sf_dir):
         recall = len(approx & exact) / len(exact)
         assert recall >= 0.5, f"near-dup recall {recall:.2f}"
 
+
+
+def test_ivf_portable_recall(spark, sf_dir):
+    """The registry's ``ann_cosine_topk_ivf_portable`` query (the integer
+    IVF: 8 lists from one integer Lloyd update, nprobe=2) must hold useful
+    recall vs the exact baseline."""
+    from breweries_data_engineering_case_spark.plans import registry
+
+    emb = table_scan(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 5)
+    exact = _topk_sets(cosine_topk(emb, q, k=10))
+    port = _topk_sets(registry.QUERIES["ann_cosine_topk_ivf_portable"](spark, sf_dir))
+    r = _recall(port, exact)
+    assert r >= 0.4, f"portable IVF recall {r:.2f}"

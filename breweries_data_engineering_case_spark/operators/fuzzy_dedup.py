@@ -208,7 +208,9 @@ def _minhash_cols(df: DataFrame, id_out: str, num_hashes: int) -> DataFrame:
     hashes and take k min-aggregates. The explode+hash-aggregate shape stays
     inside whole-stage codegen (a 64-wide nest of array_min(transform(...))
     does not — it blows the codegen budget and falls back to interpretation,
-    ~10× slower measured); partial aggregation means the shuffle carries one
+    ~10× slower measured). The budget binds in the vanilla session the
+    registry is checked under (``tools/replica.py``); ``session.get_spark``
+    evaluates interpreted anyway. Partial aggregation means the shuffle carries one
     64-long state per doc per partition. A vectorized-numpy pandas-UDF twin
     was measured 3-5× SLOWER end-to-end at sf0.1: the Arrow transfer of the
     per-doc hash arrays dominates, and a UDF column referenced k times in a
@@ -501,7 +503,9 @@ def minhash_band_exprs(
     well as in batch. Same md5 token roll and polynomial band hash as
     ``minhash_lsh_candidates``. Each min-hash is array_min(transform(...))
     over a shingle-hash column bound ONCE — 16 traversals stays inside the codegen budget (64
-    would not; see _minhash_cols for the batch explode+agg shape).
+    would not; see _minhash_cols for the batch explode+agg shape). The budget
+    binds in the vanilla, whole-stage-codegen session of ``tools/replica.py``;
+    ``session.get_spark`` evaluates interpreted.
 
     The factory for the per-hash lambda is required: pyspark counts lambda
     parameters, so default-arg capture breaks higher-order binding."""

@@ -3621,8 +3621,10 @@ def q_streaming_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller doc_id, which is exactly what the batch SQL oracle replays
     (per doc: min earlier doc sharing any band + band-hit count). The
     per-row signature uses array_min(transform(...)) over a materialized
-    shingle-hash column — 16 traversals stays inside the codegen budget;
-    the shingle array is bound once so the md5 roll runs once per row."""
+    shingle-hash column — 16 traversals stays inside the codegen budget of
+    the vanilla session ``tools/replica.py`` checks under (``get_spark``
+    evaluates interpreted); the shingle array is bound once so the md5 roll
+    runs once per row."""
     from ..operators.fuzzy_dedup import minhash_band_exprs
     from ..streaming.stateful import lsh_band_dedup
 

@@ -1,21 +1,24 @@
-"""SparkSession factory with scale-ready defaults.
+"""SparkSession factory: the settings that differ from Spark 4.1.2's defaults.
 
-Replaces the reference's in-process DuckDB connection setup
-(``app/io/duck.py:6-26``: S3 endpoint config + object cache). On Spark the
-equivalents are s3a Hadoop conf and Catalyst/AQE defaults. Every setting here
-is chosen for the 100 TB / 1000-executor target, then works unchanged on
-``local[N]``:
-
-- **AQE on** (runtime partition coalescing + skew-join splitting) so plans
-  self-correct at scale without per-query tuning.
-- **Dynamic partition overwrite** so date-partition re-runs replace only their
-  own partition — the Spark-native analog of the reference's
-  ``DELETE WHERE ingestion_date = …; INSERT`` idempotency (``app/tasks/gold.py:101-113``)
-  and ``OVERWRITE_OR_IGNORE`` COPY (``app/tasks/silver.py:69``).
-- **UTC session time** so timestamp semantics are deployment-independent.
-- **Arrow enabled** so the few pandas-UDF operators (similarity, multimodal)
-  move batches, not rows.
-"""
+Replaces the reference's DuckDB connection setup (``app/io/duck.py:6-26``).
+- **UTC session time**: timestamp semantics independent of the host.
+- **Dynamic partition overwrite**: a date re-run replaces only its own
+  partition, as the reference's ``DELETE WHERE ingestion_date = …; INSERT``
+  (``app/tasks/gold.py:101-113``) and ``OVERWRITE_OR_IGNORE`` COPY do.
+- **Shuffle partitions = cores**, not 200: a daily date is ~8.9k records and
+  the registry tables sf0.01, so a task holds kilobytes. **Broadcast joins to
+  64 MB**, not 10 MB: dimension sides at these scales broadcast, not shuffle.
+- **Interpreted expressions** (``codegen.wholeStage=false`` plus
+  ``codegen.factoryMode=NO_CODEGEN``): at this size a Janino compile costs
+  more than the stage it serves. Whole-stage off alone still compiles each
+  projection, predicate and ordering; ``NO_CODEGEN`` sends those to the
+  interpreted fallbacks: a filter + group-by collect compiles once, not 7
+  times. ``factoryMode`` is internal, but ``CodeGeneratorWithInterpretedFallback.
+  createObject`` (spark-catalyst_2.13-4.1.2) honours ``NO_CODEGEN`` with no
+  test-mode guard; ``tests/test_session.py`` fails if an upgrade drops it.
+  Interpreted, ``catalog.listTables()`` fails to decode ``Table`` (argument
+  type mismatch); list tables with ``SHOW TABLES``.
+- **Arrow on**: ``toPandas`` and pandas ``createDataFrame`` move batches."""
 
 from __future__ import annotations
 
@@ -54,17 +57,13 @@ def get_spark(
         # testdata parquet carries TIMESTAMP(NANOS); read as timestamp_ntz
         # (micros) instead of erroring (readers.py sets this per-session too)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # -- scale defaults -------------------------------------------------
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # -- small-data execution -------------------------------------------
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.sql.files.maxPartitionBytes", "128MB")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.codegen.wholeStage", "false")
+        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
         # -- python/arrow path ----------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # managed-table root (bucketed tables); never the process CWD
         .config(

@@ -165,10 +165,11 @@ def test_pagerank_staging_survives_catalog_reset(spark, sf_dir):
 
     q = registry.queries()["graph_pagerank_salted"]
     base = {(r.node, r.pr) for r in q(spark, sf_dir).collect()}
+    # catalog.listTables() cannot decode its rows in the interpreted session
     tables = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(("bdec_pr_salted_edges_", "bdec_pr_nodes_"))
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if r.tableName.startswith(("bdec_pr_salted_edges_", "bdec_pr_nodes_"))
     ]
     assert len(tables) == 2
     for t in tables:

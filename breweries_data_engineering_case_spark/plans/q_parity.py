@@ -48,7 +48,7 @@ def q_parquet_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 — JSON-array file scan with explicit schema (≈ read_json_auto over
     bronze page files, app/tasks/silver.py:19; files are arrays per
-    app/io/storage.py:23 so multiLine is required)."""
+    app/io/storage.py:23, each written on one line)."""
     def build(out: Path) -> None:
         rows = [r.asDict() for r in table_scan(spark, sf_dir, "nation").collect()]
         rows.sort(key=lambda r: r["n_nationkey"])

@@ -3,7 +3,8 @@
 Re-expresses ``transform_silver`` (app/tasks/silver.py:6-74) as one lazy
 DataFrame chain:
 
-    scan (schema'd, no inference)          ≈ silver.py:18-20
+    scan (schema'd, no inference;          ≈ silver.py:18-20
+          one-line pages as JSON lines)
     → cleaning projection                  ≈ silver.py:21-36
     → dedup on id                          ≈ silver.py:37-41
     → contract enforcement filters         ≈ silver.py:42-51

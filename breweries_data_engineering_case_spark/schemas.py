@@ -22,7 +22,7 @@ def _s(name: str) -> StructField:
 #: see. Everything is read as STRING (the reference normalizes any inferred
 #: type back to VARCHAR before cleaning, app/tasks/silver.py:23-34 — we get
 #: the same effect, minus an inference pass, by declaring strings up front).
-#: Extra API fields are listed so multiLine JSON parsing is schema-stable;
+#: Extra API fields are listed so the bronze JSON scan is schema-stable;
 #: Catalyst prunes the unprojected ones.
 BREWERY_RAW_SCHEMA = StructType(
     [

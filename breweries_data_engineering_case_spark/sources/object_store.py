@@ -100,7 +100,10 @@ def ingest_to_bronze_s3(
     ``rest.ingest_to_bronze`` (same page loop, same uuid-suffixed key
     layout ``prefix/ingestion_date=D/page_N_uid.json`` —
     app/tasks/extract.py:29-77 + app/io/storage.py:14-30), with the file
-    write swapped for an object put. Returns (pages, records)."""
+    write swapped for an object put. Returns (pages, records). A page is
+    written on one line, as ``rest.ingest_to_bronze`` writes it; the silver
+    scan (``readers.json_array_scan``) reads pages as JSON lines and relies
+    on it."""
     client = s3_client(options)
     pages = records = 0
     for page, page_records in iter_pages(fetch, per_page):

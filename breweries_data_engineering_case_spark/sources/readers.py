@@ -6,11 +6,17 @@ glob (app/tasks/gold.py:50-53,71).
 
 Scale notes
 -----------
-- Bronze page files are **JSON arrays** (one array per API page,
-  app/io/storage.py:23), so ``multiLine=True`` is required. multiLine JSON is
-  not splittable — one file = one task — which is fine here because pages are
-  small and numerous (parallelism comes from file count, the same way the
-  reference's glob works). For huge single JSON files, land NDJSON instead.
+- Bronze page files are **JSON arrays on one line** (one array per API
+  page, app/io/storage.py:23; ``json.dumps`` writes no newline), so they are
+  read as JSON lines: Spark's line reader turns a top-level array on one line
+  into one row per element. ``multiLine=True`` would give the same rows but
+  read each page many times over: the bronze schema is all strings, and with
+  ``spark.sql.json.enableExactStringParsing`` (default on) a number in a
+  string column keeps its exact text — in line mode copied out of the line in
+  memory, in ``multiLine`` mode fetched with one positioned read of the file
+  per numeric value (a 78 KB page of half-numeric coordinates read ~10×).
+  A page spread over several lines (pretty-printed) would read as all-NULL
+  rows that the silver contract drops; the program never writes one.
 - Always pass an explicit schema: at 100 TB, inference is a full extra read
   of the data; with a read schema the JSON parser also *skips* unprojected
   fields (projection pushdown into the parser).
@@ -32,13 +38,18 @@ def json_array_scan(
     schema: StructType | None = None,
     glob_filter: str | None = None,
 ) -> DataFrame:
-    """Read JSON-array files (one top-level array per file) → rows.
+    """Read JSON-array page files (one top-level array per file, on one
+    line) → one row per element.
 
     ≈ ``read_json_auto('…/ingestion_date={d}/*.json')`` app/tasks/silver.py:19.
-    ``glob_filter`` (``pathGlobFilter``) keeps the file names it matches: a
-    directory plus ``"*.json"`` reads ``dir/*.json`` without a listing job.
+    Read as JSON lines, not ``multiLine``: the line reader takes each page's
+    exact number text from the line in memory, where ``multiLine`` issues a
+    positioned file read per number (module docstring). PERMISSIVE: a
+    malformed page becomes one all-NULL row. ``glob_filter``
+    (``pathGlobFilter``) keeps the file names it matches: a directory plus
+    ``"*.json"`` reads ``dir/*.json`` without a listing job.
     """
-    reader = spark.read.option("multiLine", True)
+    reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     if glob_filter is not None:

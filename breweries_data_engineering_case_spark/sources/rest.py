@@ -119,9 +119,13 @@ def ingest_to_bronze(
     """Fetch all pages and land each as one JSON-array file.
 
     ≈ the extract task loop + ``put_json`` (app/tasks/extract.py:29-77,
-    app/io/storage.py:22-30). Returns (pages, records). ``bronze_dir`` is a
-    local path or ``file:`` URI; any other scheme raises ``ValueError``
-    before a page is fetched (object stores land through
+    app/io/storage.py:22-30). Returns (pages, records). A page is written on
+    one line: ``json.dumps`` escapes ``\\n`` and ``\\r`` inside strings,
+    and U+2028 and U+0085 end no line for Spark's line reader. The silver
+    scan relies on it and reads the pages as JSON lines
+    (``readers.json_array_scan``). ``bronze_dir`` is a local path or
+    ``file:`` URI; any other scheme raises ``ValueError`` before a page is
+    fetched (object stores land through
     ``object_store.ingest_to_bronze_s3``; the key layout is identical).
     """
     root = local_path(bronze_dir)

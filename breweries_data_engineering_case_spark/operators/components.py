@@ -38,16 +38,29 @@ and two pointer-jumping self-joins (adopt the label OF my label, twice —
 path lengths quarter each round), all materialized by the single flag
 action. Lineage is truncated per round (lazy localCheckpoint) so plans
 don't grow unboundedly — the Spark-iterative footgun.
+
+A graph of at most ``LOCAL_THRESHOLD`` symmetrized edges is solved on the
+driver instead. A staged edge list answers the size question from its
+Parquet footers and, under the threshold, is read on the driver from the
+same files: no Spark job. The labels go back to Spark as an Arrow table, a
+``LocalTableScan``, so scanning them runs no Python worker. ``edges`` is a
+zero-argument builder, called only when no staged edge list can be reused.
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Callable
+from contextlib import ExitStack
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 # Test hook: when set to a list, each loop round appends the EXECUTED plan
 # of its gather/flag query (the in-loop plans are otherwise unobservable —
@@ -63,41 +76,43 @@ PLAN_CAPTURE: list | None = None
 LOCAL_THRESHOLD = 8192
 
 
-def _staged_sym(sym: DataFrame, stage_key: str) -> DataFrame:
-    """Stage the symmetrized edge list as a bucketed table on the gather
-    key ``d`` so the per-iteration join never re-exchanges it. Keyed by the
-    caller's ``stage_key`` (content-deterministic, e.g. the operator tag +
-    a source fingerprint): later calls in the session reuse the table."""
+def _staged_sym(spark, build: Callable[[], DataFrame], stage_key: str) -> DataFrame:
+    """Stage the symmetrized edge list ``build()`` as a bucketed table on
+    the gather key ``d`` so the per-iteration join never re-exchanges it.
+    Keyed by the caller's ``stage_key`` (content-deterministic, e.g. the
+    operator tag + a source fingerprint): later calls in the session reuse
+    the table without calling ``build``."""
     from ..sources.writers import stage_bucketed_table
 
     key = hashlib.md5(stage_key.encode()).hexdigest()[:12]
     tag = re.sub(r"[^A-Za-z0-9_]", "_", stage_key.split(":", 1)[0])
     return stage_bucketed_table(
-        sym.sparkSession, f"bdec_cc_sym_{tag}_{key}", ["d"], num_buckets=32, builder=lambda: sym
+        spark, f"bdec_cc_sym_{tag}_{key}", ["d"], num_buckets=32, builder=build
     )
 
 
-def _staged_row_count(df: DataFrame) -> int | None:
-    """Exact row count of a STAGED bucketed frame from parquet footer
-    metadata — no Spark job (r15, VERDICT r14 #4). Only answers for
-    frames ``stage_bucketed_table`` tagged with their directory; anything
-    else (or any read hiccup) returns None and the caller falls back to the
-    limit-probe job. A staged table is written once per session and never
-    rewritten, so footer num_rows equals the scan's row count."""
+def _staged_rows(df: DataFrame, max_rows: int) -> list[tuple] | None:
+    """The rows (tuples in column order) of a frame ``stage_bucketed_table``
+    staged, read on the driver with no Spark job when its Parquet footers
+    count at most ``max_rows``; ``None`` when they count more or the frame
+    was not staged. A staged table is written once per session and never
+    rewritten, so the files hold exactly the rows a scan returns."""
     path = getattr(df, "_bdec_stage_path", None)
     if path is None:
         return None
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for f in Path(path).iterdir():
-            if f.name.startswith((".", "_")) or not f.name.endswith(".parquet"):
-                continue
-            total += pq.ParquetFile(f).metadata.num_rows
-        return total
-    except Exception:
-        return None
+    with ExitStack() as stack:
+        files = [
+            stack.enter_context(pq.ParquetFile(f))
+            for f in sorted(Path(path).iterdir())
+            if f.name.endswith(".parquet") and not f.name.startswith((".", "_"))
+        ]
+        if sum(f.metadata.num_rows for f in files) > max_rows:
+            return None
+        rows: list[tuple] = []
+        for f in files:
+            t = f.read(columns=df.columns)
+            rows.extend(zip(*(c.to_pylist() for c in t.columns)))
+        return rows
 
 
 def _union_find(pairs) -> dict:
@@ -130,7 +145,7 @@ def _union_find(pairs) -> dict:
 
 def connected_components(
     vertices: DataFrame,
-    edges: DataFrame,
+    edges: Callable[[], DataFrame],
     id_col: str = "id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
@@ -140,70 +155,65 @@ def connected_components(
     """(id, component) — component = min vertex id reachable via edges.
 
     ``vertices``: one row per id (isolated vertices form their own
-    singleton components). ``edges``: undirected pairs; endpoints outside
-    ``vertices`` are ignored (semi-join restriction), matching the
-    induced-subgraph semantics of the pre-round-11 implementation.
+    singleton components). ``edges``: a zero-argument builder of the
+    undirected pairs; endpoints outside ``vertices`` are ignored
+    (semi-join restriction), matching the induced-subgraph semantics of
+    the pre-round-11 implementation.
 
     ``stage_key``: optional content key (deterministic for the input
     graph); when set, the symmetrized edge list is staged as a bucketed
     table reused by every call in the session with the same key — the
-    iterative staging pattern. When None the edge list is lazily
-    checkpointed per-run.
+    iterative staging pattern — and ``edges`` is called only by the call
+    that stages it. When None, ``edges`` is called and the edge list is
+    lazily checkpointed per-run.
 
-    Small-graph fast path (round 12, VERDICT r11 #2). The same
-    adaptivity Spark applies to joins via ``autoBroadcastJoinThreshold``:
-    when the symmetrized edge list has at most ``LOCAL_THRESHOLD`` rows
-    (counted from a staged table's parquet footers, else probed with a
-    short-circuiting ``limit(n+1).collect()`` — bounded driver memory by
-    construction, one cheap job that scans only the first partitions),
-    the component solve is a driver-side union-find instead of a
-    multi-round distributed loop. On a tiny graph (entity resolution:
-    |distinct names| blocks, 256 vertices at sf0.1) the loop's cost is
-    pure per-round job/planning overhead — the fast path removed 80%+ of
-    the operator's wall time there. Larger graphs take the distributed
-    loop, which is the only viable path at 100 TB where near-dup edge
-    lists run to billions of rows. The solver is chosen from the
-    observed edge count alone.
+    Small-graph fast path. The same adaptivity Spark applies to joins via
+    ``autoBroadcastJoinThreshold``: when the symmetrized edge list has at
+    most ``LOCAL_THRESHOLD`` rows, the component solve is a driver-side
+    union-find instead of a multi-round distributed loop. A staged edge
+    list is counted from its Parquet footers and, under the threshold,
+    read on the driver from the same files (``_staged_rows``): no Spark
+    job. An unstaged one is probed with a short-circuiting
+    ``limit(n+1).collect()``, bounded driver memory by construction. The
+    labels return to Spark as an Arrow-built ``LocalTableScan``, so no
+    Python worker runs when the result is scanned. On a tiny graph (entity
+    resolution: |distinct names| blocks, 256 vertices at sf0.1) the loop's
+    cost is pure per-round job/planning overhead — the fast path removed
+    80%+ of the operator's wall time there. Larger graphs take the
+    distributed loop, which is the only viable path at 100 TB where
+    near-dup edge lists run to billions of rows. The solver is chosen from
+    the observed edge count alone.
     """
     ids = vertices.select(F.col(id_col).alias("__vid"))
-    sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
+
+    def symmetrized() -> DataFrame:
+        e = edges()
+        return (
+            e.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+            .unionByName(e.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
+            .join(ids, F.col("s") == F.col("__vid"), "left_semi")
+            .join(ids, F.col("d") == F.col("__vid"), "left_semi")
+            .distinct()
         )
-        .join(ids, F.col("s") == F.col("__vid"), "left_semi")
-        .join(ids, F.col("d") == F.col("__vid"), "left_semi")
-        .distinct()
-    )
+
     if stage_key is not None:
-        sym = _staged_sym(sym, stage_key)
+        sym = _staged_sym(vertices.sparkSession, symmetrized, stage_key)
+        pairs = _staged_rows(sym, LOCAL_THRESHOLD)
     else:
-        sym = sym.localCheckpoint(eager=False)
-
-    # Fast-path size probe (r15, VERDICT r14 #4): for a STAGED edge list
-    # the exact count comes from parquet footers — no job at all. Over the
-    # threshold that saves the entire probe; under it, ONE plain collect
-    # job replaces the incremental CollectLimit scan (limit n+1 on a
-    # sparse 32-bucket table runs up to 4 scale-up jobs to find out there
-    # is no 8193rd row — measured ~0.4 s of pure job scheduling per
-    # construction on the portable pipeline). The decision boundary is
-    # identical: footer count == scan row count for a table staged once
-    # per session, and the probe's len(head) <= threshold ⟺ count <=
-    # threshold. Un-staged (localCheckpoint) callers keep the limit probe.
-    n_staged = _staged_row_count(sym)
-    if n_staged is not None and n_staged > LOCAL_THRESHOLD:
-        head = None  # distributed loop; probe job skipped entirely
-    elif n_staged is not None:
-        head = sym.collect()
-    else:
+        sym = symmetrized().localCheckpoint(eager=False)
         head = sym.limit(LOCAL_THRESHOLD + 1).collect()
-    if head is not None and len(head) <= LOCAL_THRESHOLD:
-        comp = _union_find([(r["s"], r["d"]) for r in head])
-        from pyspark.sql import types as T
-
+        pairs = [(r["s"], r["d"]) for r in head] if len(head) <= LOCAL_THRESHOLD else None
+    if pairs is not None:
+        comp = _union_find(pairs)
         id_type = sym.schema["d"].dataType
+        arrow_type = to_arrow_type(id_type)
         labels = sym.sparkSession.createDataFrame(
-            list(comp.items()),
+            pa.table(
+                {
+                    "v": pa.array(list(comp), arrow_type),
+                    "component": pa.array(list(comp.values()), arrow_type),
+                }
+            ),
             T.StructType(
                 [
                     T.StructField("v", id_type),
@@ -360,10 +370,10 @@ def connected_components(
     )
 
 
-def keep_one_per_cluster(docs: DataFrame, dup_pairs: DataFrame) -> DataFrame:
+def keep_one_per_cluster(docs: DataFrame, dup_pairs: Callable[[], DataFrame]) -> DataFrame:
     """Dedup decision table: (doc_id, component, is_kept) — the minimum
-    doc_id of each near-dup cluster of (id_a, id_b) pairs survives;
-    singletons keep themselves."""
+    doc_id of each near-dup cluster of the (id_a, id_b) pairs that
+    ``dup_pairs()`` builds survives; singletons keep themselves."""
     comps = connected_components(docs.select("doc_id"), dup_pairs, id_col="doc_id")
     return comps.select(
         "doc_id",

@@ -739,25 +739,28 @@ def q_entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = rec.groupBy("name").agg(
         F.min("rec_id").alias("name_id"), F.count(F.lit(1)).alias("n_records")
     )
-    a = names.select(
-        F.col("name").alias("name_a"),
-        F.col("name_id").alias("u"),
-        F.substring("name", 1, 2).alias("blk"),
-    )
-    b = names.select(
-        F.col("name").alias("name_b"),
-        F.col("name_id").alias("v"),
-        F.substring("name", 1, 2).alias("blk"),
-    )
-    edges = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("u") < F.col("v"))
-            & (F.abs(F.length("name_a") - F.length("name_b")) <= 1)
-            & (F.levenshtein("name_a", "name_b") <= 1)
+
+    def edges() -> DataFrame:
+        a = names.select(
+            F.col("name").alias("name_a"),
+            F.col("name_id").alias("u"),
+            F.substring("name", 1, 2).alias("blk"),
         )
-        .select("u", "v")
-    )
+        b = names.select(
+            F.col("name").alias("name_b"),
+            F.col("name_id").alias("v"),
+            F.substring("name", 1, 2).alias("blk"),
+        )
+        return (
+            a.join(b, "blk")
+            .filter(
+                (F.col("u") < F.col("v"))
+                & (F.abs(F.length("name_a") - F.length("name_b")) <= 1)
+                & (F.levenshtein("name_a", "name_b") <= 1)
+            )
+            .select("u", "v")
+        )
+
     vertices = names.select(F.col("name_id").alias("node"))
     comp = connected_components(
         vertices,
@@ -838,23 +841,19 @@ def q_dedup_cascade_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous stage's survivors (cheap-to-expensive ordering is what
     makes a 100 TB dedup affordable — near-dup never sees rows exact/URL
     already killed), and the emitted funnel row per stage is the
-    attrition report every data-curation run ships. Survivor frames are
-    lazily persisted: each feeds both its stage count and the next stage.
-    Oracle: the identical cascade with the shared SimHash CTE and a
-    WITH RECURSIVE closure."""
+    attrition report every data-curation run ships. The near-dup pairs
+    are built only by the call that stages their symmetrized edge list;
+    later calls in the session read the staged list. Oracle: the identical
+    cascade with the shared SimHash CTE and a WITH RECURSIVE closure."""
     from ..operators.components import connected_components
 
-    d = (
-        table_scan(spark, sf_dir, "documents")
-        .select("doc_id", "text", "lang", "source")  # prune before persist
-        .transform(cached)
-    )
+    d = table_scan(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
     s1 = (
         d.groupBy(F.md5("text").alias("fp"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s1d = d.join(s1, "doc_id", "left_semi").transform(cached)
+    s1d = d.join(s1, "doc_id", "left_semi")
     url = F.concat(
         F.lit("https://"),
         F.col("source"),
@@ -874,11 +873,12 @@ def q_dedup_cascade_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s2d = d.join(s2, "doc_id", "left_semi").transform(cached)
-    pairs = simhash_near_dup_pairs(s2d, bits=32, bands=4, max_hamming=3)
+    s2d = d.join(s2, "doc_id", "left_semi")
     comp = connected_components(
         s2d.select(F.col("doc_id").alias("node")),
-        pairs.select("id_a", "id_b"),
+        lambda: simhash_near_dup_pairs(s2d, bits=32, bands=4, max_hamming=3).select(
+            "id_a", "id_b"
+        ),
         id_col="node",
         src_col="id_a",
         dst_col="id_b",

@@ -489,19 +489,26 @@ def q_graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_partkey") < 200)
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
     )
-    a, b = li.alias("a"), li.alias("b")
-    e0 = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .distinct()
-    )
-    key = F.concat(
-        F.col("u").cast("string"), F.lit(":"), F.col("v").cast("string")
-    )
-    edges = e0.filter(F.pmod(portable_hash64(key), F.lit(10)) == 0)
+
+    def edges() -> DataFrame:
+        a, b = li.alias("a"), li.alias("b")
+        e0 = (
+            a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
+            .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+            .distinct()
+        )
+        key = F.concat(
+            F.col("u").cast("string"), F.lit(":"), F.col("v").cast("string")
+        )
+        return e0.filter(F.pmod(portable_hash64(key), F.lit(10)) == 0)
+
     vertices = li.select(F.col("p").alias("node")).distinct()
     return connected_components(
-        vertices, edges, id_col="node", src_col="u", dst_col="v"
+        vertices,
+        edges,
+        id_col="node",
+        src_col="u",
+        dst_col="v",
     )
 
 

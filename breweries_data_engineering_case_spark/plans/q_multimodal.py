@@ -476,16 +476,18 @@ def q_multimodal_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthetic_near_dup_images,
     )
 
-    img_pairs = dhash_near_dup_pairs(
-        image_dhash(synthetic_near_dup_images(spark, 48)), max_hamming=7
-    ).select("id_a", "id_b")
-    aud = synthetic_audio_set(spark, 36).withColumn(
-        "asset_id", F.col("asset_id") + 1000
-    )
-    aud_pairs = fingerprint_dup_pairs(audio_fingerprint(aud)).select(
-        "id_a", "id_b"
-    )
-    edges = img_pairs.unionByName(aud_pairs)
+    def edges() -> DataFrame:
+        img_pairs = dhash_near_dup_pairs(
+            image_dhash(synthetic_near_dup_images(spark, 48)), max_hamming=7
+        ).select("id_a", "id_b")
+        aud = synthetic_audio_set(spark, 36).withColumn(
+            "asset_id", F.col("asset_id") + 1000
+        )
+        aud_pairs = fingerprint_dup_pairs(audio_fingerprint(aud)).select(
+            "id_a", "id_b"
+        )
+        return img_pairs.unionByName(aud_pairs)
+
     img_ids = spark.range(48).select(F.col("id").alias("node"))
     aud_ids = spark.range(1000, 1036).select(F.col("id").alias("node"))
     vertices = img_ids.unionByName(aud_ids)

@@ -272,7 +272,7 @@ def stage_bucketed_table(
 
     The returned frame records its directory as ``_bdec_stage_path``, so a
     size question can be answered from Parquet footers without a job (see
-    ``operators.components._staged_row_count``).
+    ``operators.components._staged_rows``).
     """
     path = session_workspace(spark) / name
     with _STAGE_LOCK:

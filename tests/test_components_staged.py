@@ -35,7 +35,7 @@ def _components_of(spark, pairs, vertex_ids, **kwargs):
         [(int(a), int(b)) for a, b in pairs], "id_a bigint, id_b bigint"
     )
     out = connected_components(
-        verts, edges, id_col="node", src_col="id_a", dst_col="id_b", **kwargs
+        verts, lambda: edges, id_col="node", src_col="id_a", dst_col="id_b", **kwargs
     )
     return {(r.node, r.component) for r in out.collect()}
 
@@ -182,11 +182,12 @@ def test_pagerank_staging_survives_catalog_reset(spark, sf_dir):
 
 
 def test_staged_row_count_matches_scan(spark):
-    """r15 footer-metadata row count (the CC fast-path probe): exact for a
-    staged frame, None for a plain frame (which must fall back to the
-    limit-probe job)."""
+    """The driver read of a staged frame (the CC fast-path probe): the
+    footer row count is exact, so the rows come exactly when there are at
+    most the bound, and a plain frame returns None (it must fall back to
+    the limit-probe job)."""
     from breweries_data_engineering_case_spark.operators.components import (
-        _staged_row_count,
+        _staged_rows,
     )
 
     name = "bdec_test_stage_rowcount"
@@ -197,8 +198,11 @@ def test_staged_row_count_matches_scan(spark):
         num_buckets=4,
         builder=lambda: spark.range(137).select(F.col("id").alias("d")),
     )
-    assert _staged_row_count(staged) == 137 == staged.count()
-    assert _staged_row_count(spark.range(5)) is None
+    rows = _staged_rows(staged, 137)
+    assert len(rows) == 137 == staged.count()
+    assert sorted(rows) == [(i,) for i in range(137)]
+    assert _staged_rows(staged, 136) is None
+    assert _staged_rows(spark.range(5), 137) is None
     spark.sql(f"DROP TABLE `{name}`")
 
 

@@ -80,7 +80,7 @@ def test_keep_list_matches_exact_components(spark):
 
     d = table_scan(spark, SF001, "documents")
     pairs = minhash_lsh_pairs(d, threshold=0.7)
-    decisions = keep_one_per_cluster(d.select("doc_id"), pairs).collect()
+    decisions = keep_one_per_cluster(d.select("doc_id"), lambda: pairs).collect()
 
     dropped = {r.doc_id: r.component for r in decisions if not r.is_kept}
     kept = {r.doc_id for r in decisions if r.is_kept}

@@ -166,6 +166,36 @@ class TestIncrementalNearDup:
         assert os.path.getmtime(marker) == mtime
         assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
 
+    def test_repeated_calls_publish_one_merged_state(self, spark, sf_dir):
+        """The merged state depends only on the corpus: three calls in one
+        session publish it once, into the directory staged for the
+        snapshot's fingerprint."""
+        from breweries_data_engineering_case_spark.plans import registry
+        from breweries_data_engineering_case_spark.sources.readers import (
+            source_fingerprint,
+        )
+        from breweries_data_engineering_case_spark.sources.writers import (
+            session_workspace,
+            staged_dir,
+        )
+
+        def published():
+            return set(session_workspace(spark).glob("*/state_next"))
+
+        before = published()
+        fn = registry.QUERIES["doc_neardup_incremental_snapshot"]
+        for _ in range(3):
+            fn(spark, sf_dir).collect()
+
+        def restage(_path):
+            pytest.fail("the merged state was not staged")
+
+        want = staged_dir(
+            spark, "incr_neardup_next:" + source_fingerprint(sf_dir, "documents"), restage
+        ) / "state_next"
+        assert want in published()
+        assert published() - before <= {want}
+
 
 def test_theil_decomposition_brute_force(spark):
     """Independent math replay of orders_theil_inequality_decomposition at

@@ -73,7 +73,7 @@ def _cc(spark, pairs, vertex_ids, **kwargs):
         [(int(a), int(b)) for a, b in pairs], "id_a bigint, id_b bigint"
     )
     return connected_components(
-        verts, edges, id_col="node", src_col="id_a", dst_col="id_b", **kwargs
+        verts, lambda: edges, id_col="node", src_col="id_a", dst_col="id_b", **kwargs
     )
 
 

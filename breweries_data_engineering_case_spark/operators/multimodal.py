@@ -27,9 +27,11 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -204,6 +206,19 @@ def extract_features(assets: DataFrame, require_real_codec: bool = False) -> Dat
     return assets.mapInPandas(process, schema=FEATURE_SCHEMA)
 
 
+def _asset_frame(spark, rows: list[tuple]) -> DataFrame:
+    """``ASSET_SCHEMA`` rows as a ``LocalTableScan`` built from an Arrow
+    table; a Python list would give ``Scan ExistingRDD`` over a ``PythonRDD``,
+    whose every scan runs Python workers."""
+    arrow_schema = to_arrow_schema(ASSET_SCHEMA)
+    columns = [
+        pa.array(col, field.type) for col, field in zip(zip(*rows), arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), ASSET_SCHEMA
+    )
+
+
 def synthetic_assets(spark, n: int = 64) -> DataFrame:
     """Deterministic fake asset table for tests/demos (payload = seeded
     bytes; metadata plausible)."""
@@ -221,7 +236,7 @@ def synthetic_assets(spark, n: int = 64) -> DataFrame:
                 1000 * i if mt != "image" else None,
             )
         )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 def synthetic_real_assets(spark, n: int = 32) -> DataFrame:
@@ -249,7 +264,7 @@ def synthetic_real_assets(spark, n: int = 32) -> DataFrame:
             rows.append(
                 (i, "audio", bytearray(buf.getvalue()), None, None, int(dur_s * 1000))
             )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 def synthetic_near_dup_images(spark, n: int = 48) -> DataFrame:
@@ -267,7 +282,7 @@ def synthetic_near_dup_images(spark, n: int = 48) -> DataFrame:
             px[pos] = (px[pos] + 128) % 256
         header = f"P5\n{w} {h}\n255\n".encode()
         rows.append((i, "image", bytearray(header + bytes(px)), w, h, None))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 DHASH_SCHEMA = StructType(
@@ -396,7 +411,7 @@ def synthetic_audio_set(spark, n: int = 36) -> DataFrame:
         rows.append(
             (i, "audio", bytearray(buf.getvalue()), None, None, nfr * 1000 // rate)
         )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 FINGERPRINT_SCHEMA = StructType(
@@ -712,7 +727,7 @@ def synthetic_textured_images(spark, n: int = 48) -> DataFrame:
         px = bytes(p + 8 * v for p in px)
         header = f"P5\n{w} {h}\n255\n".encode()
         rows.append((i, "image", bytearray(header + px), w, h, None))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 def synthetic_video_frames(
@@ -748,7 +763,7 @@ def synthetic_video_frames(
             rows.append(
                 (v * 1000 + f, "image", bytearray(header + bytes(px)), w, h, None)
             )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 FRAME_ENERGY_SCHEMA = StructType(
@@ -788,7 +803,7 @@ def synthetic_speech_audio(spark, n: int = 8) -> "DataFrame":
             (i, "audio", bytearray(buf.getvalue()), None, None,
              frame * n_frames * 1000 // rate)
         )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return _asset_frame(spark, rows)
 
 
 def audio_frame_energy(assets: DataFrame, frame: int = 256) -> DataFrame:

@@ -18,7 +18,24 @@ Replaces the reference's DuckDB connection setup (``app/io/duck.py:6-26``).
   test-mode guard; ``tests/test_session.py`` fails if an upgrade drops it.
   Interpreted, ``catalog.listTables()`` fails to decode ``Table`` (argument
   type mismatch); list tables with ``SHOW TABLES``.
-- **Arrow on**: ``toPandas`` and pandas ``createDataFrame`` move batches."""
+- **Arrow on**: ``toPandas`` and pandas ``createDataFrame`` move batches.
+- **No per-call Python call site** (``spark.python.sql.dataFrameDebugging.
+  enabled=false``): on, every wrapped ``functions``/``Column`` call made 4-5
+  extra py4j round trips to record its caller, and the first one imported
+  ``IPython`` (26 MB of driver RSS). The cost: Spark's ``DataFrame`` error
+  messages lose their Python file:line context; the Spark plan context stays.
+- **C2 only for code that is really hot**: the driver JVM starts with HotSpot's
+  tier-4 compile thresholds 4x their defaults (``Tier4InvocationThreshold``
+  20000, ``Tier4MinInvocationThreshold`` 2400, ``Tier4CompileThreshold`` 60000,
+  ``Tier4BackEdgeThreshold`` 160000); tiers 0-3 keep theirs. A daily run is a
+  fresh, short process: thousands of analyzer, optimizer, AQE and
+  interpreted-expression methods cross the default C2 thresholds but never run
+  long enough after to repay the compile, so they stay in C1 code. Hot loops
+  still reach C2; C1-only (``TieredStopAtLevel=1``) lost wall time on both
+  workloads. Set as ``spark.driver.defaultJavaOptions``, which Spark puts
+  before any ``spark.driver.extraJavaOptions``, so both apply. It takes effect
+  only where this process starts the driver JVM (PySpark local mode, tests,
+  perfbench), not under ``spark-submit --deploy-mode cluster``."""
 
 from __future__ import annotations
 
@@ -64,7 +81,15 @@ def get_spark(
         .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
         # -- python/arrow path ----------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # -- driver JVM ------------------------------------------------------
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # tier-4 (C2) thresholds 4x the JDK 17 defaults 5000/600/15000/40000
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+            "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000",
+        )
         # managed-table root (bucketed tables); never the process CWD
         .config(
             "spark.sql.warehouse.dir",

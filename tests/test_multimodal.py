@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from breweries_data_engineering_case_spark.operators.multimodal import (
+    ASSET_SCHEMA,
     FEATURE_SCHEMA,
     extract_features,
     frame_sample_plan,
@@ -33,6 +34,17 @@ def test_extract_features_schema_and_values(spark):
     # deterministic across runs
     again = {r.asset_id: r.feature_head for r in extract_features(assets).collect()}
     assert again == {k: v.feature_head for k, v in rows.items()}
+
+
+def test_asset_frame_is_a_local_table_scan(spark):
+    # built from Arrow, not a pickled row list: no Python worker per scan
+    assets = synthetic_assets(spark, n=9)
+    assert assets.schema == ASSET_SCHEMA
+    assert "PythonRDD" not in assets._jdf.queryExecution().toRdd().toDebugString()
+    assert [r.asset_id for r in assets.orderBy("asset_id").collect()] == list(range(9))
+    assert assets.where(F.col("media_type") == "image").first().payload == bytearray(
+        hashlib.md5(b"0").digest() * 4
+    )
 
 
 def test_real_codec_unsupported_format_fails_loudly(spark):

@@ -1,5 +1,6 @@
-"""The program's session evaluates plans interpreted, and keeps Spark's
-defaults where ``session.get_spark`` sets nothing."""
+"""The program's session evaluates plans interpreted, starts its driver JVM
+with raised C2 thresholds, records no Python call site per Column call, and
+keeps Spark's defaults where ``session.get_spark`` sets nothing."""
 
 from __future__ import annotations
 
@@ -62,3 +63,37 @@ def test_unset_settings_read_spark_defaults(spark):
         "spark.sql.parquet.compression.codec": "snappy",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     }
+
+
+def test_driver_jvm_compiles_c2_only_past_raised_thresholds(spark):
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    flags = {
+        name: bean.getVMOption(name).getValue()
+        for name in (
+            "Tier4InvocationThreshold",
+            "Tier4MinInvocationThreshold",
+            "Tier4CompileThreshold",
+            "Tier4BackEdgeThreshold",
+            "TieredStopAtLevel",
+        )
+    }
+    assert flags == {
+        "Tier4InvocationThreshold": "20000",
+        "Tier4MinInvocationThreshold": "2400",
+        "Tier4CompileThreshold": "60000",
+        "Tier4BackEdgeThreshold": "160000",
+        "TieredStopAtLevel": "4",  # C2 stays on for the hot loops
+    }
+
+
+def test_no_python_call_site_capture(spark, monkeypatch):
+    from pyspark.errors import utils
+
+    captured = []
+    monkeypatch.setattr(utils, "_capture_call_site", lambda depth: captured.append(depth))
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("a") + F.lit(1)
+    assert captured == []
